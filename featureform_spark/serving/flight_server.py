@@ -7,10 +7,10 @@ table, scans it through a catalog, and returns a RecordBatchStream
 capped at 2M records). This module provides the same wire surface over
 the in-repo table formats, with a design difference that matters at
 scale: the serving path holds NO Spark session. Tickets resolve to
-table directories; the scan streams pyarrow record batches file by
-file (the same sessionless read machinery the registered Python data
-sources use), so a fleet of streamer pods can serve training workers
-without a JVM each.
+table directories; the scan streams pyarrow record batches (the same
+sessionless read machinery the registered Python data sources use),
+so a fleet of streamer pods can serve training workers without a JVM
+each.
 
 Ticket protocol (JSON, reference-compatible field names):
 
@@ -22,10 +22,11 @@ Ticket protocol (JSON, reference-compatible field names):
 is also accepted. ``limit`` defaults to the reference's 2M-record cap.
 
 Format handling per table directory:
-- Delta protocol (``_delta_log``): snapshot scan with deletion vectors
-  applied via per-file numpy row-index masks; Hive partition values
-  attached as constant columns. Column-mapped tables gate to the
-  native Spark reader.
+- Delta protocol (``_delta_log``): the snapshot's live files stream
+  through ONE pyarrow dataset scan (the Python Data Source's slice
+  reader), deletion vectors applied as per-file row-index masks and
+  Hive partition values attached as constant columns. Column-mapped
+  tables gate to the native Spark reader.
 - Iceberg protocol (``metadata/``): current-snapshot scan with
   position deletes applied (sequence-number aware, matching
   ``_read_with_deletes``); equality deletes gate.
@@ -36,6 +37,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 from typing import Iterator
 
 import numpy as np
@@ -46,6 +49,61 @@ from featureform_spark.serving.streamer import TWO_MILLION_RECORD_LIMIT
 
 class TicketError(ValueError):
     """Malformed or unresolvable flight ticket."""
+
+
+# do_get tickets answered from a registered index instead of a table
+# scan (embeddinghub parity): Nearest() from the in-RAM index, Get of
+# one stored vector, and MultiGet of N ids in one round trip. Each is
+# served by the server method of the same name with a leading "_".
+_VECTOR_GETS = ("nearest", "vector_get", "vector_multi_get")
+
+
+class RequestStats:
+    """Per ticket kind: requests, errors and a latency histogram.
+
+    ``do_action("stats")`` returns ``snapshot()`` as JSON. Histogram
+    buckets are powers of two in microseconds, keyed by their
+    exclusive upper bound: ``"2048": 7`` counts seven requests that
+    took 1024-2047 µs. Recording is one lock and three integer
+    updates, cheap enough to leave on."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        # kind -> [requests, errors, {bucket: count}]
+        self._kinds: dict[str, list] = {}
+
+    def record(self, kind: str, t0: float, ok: bool) -> None:
+        """Count one request of ``kind`` that started at
+        ``time.perf_counter()`` value ``t0``."""
+        bucket = int((time.perf_counter() - t0) * 1e6).bit_length()
+        with self._lock:
+            entry = self._kinds.setdefault(kind, [0, 0, {}])
+            entry[0] += 1
+            entry[1] += not ok
+            entry[2][bucket] = entry[2].get(bucket, 0) + 1
+
+    def timed(self, kind: str, t0: float, batches) -> Iterator:
+        """``batches`` passed through, recorded once they are drained
+        (or fail)."""
+        ok = False
+        try:
+            yield from batches
+            ok = True
+        finally:
+            self.record(kind, t0, ok)
+
+    def snapshot(self) -> dict:
+        with self._lock:
+            return {
+                kind: {
+                    "requests": n,
+                    "errors": errors,
+                    "latency_us": {
+                        str(1 << b): c for b, c in sorted(hist.items())
+                    },
+                }
+                for kind, (n, errors, hist) in sorted(self._kinds.items())
+            }
 
 
 # --------------------------------------------------------- table scans
@@ -82,17 +140,15 @@ def _mask_batches(
 def _delta_batches(
     path: str, with_row_ids: bool = False
 ) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
-    import pyarrow.parquet as pq
-
     from featureform_spark.sources.delta_protocol import (
         DeltaProtocolError,
         DeltaProtocolTable,
         UnsupportedTableFeatureError,
     )
     from featureform_spark.sources.deltaprotocol_datasource import (
-        _FileSlice,
-        _pa_scalar_type,
-        _read_slice,
+        _output_schema,
+        _scan_slices,
+        snapshot_slices,
     )
 
     t = DeltaProtocolTable(None, path)
@@ -109,86 +165,18 @@ def _delta_batches(
                 "with_row_ids requires delta.enableRowTracking"
             )
         mat = st.materialized_row_id_cols or ("", "")
-    parts = st.partition_columns
-    types = {f.name: f.dataType.simpleString() for f in st.schema.fields}
-    order = [f.name for f in st.schema.fields]
-    import urllib.parse
-
-    slices: list[tuple[_FileSlice, np.ndarray | None]] = []
-    for rel in sorted(st.adds):
-        a = st.adds[rel]
-        dv = a.get("deletionVector")
-        pv = {c: (a.get("partitionValues") or {}).get(c) for c in parts}
-        if with_row_ids:
-            # _read_slice tracks ORIGINAL row indexes through its own
-            # DV mask, which row ids key on — ship the compact blob
-            slices.append(
-                (
-                    _FileSlice(
-                        os.path.join(t.path, urllib.parse.unquote(rel)),
-                        pv,
-                        {c: types[c] for c in parts},
-                        order,
-                        dv_blob=t._dv_blob(dv) if dv else None,
-                        row_info=(
-                            int(a["baseRowId"])
-                            if a.get("baseRowId") is not None
-                            else None,
-                            int(a["defaultRowCommitVersion"])
-                            if a.get("defaultRowCommitVersion")
-                            is not None
-                            else None,
-                            mat[0],
-                            mat[1],
-                        ),
-                    ),
-                    None,
-                )
-            )
-            continue
-        pos = t._dv_positions(dv) if dv else None
-        slices.append(
-            (
-                _FileSlice(
-                    os.path.join(t.path, urllib.parse.unquote(rel)),
-                    pv,
-                    {c: types[c] for c in parts},
-                    order,
-                ),
-                pos,
-            )
-        )
-
-    def _schema() -> pa.Schema:
-        if slices:
-            file_schema = pq.read_schema(slices[0][0].abs_path)
-            fields = []
-            for name in order:
-                if name in parts:
-                    fields.append(
-                        pa.field(name, _pa_scalar_type(types[name]))
-                    )
-                else:
-                    fields.append(file_schema.field(name))
-        else:
-            fields = [
-                pa.field(n, _pa_scalar_type(types[n])) for n in order
-            ]
-        if with_row_ids:
-            fields += [
-                pa.field("_row_id", pa.int64()),
-                pa.field("_row_commit_version", pa.int64()),
-            ]
-        return pa.schema(fields)
-
-    def _gen() -> Iterator[pa.RecordBatch]:
-        for sl, pos in slices:
-            batches = _read_slice(sl)
-            if pos is not None and len(pos):
-                batches = _mask_batches(batches, pos)
-            yield from batches
-
-    return _schema(), _gen()
+    slices = snapshot_slices(t, st, mat)
+    if slices:
+        return _scan_slices(slices)
+    # no file to read column types from: every column takes its
+    # logical type, as partition columns do
+    schema = _output_schema(
+        [f.name for f in st.schema.fields],
+        {f.name: f.dataType.simpleString() for f in st.schema.fields},
+        None,
+        with_row_ids,
+    )
+    return schema, iter(())
 
 
 def _iceberg_batches(path: str) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
@@ -355,7 +343,9 @@ class DatasetStreamerServer:
 
     ``catalogs`` maps catalog name -> root directory; tickets resolve
     ``<root>/<namespace>/<table>``. Bind port 0 for an ephemeral port
-    (read it back from ``.port``)."""
+    (read it back from ``.port``). ``stats`` counts every do_get and
+    do_put by ticket kind; clients read it with
+    ``do_action(Action("stats", b""))``."""
 
     def __init__(
         self,
@@ -365,34 +355,42 @@ class DatasetStreamerServer:
         import pyarrow.flight as fl
 
         self.catalogs = dict(catalogs)
+        self.stats = RequestStats()
         self.indexes: dict = {}  # name -> serving IvfPqIndex
         self._index_frozen: dict = {}  # name -> bool | callable
         outer = self
 
         class _Server(fl.FlightServerBase):
             def do_get(self, context, ticket):
-                req = outer._parse(ticket.ticket)
-                if "nearest" in req:
-                    # embeddinghub parity: Nearest() served over the
-                    # wire from the in-RAM IVFADC index — no table
-                    # scan, no Spark, microseconds of numpy
-                    return fl.RecordBatchStream(outer._nearest(req))
-                if "vector_get" in req:
-                    # embeddinghub Get RPC: the stored (live) vector
-                    # by id; zero rows when absent
-                    return fl.RecordBatchStream(outer._vector_get(req))
-                if "vector_multi_get" in req:
-                    # embeddinghub MultiGet: N lookups in ONE
-                    # round-trip, responses aligned to request order
-                    return fl.RecordBatchStream(
-                        outer._vector_multi_get(req)
-                    )
-                limit = outer._limit(req)
-                reader = scan_table_arrow(
-                    outer._resolve(req), limit,
-                    with_row_ids=bool(req.get("with_row_ids")),
-                )
+                t0 = time.perf_counter()
+                kind = "scan"
+                try:
+                    req = outer._parse(ticket.ticket)
+                    kind = next((k for k in _VECTOR_GETS if k in req), kind)
+                    if kind == "scan":
+                        limit = outer._limit(req)
+                        reader = scan_table_arrow(
+                            outer._resolve(req), limit,
+                            with_row_ids=bool(req.get("with_row_ids")),
+                        )
+                        # a scan's cost is paid while the stream drains
+                        return fl.RecordBatchStream(
+                            pa.RecordBatchReader.from_batches(
+                                reader.schema,
+                                outer.stats.timed(kind, t0, reader),
+                            )
+                        )
+                    reader = getattr(outer, f"_{kind}")(req)
+                except Exception:
+                    outer.stats.record(kind, t0, ok=False)
+                    raise
+                outer.stats.record(kind, t0, ok=True)
                 return fl.RecordBatchStream(reader)
+
+            def do_action(self, context, action):
+                if action.type != "stats":
+                    raise TicketError(f"unknown action {action.type!r}")
+                return [fl.Result(json.dumps(outer.stats.snapshot()).encode())]
 
             def get_flight_info(self, context, descriptor):
                 req = outer._parse(descriptor.command)
@@ -435,109 +433,26 @@ class DatasetStreamerServer:
                             )
 
             def do_put(self, context, descriptor, reader, writer):
-                # Ingest: uploaded record batches append to the target
-                # table — a Delta table commits through the sessionless
-                # transaction-log writer (exactly-once via an optional
-                # {"app_id", "txn_version"} in the descriptor), a plain
-                # parquet dir gains one part file. No Spark on the pod.
-                req = outer._parse(descriptor.command)
-                if "index_add" in req:
-                    # embeddinghub write path: uploaded (vec_id,
-                    # embedding) batches become queryable immediately
-                    outer._index_add(req["index_add"], reader)
-                    return
-                if "multi_set" in req:
-                    # embeddinghub MultiSet: one upload sets vectors
-                    # across MULTIPLE spaces (per-row space column)
-                    outer._multi_set(reader)
-                    return
-                path = outer._resolve(req)
-                fmt = _detect_format(path)
-                if fmt == "delta":
-                    from featureform_spark.sources.delta_protocol import (
-                        DeltaProtocolTable,
-                    )
-
-                    txn = None
-                    if req.get("app_id") is not None:
-                        txn = (
-                            str(req["app_id"]),
-                            int(req.get("txn_version", 0)),
-                        )
-                    # to_reader(): the upload STREAMS into the part
-                    # file — never materialized in pod memory
-                    DeltaProtocolTable(None, path).append_arrow(
-                        reader.to_reader(), txn=txn
-                    )
-                elif fmt == "iceberg":
-                    from featureform_spark.sources.iceberg_protocol import (
-                        IcebergProtocolTable,
-                    )
-
-                    t = IcebergProtocolTable(None, path)
-                    mode = req.get("mode", "append")
-                    if mode not in ("append", "upsert"):
-                        # an unrecognized/misspelled mode must never
-                        # degrade to a blind append — for a CDC client
-                        # that silently duplicates every key version
-                        raise ValueError(
-                            f"unknown do_put mode {mode!r}: expected "
-                            "'append' or 'upsert'"
-                        )
-                    if mode == "upsert":
-                        # CDC ingest: data files + a key equality
-                        # delete at one sequence number (the Flink
-                        # upsert-sink shape) — still zero Spark on the
-                        # pod; optional {"app_id", "txn_version"} gives
-                        # exactly-once replays via snapshot-summary
-                        # watermarks
-                        keys = req.get("keys")
-                        if not isinstance(keys, list) or not keys:
-                            raise ValueError(
-                                "upsert mode needs a non-empty 'keys' "
-                                "list in the descriptor"
-                            )
-                        txn = None
-                        if req.get("app_id") is not None:
-                            txn = (
-                                str(req["app_id"]),
-                                int(req.get("txn_version", 0)),
-                            )
-                        t.upsert_arrow(
-                            reader.to_reader(),
-                            [str(k) for k in keys],
-                            txn=txn,
-                        )
+                t0 = time.perf_counter()
+                kind = "put"
+                try:
+                    req = outer._parse(descriptor.command)
+                    if "index_add" in req:
+                        # embeddinghub write path: uploaded (vec_id,
+                        # embedding) batches become queryable at once
+                        kind = "index_add"
+                        outer._index_add(req["index_add"], reader)
+                    elif "multi_set" in req:
+                        # embeddinghub MultiSet: one upload sets vectors
+                        # across MULTIPLE spaces (per-row space column)
+                        kind = "multi_set"
+                        outer._multi_set(reader)
                     else:
-                        txn = None
-                        if req.get("app_id") is not None:
-                            txn = (
-                                str(req["app_id"]),
-                                int(req.get("txn_version", 0)),
-                            )
-                        t.append_arrow(reader.to_reader(), txn=txn)
-                else:
-                    import uuid as _uuid
-
-                    import pyarrow.parquet as pq
-
-                    target = os.path.join(
-                        path, f"part-{_uuid.uuid4().hex}.parquet"
-                    )
-                    pqw = None
-                    try:
-                        for chunk in reader:
-                            batch = chunk.data
-                            if batch is None:
-                                continue
-                            if pqw is None:
-                                pqw = pq.ParquetWriter(
-                                    target, batch.schema
-                                )
-                            pqw.write_batch(batch)
-                    finally:
-                        if pqw is not None:
-                            pqw.close()
+                        outer._table_put(req, reader)
+                except Exception:
+                    outer.stats.record(kind, t0, ok=False)
+                    raise
+                outer.stats.record(kind, t0, ok=True)
 
         self._server = _Server(location)
         self.port = self._server.port
@@ -550,6 +465,100 @@ class DatasetStreamerServer:
         if not isinstance(req, dict):
             raise TicketError("ticket must be a JSON object")
         return req
+
+    def _table_put(self, req: dict, reader) -> None:
+        """Ingest: uploaded record batches append to the target table —
+        a Delta table commits through the sessionless transaction-log
+        writer (exactly-once via an optional {"app_id", "txn_version"}
+        in the descriptor), a plain parquet dir gains one part file.
+        No Spark on the pod."""
+        path = self._resolve(req)
+        fmt = _detect_format(path)
+        if fmt == "delta":
+            from featureform_spark.sources.delta_protocol import (
+                DeltaProtocolTable,
+            )
+
+            txn = None
+            if req.get("app_id") is not None:
+                txn = (
+                    str(req["app_id"]),
+                    int(req.get("txn_version", 0)),
+                )
+            # to_reader(): the upload STREAMS into the part
+            # file — never materialized in pod memory
+            DeltaProtocolTable(None, path).append_arrow(
+                reader.to_reader(), txn=txn
+            )
+        elif fmt == "iceberg":
+            from featureform_spark.sources.iceberg_protocol import (
+                IcebergProtocolTable,
+            )
+
+            t = IcebergProtocolTable(None, path)
+            mode = req.get("mode", "append")
+            if mode not in ("append", "upsert"):
+                # an unrecognized/misspelled mode must never
+                # degrade to a blind append — for a CDC client
+                # that silently duplicates every key version
+                raise ValueError(
+                    f"unknown do_put mode {mode!r}: expected "
+                    "'append' or 'upsert'"
+                )
+            if mode == "upsert":
+                # CDC ingest: data files + a key equality
+                # delete at one sequence number (the Flink
+                # upsert-sink shape) — still zero Spark on the
+                # pod; optional {"app_id", "txn_version"} gives
+                # exactly-once replays via snapshot-summary
+                # watermarks
+                keys = req.get("keys")
+                if not isinstance(keys, list) or not keys:
+                    raise ValueError(
+                        "upsert mode needs a non-empty 'keys' "
+                        "list in the descriptor"
+                    )
+                txn = None
+                if req.get("app_id") is not None:
+                    txn = (
+                        str(req["app_id"]),
+                        int(req.get("txn_version", 0)),
+                    )
+                t.upsert_arrow(
+                    reader.to_reader(),
+                    [str(k) for k in keys],
+                    txn=txn,
+                )
+            else:
+                txn = None
+                if req.get("app_id") is not None:
+                    txn = (
+                        str(req["app_id"]),
+                        int(req.get("txn_version", 0)),
+                    )
+                t.append_arrow(reader.to_reader(), txn=txn)
+        else:
+            import uuid as _uuid
+
+            import pyarrow.parquet as pq
+
+            target = os.path.join(
+                path, f"part-{_uuid.uuid4().hex}.parquet"
+            )
+            pqw = None
+            try:
+                for chunk in reader:
+                    batch = chunk.data
+                    if batch is None:
+                        continue
+                    if pqw is None:
+                        pqw = pq.ParquetWriter(
+                            target, batch.schema
+                        )
+                    pqw.write_batch(batch)
+            finally:
+                if pqw is not None:
+                    pqw.close()
 
     # -- vector plane (embeddinghub parity) -----------------------------------
 

@@ -89,13 +89,6 @@ class SqliteOnlineStore:
             )
             self._db.commit()
 
-    def _known(self, table: str) -> bool:
-        with self._lock:
-            row = self._db.execute(
-                "SELECT 1 FROM tables WHERE tbl = ?", (table,)
-            ).fetchone()
-        return row is not None
-
     def set(
         self,
         table: str,
@@ -175,28 +168,37 @@ class SqliteOnlineStore:
             self._lock.release()
 
     def get(self, table: str, entity: Any) -> Any:
-        if not self._known(table):
-            raise KeyError(table)  # same contract as the dict store
-        with self._lock:
-            row = self._db.execute(
-                "SELECT v, deadline FROM kv WHERE tbl = ? AND k = ?",
-                (table, _k(entity)),
-            ).fetchone()
-            if row is None:
-                return None
-            v, deadline = row
-            if deadline is not None and self._clock() >= deadline:
-                # lazy expiry, Redis-style: reap on read
-                self._db.execute(
-                    "DELETE FROM kv WHERE tbl = ? AND k = ?",
-                    (table, _k(entity)),
-                )
-                self._db.commit()
-                return None
-        return pickle.loads(v)
+        return self.serve_features([table], entity)[0]
 
     def serve_features(self, tables: list[str], entity: Any) -> list[Any]:
-        return [self.get(t, entity) for t in tables]
+        """The entity's value in each of ``tables``, in request order
+        (names may repeat), from ONE statement: the registered tables
+        LEFT JOIN their kv row, so an unknown table (``KeyError``, the
+        dict store's contract) and a missing value (None) are told
+        apart without a second query. Expired values are reaped on
+        read, Redis-style."""
+        key = _k(entity)
+        with self._lock:
+            rows = self._db.execute(
+                "SELECT t.tbl, kv.v, kv.deadline FROM tables t"
+                " LEFT JOIN kv ON kv.tbl = t.tbl AND kv.k = ?"
+                f" WHERE t.tbl IN ({', '.join('?' * len(tables))})",
+                (key, *tables),
+            ).fetchall()
+            found = {tbl: v for tbl, v, _ in rows}
+            for table in tables:
+                if table not in found:
+                    raise KeyError(table)
+            for tbl, _, deadline in rows:
+                if deadline is not None and self._clock() >= deadline:
+                    self._db.execute(
+                        "DELETE FROM kv WHERE tbl = ? AND k = ?", (tbl, key)
+                    )
+                    found[tbl] = None
+        return [
+            None if found[t] is None else pickle.loads(found[t])
+            for t in tables
+        ]
 
     def table_size(self, table: str) -> int:
         with self._lock:

@@ -32,6 +32,10 @@ _DEFAULTS = {
     # and every time function (unix_micros, window ranges) accepts it
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
+    # pyspark 4.1 records a call site for every Column-API call: ~5
+    # extra py4j round trips, a Python stack walk and a retried
+    # `import IPython` each. A Delta MERGE plan makes ~600 such calls.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     # ~100 suite queries × whole-stage-codegen classes overflow the JVM's
     # default 240 MB code cache in one long-lived session; once it fills,

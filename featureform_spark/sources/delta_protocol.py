@@ -48,11 +48,14 @@ parquet scan.
 from __future__ import annotations
 
 import datetime
+import hashlib
 import json
 import os
+import threading
 import time
 import urllib.parse
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -213,6 +216,22 @@ class _State:
     txns: dict = field(default_factory=dict)       # appId -> version
     domains: dict = field(default_factory=dict)    # domain -> config json
 
+    def copy(self) -> "_State":
+        """A copy whose maps can be changed without touching this
+        state. Add actions themselves are shared: writers copy an add
+        before editing it."""
+        metadata = dict(self.metadata)
+        if isinstance(metadata.get("configuration"), dict):
+            metadata["configuration"] = dict(metadata["configuration"])
+        return _State(
+            version=self.version,
+            metadata=metadata,
+            protocol=dict(self.protocol or {}),
+            adds=dict(self.adds),
+            txns=dict(self.txns),
+            domains=dict(self.domains),
+        )
+
     @property
     def row_tracking(self) -> bool:
         return (self.metadata.get("configuration") or {}).get(
@@ -305,10 +324,28 @@ def _crc_name(version: int) -> str:
     return f"{version:020d}.crc"
 
 
+# Process-level folded snapshots, one per table log directory, most
+# recently used last — the role of delta-spark's DeltaLog cache. Each
+# entry is (state at the latest version seen, digest of that version's
+# commit file); state() extends a valid entry by the newer commits
+# only. Flight serves requests on several threads, hence the lock.
+_SNAPSHOT_CACHE_SIZE = 16
+_snapshots: "OrderedDict[str, tuple[_State, bytes]]" = OrderedDict()
+_snapshots_lock = threading.Lock()
+
+
+def _digest(raw: bytes) -> bytes:
+    return hashlib.blake2b(raw, digest_size=16).digest()
+
+
+def _parse_commit(raw: bytes) -> list[dict]:
+    return [json.loads(line) for line in raw.splitlines() if line.strip()]
+
+
 def _fold_actions(st: "_State", actions: list[dict]) -> None:
     """Apply commit/checkpoint actions to ``st`` in place — Delta's
-    snapshot-construction fold, shared by the full fold (state) and
-    the incremental one (version-checksum extension)."""
+    snapshot-construction fold, shared by the full fold from disk and
+    the incremental one onto a cached snapshot."""
     for a in actions:
         if "protocol" in a:
             st.protocol = a["protocol"]
@@ -559,36 +596,34 @@ class DeltaProtocolTable:
         # bool() of the lists, not any() of the versions: any([0]) is
         # False, which would report a freshly-created table (single
         # version-0 commit) or a checkpoint-only log as non-existent.
-        return bool(self._commit_versions() or self._checkpoint_versions())
+        commits, cps = self._scan_log()
+        return bool(commits or cps)
 
-    def _commit_versions(self) -> list[int]:
-        if not os.path.isdir(self.log_path):
-            return []
-        out = []
-        for name in os.listdir(self.log_path):
-            if name.endswith(".json") and len(name) == 25:
-                try:
-                    out.append(int(name[:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def _checkpoint_files(self) -> dict[int, dict]:
-        """Discover every checkpoint form a real Delta writer emits
-        (PROTOCOL.md §Checkpoints): classic single-file
+    def _scan_log(self) -> tuple[list[int], dict[int, dict]]:
+        """One listing of ``_delta_log``: the sorted JSON commit
+        versions, and every checkpoint form a real Delta writer emits
+        (PROTOCOL.md §Checkpoints) by version: classic single-file
         ``n.checkpoint.parquet``, multi-part classic
         ``n.checkpoint.o.p.parquet`` (kept only when all p parts are
         present), and v2 UUID-named ``n.checkpoint.<uuid>.parquet`` /
         ``.json`` manifests (sidecar pointers resolved at read time).
-        Returns {version: {"kind", "paths"}}; when a version has
+        Checkpoints map to {"kind", "paths"}; when a version has
         several forms, classic wins (cheapest read), then v2, then
         multi-part."""
-        if not os.path.isdir(self.log_path):
-            return {}
+        try:
+            names = os.listdir(self.log_path)
+        except (FileNotFoundError, NotADirectoryError):
+            return [], {}
+        commits = []
         classic: dict[int, list[str]] = {}
         v2: dict[int, list[str]] = {}
         parts: dict[int, dict[int, tuple[int, str]]] = {}
-        for name in os.listdir(self.log_path):
+        for name in names:
+            if name.endswith(".json") and len(name) == 25:
+                try:
+                    commits.append(int(name[:-5]))
+                except ValueError:
+                    pass
             bits = name.split(".")
             if len(bits) < 3 or bits[1] != "checkpoint":
                 continue
@@ -607,42 +642,57 @@ class DeltaProtocolTable:
                 parts.setdefault(v, {})[o] = (p, full)
             elif len(bits) == 4 and bits[3] in ("parquet", "json"):
                 v2.setdefault(v, []).append(full)
-        out: dict[int, dict] = {}
+        cps: dict[int, dict] = {}
         for v, by_part in parts.items():
             total = {p for p, _ in by_part.values()}
             if len(total) == 1 and set(by_part) == set(
                 range(1, next(iter(total)) + 1)
             ):
-                out[v] = {
+                cps[v] = {
                     "kind": "multipart",
                     "paths": [by_part[i][1] for i in sorted(by_part)],
                 }
         for v, paths in v2.items():
-            out[v] = {"kind": "v2", "paths": sorted(paths)[:1]}
+            cps[v] = {"kind": "v2", "paths": sorted(paths)[:1]}
         for v, paths in classic.items():
-            out[v] = {"kind": "classic", "paths": paths}
-        return out
+            cps[v] = {"kind": "classic", "paths": paths}
+        return sorted(commits), cps
+
+    def _commit_versions(self) -> list[int]:
+        return self._scan_log()[0]
+
+    def _checkpoint_files(self) -> dict[int, dict]:
+        return self._scan_log()[1]
 
     def _checkpoint_versions(self) -> list[int]:
         return sorted(self._checkpoint_files())
 
-    def version(self) -> int:
-        versions = self._commit_versions()
-        cps = self._checkpoint_versions()
-        if not versions and not cps:
+    def _latest(self, commits: list[int], cps: dict[int, dict]) -> int:
+        if not commits and not cps:
             raise DeltaProtocolError(f"not a Delta table: {self.path}")
-        return max(versions + cps)
+        return max([*commits, *cps])
+
+    def version(self) -> int:
+        return self._latest(*self._scan_log())
+
+    def _commit_bytes(self, version: int) -> bytes:
+        with open(
+            os.path.join(self.log_path, _commit_name(version)), "rb"
+        ) as f:
+            return f.read()
 
     def _read_commit(self, version: int) -> list[dict]:
-        with open(os.path.join(self.log_path, _commit_name(version))) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return _parse_commit(self._commit_bytes(version))
 
-    def _read_checkpoint(self, version: int) -> list[dict]:
+    def _read_checkpoint(
+        self, version: int, info: dict | None = None
+    ) -> list[dict]:
         """Checkpoint → action dicts (metadata-scale collect), handling
         every discovered form: classic single-file, multi-part classic
         (parts concatenated), and v2 manifests whose ``sidecar``
-        pointers are resolved against ``_delta_log/_sidecars/``."""
-        info = self._checkpoint_files().get(version)
+        pointers are resolved against ``_delta_log/_sidecars/``.
+        ``info`` is the version's entry of a _scan_log() listing."""
+        info = info or self._checkpoint_files().get(version)
         if info is None:
             raise DeltaProtocolError(f"no checkpoint at version {version}")
 
@@ -760,38 +810,115 @@ class DeltaProtocolTable:
             )
 
     def state(self, version: int | None = None) -> _State:
-        """Fold checkpoint (if any) + JSON tail into table state at
-        ``version`` (latest if None) — Delta's snapshot construction."""
-        latest = self.version()
+        """Table state at ``version`` (latest if None) — Delta's
+        snapshot construction, returned as the caller's own copy.
+
+        The process keeps one folded snapshot per table path
+        (``_snapshots``). When it is at or below ``version`` and the
+        commit file it ended on still holds the bytes it folded, only
+        the newer commits are folded on top of it. Content, not inode
+        or mtime: a table deleted and re-created at the same path
+        rewrites that commit (new table id, new file names) even
+        within one millisecond. Older versions and misses fold
+        checkpoint + JSON tail from disk (``_fold``)."""
+        commits, cps = self._scan_log()
+        latest = self._latest(commits, cps)
         if version is None:
             version = latest
         if version > latest:
             raise DeltaProtocolError(
                 f"version {version} > latest {latest}"
             )
-        start = 0
-        actions: list[dict] = []
-        usable_cps = [v for v in self._checkpoint_versions() if v <= version]
-        if usable_cps:
-            cp_v = max(usable_cps)
-            actions.extend(self._read_checkpoint(cp_v))
-            start = cp_v + 1
-        have = set(self._commit_versions())
+        cp_v = self._fold_start(version, commits, cps)
+        key = os.path.abspath(self.log_path)
+        with _snapshots_lock:
+            hit = _snapshots.get(key)
+        st = digest = None
+        if hit is not None and hit[0].version <= version:
+            st, digest = self._extend(hit, version, commits)
+        if st is None:
+            st, digest = self._fold(version, cp_v, commits, cps)
+        if version == latest and digest is not None:
+            with _snapshots_lock:
+                _snapshots[key] = (st, digest)
+                _snapshots.move_to_end(key)
+                if len(_snapshots) > _SNAPSHOT_CACHE_SIZE:
+                    _snapshots.popitem(last=False)
+        return st.copy()
+
+    def _extend(
+        self, hit: tuple[_State, bytes], version: int, commits: list[int]
+    ) -> tuple[_State | None, bytes | None]:
+        """``hit`` folded forward to ``version``, with the digest of
+        the last commit folded; (None, None) when ``hit`` is stale or
+        a commit it needs is gone (cleaned log)."""
+        base, digest = hit
+        try:
+            if _digest(self._commit_bytes(base.version)) != digest:
+                return None, None
+        except FileNotFoundError:
+            return None, None
+        tail = range(base.version + 1, version + 1)
+        if not tail:
+            return base, digest
+        if not set(tail) <= set(commits):
+            return None, None
+        st = base.copy()
+        st.version = version
+        for v in tail:
+            raw = self._commit_bytes(v)
+            _fold_actions(st, _parse_commit(raw))
+        self._check_protocol(st.protocol, st.metadata)
+        return st, _digest(raw)
+
+    @staticmethod
+    def _fold_start(
+        version: int, commits: list[int], cps: dict[int, dict]
+    ) -> int | None:
+        """The newest checkpoint at or below ``version`` (None when
+        there is none), after checking that JSON commits cover every
+        version past it. A hole refuses even when a cached snapshot
+        could answer: the log is damaged."""
+        cp_v = max((v for v in cps if v <= version), default=None)
+        start = 0 if cp_v is None else cp_v + 1
+        have = set(commits)
         missing = [v for v in range(start, version + 1) if v not in have]
         if missing:
             raise DeltaProtocolError(
                 f"log is missing commits {missing} and no checkpoint "
                 f"covers them (cleaned log?)"
             )
+        return cp_v
+
+    def _fold(
+        self,
+        version: int,
+        cp_v: int | None,
+        commits: list[int],
+        cps: dict[int, dict],
+    ) -> tuple[_State, bytes | None]:
+        """Fold checkpoint ``cp_v`` (from ``_fold_start``) plus the
+        JSON tail up to ``version`` from disk; also returns the digest
+        of the commit file at ``version`` (None when only a checkpoint
+        holds it)."""
+        start = 0
+        actions: list[dict] = []
+        if cp_v is not None:
+            actions.extend(self._read_checkpoint(cp_v, cps[cp_v]))
+            start = cp_v + 1
+        raw = None
         for v in range(start, version + 1):
-            actions.extend(self._read_commit(v))
+            raw = self._commit_bytes(v)
+            actions.extend(_parse_commit(raw))
+        if raw is None and version in commits:
+            raw = self._commit_bytes(version)
 
         st = _State(version=version, metadata={}, protocol={})
         _fold_actions(st, actions)
         if not st.metadata:
             raise DeltaProtocolError("log has no metaData action")
         self._check_protocol(st.protocol, st.metadata)
-        return st
+        return st, (_digest(raw) if raw is not None else None)
 
     def _write_guard(
         self, st: _State, df: DataFrame | None, operation: str
@@ -4604,33 +4731,16 @@ class DeltaProtocolTable:
         (identical content regardless of writer, so last-wins is
         fine); never raced through O_EXCL like commits are.
 
-        Fold cost: the state at ``version - 1`` is memoized per
-        instance and EXTENDED by the just-committed actions (one
-        commit parse), so a run of N commits folds each commit once —
-        not the O(N^2) tail re-parse a from-scratch fold per commit
-        would cost. Immutable history makes the memo safe under
-        concurrent writers: state at a committed version never
-        changes. Falls back to a full fold (pyarrow checkpoint path,
-        never a Spark job) on a memo miss."""
-        memo = getattr(self, "_crc_memo", None)
-        if memo is not None and memo.version == version - 1:
-            st = _State(
-                version=version,
-                metadata=memo.metadata,
-                protocol=memo.protocol,
-                adds=dict(memo.adds),
-                txns=dict(memo.txns),
-                domains=dict(memo.domains),
-            )
-            _fold_actions(st, self._read_commit(version))
-        else:
-            prev = self._fold_with_arrow
-            self._fold_with_arrow = True
-            try:
-                st = self.state(version)
-            finally:
-                self._fold_with_arrow = prev
-        self._crc_memo = st
+        state() extends the process-level snapshot by the one commit
+        just written, so a run of N commits folds each commit once.
+        A miss folds from disk with the pyarrow checkpoint reader:
+        a commit must never launch a Spark job."""
+        prev = self._fold_with_arrow
+        self._fold_with_arrow = True
+        try:
+            st = self.state(version)
+        finally:
+            self._fold_with_arrow = prev
         tmp = os.path.join(
             self.log_path, f".{_crc_name(version)}.{uuid.uuid4().hex}.tmp"
         )
@@ -4643,8 +4753,15 @@ class DeltaProtocolTable:
         sidecar — catches log tampering/corruption between write and
         read (a torn commit file, a hand-edited add, a lost domain).
         Returns False when no sidecar exists for the version; raises
-        ``DeltaProtocolError`` naming every diverging field."""
-        st = self.state(version)
+        ``DeltaProtocolError`` naming every diverging field. Folds
+        the whole log from disk: a check for tampering must not trust
+        the process-level snapshot."""
+        commits, cps = self._scan_log()
+        latest = self._latest(commits, cps)
+        v = latest if version is None else version
+        st, _ = self._fold(
+            v, self._fold_start(v, commits, cps), commits, cps
+        )
         path = os.path.join(self.log_path, _crc_name(st.version))
         if not os.path.exists(path):
             return False

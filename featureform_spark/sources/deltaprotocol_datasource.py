@@ -43,6 +43,7 @@ appends (inserts), and whole-file removes (deletes, prior DV masked).
 from __future__ import annotations
 
 import os
+import re
 import urllib.parse
 from typing import Iterator, Sequence
 
@@ -85,13 +86,14 @@ class _FileSlice(InputPartition):
     def __init__(
         self, abs_path: str, part_values: dict, part_types: dict,
         field_order: list, dv_blob: bytes | None = None,
-        row_info: tuple | None = None,
+        row_info: tuple | None = None, dv_cardinality: int | None = None,
     ):
         self.abs_path = abs_path
         self.part_values = part_values   # {col: raw string or None}
         self.part_types = part_types     # {col: spark simpleString}
         self.field_order = field_order   # full logical column order
         self.dv_blob = dv_blob           # roaring DV blob (compact) or None
+        self.dv_cardinality = dv_cardinality  # checked against the blob
         # row tracking: (baseRowId, defaultRowCommitVersion,
         # materialized-row-id col, materialized-rcv col) or None
         self.row_info = row_info
@@ -139,69 +141,211 @@ def _py_partition_value(raw: str | None, simple: str):
     return raw
 
 
-def _read_slice(part: _FileSlice) -> Iterator:
-    """Executor-side: the parquet file's record batches with partition
-    literals attached, reordered to the logical schema. Deletion
-    vectors (shipped as the compact roaring blob, decoded HERE on the
-    executor) mask rows by file-relative index while streaming."""
-    import numpy as np
+def _literal_type(simple: str):
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    deleted = None
-    if part.dv_blob is not None:
-        from featureform_spark.sources.dv_bitmap import decode_rbm_array
+    m = re.match(r"decimal\((\d+),(\d+)\)", simple)
+    if m:
+        # keep decimals exact through arrow: the declared decimal type
+        return pa.decimal128(int(m.group(1)), int(m.group(2)))
+    return _pa_scalar_type(simple)
 
-        deleted = decode_rbm_array(part.dv_blob)
-    pf = pq.ParquetFile(part.abs_path)
-    row_offset = 0
-    for batch in pf.iter_batches():
+
+def _output_schema(
+    order: list, literal_types: dict, file_schema, row_ids: bool
+):
+    """The scan's arrow schema in logical ``order``: columns in
+    ``literal_types`` (spark simpleStrings) take that type, the rest
+    their type in ``file_schema``; plus the two row-id columns."""
+    import pyarrow as pa
+
+    fields = [
+        pa.field(n, _literal_type(literal_types[n]))
+        if n in literal_types
+        else file_schema.field(n)
+        for n in order
+    ]
+    if row_ids:
+        fields += [
+            pa.field("_row_id", pa.int64()),
+            pa.field("_row_commit_version", pa.int64()),
+        ]
+    return pa.schema(fields)
+
+
+def snapshot_slices(
+    t: DeltaProtocolTable, st, row_ids: tuple[str, str] | None = None
+) -> list[_FileSlice]:
+    """One slice per live file of the folded state ``st``, in path
+    order: the batch source's input partitions and the Flight scan's
+    input. ``row_ids`` is the (materialized row-id, row-commit-version)
+    physical column pair when row ids are requested. Deletion vectors
+    travel as the compact blob and are decoded by the reader."""
+    fields = st.schema.fields
+    order = [f.name for f in fields]
+    parts = st.partition_columns
+    types = {f.name: f.dataType.simpleString() for f in fields}
+    part_types = {c: types[c] for c in parts}
+    out = []
+    for rel in sorted(st.adds):
+        a = st.adds[rel]
+        dv = a.get("deletionVector")
+        row_info = None
+        if row_ids is not None:
+            base, dcv = a.get("baseRowId"), a.get("defaultRowCommitVersion")
+            row_info = (
+                int(base) if base is not None else None,
+                int(dcv) if dcv is not None else None,
+                *row_ids,
+            )
+        out.append(
+            _FileSlice(
+                t._abs_data_path(rel),
+                {c: (a.get("partitionValues") or {}).get(c) for c in parts},
+                part_types,
+                order,
+                t._dv_blob(dv) if dv else None,
+                row_info=row_info,
+                dv_cardinality=dv.get("cardinality") if dv else None,
+            )
+        )
+    return out
+
+
+def _scan_slices(slices: Sequence[_FileSlice]):
+    """(schema, record batches) of ``slices`` read by ONE
+    pyarrow.dataset scan, in slice order — the reader behind both the
+    Python Data Source (one slice per input partition) and the Flight
+    scan (every live file of a snapshot). ``scan_batches()`` tags each
+    batch with its file, which keys the per-file work: the
+    deletion-vector mask by file-relative row index, the constant
+    (partition / change-feed) columns, and the row ids. Slices name
+    distinct files; the first one fixes the output schema (its logical
+    order, its constants' types, its file's column types)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    by_path = {s.abs_path: s for s in slices}
+    if len(by_path) != len(slices):
+        raise ValueError("a slice scan reads each file once")
+    first = slices[0]
+    dataset = ds.dataset(list(by_path), format="parquet")
+    file_schema = dataset.schema
+    row_cols = (
+        [c for c in first.row_info[2:] if c]
+        if first.row_info is not None
+        else []
+    )
+    missing = [c for c in row_cols if c not in file_schema.names]
+    if missing:
+        # only rewritten files carry materialized row ids; the others
+        # read NULL there and fall back to baseRowId + row index
+        file_schema = pa.schema(
+            list(file_schema) + [pa.field(c, pa.int64()) for c in missing]
+        )
+        dataset = dataset.replace_schema(file_schema)
+    constant = set(first.part_values).intersection(
+        *(s.part_values for s in slices)
+    )
+    columns = [
+        n
+        for n in first.field_order
+        if n not in constant and n in file_schema.names
+    ] + [c for c in row_cols if c not in first.field_order]
+    schema = _output_schema(
+        first.field_order,
+        {n: first.part_types[n] for n in first.part_values},
+        file_schema,
+        first.row_info is not None,
+    )
+
+    def _gen() -> Iterator:
+        path = reader = None
+        # threads decode a large file's columns in parallel (one
+        # 150k-row x 16-column file: 30 -> 13 ms) and cost nothing
+        # measurable on many small files; no pre-buffering, like
+        # ParquetFile: on local files it only delays the first batch
+        scanner = dataset.scanner(
+            columns=columns,
+            use_threads=True,
+            fragment_scan_options=ds.ParquetFragmentScanOptions(
+                pre_buffer=False
+            ),
+        )
+        for tagged in scanner.scan_batches():
+            if tagged.fragment.path != path:
+                path = tagged.fragment.path
+                reader = _SliceBatches(by_path[path], schema)
+            out = reader.convert(tagged.record_batch)
+            if out is not None:
+                yield out
+
+    return schema, _gen()
+
+
+class _SliceBatches:
+    """Per-file state of a slice scan: the decoded deletion vector,
+    the running file-relative row offset, and the constant values."""
+
+    def __init__(self, part: _FileSlice, schema):
+        self.part = part
+        self.schema = schema
+        self.offset = 0
+        self.deleted = None
+        if part.dv_blob is not None:
+            from featureform_spark.sources.dv_bitmap import decode_rbm_array
+
+            self.deleted = decode_rbm_array(part.dv_blob)
+            card = part.dv_cardinality
+            if card is not None and int(card) != len(self.deleted):
+                raise DeltaProtocolError(
+                    f"deletion vector cardinality {card} != decoded "
+                    f"{len(self.deleted)} positions"
+                )
+        self.constants = {
+            name: _py_partition_value(
+                part.part_values[name], part.part_types[name]
+            )
+            for name in part.part_values
+        }
+
+    def convert(self, batch):
+        """The file's next batch in the output schema, deletion-vector
+        masked; None when every row of it is deleted."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        part = self.part
+        start = self.offset
         nrows = batch.num_rows
+        self.offset += nrows
         # ORIGINAL file-relative indexes (pre-DV) — what row ids key on
         orig_idx = (
-            np.arange(row_offset, row_offset + nrows, dtype=np.int64)
+            np.arange(start, start + nrows, dtype=np.int64)
             if part.row_info is not None
             else None
         )
+        deleted = self.deleted
         if deleted is not None and len(deleted):
-            lo = np.searchsorted(deleted, row_offset)
-            hi = np.searchsorted(deleted, row_offset + nrows)
+            lo = np.searchsorted(deleted, start)
+            hi = np.searchsorted(deleted, start + nrows)
             if hi > lo:
                 keep = np.ones(nrows, dtype=bool)
-                keep[(deleted[lo:hi] - row_offset).astype(np.int64)] = False
+                keep[(deleted[lo:hi] - start).astype(np.int64)] = False
                 batch = batch.filter(pa.array(keep))
                 if orig_idx is not None:
                     orig_idx = orig_idx[keep]
-        row_offset += nrows
-        if batch.num_rows == 0:
-            continue
         n = batch.num_rows
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        arrays = []
-        fields = []
-        for name in part.field_order:
-            if name in part.part_values:
-                simple = part.part_types[name]
-                val = _py_partition_value(part.part_values[name], simple)
-                typ = (
-                    _pa_scalar_type(simple)
-                    if not simple.startswith("decimal")
-                    else pa.string()
-                )
-                if simple.startswith("decimal"):
-                    # keep decimals exact through arrow by parsing into
-                    # the declared decimal type
-                    import re
-
-                    m = re.match(r"decimal\((\d+),(\d+)\)", simple)
-                    typ = pa.decimal128(int(m.group(1)), int(m.group(2)))
-                arrays.append(pa.array([val] * n, type=typ))
-            else:
-                arrays.append(cols[name])
-            fields.append(name)
+        if n == 0:
+            return None
+        arrays = [
+            pa.array([self.constants[name]] * n, f.type)
+            if name in self.constants
+            else batch.column(name)
+            for name, f in zip(part.field_order, self.schema)
+        ]
         if part.row_info is not None:
-            import pyarrow.compute as pc
-
             base, dcv, mat_id, mat_rcv = part.row_info
             # a foreign add action without baseRowId (written while the
             # feature was supported-but-unenabled) has NO fresh ids —
@@ -211,26 +355,26 @@ def _read_slice(part: _FileSlice) -> Iterator:
                 if base is not None
                 else pa.nulls(n, pa.int64())
             )
-            mid = cols.get(mat_id)
-            arrays.append(
-                pc.coalesce(pc.cast(mid, pa.int64()), fresh)
-                if mid is not None
-                else fresh
-            )
-            fields.append("_row_id")
             dflt = (
                 pa.array(np.full(n, dcv, dtype=np.int64))
                 if dcv is not None
                 else pa.nulls(n, pa.int64())
             )
-            mrc = cols.get(mat_rcv)
-            arrays.append(
-                pc.coalesce(pc.cast(mrc, pa.int64()), dflt)
-                if mrc is not None
-                else dflt
-            )
-            fields.append("_row_commit_version")
-        yield pa.RecordBatch.from_arrays(arrays, names=fields)
+            for col, fallback in ((mat_id, fresh), (mat_rcv, dflt)):
+                arrays.append(
+                    pc.coalesce(
+                        pc.cast(batch.column(col), pa.int64()), fallback
+                    )
+                    if col
+                    else fallback
+                )
+        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+
+
+def _read_slice(part: _FileSlice) -> Iterator:
+    """Executor-side read of one input partition: the one-slice case of
+    _scan_slices."""
+    return _scan_slices([part])[1]
 
 
 class DeltaProtocolBatchReader(DataSourceReader):
@@ -259,48 +403,15 @@ class DeltaProtocolBatchReader(DataSourceReader):
             return DeltaProtocolStreamReader(sub)._cdf_partitions(
                 st, lo, hi
             )
-        with_row_ids = (
-            self.options.get("withrowids", "false").lower() == "true"
-        )
-        mat = None
-        if with_row_ids:
-            if not st.row_tracking:
-                raise UnsupportedTableFeatureError(
-                    "withRowIds requires delta.enableRowTracking"
-                )
-            mat = st.materialized_row_id_cols or ("", "")
-        parts = st.partition_columns
-        types = {f.name: f.dataType.simpleString() for f in st.schema.fields}
-        order = [f.name for f in st.schema.fields]
-        out = []
-        for rel in sorted(st.adds):
-            a = st.adds[rel]
-            pv = {
-                c: (a.get("partitionValues") or {}).get(c) for c in parts
-            }
-            dv = a.get("deletionVector")
-            row_info = None
-            if with_row_ids:
-                b_ = a.get("baseRowId")
-                d_ = a.get("defaultRowCommitVersion")
-                row_info = (
-                    int(b_) if b_ is not None else None,
-                    int(d_) if d_ is not None else None,
-                    mat[0],
-                    mat[1],
-                )
-            out.append(
-                _FileSlice(
-                    os.path.join(self.t.path, urllib.parse.unquote(rel)),
-                    pv,
-                    {c: types[c] for c in parts},
-                    order,
-                    # ship the COMPACT blob; decode happens executor-side
-                    self.t._dv_blob(dv) if dv else None,
-                    row_info=row_info,
-                )
+        if self.options.get("withrowids", "false").lower() != "true":
+            return snapshot_slices(self.t, st)
+        if not st.row_tracking:
+            raise UnsupportedTableFeatureError(
+                "withRowIds requires delta.enableRowTracking"
             )
-        return out
+        return snapshot_slices(
+            self.t, st, st.materialized_row_id_cols or ("", "")
+        )
 
     def read(self, partition: _FileSlice) -> Iterator:
         return _read_slice(partition)

@@ -66,7 +66,7 @@ from featureform_spark.sources.deltalite import DeltaliteTable
 # two narrow columns and <= one row per batch id, so it is far smaller
 # than the batch itself — but an unbounded backfill batch could still
 # push it past Spark's 8 GB / 512M-row broadcast cap, where the
-# planner's SortMergeJoin fallback is the safe choice (r12 advice).
+# planner's SortMergeJoin fallback is the safe choice.
 _BROADCAST_HITS_MAX_BATCH_BYTES = 1 << 30
 
 
@@ -235,13 +235,14 @@ class EmbeddingStore:
         # broadcast it explicitly: the post-aggregation size estimate
         # is too conservative for the planner, which otherwise
         # shuffles AND sorts both sides into a SortMergeJoin. Gated on
-        # the batch's own plan-time size estimate (r12 advice): a huge
-        # backfill batch could push hits past the 8 GB broadcast cap /
-        # driver memory, so past the threshold the hint is dropped and
-        # the planner's safe SortMergeJoin fallback applies.
+        # the batch's own plan-time size estimate: a huge backfill
+        # batch could push hits past the 8 GB broadcast cap / driver
+        # memory, so past the threshold the hint is dropped and the
+        # planner's safe SortMergeJoin fallback applies. A missing
+        # estimate keeps the broadcast: hits is bounded by the batch.
         hits_side = hits
         est = _plan_size_bytes(batch)
-        if est is not None and est <= _BROADCAST_HITS_MAX_BATCH_BYTES:
+        if est is None or est <= _BROADCAST_HITS_MAX_BATCH_BYTES:
             hits_side = F.broadcast(hits)
         return (
             batch.select(self.id_col)

@@ -762,3 +762,235 @@ def test_do_put_unknown_mode_and_iceberg_append_txn(served, spark, tmp_path):
         assert t.snapshot().count() == 21  # landed exactly once
     finally:
         client.close()
+
+
+# ------------------------------------------ one-pass snapshot scans
+
+
+def test_delta_partitioned_with_dvs_roundtrip(served, tmp_path):
+    """Partition literals and deletion-vector masks are applied per
+    file inside the one dataset scan; the result equals snapshot()."""
+    spark, server, dt, _it, orders = served
+    root = os.path.dirname(os.path.dirname(dt.path))
+    t = DeltaProtocolTable(spark, os.path.join(root, "ns", "parted"))
+    t.create(
+        orders.limit(300).select(
+            "o_orderkey",
+            "o_totalprice",
+            (F.col("o_orderkey") % 3).alias("shard"),
+            F.when(F.col("o_custkey") % 2 == 0, "even")
+            .otherwise("odd")
+            .alias("parity"),
+        ).repartition(2),
+        partition_by=["shard", "parity"],
+    )
+    t.delete_where(F.col("o_orderkey") % 4 == 1)
+    assert any(a.get("deletionVector") for a in t.state().adds.values())
+    got = _client_read(server, {"namespace": "ns", "table": "parted"})
+    native = t.snapshot()
+    assert got.schema.names == native.columns
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == sorted(
+        map(tuple, native.collect())
+    )
+
+
+def _hand_made_delta(path: str, files: list[list[int]]) -> DeltaProtocolTable:
+    """A one-column Delta table without Spark: version 0 by hand, then
+    one sessionless append per entry of ``files``."""
+    import uuid
+
+    log = os.path.join(path, "_delta_log")
+    os.makedirs(log)
+    schema = {
+        "type": "struct",
+        "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+        ],
+    }
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {
+            "metaData": {
+                "id": str(uuid.uuid4()),
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": json.dumps(schema),
+                "partitionColumns": [],
+                "configuration": {},
+            }
+        },
+    ]
+    with open(os.path.join(log, "%020d.json" % 0), "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    t = DeltaProtocolTable(None, path)
+    for rows in files:
+        t.append_arrow(pa.table({"k": pa.array(rows, pa.int64())}))
+    return t
+
+
+def test_delta_scan_keeps_file_order_and_caps(tmp_path):
+    """Files stream in sorted add-path order, rows in file order, and
+    the limit cuts across file boundaries."""
+    import pyarrow.parquet as pq
+
+    files = [list(range(i * 100, i * 100 + 7)) for i in range(6)]
+    t = _hand_made_delta(str(tmp_path / "t"), files)
+    by_path = {}
+    for rel in t.state().adds:
+        first = pq.read_table(os.path.join(t.path, rel))["k"][0]
+        by_path[rel] = files[first.as_py() // 100]
+    want = [k for rel in sorted(by_path) for k in by_path[rel]]
+    got = scan_table_arrow(t.path).read_all()
+    assert got["k"].to_pylist() == want
+    for limit in (1, 7, 10, 41, 42, 1000):
+        capped = scan_table_arrow(t.path, limit).read_all()
+        assert capped["k"].to_pylist() == want[:limit]
+    empty = _hand_made_delta(str(tmp_path / "empty"), [])
+    assert scan_table_arrow(empty.path).read_all().num_rows == 0
+
+
+def test_delta_scan_schema_same_with_and_without_files(tmp_path):
+    """An empty table reports the schema its first file will: a
+    decimal partition column is decimal128 either way."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    schema = {
+        "type": "struct",
+        "fields": [
+            {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+            {
+                "name": "d",
+                "type": "decimal(10,2)",
+                "nullable": True,
+                "metadata": {},
+            },
+        ],
+    }
+    meta = {
+        "metaData": {
+            "id": str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps(schema),
+            "partitionColumns": ["d"],
+            "configuration": {},
+        }
+    }
+    proto = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+    schemas = {}
+    for name, with_file in (("empty", False), ("one", True)):
+        path = str(tmp_path / name)
+        os.makedirs(os.path.join(path, "_delta_log"))
+        actions = [proto, meta]
+        if with_file:
+            rel = "d=1.50/part-0.parquet"
+            os.makedirs(os.path.join(path, "d=1.50"))
+            pq.write_table(
+                pa.table({"k": pa.array([1, 2], pa.int64())}),
+                os.path.join(path, rel),
+            )
+            actions.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "partitionValues": {"d": "1.50"},
+                        "size": os.path.getsize(os.path.join(path, rel)),
+                        "modificationTime": 0,
+                        "dataChange": True,
+                    }
+                }
+            )
+        with open(os.path.join(path, "_delta_log", "%020d.json" % 0), "w") as f:
+            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+        got = scan_table_arrow(path).read_all()
+        schemas[name] = got.schema
+    assert schemas["empty"] == schemas["one"]
+    assert schemas["one"].field("d").type == pa.decimal128(10, 2)
+
+
+# ------------------------------------------------------ stats action
+
+
+@pytest.fixture()
+def stats_server(tmp_path):
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from featureform_spark.serving.hnsw_index import HnswIndex
+
+    (tmp_path / "ns" / "pq").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"k": list(range(50))}), str(tmp_path / "ns" / "pq" / "a.parquet")
+    )
+    index = HnswIndex(4, m=4, ef_construction=16)
+    rng = np.random.default_rng(0)
+    index.add(np.arange(20, dtype=np.int64), rng.normal(size=(20, 4)))
+    server = DatasetStreamerServer({"default": str(tmp_path)})
+    server.register_index("vec", index)
+    client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+    yield server, client
+    client.close()
+    server.shutdown()
+
+
+def _stats(client) -> dict:
+    (result,) = client.do_action(fl.Action("stats", b""))
+    return json.loads(result.body.to_pybytes())
+
+
+def _get(client, ticket: dict) -> pa.Table:
+    return client.do_get(fl.Ticket(json.dumps(ticket).encode())).read_all()
+
+
+def test_stats_counts_requests_per_kind(stats_server):
+    _server, client = stats_server
+    assert _stats(client) == {}
+    for _ in range(3):
+        _get(client, {"namespace": "ns", "table": "pq"})
+    for _ in range(2):
+        _get(client, {"nearest": {"index": "vec", "vector": [0.0] * 4, "k": 3}})
+    _get(client, {"vector_get": {"index": "vec", "vec_id": 1}})
+    writer, _ = client.do_put(
+        fl.FlightDescriptor.for_command(b'{"index_add": "vec"}'),
+        pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))]),
+    )
+    writer.write_table(
+        pa.table({"vec_id": [99], "embedding": [[1.0, 2.0, 3.0, 4.0]]})
+    )
+    writer.close()
+    got = {k: v["requests"] for k, v in _stats(client).items()}
+    assert got == {"scan": 3, "nearest": 2, "vector_get": 1, "index_add": 1}
+
+
+def test_stats_counts_errors(stats_server):
+    _server, client = stats_server
+    _get(client, {"nearest": {"index": "vec", "vector": [0.0] * 4}})
+    for bad in (
+        {"nearest": {"index": "missing", "vector": [0.0] * 4}},
+        {"namespace": "ns", "table": "no_such_table"},
+        {"namespace": "ns", "table": "pq", "limit": -1},
+    ):
+        with pytest.raises((fl.FlightServerError, pa.ArrowInvalid)):
+            _get(client, bad)
+    stats = _stats(client)
+    assert (stats["nearest"]["requests"], stats["nearest"]["errors"]) == (2, 1)
+    assert (stats["scan"]["requests"], stats["scan"]["errors"]) == (2, 2)
+    with pytest.raises(
+        (fl.FlightServerError, pa.ArrowInvalid), match="unknown action"
+    ):
+        list(client.do_action(fl.Action("nope", b"")))
+
+
+def test_stats_latency_histogram(stats_server):
+    server, client = stats_server
+    for _ in range(4):
+        _get(client, {"namespace": "ns", "table": "pq"})
+    hist = _stats(client)["scan"]["latency_us"]
+    assert sum(hist.values()) == 4
+    for bound in map(int, hist):
+        assert bound & (bound - 1) == 0  # powers of two
+    # recording maps a duration to the bucket of its exclusive bound
+    import time
+
+    server.stats.record("probe", time.perf_counter() - 0.0015, ok=True)
+    assert list(server.stats.snapshot()["probe"]["latency_us"]) == ["2048"]

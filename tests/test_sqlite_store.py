@@ -77,6 +77,33 @@ def test_contract_serve_features_order(store_factory):
     assert s.serve_features(["f2", "f1", "f3"], "e") == [2.0, 1.0, None]
 
 
+def test_contract_serve_features_repeats_and_unknown(store_factory):
+    s = store_factory()
+    s.set("f1", "e", 1.0)
+    s.set("f2", "e", 2.0)
+    assert s.serve_features(["f2", "f1", "f2"], "e") == [2.0, 1.0, 2.0]
+    assert s.serve_features(["f1", "f2"], "missing") == [None, None]
+    with pytest.raises(KeyError, match="nope"):
+        s.serve_features(["f1", "nope", "f2"], "e")
+
+
+def test_contract_serve_features_reaps_expired(store_factory):
+    clock = [0.0]
+    s = store_factory(clock=lambda: clock[0])
+    s.set("f1", "e", "short", ttl_seconds=5)
+    s.set("f2", "e", "long", ttl_seconds=50)
+    s.set("f3", "e", "forever")
+    assert s.serve_features(["f1", "f2", "f3"], "e") == [
+        "short", "long", "forever",
+    ]
+    clock[0] = 5.0
+    assert s.serve_features(["f3", "f1", "f2"], "e") == [
+        "forever", None, "long",
+    ]
+    assert s.table_size("f1") == 0  # reaped on read, not just hidden
+    assert s.table_size("f2") == 1
+
+
 # ------------------------------------------------- sqlite-only
 
 

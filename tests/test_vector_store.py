@@ -82,3 +82,32 @@ def test_scheme_pinning_and_auto(spark, tmp_path):
     # mismatched explicit scheme refuses
     with pytest.raises(ValueError, match="cannot be mixed"):
         EmbeddingStore(spark, path, dim=DIM, num_planes=6)
+
+
+@pytest.mark.parametrize("estimate", [None, 1 << 40])
+def test_flag_broadcasts_hits_unless_batch_estimated_large(
+    spark, tmp_path, monkeypatch, estimate
+):
+    """An unavailable size estimate keeps the hits broadcast (hits is
+    bounded by the batch); only an estimate past the cap drops it."""
+    import featureform_spark.streaming.vector_store as vs
+
+    st = EmbeddingStore(
+        spark, str(tmp_path / "emb"), dim=DIM, cosine_threshold=0.999
+    )
+    st.ingest(_emb(spark, [(i, _vec(i)) for i in range(10)])).collect()
+    monkeypatch.setattr(vs, "_plan_size_bytes", lambda df: estimate)
+    flagged = st.flag(_emb(spark, [(100, _vec(0)), (101, [1.0] * DIM)]))
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
+    # the hits join is the outermost join of the plan
+    top_join = next(
+        line.strip(" +-:*()0123456789")
+        for line in plan.splitlines()
+        if "Join" in line
+    )
+    if estimate is None:
+        assert top_join.startswith("BroadcastHashJoin"), plan
+    else:
+        assert not top_join.startswith("BroadcastHashJoin"), plan
+    got = {r["vec_id"]: r["dup_of"] for r in flagged.collect()}
+    assert got == {100: 0, 101: None}
