@@ -48,6 +48,7 @@ parquet scan.
 from __future__ import annotations
 
 import datetime
+import decimal
 import hashlib
 import json
 import os
@@ -63,9 +64,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from featureform_spark.sources.staged_write import (
+    STAGING_DIR,
+    FileRecord,
+    fold_footer,
+    write_staged,
+)
+
 LOG_DIR = "_delta_log"
 LAST_CHECKPOINT = "_last_checkpoint"
-STAGING_DIR = ".staging"
 
 # Reader table features (protocol v3) this implementation actually
 # honors. Anything else listed in readerFeatures → hard gate.
@@ -395,22 +402,39 @@ def abs_data_path(root: str, p: str) -> str:
     return raw if os.path.isabs(raw) else os.path.join(root, raw)
 
 
-def staging_row_counts(spark, staging: str) -> dict[str, int]:
-    """Per-file row counts of a staged write via one Spark job — the
-    footer-parse fallback for files pyarrow cannot open (VARIANT).
-    Shared by the Delta and Iceberg writers."""
-    rows = (
-        spark.read.parquet(staging)
-        .groupBy(F.input_file_name().alias("_f"))
-        .count()
-        .collect()
-    )
-    return {
-        os.path.realpath(
-            urllib.parse.unquote(strip_file_scheme(r["_f"]))
-        ): int(r["count"])
-        for r in rows
+def _delta_stats(rec: FileRecord, allow: set[str] | None = None) -> str:
+    """Per-file stats JSON per PROTOCOL.md: numRecords, minValues,
+    maxValues, nullCount over atomic top-level columns. ``allow``
+    restricts covered columns (the dataSkipping properties); None =
+    all. A footer pyarrow cannot parse yields numRecords only."""
+    if rec.columns is None:
+        return json.dumps({"numRecords": rec.rows})
+    cols = {
+        n: c
+        for n, c in rec.columns.items()
+        if "." not in n and (allow is None or n in allow)
     }
+    out: dict[str, Any] = {
+        "numRecords": rec.rows,
+        "minValues": {},
+        "maxValues": {},
+        "nullCount": {
+            n: c.nulls for n, c in cols.items() if c.nulls is not None
+        },
+    }
+    for n, c in cols.items():
+        if c.bounds is None:
+            continue
+        lo, hi = c.bounds
+        if isinstance(lo, datetime.datetime):
+            lo, hi = lo.isoformat(sep=" "), hi.isoformat(sep=" ")
+        elif isinstance(lo, datetime.date):
+            lo, hi = lo.isoformat(), hi.isoformat()
+        elif isinstance(lo, decimal.Decimal):
+            lo, hi = str(lo), str(hi)
+        out["minValues"][n] = lo
+        out["maxValues"][n] = hi
+    return json.dumps(out)
 
 
 def _commit_name(version: int) -> str:
@@ -1887,68 +1911,6 @@ class DeltaProtocolTable:
 
     # ----------------------------------------------------------- write
 
-    def _file_stats(self, pf, allow: set[str] | None = None) -> str:
-        """Per-file stats JSON per PROTOCOL.md: numRecords, minValues,
-        maxValues, nullCount over atomic top-level columns (parquet
-        footer only — no data read). ``allow`` restricts covered
-        columns (the dataSkipping properties); None = all."""
-        md = pf.metadata
-        schema = pf.schema_arrow
-        mins: dict[str, Any] = {}
-        maxs: dict[str, Any] = {}
-        nulls: dict[str, int] = {}
-        covered: dict[str, bool] = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if "." in name or schema.field(name.split(".")[0]).type is None:
-                    continue
-                if allow is not None and name not in allow:
-                    continue
-                try:
-                    stats = col.statistics
-                    if stats is None or not stats.has_min_max:
-                        covered[name] = False
-                        continue
-                    lo, hi = stats.min, stats.max
-                except NotImplementedError:
-                    # pyarrow can't cast stats for some physical/
-                    # logical combinations (e.g. INT32-backed small
-                    # decimals) — skip the column, never the write
-                    covered[name] = False
-                    continue
-                if isinstance(lo, bytes):
-                    try:
-                        lo, hi = lo.decode(), hi.decode()
-                    except UnicodeDecodeError:
-                        covered[name] = False
-                        continue
-                covered.setdefault(name, True)
-                nulls[name] = nulls.get(name, 0) + (stats.null_count or 0)
-                mins[name] = lo if name not in mins else min(mins[name], lo)
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-        out = {
-            "numRecords": md.num_rows,
-            "minValues": {},
-            "maxValues": {},
-            "nullCount": nulls,
-        }
-        for name, ok in covered.items():
-            if ok and name in mins:
-                lo, hi = mins[name], maxs[name]
-                if isinstance(lo, datetime.datetime):
-                    lo, hi = lo.isoformat(sep=" "), hi.isoformat(sep=" ")
-                elif isinstance(lo, datetime.date):
-                    lo, hi = lo.isoformat(), hi.isoformat()
-                from decimal import Decimal
-
-                if isinstance(lo, Decimal):
-                    lo, hi = str(lo), str(hi)
-                out["minValues"][name] = lo
-                out["maxValues"][name] = hi
-        return json.dumps(out)
-
     def _write_files(
         self,
         df: DataFrame,
@@ -1966,8 +1928,6 @@ class DeltaProtocolTable:
         physical names — the delta column-mapping contract. Without
         this, files written under logical names read back as all-NULL
         through the physical-schema scan."""
-        import pyarrow.parquet as pq
-
         if mapping:
             phys_by_logical = {lo: ph for ph, lo in mapping}
             missing = [c for c in df.columns if c not in phys_by_logical]
@@ -2006,97 +1966,26 @@ class DeltaProtocolTable:
                 if n >= 0:
                     allow = set(df.columns[:n])
 
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
-        if partition_by:
-            # cluster rows by partition key first: without this every
-            # input task emits a file per live partition value
-            # (tasks × values small files, and the driver-side footer
-            # stat pass scales with file count)
-            df = df.repartition(*[F.col(c) for c in partition_by])
-        # INT96 (Spark's default parquet timestamp) carries no column
-        # statistics — write micros so timestamp zone maps exist
-        conf = self.spark.conf
-        prev_ts = conf.get(
-            "spark.sql.parquet.outputTimestampType", "INT96"
-        )
-        conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        try:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(staging)
-        finally:
-            conf.set("spark.sql.parquet.outputTimestampType", prev_ts)
-
-        actions = []
-        fallback_counts: dict[str, int] | None = None
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                try:
-                    pf = pq.ParquetFile(src)
-                    n_rows = pf.metadata.num_rows
-                    stats = (
-                        self._file_stats(pf, allow) if n_rows else None
-                    )
-                except OSError:
-                    # pyarrow cannot parse footers carrying logical
-                    # types it predates (Spark's VARIANT) — fall back
-                    # to one Spark pass over the staging dir for row
-                    # counts; numRecords-only stats (min/max are
-                    # undefined for variant anyway)
-                    if fallback_counts is None:
-                        fallback_counts = self._staging_row_counts(
-                            staging
-                        )
-                    n_rows = fallback_counts.get(
-                        os.path.realpath(src), 0
-                    )
-                    stats = json.dumps({"numRecords": n_rows})
-                if n_rows == 0:
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                pv: dict[str, str | None] = {}
-                if rel_dir != ".":
-                    for seg in rel_dir.split(os.sep):
-                        k, _, raw = seg.partition("=")
-                        pv[k] = (
-                            None
-                            if raw == "__HIVE_DEFAULT_PARTITION__"
-                            else urllib.parse.unquote(raw)
-                        )
-                fname = f"part-{uuid.uuid4().hex}.parquet"
-                final_rel = (
-                    fname if rel_dir == "." else os.path.join(rel_dir, fname)
-                )
-                final_abs = os.path.join(self.path, final_rel)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.replace(src, final_abs)
-                actions.append(
-                    {
-                        "path": urllib.parse.quote(
-                            final_rel.replace(os.sep, "/")
-                        ),
-                        "partitionValues": pv,
-                        "size": os.path.getsize(final_abs),
-                        "modificationTime": int(time.time() * 1000),
-                        "dataChange": True,
-                        "stats": stats,
-                    }
-                )
-        # clear staging tree (_SUCCESS, empty partition dirs)
-        for dirpath, dirs, files in os.walk(staging, topdown=False):
-            for name in files:
-                os.remove(os.path.join(dirpath, name))
-            os.rmdir(dirpath)
-        return actions
-
-    def _staging_row_counts(self, staging: str) -> dict[str, int]:
-        return staging_row_counts(self.spark, staging)
+        return [
+            {
+                "path": urllib.parse.quote(
+                    os.path.relpath(r.path, self.path).replace(os.sep, "/")
+                ),
+                "partitionValues": r.partition,
+                "size": r.size,
+                "modificationTime": int(time.time() * 1000),
+                "dataChange": True,
+                "stats": _delta_stats(r, allow),
+            }
+            for r in write_staged(
+                df,
+                self.path,
+                lambda d, _n: os.path.join(
+                    d, f"part-{uuid.uuid4().hex}.parquet"
+                ),
+                partition_by,
+            )
+        ]
 
     def _write_cdc_files(self, changes: DataFrame) -> list[dict]:
         """Write a change-data file set under ``_change_data/`` and
@@ -2104,37 +1993,25 @@ class DeltaProtocolTable:
         Files — dataChange=false; CDF readers use these INSTEAD of
         deriving from the add/remove actions). ``changes`` carries the
         table columns plus ``_change_type``."""
-        import pyarrow.parquet as pq
-
-        cdc_dir = os.path.join(self.path, "_change_data")
-        os.makedirs(cdc_dir, exist_ok=True)
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
-        changes.write.mode("overwrite").parquet(staging)
-        actions: list[dict] = []
-        for name in sorted(os.listdir(staging)):
-            if not name.endswith(".parquet"):
-                continue
-            src_f = os.path.join(staging, name)
-            if pq.ParquetFile(src_f).metadata.num_rows == 0:
-                continue
-            fname = f"cdc-{uuid.uuid4().hex}.parquet"
-            final = os.path.join(cdc_dir, fname)
-            os.replace(src_f, final)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": f"_change_data/{fname}",
-                        "partitionValues": {},
-                        "size": os.path.getsize(final),
-                        "dataChange": False,
-                    }
+        return [
+            {
+                "cdc": {
+                    "path": os.path.relpath(r.path, self.path).replace(
+                        os.sep, "/"
+                    ),
+                    "partitionValues": {},
+                    "size": r.size,
+                    "dataChange": False,
                 }
+            }
+            for r in write_staged(
+                changes,
+                self.path,
+                lambda _d, _n: os.path.join(
+                    "_change_data", f"cdc-{uuid.uuid4().hex}.parquet"
+                ),
             )
-        for dirpath, _dirs, files in os.walk(staging, topdown=False):
-            for nm in files:
-                os.remove(os.path.join(dirpath, nm))
-            os.rmdir(dirpath)
-        return actions
+        ]
 
     def _commit(self, version: int, actions: list[dict], op: str) -> None:
         """Atomic put-if-absent commit — the primitive Delta's LogStore
@@ -3297,36 +3174,20 @@ class DeltaProtocolTable:
             # overlap the two independent writes (guide §2.6): the cdc
             # rows and the data rewrite both derive from `joined` but
             # neither depends on the other's output — sequential calls
-            # just serialized two sub-second jobs. The timestamp-type
-            # conf is pinned around BOTH writes so _write_files's own
-            # set/restore (to the same value) cannot race the
-            # concurrent cdc write into a different parquet encoding.
+            # just serialized two sub-second jobs
             from concurrent.futures import ThreadPoolExecutor
 
-            conf = self.spark.conf
-            prev_ts = conf.get(
-                "spark.sql.parquet.outputTimestampType", "INT96"
-            )
-            conf.set(
-                "spark.sql.parquet.outputTimestampType",
-                "TIMESTAMP_MICROS",
-            )
-            try:
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_data = pool.submit(
-                        self._write_files,
-                        merged,
-                        st.partition_columns,
-                        mapping,
-                        st.metadata.get("configuration"),
-                    )
-                    f_cdc = pool.submit(self._write_cdc_files, changes)
-                    adds = f_data.result()
-                    cdc_actions = f_cdc.result()
-            finally:
-                conf.set(
-                    "spark.sql.parquet.outputTimestampType", prev_ts
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_data = pool.submit(
+                    self._write_files,
+                    merged,
+                    st.partition_columns,
+                    mapping,
+                    st.metadata.get("configuration"),
                 )
+                f_cdc = pool.submit(self._write_cdc_files, changes)
+                adds = f_data.result()
+                cdc_actions = f_cdc.result()
         else:
             adds = self._write_files(
                 merged,
@@ -4341,8 +4202,6 @@ class DeltaProtocolTable:
         rather than silently flattened."""
         import urllib.parse
 
-        import pyarrow.parquet as pq
-
         t = cls(spark, path)
         if t.exists():
             raise DeltaProtocolError(
@@ -4390,7 +4249,7 @@ class DeltaProtocolTable:
                     "BY schema"
                 )
             try:
-                stats = t._file_stats(pq.ParquetFile(fpath))
+                stats = _delta_stats(fold_footer(fpath))
             except Exception:
                 stats = None  # unparseable footer: convert without stats
             adds.append(

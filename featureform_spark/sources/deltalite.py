@@ -57,9 +57,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from featureform_spark.sources.staged_write import write_staged
+
 LOG_DIR = "_log"
 CDF_DIR = "_cdf"
-STAGING_DIR = "_staging"
+_ZONE_MAP_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.StringType,
+)
 
 
 def _murmur3_hash_long(value: int, seed: int = 42) -> int:
@@ -610,82 +615,39 @@ class DeltaliteTable:
 
     # ------------------------------------------------------------ writes
 
-    @staticmethod
-    def _file_stats(pf) -> dict:
-        """Per-file zone maps from the parquet footer: {col: [min, max]}
-        for int/float/string columns where EVERY row group carries stats
-        (conservative — a partially-covered column is omitted, so pruning
-        can never drop matching rows). Temporal/bool/nested are omitted:
-        their orderings are format-subtle and pruning them conservatively
-        means not pruning at all."""
-        md = pf.metadata
-        schema = pf.schema_arrow
-        import pyarrow as pa
-
-        ok_types = {}
-        for field in schema:
-            t = field.type
-            if pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_string(t):
-                ok_types[field.name] = t
-        mins: dict[str, object] = {}
-        maxs: dict[str, object] = {}
-        covered = dict.fromkeys(ok_types, True)
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if name not in ok_types:
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    covered[name] = False
-                    continue
-                lo, hi = st.min, st.max
-                if isinstance(lo, bytes):
-                    try:
-                        lo, hi = lo.decode(), hi.decode()
-                    except UnicodeDecodeError:
-                        covered[name] = False
-                        continue
-                mins[name] = lo if name not in mins else min(mins[name], lo)
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-        return {
-            c: [mins[c], maxs[c]]
-            for c in ok_types
-            if covered[c] and c in mins
-        }
-
     def _write_files(self, df: DataFrame, version_hint: int) -> list[dict]:
         """Write df as immutable part files; return add-actions with
         per-file row counts AND zone-map stats read from parquet footers
         (metadata only) — the log doubles as a data-skipping index, so
-        pruned reads plan from a log fold without opening any footer."""
-        import pyarrow.parquet as pq
+        pruned reads plan from a log fold without opening any footer.
 
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(staging)
-        actions = []
-        n = 0
-        for name in sorted(os.listdir(staging)):
-            if not name.endswith(".parquet"):
-                continue
-            pf = pq.ParquetFile(os.path.join(staging, name))
-            rows = pf.metadata.num_rows
-            if rows == 0:
-                continue
-            stats = self._file_stats(pf)
-            final = f"part-{version_hint:05d}-{n:05d}-{uuid.uuid4().hex[:8]}.parquet"
-            os.replace(
-                os.path.join(staging, name), os.path.join(self.path, final)
+        Zone maps cover int/float/string columns where EVERY row group
+        carries stats (conservative — a partially-covered column is
+        omitted, so pruning can never drop matching rows).
+        Temporal/bool/nested are omitted: their orderings are
+        format-subtle and pruning them conservatively means not pruning
+        at all."""
+        zoned = {
+            f.name for f in df.schema.fields
+            if isinstance(f.dataType, _ZONE_MAP_TYPES)
+        }
+        return [
+            {
+                "file": os.path.basename(r.path),
+                "rows": r.rows,
+                "stats": {
+                    c: list(s.bounds)
+                    for c, s in (r.columns or {}).items()
+                    if c in zoned and s.bounds is not None
+                },
+            }
+            for r in write_staged(
+                df,
+                self.path,
+                lambda _d, n: f"part-{version_hint:05d}-{n:05d}-"
+                f"{uuid.uuid4().hex[:8]}.parquet",
             )
-            actions.append({"file": final, "rows": rows, "stats": stats})
-            n += 1
-        # clear staging leftovers (_SUCCESS etc.)
-        for name in os.listdir(staging):
-            os.remove(os.path.join(staging, name))
-        os.rmdir(staging)
-        return actions
+        ]
 
     def create(
         self,

@@ -71,11 +71,15 @@ from featureform_spark.sources.local_df import local_df
 from pyspark.sql import types as T
 
 from featureform_spark.sources.avro_codec import read_container, write_container
+from featureform_spark.sources.staged_write import (
+    FileRecord,
+    fold_footer,
+    write_staged,
+)
 
 METADATA_DIR = "metadata"
 DATA_DIR = "data"
 VERSION_HINT = "version-hint.text"
-STAGING_DIR = ".staging"
 
 # Above this many live manifest entries (summed from the manifest
 # list's added/existing counts — no manifest is opened to decide),
@@ -520,7 +524,8 @@ def encode_bound(ice_type: str, val: Any) -> bytes | None:
     if ice_type == "string":
         return str(val).encode("utf-8")
     if ice_type == "binary":
-        return bytes(val)
+        # footer folds hand back UTF-8-decodable bytes as str
+        return val.encode() if isinstance(val, str) else bytes(val)
     if ice_type.startswith("decimal("):
         from decimal import Decimal
 
@@ -567,6 +572,94 @@ def decode_bound(ice_type: str, b: bytes | None) -> Any:
         scale = int(ice_type[:-1].split(",")[1])
         return Decimal(int.from_bytes(b, "big", signed=True)).scaleb(-scale)
     return None
+
+
+def data_file_record(
+    rec: FileRecord, name_to_field: dict[str, dict], partition: dict
+) -> dict:
+    """Manifest data_file record (content 0) for one folded parquet
+    file: value/null counts and binary bounds keyed by field id, over
+    top-level primitive columns (``name_to_field`` is keyed by the name
+    the footer carries)."""
+    vcounts: dict[int, int] = {}
+    ncounts: dict[int, int] = {}
+    lower: dict[int, bytes] = {}
+    upper: dict[int, bytes] = {}
+    for name, c in (rec.columns or {}).items():
+        f = name_to_field.get(name)
+        if f is None or not isinstance(f["type"], str):
+            continue
+        fid = f["id"]
+        vcounts[fid] = c.values
+        if c.nulls is not None:
+            ncounts[fid] = c.nulls
+        if c.bounds is not None:
+            lb, ub = (encode_bound(f["type"], v) for v in c.bounds)
+            if lb is not None and ub is not None:
+                lower[fid], upper[fid] = lb, ub
+
+    def kv(d: dict) -> list[dict]:
+        return [{"key": k, "value": v} for k, v in sorted(d.items())]
+
+    return {
+        "content": 0,
+        "file_path": rec.path,
+        "file_format": "PARQUET",
+        "partition": partition,
+        "record_count": rec.rows,
+        "file_size_in_bytes": rec.size,
+        "value_counts": kv(vcounts),
+        "null_value_counts": kv(ncounts),
+        "lower_bounds": kv(lower),
+        "upper_bounds": kv(upper),
+    }
+
+
+def _delete_entries(
+    recs: list[FileRecord], content: int, snapshot_id: int, seq: int,
+    **extra: Any,
+) -> list[dict]:
+    """ADDED manifest entries for staged delete files (content 1 =
+    position, 2 = equality), unpartitioned and without column stats."""
+    return [
+        {
+            "status": 1,
+            "snapshot_id": snapshot_id,
+            "sequence_number": seq,
+            "file_sequence_number": seq,
+            "data_file": {
+                "content": content,
+                "file_path": r.path,
+                "file_format": "PARQUET",
+                "partition": {},
+                "record_count": r.rows,
+                "file_size_in_bytes": r.size,
+                **extra,
+            },
+        }
+        for r in recs
+    ]
+
+
+def _partition_tuple(
+    raw: dict[str, str | None], result_types: dict[str, str]
+) -> dict[str, Any]:
+    """Typed partition tuple from the shadow ``_p_<field>`` directory
+    values of one staged data file."""
+    out: dict[str, Any] = {}
+    for k, v in raw.items():
+        name = k[len("_p_") :]
+        if v is not None and result_types[name] in ("int", "long", "date"):
+            try:
+                v = int(v)  # int/long, and day-transform shadow values
+            except ValueError:
+                import datetime
+
+                v = (
+                    datetime.date.fromisoformat(v) - datetime.date(1970, 1, 1)
+                ).days
+        out[name] = v
+    return out
 
 
 # ------------------------------------------------------------ transforms
@@ -1940,29 +2033,7 @@ class IcebergProtocolTable:
             if writer is not None:
                 writer.close()
         name_to_field = {f["name"]: f for f in ice_schema["fields"]}
-        nrec, vcounts, ncounts, lower, upper = self._footer_stats(
-            pq.ParquetFile(target), name_to_field
-        )
-        record = {
-            "content": 0,
-            "file_path": target,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": nrec,
-            "file_size_in_bytes": os.path.getsize(target),
-            "value_counts": [
-                {"key": k, "value": v} for k, v in sorted(vcounts.items())
-            ],
-            "null_value_counts": [
-                {"key": k, "value": v} for k, v in sorted(ncounts.items())
-            ],
-            "lower_bounds": [
-                {"key": k, "value": v} for k, v in sorted(lower.items())
-            ],
-            "upper_bounds": [
-                {"key": k, "value": v} for k, v in sorted(upper.items())
-            ],
-        }
+        record = data_file_record(fold_footer(target), name_to_field, {})
         for _attempt in range(20):
             # fold from the NEWEST metadata file explicitly — the
             # version-hint is only a reader optimization and can lag
@@ -2018,7 +2089,7 @@ class IcebergProtocolTable:
                     prev + [manifest],
                     "append",
                     1,
-                    nrec,
+                    record["record_count"],
                     snapshot_id=snapshot_id,
                     expect_version=base_version,
                     lineage=lineage,
@@ -2051,8 +2122,6 @@ class IcebergProtocolTable:
         directories if needed). Re-importing a file already referenced
         by the current snapshot raises, like the reference procedure's
         duplicate check."""
-        import pyarrow.parquet as pq
-
         md, pinned = self._pinned_metadata()
         if self.partition_spec(md):
             raise UnsupportedIcebergFeatureError(
@@ -2092,37 +2161,10 @@ class IcebergProtocolTable:
                 f"add_files: {len(dup)} file(s) already referenced by "
                 f"the current snapshot (first: {dup[0]})"
             )
-        records: list[dict] = []
-        for fpath in files:
-            nrec, vcounts, ncounts, lower, upper = self._footer_stats(
-                pq.ParquetFile(fpath), name_to_field
-            )
-            records.append(
-                {
-                    "content": 0,
-                    "file_path": fpath,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": nrec,
-                    "file_size_in_bytes": os.path.getsize(fpath),
-                    "value_counts": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(vcounts.items())
-                    ],
-                    "null_value_counts": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ncounts.items())
-                    ],
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lower.items())
-                    ],
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(upper.items())
-                    ],
-                }
-            )
+        records = [
+            data_file_record(fold_footer(fpath), name_to_field, {})
+            for fpath in files
+        ]
         seq = int(md.get("last-sequence-number", 0)) + 1
         snapshot_id = int(uuid.uuid4().int % (1 << 62))
         entries = [
@@ -4238,55 +4280,6 @@ class IcebergProtocolTable:
 
     # ------------------------------------------------------------ write
 
-    def _footer_stats(
-        self, pf, name_to_field: dict[str, dict]
-    ) -> tuple[int, dict, dict, dict, dict]:
-        """Parquet footer → (record_count, value_counts,
-        null_value_counts, lower_bounds, upper_bounds) keyed by
-        field-id, with Iceberg binary bound encoding."""
-        md = pf.metadata
-        value_counts: dict[int, int] = {}
-        null_counts: dict[int, int] = {}
-        mins: dict[int, Any] = {}
-        maxs: dict[int, Any] = {}
-        ok: dict[int, bool] = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                f = name_to_field.get(name)
-                if f is None or not isinstance(f["type"], str):
-                    continue
-                fid = f["id"]
-                value_counts[fid] = value_counts.get(fid, 0) + col.num_values
-                stats = col.statistics
-                if stats is None or not stats.has_min_max:
-                    ok[fid] = False
-                    continue
-                lo, hi = stats.min, stats.max
-                if isinstance(lo, bytes):
-                    try:
-                        lo, hi = lo.decode(), hi.decode()
-                    except UnicodeDecodeError:
-                        ok[fid] = False
-                        continue
-                ok.setdefault(fid, True)
-                null_counts[fid] = null_counts.get(fid, 0) + (
-                    stats.null_count or 0
-                )
-                mins[fid] = lo if fid not in mins else min(mins[fid], lo)
-                maxs[fid] = hi if fid not in maxs else max(maxs[fid], hi)
-        lower: dict[int, bytes] = {}
-        upper: dict[int, bytes] = {}
-        for f in name_to_field.values():
-            fid = f["id"]
-            if ok.get(fid) and fid in mins and isinstance(f["type"], str):
-                lb = encode_bound(f["type"], mins[fid])
-                ub = encode_bound(f["type"], maxs[fid])
-                if lb is not None and ub is not None:
-                    lower[fid], upper[fid] = lb, ub
-        return md.num_rows, value_counts, null_counts, lower, upper
-
     def _part_fields_info(
         self, ice_schema: dict, spec_fields: list[dict]
     ) -> list[dict]:
@@ -4308,15 +4301,6 @@ class IcebergProtocolTable:
                 }
             )
         return out
-
-    def _staging_row_counts(self, staging: str) -> dict[str, int]:
-        """Per-file row counts via one Spark job (shared with the
-        Delta writer — the footer-parse fallback for VARIANT files)."""
-        from featureform_spark.sources.delta_protocol import (
-            staging_row_counts,
-        )
-
-        return staging_row_counts(self.spark, staging)
 
     @staticmethod
     def _fill_write_defaults(df: DataFrame, ice_schema: dict) -> DataFrame:
@@ -4346,131 +4330,28 @@ class IcebergProtocolTable:
         for the directory split, so the source columns stay inside the
         data files, as the Iceberg spec requires (directories are
         convention; column values come from the files)."""
-        import pyarrow.parquet as pq
-
         infos = self._part_fields_info(ice_schema, spec_fields)
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
-        # Spark's default INT96 timestamps carry NO parquet column
-        # statistics, which silently disables timestamp file-bound
-        # pruning in scan planning — write spec-standard micros
-        conf = self.spark.conf
-        prev_ts = conf.get(
-            "spark.sql.parquet.outputTimestampType", "INT96"
+        for i in infos:
+            df = df.withColumn(
+                f"_p_{i['name']}",
+                _transform_expr(i["transform"], i["src_type"], i["src_name"]),
+            )
+        # partitionBy consumes the shadow columns into the directory
+        # layout; the source columns stay in the files
+        recs = write_staged(
+            df,
+            self.path,
+            lambda _d, _n: os.path.join(DATA_DIR, f"{uuid.uuid4().hex}.parquet"),
+            [f"_p_{i['name']}" for i in infos],
         )
-        conf.set(
-            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        )
-        w = df
-        if infos:
-            for i in infos:
-                w = w.withColumn(
-                    f"_p_{i['name']}",
-                    _transform_expr(
-                        i["transform"], i["src_type"], i["src_name"]
-                    ),
-                )
-            shadow = [f"_p_{i['name']}" for i in infos]
-            # partitionBy consumes the shadow columns into the directory
-            # layout; the source columns stay in the files
-            w = w.repartition(*[F.col(c) for c in shadow])
-        try:
-            writer = w.write.mode("overwrite")
-            if infos:
-                writer = writer.partitionBy(*shadow)
-            writer.parquet(staging)
-        finally:
-            conf.set("spark.sql.parquet.outputTimestampType", prev_ts)
-
         name_to_field = {f["name"]: f for f in ice_schema["fields"]}
         result_types = {i["name"]: i["result_type"] for i in infos}
-        records: list[dict] = []
-        fallback_counts: dict[str, int] | None = None
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                try:
-                    pf = pq.ParquetFile(src)
-                    if pf.metadata.num_rows == 0:
-                        continue
-                    nrec, vcounts, ncounts, lower, upper = (
-                        self._footer_stats(pf, name_to_field)
-                    )
-                except OSError:
-                    # pyarrow cannot parse footers carrying logical
-                    # types it predates (VARIANT) — one Spark pass for
-                    # row counts; bounds stay empty (undefined for
-                    # variant; sibling-column pruning forfeited on
-                    # these files, stats being optional per spec)
-                    if fallback_counts is None:
-                        fallback_counts = self._staging_row_counts(
-                            staging
-                        )
-                    nrec = fallback_counts.get(os.path.realpath(src), 0)
-                    if nrec == 0:
-                        continue
-                    vcounts, ncounts, lower, upper = {}, {}, {}, {}
-                # partition tuple from the shadow-column directory names
-                pv: dict[str, Any] = {}
-                rel_dir = os.path.relpath(dirpath, staging)
-                if rel_dir != ".":
-                    import urllib.parse
-
-                    for seg in rel_dir.split(os.sep):
-                        k, _, raw = seg.partition("=")
-                        col = k[len("_p_") :]
-                        if raw == "__HIVE_DEFAULT_PARTITION__":
-                            pv[col] = None
-                            continue
-                        raw = urllib.parse.unquote(raw)
-                        t = result_types[col]
-                        if t in ("int", "long"):
-                            pv[col] = int(raw)
-                        elif t == "date":
-                            import datetime
-
-                            try:
-                                # day-transform shadow values are ints
-                                pv[col] = int(raw)
-                            except ValueError:
-                                pv[col] = (
-                                    datetime.date.fromisoformat(raw)
-                                    - datetime.date(1970, 1, 1)
-                                ).days
-                        else:
-                            pv[col] = raw
-                fname = f"{uuid.uuid4().hex}.parquet"
-                final_abs = os.path.join(self.path, DATA_DIR, fname)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.replace(src, final_abs)
-                records.append(
-                    {
-                        "content": 0,
-                        "file_path": final_abs,
-                        "file_format": "PARQUET",
-                        "partition": pv,
-                        "record_count": nrec,
-                        "file_size_in_bytes": os.path.getsize(final_abs),
-                        "value_counts": [
-                            {"key": k, "value": v} for k, v in sorted(vcounts.items())
-                        ],
-                        "null_value_counts": [
-                            {"key": k, "value": v} for k, v in sorted(ncounts.items())
-                        ],
-                        "lower_bounds": [
-                            {"key": k, "value": v} for k, v in sorted(lower.items())
-                        ],
-                        "upper_bounds": [
-                            {"key": k, "value": v} for k, v in sorted(upper.items())
-                        ],
-                    }
-                )
-        for dirpath, dirs, files in os.walk(staging, topdown=False):
-            for name in files:
-                os.remove(os.path.join(dirpath, name))
-            os.rmdir(dirpath)
-        return records
+        return [
+            data_file_record(
+                r, name_to_field, _partition_tuple(r.partition, result_types)
+            )
+            for r in recs
+        ]
 
     def _partition_avro_fields(
         self, ice_schema: dict, spec_fields: list[dict]
@@ -5615,49 +5496,18 @@ class IcebergProtocolTable:
             )
         if int(md.get("format-version", 2)) >= 3:
             return self._delete_rows_v3(md, snap, matched, prev, pinned)
-        matched = matched.orderBy("file_path", "pos")
-
-        import pyarrow.parquet as pq
-
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
-        matched.write.mode("overwrite").parquet(staging)
+        recs = write_staged(
+            matched.orderBy("file_path", "pos"),
+            self.path,
+            lambda _d, _n: os.path.join(
+                DATA_DIR, f"{uuid.uuid4().hex}-deletes.parquet"
+            ),
+        )
         ice_schema = self.schema(md)
         spec_fields = self.partition_spec(md)
         seq = int(md.get("last-sequence-number", 0)) + 1
         snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        entries = []
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                pf = pq.ParquetFile(src)
-                if pf.metadata.num_rows == 0:
-                    continue
-                fname = f"{uuid.uuid4().hex}-deletes.parquet"
-                final_abs = os.path.join(self.path, DATA_DIR, fname)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.replace(src, final_abs)
-                entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": final_abs,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": pf.metadata.num_rows,
-                            "file_size_in_bytes": os.path.getsize(final_abs),
-                        },
-                    }
-                )
-        for dirpath, dirs, files in os.walk(staging, topdown=False):
-            for name in files:
-                os.remove(os.path.join(dirpath, name))
-            os.rmdir(dirpath)
+        entries = _delete_entries(recs, 1, snapshot_id, seq)
         if not entries:
             return -1
         manifest = self._write_manifest(
@@ -5790,55 +5640,22 @@ class IcebergProtocolTable:
         reader (including this repo's ``_read_with_deletes``) applies
         with null-safe matching to data files with strictly older
         sequence numbers."""
-        import pyarrow.parquet as pq
-
         if eq_ids is None:
             eq_ids = self._validate_eq_fields(md, equality_fields)
-        staging = os.path.join(self.path, STAGING_DIR, uuid.uuid4().hex)
         # one delete file per commit (Flink's per-checkpoint shape):
         # the reader broadcasts delete sets, so fewer/larger beats many
         # tiny ones; distinct() both dedupes and bounds the file to the
         # key-tuple cardinality
-        keys.select(*equality_fields).distinct().coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        entries: list[dict] = []
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                pf = pq.ParquetFile(src)
-                if pf.metadata.num_rows == 0:
-                    continue
-                fname = f"{uuid.uuid4().hex}-eq-deletes.parquet"
-                final_abs = os.path.join(self.path, DATA_DIR, fname)
-                os.makedirs(os.path.dirname(final_abs), exist_ok=True)
-                os.replace(src, final_abs)
-                entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 2,
-                            "file_path": final_abs,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": pf.metadata.num_rows,
-                            "file_size_in_bytes": os.path.getsize(
-                                final_abs
-                            ),
-                            "equality_ids": eq_ids,
-                        },
-                    }
-                )
-        for dirpath, dirs, files in os.walk(staging, topdown=False):
-            for name in files:
-                os.remove(os.path.join(dirpath, name))
-            os.rmdir(dirpath)
-        return entries
+        recs = write_staged(
+            keys.select(*equality_fields).distinct().coalesce(1),
+            self.path,
+            lambda _d, _n: os.path.join(
+                DATA_DIR, f"{uuid.uuid4().hex}-eq-deletes.parquet"
+            ),
+        )
+        return _delete_entries(
+            recs, 2, snapshot_id, seq, equality_ids=eq_ids
+        )
 
     def txn_watermark(self, app_id: str, md: dict | None = None) -> int:
         """Highest committed transaction version for ``app_id``, read
@@ -6138,32 +5955,12 @@ class IcebergProtocolTable:
                 }
             )
             pq.write_table(del_table, del_target)
-            nrec, vcounts, ncounts, lower, upper = self._footer_stats(
-                pq.ParquetFile(target), name_to_field
+            data_record = data_file_record(
+                fold_footer(target), name_to_field, {}
             )
         except Exception:
             _cleanup_staged()
             raise
-        data_record = {
-            "content": 0,
-            "file_path": target,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": nrec,
-            "file_size_in_bytes": os.path.getsize(target),
-            "value_counts": [
-                {"key": k, "value": v} for k, v in sorted(vcounts.items())
-            ],
-            "null_value_counts": [
-                {"key": k, "value": v} for k, v in sorted(ncounts.items())
-            ],
-            "lower_bounds": [
-                {"key": k, "value": v} for k, v in sorted(lower.items())
-            ],
-            "upper_bounds": [
-                {"key": k, "value": v} for k, v in sorted(upper.items())
-            ],
-        }
         del_record = {
             "content": 2,
             "file_path": del_target,
@@ -6235,7 +6032,7 @@ class IcebergProtocolTable:
                     prev + [data_manifest, del_manifest],
                     "overwrite",
                     1,
-                    nrec,
+                    data_record["record_count"],
                     snapshot_id=snapshot_id,
                     expect_version=base_version,
                     lineage=lineage,

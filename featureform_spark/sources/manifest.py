@@ -43,74 +43,40 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _kind(bounds) -> str:
+    """Zone-map kind of a folded column: only fully-covered numeric and
+    string stats are prunable. bool is an int subclass but float('True')
+    crashes; temporal stats stringify non-comparably — both are
+    'other' (never pruned on)."""
+    if bounds is None:
+        return "uncovered"  # some row group lacked usable stats
+    lo = bounds[0]
+    if isinstance(lo, bool):
+        return "other"
+    if isinstance(lo, (int, float)):
+        return "numeric"
+    return "string" if isinstance(lo, str) else "other"
+
+
 def _footer_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Read parquet footers (metadata only) for a batch of file paths."""
-    import pyarrow.parquet as pq
+    from featureform_spark.sources.staged_write import fold_footer
 
     for pdf in batches:
         rows = []
         for path in pdf["file"]:
-            md = pq.ParquetFile(path).metadata
-            per_col: dict[str, dict] = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    name = col.path_in_schema
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        # a row group without stats makes the file's
-                        # [min,max] unprovable — mark so pruning keeps it
-                        # (zone maps must be conservative)
-                        acc = per_col.setdefault(
-                            name,
-                            {"min": None, "max": None, "nulls": 0, "kind": "other",
-                             "covered": 0},
-                        )
-                        continue
-                    mn, mx = st.min, st.max
-                    nulls = st.null_count if st.null_count is not None else 0
-                    if isinstance(mn, bytes):
-                        mn = mn.decode("utf-8", "replace")
-                        mx = mx.decode("utf-8", "replace")
-                    # bool is an int subclass but float('True') crashes;
-                    # temporal stats stringify non-comparably — both are
-                    # 'other' (never pruned on)
-                    if isinstance(mn, bool):
-                        kind = "other"
-                    elif isinstance(mn, (int, float)):
-                        kind = "numeric"
-                    elif isinstance(mn, str):
-                        kind = "string"
-                    else:
-                        kind = "other"
-                    acc = per_col.get(name)
-                    if acc is None:
-                        per_col[name] = {
-                            "min": mn, "max": mx, "nulls": nulls, "kind": kind,
-                            "covered": 1,
-                        }
-                    else:
-                        acc["covered"] += 1
-                        if acc["min"] is None:
-                            acc["min"], acc["max"], acc["kind"] = mn, mx, kind
-                        else:
-                            acc["min"] = min(acc["min"], mn)
-                            acc["max"] = max(acc["max"], mx)
-                        acc["nulls"] += nulls
-            for name, acc in per_col.items():
-                # only a file where EVERY row group carried stats gets a
-                # prunable kind; partial coverage -> 'uncovered' (kept)
-                kind = acc["kind"] if acc["covered"] == md.num_row_groups else "uncovered"
+            rec = fold_footer(path)
+            for name, c in rec.columns.items():
+                lo, hi = c.bounds or (None, None)
                 rows.append(
                     {
                         "file": path,
-                        "n_rows": md.num_rows,
+                        "n_rows": rec.rows,
                         "column": name,
-                        "min_val": str(acc["min"]),
-                        "max_val": str(acc["max"]),
-                        "null_count": acc["nulls"],
-                        "kind": kind,
+                        "min_val": str(lo),
+                        "max_val": str(hi),
+                        "null_count": c.nulls or 0,
+                        "kind": _kind(c.bounds),
                     }
                 )
         yield pd.DataFrame(

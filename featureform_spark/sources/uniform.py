@@ -55,9 +55,11 @@ from featureform_spark.sources.delta_protocol import (
 from featureform_spark.sources.iceberg_protocol import (
     IcebergProtocolTable,
     MANIFEST_LIST_SCHEMA,
+    data_file_record,
     spark_schema_to_iceberg,
 )
 from featureform_spark.sources.avro_codec import write_container
+from featureform_spark.sources.staged_write import FileRecord, fold_footer
 
 DELTA_VERSION_PROP = "delta.uniform.delta-version"
 
@@ -136,8 +138,6 @@ def _uniform_name_mapping(ice_schema: dict, column_mapping) -> str:
 
 
 def _data_records(ice: IcebergProtocolTable, ice_schema: dict, st) -> list:
-    import pyarrow.parquet as pq
-
     phys_by_logical = {lo: ph for ph, lo in (st.column_mapping or [])}
     # footer columns carry PHYSICAL names on column-mapped tables;
     # Delta partitionValues keys are physical too
@@ -158,10 +158,7 @@ def _data_records(ice: IcebergProtocolTable, ice_schema: dict, st) -> list:
             for c in st.partition_columns
         }
         try:
-            pf = pq.ParquetFile(abs_p)
-            nrec, vcounts, ncounts, lower, upper = ice._footer_stats(
-                pf, name_to_field
-            )
+            rec = fold_footer(abs_p)
         except OSError:
             # footers pyarrow cannot parse (VARIANT): take numRecords
             # from the Delta add's own stats; bounds stay empty
@@ -174,30 +171,8 @@ def _data_records(ice: IcebergProtocolTable, ice_schema: dict, st) -> list:
                     f"cannot mirror {rel!r}: unparseable footer and no "
                     "numRecords in the add's stats"
                 ) from None
-            nrec = int(n)
-            vcounts, ncounts, lower, upper = {}, {}, {}, {}
-        records.append(
-            {
-                "content": 0,
-                "file_path": abs_p,
-                "file_format": "PARQUET",
-                "partition": part,
-                "record_count": nrec,
-                "file_size_in_bytes": os.path.getsize(abs_p),
-                "value_counts": [
-                    {"key": k, "value": v} for k, v in sorted(vcounts.items())
-                ],
-                "null_value_counts": [
-                    {"key": k, "value": v} for k, v in sorted(ncounts.items())
-                ],
-                "lower_bounds": [
-                    {"key": k, "value": v} for k, v in sorted(lower.items())
-                ],
-                "upper_bounds": [
-                    {"key": k, "value": v} for k, v in sorted(upper.items())
-                ],
-            }
-        )
+            rec = FileRecord(abs_p, os.path.getsize(abs_p), int(n), None)
+        records.append(data_file_record(rec, name_to_field, part))
     return records
 
 
