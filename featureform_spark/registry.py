@@ -116,21 +116,9 @@ class IcebergPathLocation:
     kind: str = "iceberg"
 
 
-@dataclass(frozen=True)
-class DeltaliteLocation:
-    """A deltalite transaction-log table (sources/deltalite.py): the
-    in-repo table format giving snapshot isolation, time travel, CDF and
-    copy-on-write MERGE over plain parquet. ``version`` selects a
-    historical snapshot (time travel); None = latest."""
-
-    path: str
-    version: int | None = None
-    kind: str = "deltalite"
-
-
 Location = (
     FileLocation | CatalogLocation | SQLLocation | StreamLocation
-    | JDBCLocation | DataFrameLocation | DeltaliteLocation
+    | JDBCLocation | DataFrameLocation
     | DeltaPathLocation | IcebergPathLocation
 )
 
@@ -139,7 +127,6 @@ _LOCATION_KINDS = {
     "catalog": CatalogLocation,
     "delta": DeltaPathLocation,
     "iceberg": IcebergPathLocation,
-    "deltalite": DeltaliteLocation,
     "sql": SQLLocation,
     "stream": StreamLocation,
     "jdbc": JDBCLocation,

@@ -1347,6 +1347,26 @@ class DeltaProtocolTable:
         """Latest SetTransaction version for app_id; -1 if none."""
         return int(self.state().txns.get(app_id, -1))
 
+    def properties(self) -> dict[str, str]:
+        """The table configuration (``metaData.configuration``)."""
+        return dict(self.state().metadata.get("configuration") or {})
+
+    def row_count(self, version: int | None = None) -> int:
+        """Live rows at ``version`` from the log alone: each add's stats
+        ``numRecords`` minus its deletion vector's cardinality — no data
+        scan. An add written without ``numRecords`` (allowed by the
+        spec) costs one parquet footer read."""
+        n = 0
+        for p, a in self.state(version).adds.items():
+            rec = json.loads(a.get("stats") or "{}").get("numRecords")
+            if rec is None:
+                import pyarrow.parquet as pq
+
+                rec = pq.read_metadata(self._abs_data_path(p)).num_rows
+            dv = a.get("deletionVector") or {}
+            n += int(rec) - int(dv.get("cardinality") or 0)
+        return n
+
     def detail(self) -> dict:
         """DESCRIBE DETAIL: one summary row of the current state —
         format, id/location, file/byte counts, partition columns,
@@ -2017,6 +2037,9 @@ class DeltaProtocolTable:
         """Atomic put-if-absent commit — the primitive Delta's LogStore
         contract requires; O_EXCL makes concurrent writers lose cleanly
         (retry at the next version) instead of corrupting the log.
+        WRITE commits record ``operationParameters.mode`` as delta-spark
+        does (the change feed's overwrite check reads it): Overwrite
+        when the commit removes files, else Append.
 
         When the table runs in-commit timestamps (the feature exists
         because file mtimes lie after a log copy), the chain is
@@ -2028,6 +2051,11 @@ class DeltaProtocolTable:
             "operation": op,
             "engineInfo": "featureform-spark-deltaprotocol",
         }
+        if op == "WRITE":
+            removes = any("remove" in a for a in actions)
+            ci["operationParameters"] = {
+                "mode": "Overwrite" if removes else "Append"
+            }
         prev_ict = None
         if version > 0:
             try:
@@ -2239,7 +2267,7 @@ class DeltaProtocolTable:
         if cluster_by:
             from concurrent.futures import ThreadPoolExecutor
 
-            from featureform_spark.sources.deltalite import zorder_cluster
+            from featureform_spark.sources.zorder import zorder_cluster
 
             # the row count (file-count sizing) and the z-order
             # quantile pass are independent full reads of the input —
@@ -2840,19 +2868,36 @@ class DeltaProtocolTable:
         update_cols: list[str] | None = None,
         insert: bool = True,
     ) -> dict:
-        """``MERGE INTO`` with copy-on-write of matched files only —
-        the real-protocol analog of deltalite.merge (reference
-        semantics offline_store_spark_runner.py:744-765: ``ON t.key =
-        s.key WHEN MATCHED THEN UPDATE SET <update_cols> WHEN NOT
-        MATCHED THEN INSERT``). Touched-file discovery is one key-column
-        semi-join over the scan (Spark prunes to the key column); only
-        those files are rewritten, the rest carry by reference. New
-        source columns evolve the schema via a new ``metaData`` action
-        (old rows read NULL). Returns {"version", "files_rewritten",
-        "files_total"}.
+        """``MERGE INTO`` with copy-on-write of matched files only
+        (reference semantics offline_store_spark_runner.py:744-765:
+        ``ON t.key = s.key WHEN MATCHED THEN UPDATE SET <update_cols>
+        WHEN NOT MATCHED THEN INSERT``). Touched-file discovery is one
+        key-column semi-join over the scan (Spark prunes to the key
+        column); only those files are rewritten, the rest carry by
+        reference. New source columns evolve the schema via a new
+        ``metaData`` action (old rows read NULL). Returns {"version",
+        "files_rewritten", "files_total"}.
+
+        Each non-null key may appear in at most one source row: two
+        rows sharing a key would both match one target row and write
+        two rows for it, so such a source raises before anything is
+        written (delta-spark's multiple-source-rows-matched error).
+        NULL keys never match, so any number of them are inserts.
         """
         st = self.state()
         self._write_guard(st, None, "MERGE")  # fail fast pre-join
+        from concurrent.futures import ThreadPoolExecutor
+
+        # the duplicate-key count and touched-file discovery are
+        # independent reads of the source: run them concurrently
+        # (guide §2.6); the count is checked before anything is written
+        pool = ThreadPoolExecutor(max_workers=1)
+        dup_count = pool.submit(
+            lambda: source.agg(
+                (F.count(key) - F.count_distinct(key)).alias("d")
+            ).first()["d"]
+        )
+        pool.shutdown(wait=False)
         schema = st.schema
         mapping = st.column_mapping
         # identity columns: MERGE allocates values for INSERTED rows
@@ -2993,6 +3038,13 @@ class DeltaProtocolTable:
                 .select("__file")
                 .distinct()
                 .collect()
+            )
+        dup = dup_count.result()
+        if dup:
+            raise DeltaProtocolError(
+                f"MERGE source has {dup} duplicate non-null value(s) of "
+                f"key {key!r}; each target row may match at most one "
+                "source row — dedupe the source first"
             )
 
         rt = st.row_tracking
@@ -3175,8 +3227,6 @@ class DeltaProtocolTable:
             # rows and the data rewrite both derive from `joined` but
             # neither depends on the other's output — sequential calls
             # just serialized two sub-second jobs
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=2) as pool:
                 f_data = pool.submit(
                     self._write_files,
@@ -3435,7 +3485,14 @@ class DeltaProtocolTable:
             "rows_deleted": int(rows_deleted),
         }
 
-    def overwrite(self, df: DataFrame) -> int:
+    def overwrite(
+        self, df: DataFrame, properties: dict[str, str] | None = None
+    ) -> int:
+        """Atomic replace of every row (INSERT OVERWRITE). ``properties``
+        update the table configuration in the SAME commit, so rows
+        rewritten under a new scheme (an LSH store re-bucket) never
+        land apart from the scheme descriptor; unnamed keys keep their
+        values."""
         st = self.state()
         df = self._apply_generated_columns(
             st, self._apply_column_defaults(st, df)
@@ -3458,6 +3515,12 @@ class DeltaProtocolTable:
             }
             for p in sorted(st.adds)
         ] + [{"add": a} for a in adds]
+        if properties:
+            meta = dict(st.metadata)
+            meta["configuration"] = {
+                **(meta.get("configuration") or {}), **properties
+            }
+            actions.append({"metaData": meta})
         v = st.version + 1
         dm = self._assign_row_ids(st, adds, v)
         if dm is not None:
@@ -3662,7 +3725,7 @@ class DeltaProtocolTable:
 
         ``zorder_by`` = OPTIMIZE ZORDER BY: the rewrite clusters rows
         on a Morton curve over the listed numeric/temporal columns
-        (deltalite.zorder_cluster — one sampled quantile pass + one
+        (zorder.zorder_cluster — one sampled quantile pass + one
         range shuffle), so the log-carried zone maps prune range scans
         on ANY listed dimension, not just a lexicographic leading
         column. Unpartitioned tables only (real Delta z-orders within
@@ -3747,7 +3810,7 @@ class DeltaProtocolTable:
                     "(the partition re-clustering would undo the curve)"
                 )
             self._check_cluster_cols(st.schema, list(zorder_by))
-            from featureform_spark.sources.deltalite import zorder_cluster
+            from featureform_spark.sources.zorder import zorder_cluster
 
             df = zorder_cluster(df, zorder_by, n_files).select(
                 *[f.name for f in st.schema.fields],
@@ -4717,8 +4780,8 @@ def incremental_adds(
     isIncremental sources (offline_store_spark_runner.py:1076-1136).
     Commits in range that remove files with dataChange=true
     (overwrite/MERGE) raise: an append-only incremental read over them
-    would be wrong (deltalite's CDF covers those —
-    sources/deltalite.py:change_feed). dataChange=false actions
+    would be wrong (``incremental_records`` covers those through the
+    change data feed). dataChange=false actions
     (OPTIMIZE/compaction) are skipped entirely — per the Delta
     contract, streams must ignore them, so a compact() never breaks
     blind-append incremental reads."""
@@ -4756,3 +4819,44 @@ def incremental_adds(
         adds=adds,
     )
     return table._read_files(sub, table._data_paths(sub))
+
+
+def incremental_records(
+    table: DeltaProtocolTable, last_version: int
+) -> DataFrame:
+    """The reference's incremental contract
+    (offline_store_spark_runner.py:1076-1136) over the change data
+    feed: the records committed in (``last_version``, latest], tagged
+    ``_change_type`` and ``_commit_version``.
+
+    - refuses a table without ``delta.enableChangeDataFeed=true``;
+    - refuses a range holding an overwrite (a WRITE commit whose
+      ``operationParameters.mode`` is ``Overwrite``) — "overwritten
+      since last run";
+    - keeps only ``insert`` and ``update_postimage`` rows: deleted rows
+      and update preimages are not new records, and an append-only
+      consumer fed them would re-ingest rows the table dropped.
+
+    Callers return early when latest <= ``last_version``; such a range
+    yields an empty frame."""
+    if table.properties().get("delta.enableChangeDataFeed") != "true":
+        raise DeltaProtocolError(
+            f"{table.path} does not have property "
+            "delta.enableChangeDataFeed enabled; cannot read incremental "
+            "records"
+        )
+    latest = table.version()
+    # table_changes first: it refuses a range whose commits were cleaned
+    changes = table.table_changes(last_version, latest)
+    for v in range(last_version + 1, latest + 1):
+        for a in table._read_commit(v):
+            ci = a.get("commitInfo") or {}
+            mode = (ci.get("operationParameters") or {}).get("mode")
+            if ci.get("operation") == "WRITE" and mode == "Overwrite":
+                raise DeltaProtocolError(
+                    f"{table.path} has been overwritten since last run "
+                    f"(version {v})"
+                )
+    return changes.filter(
+        F.col("_change_type").isin("insert", "update_postimage")
+    )

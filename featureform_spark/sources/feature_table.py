@@ -3,8 +3,8 @@
 The reference maintains one wide (entity, ts, feature_1..N) Iceberg table
 per entity type: create-if-absent, ``ALTER TABLE ADD COLUMNS`` per new
 feature, then ``MERGE INTO ... WHEN MATCHED UPDATE / WHEN NOT MATCHED
-INSERT`` (offline_store_spark_runner.py:688-765). Backed here by the
-deltalite transaction log: each ``upsert_feature`` is a copy-on-write
+INSERT`` (offline_store_spark_runner.py:688-765). Backed here by a Delta
+table (``DeltaProtocolTable``): each ``upsert_feature`` is a copy-on-write
 MERGE that rewrites ONLY the files containing matched entities —
 registering feature N against a 100 TB table touches the files holding
 the incoming entities, not the whole table (round 1 emulated this with a
@@ -16,25 +16,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from featureform_spark.sources.deltalite import DeltaliteTable
+from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
 
 class WideFeatureTable:
-    """(entity, feature_1..N) deltalite table with MERGE feature upsert."""
+    """(entity, feature_1..N) Delta table with MERGE feature upsert."""
 
     def __init__(self, spark: SparkSession, path: str, entity_col: str = "entity"):
         self.spark = spark
         self.path = str(path)
         self.entity_col = entity_col
-        self._table = DeltaliteTable(spark, self.path)
+        self._table = DeltaProtocolTable(spark, self.path)
 
     def snapshot(self) -> DataFrame | None:
         if not self._table.exists():
             return None
         return self._table.snapshot()
-
-    def last_merge_stats(self) -> dict | None:
-        return getattr(self, "_last_stats", None)
 
     def upsert_feature(
         self,
@@ -57,15 +54,8 @@ class WideFeatureTable:
         )
         if not self._table.exists():
             self._table.create(incoming)
-            self._last_stats = {
-                "version": 0,
-                "files_rewritten": 0,
-                "files_total": 0,
-                "rows_inserted": self._table.row_count(),
-                "rows_updated": 0,
-            }
         else:
-            self._last_stats = self._table.merge(
+            self._table.merge(
                 incoming, key=self.entity_col, update_cols=[feature_name]
             )
         return self._table.snapshot()

@@ -6289,7 +6289,7 @@ class IcebergProtocolTable:
         rewriteDataFiles(sort) runs, tightening per-file bounds so
         scan planning prunes harder. ``zorder_by``: cluster on a
         Morton curve over several columns (shared
-        deltalite.zorder_cluster helper — one sampled quantile pass +
+        zorder.zorder_cluster helper — one sampled quantile pass +
         one range repartition); multi-dimensional locality without a
         total order, so no spec sort-order is recorded (matching
         Iceberg, whose z-order is an engine strategy, not a sort
@@ -6351,7 +6351,7 @@ class IcebergProtocolTable:
             md["sort-orders"] = orders
             md["default-sort-order-id"] = sort_order_id
         elif zorder_by:
-            from featureform_spark.sources.deltalite import zorder_cluster
+            from featureform_spark.sources.zorder import zorder_cluster
 
             by_name = {f["name"]: f for f in ice_schema["fields"]}
             for c in zorder_by:

@@ -16,7 +16,6 @@ from featureform_spark.registry import (
     CatalogLocation,
     DataFrameLocation,
     DeltaPathLocation,
-    DeltaliteLocation,
     FileLocation,
     IcebergPathLocation,
     JDBCLocation,
@@ -66,10 +65,6 @@ def read_location(spark: SparkSession, loc: Location | dict, registry: Registry 
         )
 
         return read_iceberg_path(spark, loc.path, loc.snapshot_id)
-    if isinstance(loc, DeltaliteLocation):
-        from featureform_spark.sources.deltalite import DeltaliteTable
-
-        return DeltaliteTable(spark, loc.path).snapshot(loc.version)
     if isinstance(loc, SQLLocation):
         return spark.table(loc.table)
     if isinstance(loc, StreamLocation):
@@ -143,5 +138,10 @@ def _from_dict(d: dict) -> Location:
     from featureform_spark.registry import _LOCATION_KINDS
 
     kind = d.get("kind", "file")
-    cls = _LOCATION_KINDS[kind]
+    cls = _LOCATION_KINDS.get(kind)
+    if cls is None:
+        raise ValueError(
+            f"unknown location kind {kind!r}; known kinds: "
+            f"{sorted(_LOCATION_KINDS)}"
+        )
     return cls(**{k: v for k, v in d.items() if k != "kind"})

@@ -1,7 +1,7 @@
 """How a DataFrame becomes immutable parquet files in a table directory.
 
-Every table format here (Delta, Iceberg, deltalite) commits data the
-same way: Spark writes a staging directory, the driver reads each
+Both table formats here (Delta, Iceberg) commit data the same way:
+Spark writes a staging directory, the driver reads each
 file's footer for row counts and column statistics, and the files move
 to their final names before the format's commit makes them visible.
 This module owns that lifecycle once:
@@ -19,8 +19,7 @@ This module owns that lifecycle once:
   removes the staging directory whatever happens.
 - :func:`fold_footer` turns one footer into a format-neutral
   :class:`FileRecord`; each format encodes that record into its own
-  statistics (Delta stats JSON, Iceberg field-id bounds, deltalite
-  zone maps).
+  statistics (Delta stats JSON, Iceberg field-id bounds).
 """
 
 from __future__ import annotations

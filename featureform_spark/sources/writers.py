@@ -159,24 +159,24 @@ def write_iceberg(
     raise ValueError(f"iceberg table already exists at {path}")
 
 
-def write_deltalite(
+def write_delta(
     df: DataFrame, path: str, mode: str = "append", properties: dict | None = None
 ):
-    """S11/S12 in-repo equivalent: sink into a deltalite transaction-log
-    table (snapshot isolation, time travel, CDF, copy-on-write MERGE —
-    sources/deltalite.py). ``mode``: append | overwrite | errorifexists.
-    Returns the committed version."""
-    from featureform_spark.sources.deltalite import DeltaliteTable
+    """S11/S12 without the vendor jar: sink into a REAL Delta Lake table
+    via the in-repo protocol implementation (sources/delta_protocol.py)
+    — snapshot isolation, time travel, CDF, copy-on-write MERGE.
+    ``mode``: append | overwrite | errorifexists. Returns the committed
+    version."""
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
-    t = DeltaliteTable(df.sparkSession, path)
+    t = DeltaProtocolTable(df.sparkSession, path)
     if not t.exists():
-        t.create(df, properties=properties or {})
-        return 0
+        return t.create(df, properties=properties)
     if mode == "append":
         return t.append(df)
     if mode == "overwrite":
         return t.overwrite(df)
-    raise ValueError(f"deltalite table already exists at {path}")
+    raise ValueError(f"delta table already exists at {path}")
 
 
 def write_kafka_topic(

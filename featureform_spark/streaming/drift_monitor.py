@@ -10,7 +10,7 @@ This module is that lifecycle — the monitoring twin of
 monitors (r12: numeric bins, categorical top-K sets, embedding
 hyperplane sign buckets):
 
-- :meth:`DriftMonitor.set_reference` pins, in ONE atomic Deltalite
+- :meth:`DriftMonitor.set_reference` pins, in ONE atomic Delta
   commit: the NaN-excluding numeric bin edges, the top-K CATEGORY
   SET per categorical feature (the ad-hoc ``categorical_compare``
   re-derives top-K per call — a store must pin the set, or a
@@ -27,12 +27,13 @@ hyperplane sign buckets):
   the standing transcendental convention).
 - :meth:`stream_drift` glues a Structured Streaming source to the
   monitor via ``foreachBatch`` — replays replace their own batch id
-  (one CoW delete), so at-least-once delivery stays idempotent.
+  (one deletion-vector delete), so at-least-once delivery stays
+  idempotent.
 
 State size: Σ buckets per feature per observed batch — a monitor
 observing 1k batches of 100 features holds ~1-2M rows, trivially
 aggregation-scale; the 100 TB of traffic behind it never lands in
-the store. Backed by DeltaliteTable for atomic commits + time travel
+the store. Backed by a Delta table for atomic commits + time travel
 (re-read the history as of any version).
 
 Categorical semantics: the pinned set is the top-K reference
@@ -58,7 +59,7 @@ from featureform_spark.functions.drift import (
     psi,
     reference_edges,
 )
-from featureform_spark.sources.deltalite import DeltaliteTable
+from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
 __all__ = ["DriftMonitor", "stream_drift"]
 
@@ -90,7 +91,7 @@ class DriftMonitor:
         embedding_planes: int | None = None,
     ):
         self.spark = spark
-        self.table = DeltaliteTable(spark, path)
+        self.table = DeltaProtocolTable(spark, path)
         self.cols = list(cols) if cols else None
         self.bins = bins
         self.cat_cols = list(categorical_cols) if categorical_cols else None
@@ -333,14 +334,14 @@ class DriftMonitor:
         """Bin the batch under the pinned schemes, append its
         histograms keyed by ``batch_id``, return per-feature PSI vs
         the reference. Re-observing a batch id REPLACES its rows (one
-        copy-on-write delete touching only that id's files) so
+        deletion-vector delete touching only that id's files) so
         streaming replays stay idempotent."""
         self._require_reference()
         if batch_id < 0:
             raise ValueError("batch_id must be >= 0 (negative ids are "
                              "reserved for the reference)")
-        # unconditional: delete_where no-ops (no commit) when nothing
-        # matches, so replays replace their rows without a dedicated
+        # unconditional: a delete matching nothing writes no deletion
+        # vector, so replays replace their rows without a dedicated
         # full-history distinct scan per batch
         self.table.delete_where(F.col("batch_id") == int(batch_id))
         self.table.append(self._histogram(batch, batch_id))

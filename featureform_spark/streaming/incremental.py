@@ -21,12 +21,17 @@ Structured Streaming.
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from featureform_spark.operators.materialize import materialize_latest
+from featureform_spark.sources.delta_protocol import (
+    DeltaProtocolTable,
+    incremental_records,
+)
 
 
 class IncrementalMaterializer:
@@ -156,15 +161,16 @@ class IncrementalTransformation:
         q.awaitTermination()
 
 
-class DeltaliteIncrementalTransformation:
+class DeltaIncrementalTransformation:
     """ST3 over a real change feed: transform only the rows committed to
-    a deltalite table since the last processed version, appending
-    results to an output deltalite table.
+    a Delta table since the last processed version, appending results
+    to an output Delta table.
 
     This is the reference's Delta-CDF incremental path
     (offline_store_spark_runner.py:1076-1136) made concrete: the CDF
     gate, the overwrite rejection, and the version cursor all behave
-    identically (see sources/deltalite.incremental_records). The cursor
+    identically (see ``delta_protocol.incremental_records``; deleted
+    rows and update preimages never reach the transform). The cursor
     is persisted in ``work_dir`` so re-runs resume; a run that fails
     mid-append may duplicate output rows on retry — same at-least-once
     contract as the reference's checkpointless version tracking.
@@ -176,50 +182,30 @@ class DeltaliteIncrementalTransformation:
         self.work.mkdir(parents=True, exist_ok=True)
         self.transform = transform
         self._cursor_file = self.work / "last_version.json"
-        self._out_path = str(self.work / "out")
+        self._out = DeltaProtocolTable(
+            source_table.spark, str(self.work / "out")
+        )
 
     def _cursor(self) -> int:
-        import json
-
         if self._cursor_file.exists():
             return json.loads(self._cursor_file.read_text())["last_version"]
         return -1
 
     def output(self) -> DataFrame | None:
-        from featureform_spark.sources.deltalite import DeltaliteTable
-
-        out = DeltaliteTable(self.source.spark, self._out_path)
-        return out.snapshot() if out.exists() else None
+        return self._out.snapshot() if self._out.exists() else None
 
     def refresh(self) -> int:
         """Process commits newer than the cursor; returns rows processed
         (0 when already caught up)."""
-        import json
-
-        from featureform_spark.sources.deltalite import (
-            DeltaliteError,
-            DeltaliteTable,
-            incremental_records,
-        )
-
         last = self._cursor()
-        latest = self.source.latest_version()
+        latest = self.source.version()
         if latest <= last:
             return 0
-        try:
-            changes = incremental_records(self.source, last)
-        except DeltaliteError as e:
-            if "no new" in str(e).lower():
-                return 0
-            raise
+        changes = incremental_records(self.source, last)
         new_rows = self.transform(
             changes.drop("_change_type", "_commit_version")
         )
-        out = DeltaliteTable(self.source.spark, self._out_path)
-        if out.exists():
-            out.append(new_rows)
-        else:
-            out.create(new_rows)
+        _append_or_create(self._out, new_rows)
         n = new_rows.count()
         self._cursor_file.write_text(json.dumps({"last_version": latest}))
         return n
@@ -232,12 +218,12 @@ class IncrementalSQLTransformation:
     ``incremental_source``, metadata/proto/metadata.proto:605-615).
 
     Per ``refresh()``: every incremental ref binds a temp view over its
-    deltalite change feed since the last processed version (insert rows;
-    overwrites rejected by the CDF contract), every other ref binds the
-    current full snapshot, the template SQL runs once, and the result is
-    appended to an output deltalite table. Version cursors persist in
-    ``work_dir`` — re-runs resume, at-least-once on mid-append failure
-    (the reference's contract).
+    Delta change feed since the last processed version (inserts and
+    update postimages; overwrites rejected by the CDF contract), every
+    other ref binds the current full snapshot, the template SQL runs
+    once, and the result is appended to an output Delta table. Version
+    cursors persist in ``work_dir`` — re-runs resume, at-least-once on
+    mid-append failure (the reference's contract).
 
     Semantics note (same as the reference's): the SQL must be
     distributive over the incremental sources' rows — per-row transforms
@@ -249,7 +235,7 @@ class IncrementalSQLTransformation:
         self,
         spark: SparkSession,
         sql: str,
-        sources: dict[str, object],       # "name.variant" -> DeltaliteTable | DataFrame
+        sources: dict[str, object],  # "name.variant" -> DeltaProtocolTable | DataFrame
         incremental: list[str],
         work_dir: str,
     ):
@@ -271,38 +257,27 @@ class IncrementalSQLTransformation:
         if bad:
             raise ValueError(f"incremental refs not in template: {sorted(bad)}")
         for r in self.incremental:
-            if not hasattr(self.sources[r], "change_feed"):
+            if not isinstance(self.sources[r], DeltaProtocolTable):
                 raise TypeError(
-                    f"incremental source {r!r} must be a DeltaliteTable "
+                    f"incremental source {r!r} must be a DeltaProtocolTable "
                     "(needs a change feed)"
                 )
         self.work = Path(work_dir)
         self.work.mkdir(parents=True, exist_ok=True)
         self._cursor_file = self.work / "cursors.json"
-        self._out_path = str(self.work / "out")
+        self._out = DeltaProtocolTable(spark, str(self.work / "out"))
 
     def _cursors(self) -> dict[str, int]:
-        import json
-
         if self._cursor_file.exists():
             return json.loads(self._cursor_file.read_text())
         return {}
 
     def output(self) -> DataFrame | None:
-        from featureform_spark.sources.deltalite import DeltaliteTable
-
-        out = DeltaliteTable(self.spark, self._out_path)
-        return out.snapshot() if out.exists() else None
+        return self._out.snapshot() if self._out.exists() else None
 
     def refresh(self) -> int:
         """One incremental pass; returns rows appended (0 = caught up)."""
-        import json
-
         from featureform_spark.plans.templates import substitute_template
-        from featureform_spark.sources.deltalite import (
-            DeltaliteTable,
-            incremental_records,
-        )
 
         cursors = self._cursors()
         new_cursors = dict(cursors)
@@ -311,7 +286,7 @@ class IncrementalSQLTransformation:
         for ref in self.incremental:
             t = self.sources[ref]
             last = cursors.get(ref, -1)
-            latest = t.latest_version()
+            latest = t.version()
             if latest > last:
                 any_new = True
                 frames[ref] = incremental_records(t, last).drop(
@@ -334,14 +309,17 @@ class IncrementalSQLTransformation:
             df.createOrReplaceTempView(f"source_{i}")
         result = self.spark.sql(sql)
 
-        out = DeltaliteTable(self.spark, self._out_path)
-        if out.exists():
-            out.append(result)
-        else:
-            out.create(result)
+        _append_or_create(self._out, result)
         n = result.count()
         self._cursor_file.write_text(json.dumps(new_cursors))
         return n
+
+
+def _append_or_create(table: DeltaProtocolTable, df: DataFrame) -> None:
+    if table.exists():
+        table.append(df)
+    else:
+        table.create(df)
 
 
 def stream_to_ann_index(
@@ -499,41 +477,6 @@ def windowed_aggregate(
     return wm.groupBy(*keys).agg(*aggs)
 
 
-def stream_to_deltalite(
-    stream_df: DataFrame,
-    table_path: str,
-    app_id: str,
-    checkpoint: str,
-    transform=None,
-):
-    """Exactly-once streaming sink into a deltalite table.
-
-    foreachBatch delivers each micro-batch at-least-once after failures;
-    the write goes through ``append_idempotent(app_id, batchId)``
-    (Delta's SetTransaction / txnAppId+txnVersion contract), so a
-    replayed batch is a recorded no-op and the table never double-counts
-    — end-to-end exactly-once on top of an at-least-once channel.
-    ``transform`` optionally maps each batch DataFrame before the write.
-    """
-    from featureform_spark.sources.deltalite import DeltaliteTable
-
-    def write(batch: DataFrame, batch_id: int) -> None:
-        out = transform(batch) if transform is not None else batch
-        table = DeltaliteTable(batch.sparkSession, table_path)
-        if not table.exists():
-            # first batch creates the table; creation + watermark must
-            # be atomic, so create empty then append idempotently
-            table.create(out.limit(0))
-        table.append_idempotent(out, app_id, batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_to_delta_protocol(
     stream_df: DataFrame,
     table_path: str,
@@ -542,12 +485,13 @@ def stream_to_delta_protocol(
     transform=None,
 ):
     """Exactly-once streaming sink into a REAL Delta-protocol table
-    (sources/delta_protocol.py) — same contract as
-    ``stream_to_deltalite`` but the log it writes is readable by any
-    Delta engine: foreachBatch replays go through the table's
-    SetTransaction (``txn`` action) check, so a redelivered batch is a
-    recorded no-op and the table never double-counts."""
-    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
+    (sources/delta_protocol.py), readable by any Delta engine.
+    foreachBatch delivers each micro-batch at-least-once after
+    failures; the write goes through the table's SetTransaction
+    (``txn=(app_id, batchId)``) check, so a redelivered batch is a
+    recorded no-op and the table never double-counts — end-to-end
+    exactly-once on top of an at-least-once channel. ``transform``
+    optionally maps each batch DataFrame before the write."""
 
     def write(batch: DataFrame, batch_id: int) -> None:
         out = transform(batch) if transform is not None else batch
@@ -623,7 +567,6 @@ def stream_quarantine(
     no-ops there and still lands the other — no double-counting, no
     lost quarantine rows, on an at-least-once channel."""
     from featureform_spark.functions.expectations import quarantine
-    from featureform_spark.sources.deltalite import DeltaliteTable
 
     def write(batch: DataFrame, batch_id: int) -> None:
         # pin the micro-batch: clean and quarantined sides both
@@ -636,10 +579,10 @@ def stream_quarantine(
             (good, clean_path, "clean"),
             (bad, quarantine_path, "bad"),
         ):
-            table = DeltaliteTable(batch.sparkSession, path)
+            table = DeltaProtocolTable(batch.sparkSession, path)
             if not table.exists():
                 table.create(df_.limit(0))
-            table.append_idempotent(df_, f"{app_id}.{suffix}", batch_id)
+            table.append(df_, txn=(f"{app_id}.{suffix}", int(batch_id)))
 
     return (
         stream_df.writeStream.foreachBatch(write)

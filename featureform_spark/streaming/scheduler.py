@@ -21,7 +21,7 @@ deterministic for tests and usable from any external scheduler.
 The refresh callable owns the refresh *mode* semantics: FULL recompute
 (``DynamicTrainingSet.refresh`` below — PIT joins are not incrementally
 maintainable in general), or INCREMENTAL via
-``DeltaliteIncrementalTransformation.refresh`` (change-feed fold,
+``DeltaIncrementalTransformation.refresh`` (change-feed fold,
 streaming/incremental.py) — the scheduler only decides *when*.
 """
 

@@ -12,7 +12,8 @@ buckets and dedup each new batch against that store:
   side scanned pruned to the join key);
 - accepting a batch = appending its buckets, an O(batch) write.
 
-Backed by :class:`~featureform_spark.sources.deltalite.DeltaliteTable`
+Backed by a Delta table
+(:class:`~featureform_spark.sources.delta_protocol.DeltaProtocolTable`)
 so the store gets atomic commits, time travel (re-run a batch against
 the store as of any version), and OPTIMIZE compaction of small batch
 appends. No reference-repo counterpart (featureform has no corpus ops);
@@ -24,7 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from featureform_spark.functions.dedup import incremental_lsh_flags, lsh_band_buckets
-from featureform_spark.sources.deltalite import DeltaliteTable
+from featureform_spark.sources.delta_protocol import (
+    DeltaProtocolTable,
+    incremental_records,
+)
 
 
 class SignatureStore:
@@ -50,7 +54,7 @@ class SignatureStore:
         baseline_jaccard: float = 0.05,
     ):
         self.spark = spark
-        self.table = DeltaliteTable(spark, path)
+        self.table = DeltaProtocolTable(spark, path)
         self.id_col = id_col
         self.text_col = text_col
         self.params = dict(
@@ -118,7 +122,7 @@ class SignatureStore:
         representative feed can measure one with
         ``lsh_autosize.estimate_baseline_jaccard(feed)`` and pass it
         (or later migrate with :meth:`reband`)."""
-        probe = DeltaliteTable(spark, path)
+        probe = DeltaProtocolTable(spark, path)
         if probe.exists():
             props = probe.properties()
             # a store missing lsh.* properties (legacy writer) opens
@@ -306,7 +310,7 @@ class SignatureStore:
             )
         new_params = dict(self.params, num_hashes=num_hashes, bands=bands)
         if new_params == self.params:
-            return self.table.latest_version()
+            return self.table.version()
         accepted = self.stored_buckets().select(self.id_col).distinct()
         src = docs.join(accepted, self.id_col, "left_semi")
         n_acc, n_src = accepted.count(), src.select(
@@ -335,7 +339,7 @@ class SignatureStore:
 
 
 class ContinuousDedup:
-    """End-to-end continuous dedup: a deltalite documents table is the
+    """End-to-end continuous dedup: a Delta documents table is the
     ingest feed; each ``refresh()`` reads ONLY the rows committed since
     the last processed version (the reference's CDF incremental
     contract — gate, overwrite rejection, version cursor — via
@@ -370,21 +374,11 @@ class ContinuousDedup:
         caught up."""
         import json
 
-        from featureform_spark.sources.deltalite import (
-            DeltaliteError,
-            incremental_records,
-        )
-
         last = self._cursor()
-        latest = self.source.latest_version()
+        latest = self.source.version()
         if latest <= last:
             return None
-        try:
-            changes = incremental_records(self.source, last)
-        except DeltaliteError as e:
-            if "no new" in str(e).lower():
-                return None
-            raise
+        changes = incremental_records(self.source, last)
         batch = changes.drop("_change_type", "_commit_version")
         flags = self.store.ingest(batch)
         self._cursor_file.write_text(json.dumps({"last_version": latest}))

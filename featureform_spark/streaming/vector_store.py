@@ -59,7 +59,7 @@ from featureform_spark.functions.similarity import (
     bucket_pandas,
     norm_pandas,
 )
-from featureform_spark.sources.deltalite import DeltaliteTable
+from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
 # flag() broadcasts the per-batch hits frame only while the BATCH
 # side's plan-time size estimate stays under this bound. hits carries
@@ -95,7 +95,7 @@ class EmbeddingStore:
         vec_col: str = "embedding",
     ):
         self.spark = spark
-        self.table = DeltaliteTable(spark, path)
+        self.table = DeltaProtocolTable(spark, path)
         self.dim = int(dim)
         self.num_planes = int(num_planes)
         self.cosine_threshold = float(cosine_threshold)
@@ -148,7 +148,7 @@ class EmbeddingStore:
         from the corpus the deployment expects to ACCUMULATE (bucketing
         is pinned for the store's lifetime); an existing store loads
         its pinned properties and ignores the expectation."""
-        probe = DeltaliteTable(spark, path)
+        probe = DeltaProtocolTable(spark, path)
         if probe.exists():
             props = probe.properties()
             num_planes = int(props.get("emb.num_planes", 8))
@@ -375,16 +375,16 @@ class EmbeddingStore:
         self.num_planes = new_planes
         return v
 
-    def compact(self, target_rows_per_file: int = 1_000_000) -> dict:
-        """Fold small per-batch append files (the text store's
-        OPTIMIZE parity) — physical only, flags and time travel are
-        unaffected."""
-        return self.table.optimize(target_rows_per_file)
+    def compact(self, target_rows_per_file: int = 1_000_000) -> int:
+        """Fold small per-batch append files (Delta OPTIMIZE) —
+        physical only, flags and time travel are unaffected. Returns
+        the table version."""
+        return self.table.compact(target_rows_per_file)
 
     def evict(self, predicate) -> dict:
         """Retention hook: DELETE stored vectors matching ``predicate``
         (Column or SQL string over the store schema — id, _v, _n,
-        bucket) with copy-on-write of matched files only. Evicted ids
+        bucket) through deletion vectors on the matched files. Evicted ids
         stop flagging future batches; a re-ingest of the same content
         re-admits it. Time travel still serves pre-eviction flags."""
         return self.table.delete_where(predicate)

@@ -1,10 +1,10 @@
-"""Suite queries exercising the deltalite table format end-to-end:
+"""Suite queries exercising the Delta table format end-to-end:
 MERGE-based wide feature tables and CDF incremental reads — the table
 surface the reference gates on Delta/Iceberg
 (offline_store_spark_runner.py:688-765, :1076-1136), oracle-checked
 against DuckDB like every other operator.
 
-Each query materializes a deltalite table under a per-sf temp dir
+Each query materializes a Delta table under a per-sf temp dir
 (wiped at query start so re-runs are deterministic), then returns a
 DataFrame whose values an ANSI-SQL oracle reproduces directly from the
 source parquet.
@@ -51,7 +51,7 @@ def _scratch(sf_dir: str, name: str) -> str:
 def wide_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S14: three feature registrations MERGEd into one wide table.
 
-    Each ``upsert_feature`` is a deltalite copy-on-write MERGE (only
+    Each ``upsert_feature`` is a Delta copy-on-write MERGE (only
     files holding matched entities are rewritten); the third
     materialization (account balance, ALL customers) inserts the
     customers with no orders, leaving their spend features NULL —
@@ -93,12 +93,12 @@ def delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice; reading snapshot(0) reproduces the original rows exactly even
     though the CURRENT table holds different data — the log carries both
     states simultaneously (Delta VERSION AS OF)."""
-    from featureform_spark.sources.deltalite import DeltaliteTable
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    t = DeltaliteTable(spark, _scratch(sf_dir, "time_travel"))
+    t = DeltaProtocolTable(spark, _scratch(sf_dir, "time_travel"))
     t.create(orders.filter(F.col("o_orderkey") % 3 == 0))          # v0
     t.overwrite(orders.filter(F.col("o_orderkey") % 3 == 1))       # v1
     t.append(orders.filter(F.col("o_orderkey") % 3 == 2))          # v2
@@ -353,8 +353,8 @@ def delta_zone_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range repartition + sort), so a range read plans from the log and
     skips disjoint files without opening a footer (Delta data skipping).
     Values must equal the plain SQL range filter; the file-skip count is
-    asserted in tests/test_deltalite.py."""
-    from featureform_spark.sources.deltalite import DeltaliteTable
+    asserted by test_zone_map_pruned_snapshot."""
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
 
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -362,7 +362,7 @@ def delta_zone_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartitionByRange(8, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
     )
-    t = DeltaliteTable(spark, _scratch(sf_dir, "zone_prune"))
+    t = DeltaProtocolTable(spark, _scratch(sf_dir, "zone_prune"))
     t.create(orders)
     return t.snapshot_pruned("o_orderkey", lo=1000, hi=3000)
 
@@ -417,24 +417,24 @@ def delta_cdf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     with change type and commit version
     (offline_store_spark_runner.py:1076-1136; overwrite detection and
     the enableChangeDataFeed gate are unit-tested in
-    tests/test_deltalite.py)."""
-    from featureform_spark.sources.deltalite import (
-        DeltaliteTable,
+    test_incremental_contract_errors)."""
+    from featureform_spark.sources.delta_protocol import (
+        DeltaProtocolTable,
         incremental_records,
     )
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    t = DeltaliteTable(spark, _scratch(sf_dir, "cdf_events"))
+    t = DeltaProtocolTable(spark, _scratch(sf_dir, "cdf_events"))
     t.create(
         events.filter(F.col("event_id") % 5 < 3),
-        properties={"enableChangeDataFeed": "true"},
+        properties={"delta.enableChangeDataFeed": "true"},
     )
     t.append(events.filter(F.col("event_id") % 5 == 3))   # v1
     t.append(events.filter(F.col("event_id") % 5 == 4))   # v2
 
-    return incremental_records(t, last_run_version=0).withColumn(
+    return incremental_records(t, last_version=0).withColumn(
         "_commit_version", F.col("_commit_version").cast("long")
     )
 

@@ -19,7 +19,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
     from featureform_spark.session import get_spark
-    from featureform_spark.sources.deltalite import zorder_cluster
+    from featureform_spark.sources.zorder import zorder_cluster
     from featureform_spark.sources.testdata import load_table
 
     spark = get_spark("zorder_plan")

@@ -652,6 +652,30 @@ def test_merge_leaves_null_key_rows_untouched(spark, tmp_path):
     assert rows == [(1, "a"), (2, "b2"), (7, "new"), (None, "keepme")]
 
 
+def test_merge_refuses_duplicate_source_keys(spark, tmp_path):
+    """Two source rows sharing a key would both match one target row
+    and write two rows for it: MERGE refuses before any write. NULL
+    keys never match, so several of them stay legal inserts."""
+    t = DeltaProtocolTable(spark, str(tmp_path / "dup"))
+    t.create(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    dup = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (3, "z"), (3, "w"), (3, "q")], "k long, v string"
+    )
+    with pytest.raises(DeltaProtocolError, match="3 duplicate"):
+        t.merge(dup, key="k")
+    assert t.version() == 0
+    assert t.row_count() == 2
+
+    nulls = spark.createDataFrame(
+        [(None, "n1"), (None, "n2"), (2, "b2")], "k long, v string"
+    )
+    t.merge(nulls, key="k")
+    assert sorted(
+        ((r["k"], r["v"]) for r in t.snapshot().collect()),
+        key=lambda x: (x[0] is None, x[0], x[1]),
+    ) == [(1, "a"), (2, "b2"), (None, "n1"), (None, "n2")]
+
+
 def test_merge_matched_only_and_partitioned(spark, sf_dir, tmp_path):
     """insert=False drops unmatched source rows; MERGE on a PARTITIONED
     table recovers partition columns through the basePath scan and

@@ -1,4 +1,4 @@
-"""SignatureStore: continuous-ingestion dedup lifecycle over deltalite."""
+"""SignatureStore: continuous-ingestion dedup lifecycle over a Delta table."""
 
 from __future__ import annotations
 
@@ -70,13 +70,13 @@ def test_flag_persists_across_reopen(spark, tmp_path):
 
 
 def test_continuous_dedup_cdf_pipeline(spark, tmp_path):
-    from featureform_spark.sources.deltalite import DeltaliteTable
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
     from featureform_spark.streaming.signature_store import ContinuousDedup
 
-    feed = DeltaliteTable(spark, str(tmp_path / "docs"))
+    feed = DeltaProtocolTable(spark, str(tmp_path / "docs"))
     feed.create(
         spark.createDataFrame([(1, DOC_A), (2, DOC_C)], ["doc_id", "text"]),
-        properties={"enableChangeDataFeed": "true"},
+        properties={"delta.enableChangeDataFeed": "true"},
     )
     cd = ContinuousDedup(
         feed, _store(spark, tmp_path), str(tmp_path / "work")

@@ -18,6 +18,15 @@ def small_df(spark, tag):
     return spark.createDataFrame([(1, tag), (2, tag)], "id long, tag string")
 
 
+def test_unknown_location_kind_is_a_clear_error(spark):
+    """A persisted location dict naming a kind this build does not know
+    (e.g. the retired ``deltalite``) fails with the known kinds listed,
+    not a bare KeyError."""
+    with pytest.raises(ValueError, match="unknown location kind 'deltalite'") as e:
+        read_location(spark, {"kind": "deltalite", "path": "/nowhere"})
+    assert "'delta'" in str(e.value) and "'iceberg'" in str(e.value)
+
+
 def test_versioned_write_and_newest_resolution(spark, tmp_path):
     out = str(tmp_path / "table")
     v1 = write_versioned(small_df(spark, "v1"), out)

@@ -1,5 +1,5 @@
-"""The staged-write layer shared by the Delta, Iceberg and deltalite
-writers (featureform_spark/sources/staged_write.py): the per-session
+"""The staged-write layer shared by the Delta and Iceberg writers
+(featureform_spark/sources/staged_write.py): the per-session
 reference-counted TIMESTAMP_MICROS pin, the staging lifecycle, and the
 footer fold every format encodes its statistics from."""
 

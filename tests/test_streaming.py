@@ -365,6 +365,43 @@ def test_incremental_adds_survives_compact(spark, sf_dir, tmp_path):
     assert incremental_adds(t, 2).count() == c.count()
 
 
+def test_incremental_refresh_ignores_deletes_and_preimages(spark, tmp_path):
+    """Deleted rows and update preimages in the change feed are not new
+    records: a DELETE between two refreshes must not re-enter the
+    transform, and an UPDATE feeds only its postimage."""
+    import pyspark.sql.functions as F
+
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
+    from featureform_spark.streaming.incremental import (
+        DeltaIncrementalTransformation,
+        IncrementalSQLTransformation,
+    )
+
+    src = DeltaProtocolTable(spark, str(tmp_path / "src"))
+    src.create(
+        spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)], "k long, v double"),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    inc = DeltaIncrementalTransformation(
+        src, str(tmp_path / "w1"), lambda df: df.select("k", "v")
+    )
+    sql = IncrementalSQLTransformation(
+        spark, "SELECT k, v FROM {{src}}", {"src": src}, ["src"],
+        str(tmp_path / "w2"),
+    )
+    assert inc.refresh() == 3 and sql.refresh() == 3
+
+    src.delete_where(F.col("k") == 1)
+    assert inc.refresh() == 0 and sql.refresh() == 0
+
+    src.merge(spark.createDataFrame([(2, 25.0)], "k long, v double"), key="k")
+    assert inc.refresh() == 1 and sql.refresh() == 1
+    for t in (inc, sql):
+        assert sorted((r["k"], r["v"]) for r in t.output().collect()) == [
+            (1, 10.0), (2, 20.0), (2, 25.0), (3, 30.0)
+        ]
+
+
 def test_stream_to_ann_index_serves_and_resumes(spark, tmp_path):
     """Streaming vector-index maintenance: a file stream of
     (vec_id, embedding) rows lands in the in-RAM HNSW index batch by
@@ -477,14 +514,14 @@ def test_stream_quarantine_splits_and_replays_exactly_once(
     spark, tmp_path
 ):
     """Streaming data-quality triage: each micro-batch splits into
-    clean/quarantined deltalite sinks with per-row rule attribution;
+    clean/quarantined Delta sinks with per-row rule attribution;
     both sides are independently exactly-once (separate txn app-ids),
     so a replayed batch no-ops on each."""
     from featureform_spark.functions.expectations import (
         in_range,
         not_null,
     )
-    from featureform_spark.sources.deltalite import DeltaliteTable
+    from featureform_spark.sources.delta_protocol import DeltaProtocolTable
     from featureform_spark.streaming.incremental import stream_quarantine
 
     src_dir = tmp_path / "src"
@@ -502,8 +539,8 @@ def test_stream_quarantine_splits_and_replays_exactly_once(
         checkpoint=str(tmp_path / "ck"),
     )
     q.awaitTermination(120)
-    clean = DeltaliteTable(spark, str(tmp_path / "clean")).snapshot()
-    bad = DeltaliteTable(spark, str(tmp_path / "bad")).snapshot()
+    clean = DeltaProtocolTable(spark, str(tmp_path / "clean")).snapshot()
+    bad = DeltaProtocolTable(spark, str(tmp_path / "bad")).snapshot()
     # ids 1..49 except multiples of 10 (null tag) are clean
     assert clean.count() == sum(
         1 for i in range(100) if i % 10 and i <= 49
@@ -517,8 +554,8 @@ def test_stream_quarantine_splits_and_replays_exactly_once(
     assert viol[51] == {"in_range(v)"}
     assert all(r["_batch_id"] == 0 for r in bad.collect())
     # replay batch 0 manually: both sides no-op
-    ct = DeltaliteTable(spark, str(tmp_path / "clean"))
-    assert ct.append_idempotent(clean.limit(5), "dq-x.clean", 0) is None
+    ct = DeltaProtocolTable(spark, str(tmp_path / "clean"))
+    assert ct.append(clean.limit(5), txn=("dq-x.clean", 0)) == -1
     assert ct.snapshot().count() == clean.count()  # replay: no new rows
 
 
