@@ -220,6 +220,14 @@ def frequent_ngrams(
     grams = df.select(ngrams_expr(tokens_expr(text_col), n).alias("_g"))
     items = grams.select(F.explode(F.col("_g")).alias("ngram"))
     cand_plus = _local_candidates_with_total(items, "ngram", min_frac)
+    # Bound of the single-row fold below: a partition keeps only items
+    # with a local count >= min_frac x its item count, so it emits at
+    # most 1/min_frac candidates, and the one collect_set row holds at
+    # most P/min_frac distinct n-grams for P partitions of ``items``
+    # (min_frac=0.001 over 200 partitions: <= 200,000 strings, a few
+    # MB). It is folded by one task and must fit one row (< 2 GB), so
+    # a very small min_frac over very many partitions is where this
+    # shape stops scaling.
     cands = (
         cand_plus.agg(
             F.sum("_ln").alias("_n"),

@@ -22,14 +22,16 @@ Ticket protocol (JSON, reference-compatible field names):
 is also accepted. ``limit`` defaults to the reference's 2M-record cap.
 
 Format handling per table directory:
-- Delta protocol (``_delta_log``): the snapshot's live files stream
-  through ONE pyarrow dataset scan (the Python Data Source's slice
-  reader), deletion vectors applied as per-file row-index masks and
-  Hive partition values attached as constant columns. Column-mapped
-  tables gate to the native Spark reader.
-- Iceberg protocol (``metadata/``): current-snapshot scan with
-  position deletes applied (sequence-number aware, matching
-  ``_read_with_deletes``); equality deletes gate.
+- Delta protocol (``_delta_log``) and Iceberg protocol (``metadata/``):
+  the format's planner turns the snapshot into slices and its live
+  files stream through ONE pyarrow dataset scan
+  (``sources/slice_scan.py``, the Python Data Sources' reader too).
+  Delta deletion vectors and Iceberg position deletes, deletion
+  vectors and equality deletes (sequence-scoped as in
+  ``_read_with_deletes``) mask rows per file; Hive partition values
+  and Iceberg ``initial-default`` values attach as constant columns.
+  Column-mapped Delta tables and name-mapped or metadata-partitioned
+  Iceberg tables gate to the native Spark reader.
 - Anything else: a plain parquet dataset directory.
 """
 
@@ -41,7 +43,6 @@ import threading
 import time
 from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 
 from featureform_spark.serving.streamer import TWO_MILLION_RECORD_LIMIT
@@ -117,172 +118,67 @@ def _detect_format(path: str) -> str:
     return "parquet"
 
 
-def _mask_batches(
-    batches: Iterator[pa.RecordBatch], deleted_pos: np.ndarray
-) -> Iterator[pa.RecordBatch]:
-    """Drop rows whose file-relative row index is in ``deleted_pos``
-    (sorted uint64) while streaming — the sessionless analog of the
-    broadcast anti-join on ``_metadata.row_index``."""
-    offset = 0
-    for batch in batches:
-        n = batch.num_rows
-        lo = np.searchsorted(deleted_pos, offset)
-        hi = np.searchsorted(deleted_pos, offset + n)
-        if hi > lo:
-            keep = np.ones(n, dtype=bool)
-            keep[(deleted_pos[lo:hi] - offset).astype(np.int64)] = False
-            batch = batch.filter(pa.array(keep))
-        offset += n
-        if batch.num_rows:
-            yield batch
-
-
-def _delta_batches(
-    path: str, with_row_ids: bool = False
+def _table_batches(
+    path: str, fmt: str, with_row_ids: bool = False
 ) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
-    from featureform_spark.sources.delta_protocol import (
-        DeltaProtocolError,
-        DeltaProtocolTable,
-        UnsupportedTableFeatureError,
-    )
-    from featureform_spark.sources.deltaprotocol_datasource import (
-        _output_schema,
-        _scan_slices,
-        snapshot_slices,
+    """A Delta or Iceberg snapshot planned into slices and read by the
+    one slice scan (``sources/slice_scan.py``)."""
+    from featureform_spark.sources.slice_scan import (
+        output_schema,
+        scan_slices,
+        simple_types,
     )
 
-    t = DeltaProtocolTable(None, path)
-    st = t.state()
-    if st.column_mapping:
-        raise UnsupportedTableFeatureError(
-            "flight streamer: column-mapped Delta tables are served by "
-            "the native Spark reader, not the sessionless scan"
+    if fmt == "delta":
+        from featureform_spark.sources.delta_protocol import (
+            DeltaProtocolError,
+            DeltaProtocolTable,
         )
-    mat = None
-    if with_row_ids:
-        if not st.row_tracking:
-            raise DeltaProtocolError(
-                "with_row_ids requires delta.enableRowTracking"
+        from featureform_spark.sources.deltaprotocol_datasource import (
+            snapshot_slices,
+        )
+
+        t = DeltaProtocolTable(None, path)
+        st = t.state()
+        mat = None
+        if with_row_ids:
+            if not st.row_tracking:
+                raise DeltaProtocolError(
+                    "with_row_ids requires delta.enableRowTracking"
+                )
+            mat = st.materialized_row_id_cols or ("", "")
+        slices = snapshot_slices(t, st, mat)
+        schema = st.schema
+    else:
+        from featureform_spark.sources.iceberg_protocol import (
+            IcebergProtocolTable,
+        )
+        from featureform_spark.sources.icebergprotocol_datasource import (
+            snapshot_slices,
+        )
+
+        if with_row_ids:
+            raise TicketError(
+                "with_row_ids is served for Delta row-tracked tables; "
+                "Iceberg v3 row lineage reads go through "
+                "snapshot_with_row_ids"
             )
-        mat = st.materialized_row_id_cols or ("", "")
-    slices = snapshot_slices(t, st, mat)
+        t = IcebergProtocolTable(None, path)
+        md = t.metadata()
+        snap = t._snapshot_by(None, md=md)
+        if snap is None:
+            raise TicketError(f"iceberg table at {path} has no snapshot")
+        slices = snapshot_slices(t, snap, md)
+        schema = t.spark_schema(md)
     if slices:
-        return _scan_slices(slices)
+        return scan_slices(slices)
     # no file to read column types from: every column takes its
-    # logical type, as partition columns do
-    schema = _output_schema(
-        [f.name for f in st.schema.fields],
-        {f.name: f.dataType.simpleString() for f in st.schema.fields},
-        None,
-        with_row_ids,
+    # logical type, as constant columns do
+    types = simple_types(schema)
+    return (
+        output_schema(list(types), types, types, None, with_row_ids),
+        iter(()),
     )
-    return schema, iter(())
-
-
-def _iceberg_batches(path: str) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
-    import pyarrow.parquet as pq
-
-    from featureform_spark.sources.iceberg_protocol import (
-        IcebergProtocolTable,
-        UnsupportedIcebergFeatureError,
-    )
-
-    t = IcebergProtocolTable(None, path)
-    md = t.metadata()
-    order = [f.name for f in t.spark_schema(md).fields]
-    snap = t._snapshot_by(None, md=md)
-    if snap is None:
-        raise TicketError(f"iceberg table at {path} has no snapshot")
-    data_entries, delete_entries = t._live_entries(snap)
-    if any(
-        int(e["data_file"].get("content", 0)) == 2 for e in delete_entries
-    ):
-        raise UnsupportedIcebergFeatureError(
-            "flight streamer: equality deletes are served by the "
-            "native merge-on-read reader (IcebergProtocolTable.snapshot)"
-        )
-    # position deletes: (file_path, pos) parquet rows, applicable when
-    # the delete's sequence number >= the data file's (same rule as
-    # _read_with_deletes) — folded into per-file sorted position arrays
-    from featureform_spark.sources.iceberg_protocol import _is_dv_file
-    from featureform_spark.sources.dv_bitmap import (
-        decode_rbm_array,
-        read_dv_from_file,
-    )
-
-    data_files = [
-        (
-            t._resolve_path(e["data_file"]["file_path"]),
-            int(e.get("sequence_number") or 0),
-        )
-        for e in data_entries
-    ]
-    seq_by_path = dict(data_files)
-    del_by_path: dict[str, list[np.ndarray]] = {}
-    for e in delete_entries:
-        del_seq = int(e.get("sequence_number") or 0)
-        df_ = e["data_file"]
-        if _is_dv_file(df_):
-            # v3 deletion vector: decode the referenced puffin blob
-            ref = t._resolve_path(df_["referenced_data_file"])
-            if del_seq >= seq_by_path.get(ref, 0):
-                del_by_path.setdefault(ref, []).append(
-                    decode_rbm_array(
-                        read_dv_from_file(
-                            t._resolve_path(df_["file_path"]),
-                            int(df_["content_offset"]),
-                            int(df_["content_size_in_bytes"]),
-                        )
-                    )
-                )
-            continue
-        dtbl = pq.read_table(
-            t._resolve_path(df_["file_path"]),
-            columns=["file_path", "pos"],
-        )
-        fp = dtbl.column("file_path").to_numpy(zero_copy_only=False)
-        pos = dtbl.column("pos").to_numpy(zero_copy_only=False)
-        for p in np.unique(fp):
-            p_str = str(p)
-            if del_seq >= seq_by_path.get(p_str, 0):
-                del_by_path.setdefault(p_str, []).append(
-                    pos[fp == p].astype(np.uint64)
-                )
-
-    def _schema() -> pa.Schema:
-        if data_files:
-            fs = pq.read_schema(data_files[0][0])
-            missing = [n for n in order if n not in fs.names]
-            if missing:
-                raise UnsupportedIcebergFeatureError(
-                    f"flight streamer: columns {missing} are not stored "
-                    "under their logical names (name-mapped / "
-                    "metadata-partitioned table) — served by the native "
-                    "Spark reader"
-                )
-            return pa.schema([fs.field(n) for n in order])
-        return pa.schema([])
-
-    def _gen() -> Iterator[pa.RecordBatch]:
-        for p, _seq in sorted(data_files):
-            pf = pq.ParquetFile(p)
-            batches = (
-                pa.RecordBatch.from_arrays(
-                    [
-                        b.column(b.schema.names.index(n))
-                        for n in order
-                    ],
-                    names=order,
-                )
-                for b in pf.iter_batches()
-            )
-            dels = del_by_path.get(p)
-            if dels:
-                merged = np.unique(np.concatenate(dels))
-                batches = _mask_batches(batches, merged)
-            yield from batches
-
-    return _schema(), _gen()
 
 
 def _parquet_batches(path: str) -> tuple[pa.Schema, Iterator[pa.RecordBatch]]:
@@ -306,16 +202,8 @@ def scan_table_arrow(
     ``with_row_ids`` appends _row_id/_row_commit_version on
     row-tracked Delta tables (ticket key ``with_row_ids``)."""
     fmt = _detect_format(path)
-    if fmt == "delta":
-        schema, gen = _delta_batches(path, with_row_ids=with_row_ids)
-    elif fmt == "iceberg":
-        if with_row_ids:
-            raise TicketError(
-                "with_row_ids is served for Delta row-tracked tables; "
-                "Iceberg v3 row lineage reads go through "
-                "snapshot_with_row_ids"
-            )
-        schema, gen = _iceberg_batches(path)
+    if fmt in ("delta", "iceberg"):
+        schema, gen = _table_batches(path, fmt, with_row_ids=with_row_ids)
     else:
         if with_row_ids:
             raise TicketError("with_row_ids requires a Delta table")

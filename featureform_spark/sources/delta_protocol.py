@@ -1457,16 +1457,11 @@ class DeltaProtocolTable:
     def _dv_positions(self, dv: dict):
         """Deleted row indexes (sorted uint64 numpy array) for one
         descriptor; cardinality cross-checked against the bitmap."""
-        from featureform_spark.sources.dv_bitmap import decode_rbm_array
+        from featureform_spark.sources.dv_bitmap import dv_positions
 
-        pos = decode_rbm_array(self._dv_blob(dv))
-        card = dv.get("cardinality")
-        if card is not None and int(card) != len(pos):
-            raise DeltaProtocolError(
-                f"deletion vector cardinality {card} != decoded "
-                f"{len(pos)} positions"
-            )
-        return pos
+        return dv_positions(
+            self._dv_blob(dv), dv.get("cardinality"), DeltaProtocolError
+        )
 
     def _read_files(
         self, st: _State, paths: list[str], keep_pos: bool = False

@@ -18,9 +18,10 @@ without the jar, on Spark 4's Python Data Source API:
   stream unless ``skipChangeCommits=true`` (the delta option of the
   same name) — silently re-emitting or dropping rows is never an
   option.
-- **Executor-side Arrow reads**: one input partition per data file;
-  each partition streams the file's pyarrow record batches straight
-  into Spark's Arrow channel (no per-row Python), with Hive partition
+- **Executor-side Arrow reads**: one input partition per data file,
+  read by the shared slice scan (``sources/slice_scan.py``); each
+  partition streams the file's pyarrow record batches straight into
+  Spark's Arrow channel (no per-row Python), with Hive partition
   values attached as constant columns.
 
 Honest gates: column-mapped tables raise everywhere; deletion-vector
@@ -43,10 +44,10 @@ appends (inserts), and whole-file removes (deletes, prior DV masked).
 from __future__ import annotations
 
 import os
-import re
 import urllib.parse
 from typing import Iterator, Sequence
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -59,21 +60,27 @@ from featureform_spark.sources.delta_protocol import (
     DeltaProtocolTable,
     UnsupportedTableFeatureError,
 )
+from featureform_spark.sources.slice_scan import (
+    Slice,
+    read_slice,
+    simple_types,
+    table_from_options,
+    with_columns,
+)
 
 
-def _table(options: dict) -> DeltaProtocolTable:
-    path = options.get("path")
-    if not path:
-        raise ValueError("deltaprotocol requires option path=<table root>")
-    return DeltaProtocolTable(None, path)
+def _refuse_column_mapping(st) -> None:
+    """Column-mapped files store physical column names; only the
+    native scan maps them back."""
+    if st.column_mapping:
+        raise UnsupportedTableFeatureError(
+            "sessionless Delta scan: column-mapped tables are served by "
+            "DeltaProtocolTable.snapshot() (native scan)"
+        )
 
 
 def _gate(st) -> None:
-    if st.column_mapping:
-        raise UnsupportedTableFeatureError(
-            "deltaprotocol source: column-mapped tables are served by "
-            "DeltaProtocolTable.snapshot() (native scan), not this source"
-        )
+    _refuse_column_mapping(st)
     for a in st.adds.values():
         if a.get("deletionVector"):
             raise UnsupportedTableFeatureError(
@@ -82,110 +89,21 @@ def _gate(st) -> None:
             )
 
 
-class _FileSlice(InputPartition):
-    def __init__(
-        self, abs_path: str, part_values: dict, part_types: dict,
-        field_order: list, dv_blob: bytes | None = None,
-        row_info: tuple | None = None, dv_cardinality: int | None = None,
-    ):
-        self.abs_path = abs_path
-        self.part_values = part_values   # {col: raw string or None}
-        self.part_types = part_types     # {col: spark simpleString}
-        self.field_order = field_order   # full logical column order
-        self.dv_blob = dv_blob           # roaring DV blob (compact) or None
-        self.dv_cardinality = dv_cardinality  # checked against the blob
-        # row tracking: (baseRowId, defaultRowCommitVersion,
-        # materialized-row-id col, materialized-rcv col) or None
-        self.row_info = row_info
-
-
-def _pa_scalar_type(simple: str):
-    import pyarrow as pa
-
-    return {
-        "string": pa.string(),
-        "long": pa.int64(),
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "integer": pa.int32(),
-        "short": pa.int16(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "boolean": pa.bool_(),
-        "date": pa.date32(),
-        "timestamp": pa.timestamp("us"),
-    }.get(simple, pa.string())
-
-
-def _py_partition_value(raw: str | None, simple: str):
-    if raw is None:
-        return None
-    if simple in ("long", "bigint", "int", "integer", "short"):
-        return int(raw)
-    if simple in ("double", "float"):
-        return float(raw)
-    if simple == "boolean":
-        return raw.lower() == "true"
-    if simple == "date":
-        import datetime
-
-        return datetime.date.fromisoformat(raw)
-    if simple == "timestamp":
-        import datetime
-
-        return datetime.datetime.fromisoformat(raw)
-    if simple.startswith("decimal"):
-        from decimal import Decimal
-
-        return Decimal(raw)
-    return raw
-
-
-def _literal_type(simple: str):
-    import pyarrow as pa
-
-    m = re.match(r"decimal\((\d+),(\d+)\)", simple)
-    if m:
-        # keep decimals exact through arrow: the declared decimal type
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    return _pa_scalar_type(simple)
-
-
-def _output_schema(
-    order: list, literal_types: dict, file_schema, row_ids: bool
-):
-    """The scan's arrow schema in logical ``order``: columns in
-    ``literal_types`` (spark simpleStrings) take that type, the rest
-    their type in ``file_schema``; plus the two row-id columns."""
-    import pyarrow as pa
-
-    fields = [
-        pa.field(n, _literal_type(literal_types[n]))
-        if n in literal_types
-        else file_schema.field(n)
-        for n in order
-    ]
-    if row_ids:
-        fields += [
-            pa.field("_row_id", pa.int64()),
-            pa.field("_row_commit_version", pa.int64()),
-        ]
-    return pa.schema(fields)
+def _partition_values(add: dict, parts: list) -> dict:
+    return {c: (add.get("partitionValues") or {}).get(c) for c in parts}
 
 
 def snapshot_slices(
     t: DeltaProtocolTable, st, row_ids: tuple[str, str] | None = None
-) -> list[_FileSlice]:
+) -> list[Slice]:
     """One slice per live file of the folded state ``st``, in path
     order: the batch source's input partitions and the Flight scan's
     input. ``row_ids`` is the (materialized row-id, row-commit-version)
     physical column pair when row ids are requested. Deletion vectors
     travel as the compact blob and are decoded by the reader."""
-    fields = st.schema.fields
-    order = [f.name for f in fields]
-    parts = st.partition_columns
-    types = {f.name: f.dataType.simpleString() for f in fields}
-    part_types = {c: types[c] for c in parts}
+    _refuse_column_mapping(st)
+    order = [f.name for f in st.schema.fields]
+    types = simple_types(st.schema)
     out = []
     for rel in sorted(st.adds):
         a = st.adds[rel]
@@ -199,196 +117,25 @@ def snapshot_slices(
                 *row_ids,
             )
         out.append(
-            _FileSlice(
+            Slice(
                 t._abs_data_path(rel),
-                {c: (a.get("partitionValues") or {}).get(c) for c in parts},
-                part_types,
                 order,
-                t._dv_blob(dv) if dv else None,
+                types,
+                _partition_values(a, st.partition_columns),
+                drop=(t._dv_blob(dv), dv.get("cardinality")) if dv else None,
                 row_info=row_info,
-                dv_cardinality=dv.get("cardinality") if dv else None,
             )
         )
     return out
 
 
-def _scan_slices(slices: Sequence[_FileSlice]):
-    """(schema, record batches) of ``slices`` read by ONE
-    pyarrow.dataset scan, in slice order — the reader behind both the
-    Python Data Source (one slice per input partition) and the Flight
-    scan (every live file of a snapshot). ``scan_batches()`` tags each
-    batch with its file, which keys the per-file work: the
-    deletion-vector mask by file-relative row index, the constant
-    (partition / change-feed) columns, and the row ids. Slices name
-    distinct files; the first one fixes the output schema (its logical
-    order, its constants' types, its file's column types)."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    by_path = {s.abs_path: s for s in slices}
-    if len(by_path) != len(slices):
-        raise ValueError("a slice scan reads each file once")
-    first = slices[0]
-    dataset = ds.dataset(list(by_path), format="parquet")
-    file_schema = dataset.schema
-    row_cols = (
-        [c for c in first.row_info[2:] if c]
-        if first.row_info is not None
-        else []
-    )
-    missing = [c for c in row_cols if c not in file_schema.names]
-    if missing:
-        # only rewritten files carry materialized row ids; the others
-        # read NULL there and fall back to baseRowId + row index
-        file_schema = pa.schema(
-            list(file_schema) + [pa.field(c, pa.int64()) for c in missing]
-        )
-        dataset = dataset.replace_schema(file_schema)
-    constant = set(first.part_values).intersection(
-        *(s.part_values for s in slices)
-    )
-    columns = [
-        n
-        for n in first.field_order
-        if n not in constant and n in file_schema.names
-    ] + [c for c in row_cols if c not in first.field_order]
-    schema = _output_schema(
-        first.field_order,
-        {n: first.part_types[n] for n in first.part_values},
-        file_schema,
-        first.row_info is not None,
-    )
-
-    def _gen() -> Iterator:
-        path = reader = None
-        # threads decode a large file's columns in parallel (one
-        # 150k-row x 16-column file: 30 -> 13 ms) and cost nothing
-        # measurable on many small files; no pre-buffering, like
-        # ParquetFile: on local files it only delays the first batch
-        scanner = dataset.scanner(
-            columns=columns,
-            use_threads=True,
-            fragment_scan_options=ds.ParquetFragmentScanOptions(
-                pre_buffer=False
-            ),
-        )
-        for tagged in scanner.scan_batches():
-            if tagged.fragment.path != path:
-                path = tagged.fragment.path
-                reader = _SliceBatches(by_path[path], schema)
-            out = reader.convert(tagged.record_batch)
-            if out is not None:
-                yield out
-
-    return schema, _gen()
-
-
-class _SliceBatches:
-    """Per-file state of a slice scan: the decoded deletion vector,
-    the running file-relative row offset, and the constant values."""
-
-    def __init__(self, part: _FileSlice, schema):
-        self.part = part
-        self.schema = schema
-        self.offset = 0
-        self.deleted = None
-        if part.dv_blob is not None:
-            from featureform_spark.sources.dv_bitmap import decode_rbm_array
-
-            self.deleted = decode_rbm_array(part.dv_blob)
-            card = part.dv_cardinality
-            if card is not None and int(card) != len(self.deleted):
-                raise DeltaProtocolError(
-                    f"deletion vector cardinality {card} != decoded "
-                    f"{len(self.deleted)} positions"
-                )
-        self.constants = {
-            name: _py_partition_value(
-                part.part_values[name], part.part_types[name]
-            )
-            for name in part.part_values
-        }
-
-    def convert(self, batch):
-        """The file's next batch in the output schema, deletion-vector
-        masked; None when every row of it is deleted."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        part = self.part
-        start = self.offset
-        nrows = batch.num_rows
-        self.offset += nrows
-        # ORIGINAL file-relative indexes (pre-DV) — what row ids key on
-        orig_idx = (
-            np.arange(start, start + nrows, dtype=np.int64)
-            if part.row_info is not None
-            else None
-        )
-        deleted = self.deleted
-        if deleted is not None and len(deleted):
-            lo = np.searchsorted(deleted, start)
-            hi = np.searchsorted(deleted, start + nrows)
-            if hi > lo:
-                keep = np.ones(nrows, dtype=bool)
-                keep[(deleted[lo:hi] - start).astype(np.int64)] = False
-                batch = batch.filter(pa.array(keep))
-                if orig_idx is not None:
-                    orig_idx = orig_idx[keep]
-        n = batch.num_rows
-        if n == 0:
-            return None
-        arrays = [
-            pa.array([self.constants[name]] * n, f.type)
-            if name in self.constants
-            else batch.column(name)
-            for name, f in zip(part.field_order, self.schema)
-        ]
-        if part.row_info is not None:
-            base, dcv, mat_id, mat_rcv = part.row_info
-            # a foreign add action without baseRowId (written while the
-            # feature was supported-but-unenabled) has NO fresh ids —
-            # NULL, exactly like the Spark-session scan's coalesce
-            fresh = (
-                pa.array(base + orig_idx, type=pa.int64())
-                if base is not None
-                else pa.nulls(n, pa.int64())
-            )
-            dflt = (
-                pa.array(np.full(n, dcv, dtype=np.int64))
-                if dcv is not None
-                else pa.nulls(n, pa.int64())
-            )
-            for col, fallback in ((mat_id, fresh), (mat_rcv, dflt)):
-                arrays.append(
-                    pc.coalesce(
-                        pc.cast(batch.column(col), pa.int64()), fallback
-                    )
-                    if col
-                    else fallback
-                )
-        return pa.RecordBatch.from_arrays(arrays, schema=self.schema)
-
-
-def _read_slice(part: _FileSlice) -> Iterator:
-    """Executor-side read of one input partition: the one-slice case of
-    _scan_slices."""
-    return _scan_slices([part])[1]
-
-
 class DeltaProtocolBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.t = _table(options)
+        self.t = table_from_options(options, DeltaProtocolTable)
         self.options = options
 
     def partitions(self) -> Sequence[InputPartition]:
         st = self.t.state()
-        if st.column_mapping:
-            raise UnsupportedTableFeatureError(
-                "deltaprotocol source: column-mapped tables are served "
-                "by DeltaProtocolTable.snapshot() (native scan)"
-            )
         if self.options.get("readchangefeed", "false").lower() == "true":
             # batch CDF read (the connector's readChangeFeed +
             # startingVersion/endingVersion): same per-commit change
@@ -413,29 +160,20 @@ class DeltaProtocolBatchReader(DataSourceReader):
             self.t, st, st.materialized_row_id_cols or ("", "")
         )
 
-    def read(self, partition: _FileSlice) -> Iterator:
-        return _read_slice(partition)
+    def read(self, partition: Slice) -> Iterator:
+        return read_slice(partition)
 
 
-_CDF_COLS = ["_change_type", "_commit_version", "_commit_timestamp"]
-
-
-def _cdf_schema(schema):
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_commit_version", T.LongType()),
-            T.StructField("_commit_timestamp", T.TimestampType()),
-        ]
-    )
+_CDF = [
+    ("_change_type", T.StringType()),
+    ("_commit_version", T.LongType()),
+    ("_commit_timestamp", T.TimestampType()),
+]
 
 
 class DeltaProtocolStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
-        self.t = _table(options)
+        self.t = table_from_options(options, DeltaProtocolTable)
         self.options = options
         self.skip_change = (
             options.get("skipchangecommits", "false").lower() == "true"
@@ -510,28 +248,21 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
         delete_where/MERGE write cdc actions, so that shape only arises
         on tables that enabled CDF after such DML — table_changes()
         covers those."""
+        _refuse_column_mapping(st)
         conf = st.metadata.get("configuration") or {}
         if conf.get("delta.enableChangeDataFeed") != "true":
             raise DeltaProtocolError(
                 "readChangeFeed requires delta.enableChangeDataFeed=true"
             )
         parts = st.partition_columns
-        types = {
-            f.name: f.dataType.simpleString() for f in st.schema.fields
-        }
-        types.update(
-            {
-                "_change_type": "string",
-                "_commit_version": "long",
-                "_commit_timestamp": "timestamp",
-            }
-        )
-        order = [f.name for f in st.schema.fields] + _CDF_COLS
+        schema = with_columns(st.schema, _CDF)
+        types = simple_types(schema)
+        order = [f.name for f in schema.fields]
         try:
             cur_adds = dict(self.t.state(lo).adds) if lo >= 0 else {}
         except DeltaProtocolError:
             cur_adds = {}
-        out: list[_FileSlice] = []
+        out: list[Slice] = []
         for v in range(lo + 1, hi + 1):
             actions = self.t._read_commit(v)
             ts = self._commit_ts_iso(v)
@@ -550,13 +281,13 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
             if cdc_paths:
                 for p in cdc_paths:
                     out.append(
-                        _FileSlice(
+                        Slice(
                             os.path.join(
                                 self.t.path, urllib.parse.unquote(p)
                             ),
-                            dict(lits),  # _change_type is IN the file
-                            dict(types),
                             order,
+                            types,
+                            dict(lits),  # _change_type is IN the file
                         )
                     )
             else:
@@ -583,17 +314,21 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
                             "vacuumed; change feed would lose rows"
                         )
                     dv = prior.get("deletionVector")
-                    pv = {
-                        c: (prior.get("partitionValues") or {}).get(c)
-                        for c in parts
-                    }
                     out.append(
-                        _FileSlice(
+                        Slice(
                             abs_p,
-                            {**pv, **lits, "_change_type": "delete"},
-                            dict(types),
                             order,
-                            self.t._dv_blob(dv) if dv else None,
+                            types,
+                            {
+                                **_partition_values(prior, parts),
+                                **lits,
+                                "_change_type": "delete",
+                            },
+                            drop=(
+                                (self.t._dv_blob(dv), dv.get("cardinality"))
+                                if dv
+                                else None
+                            ),
                         )
                     )
                 for a in adds:
@@ -602,19 +337,19 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
                             f"version {v} adds a deletion-vector file "
                             "without cdc actions — use table_changes()"
                         )
-                    pv = {
-                        c: (a.get("partitionValues") or {}).get(c)
-                        for c in parts
-                    }
                     out.append(
-                        _FileSlice(
+                        Slice(
                             os.path.join(
                                 self.t.path,
                                 urllib.parse.unquote(a["path"]),
                             ),
-                            {**pv, **lits, "_change_type": "insert"},
-                            dict(types),
                             order,
+                            types,
+                            {
+                                **_partition_values(a, parts),
+                                **lits,
+                                "_change_type": "insert",
+                            },
                         )
                     )
             for a in actions:  # roll the adds fold forward
@@ -626,11 +361,6 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         st = self.t.state()
-        if st.column_mapping:
-            raise UnsupportedTableFeatureError(
-                "deltaprotocol source: column-mapped tables are served "
-                "by DeltaProtocolTable.snapshot() (native scan)"
-            )
         lo, hi = int(start["version"]), int(end["version"])
         have = set(self.t._commit_versions())
         missing = [v for v in range(lo + 1, hi + 1) if v not in have]
@@ -642,8 +372,7 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
         if self.cdf:
             return self._cdf_partitions(st, lo, hi)
         _gate(st)
-        parts = st.partition_columns
-        types = {f.name: f.dataType.simpleString() for f in st.schema.fields}
+        types = simple_types(st.schema)
         order = [f.name for f in st.schema.fields]
         out = []
         for v in range(lo + 1, hi + 1):
@@ -668,24 +397,20 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
                     raise UnsupportedTableFeatureError(
                         "deletion-vector add in streamed commit"
                     )
-                pv = {
-                    c: (add.get("partitionValues") or {}).get(c)
-                    for c in parts
-                }
                 out.append(
-                    _FileSlice(
+                    Slice(
                         os.path.join(
                             self.t.path, urllib.parse.unquote(add["path"])
                         ),
-                        pv,
-                        {c: types[c] for c in parts},
                         order,
+                        types,
+                        _partition_values(add, st.partition_columns),
                     )
                 )
         return out
 
-    def read(self, partition: _FileSlice) -> Iterator:
-        return _read_slice(partition)
+    def read(self, partition: Slice) -> Iterator:
+        return read_slice(partition)
 
     def commit(self, end: dict) -> None:
         pass
@@ -697,9 +422,8 @@ class DeltaProtocolDataSource(DataSource):
         return "deltaprotocol"
 
     def schema(self):
-        from pyspark.sql import types as T
-
-        schema = _table(self.options).state().schema
+        t = table_from_options(self.options, DeltaProtocolTable)
+        schema = t.state().schema
         cdf = self.options.get("readchangefeed", "false").lower() == "true"
         rid = self.options.get("withrowids", "false").lower() == "true"
         if cdf and rid:
@@ -707,14 +431,11 @@ class DeltaProtocolDataSource(DataSource):
                 "withRowIds and readChangeFeed are mutually exclusive"
             )
         if cdf:
-            return _cdf_schema(schema)
+            return with_columns(schema, _CDF)
         if rid:
-            return T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField("_row_id", T.LongType()),
-                    T.StructField("_row_commit_version", T.LongType()),
-                ]
+            return with_columns(
+                schema,
+                [("_row_id", T.LongType()), ("_row_commit_version", T.LongType())],
             )
         return schema
 

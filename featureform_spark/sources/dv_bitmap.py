@@ -173,6 +173,21 @@ def decode_rbm_array(data: bytes) -> np.ndarray:
     return np.concatenate(out)
 
 
+def dv_positions(
+    data: bytes, cardinality=None, error: type = DvFormatError
+) -> np.ndarray:
+    """decode_rbm_array, checked: a vector whose recorded cardinality
+    disagrees with its decoded positions raises ``error`` instead of
+    masking the wrong rows."""
+    pos = decode_rbm_array(data)
+    if cardinality is not None and int(cardinality) != len(pos):
+        raise error(
+            f"deletion vector cardinality {cardinality} != decoded "
+            f"{len(pos)} positions"
+        )
+    return pos
+
+
 # --------------------------------------------- 32-bit roaring (encode)
 
 

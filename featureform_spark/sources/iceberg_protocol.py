@@ -1290,6 +1290,9 @@ class IcebergProtocolTable:
             have_counts
             and est >= DISTRIBUTED_PLAN_MIN_ENTRIES
             and len(manifests) > 1
+            # sessionless readers (Flight, Data Source planning) have
+            # no executors to fan out to
+            and self.spark is not None
         ):
             self.last_plan_mode = "distributed"
             entries = self._decode_manifests_distributed(tasks)
@@ -1440,6 +1443,29 @@ class IcebergProtocolTable:
             {"manifest_path": p, "content": 0, "sequence_number": 0}
             for p in (snap.get("manifests") or [])
         ]
+
+    def _dv_positions(self, df_: dict):
+        """Deleted row positions (sorted uint64) of one v3
+        deletion-vector entry: its puffin blob read at the entry's
+        offset, decoded, and checked against ``record_count``."""
+        from featureform_spark.sources.dv_bitmap import (
+            dv_positions,
+            read_dv_from_file,
+        )
+
+        if not df_.get("referenced_data_file"):
+            raise UnsupportedIcebergFeatureError(
+                "puffin delete file without referenced_data_file"
+            )
+        return dv_positions(
+            read_dv_from_file(
+                self._resolve_path(df_["file_path"]),
+                int(df_["content_offset"]),
+                int(df_["content_size_in_bytes"]),
+            ),
+            df_.get("record_count"),
+            IcebergProtocolError,
+        )
 
     def _read_files(self, schema: T.StructType, paths: list[str]) -> DataFrame:
         if not paths:
@@ -1844,31 +1870,10 @@ class IcebergProtocolTable:
                 # the same broadcast anti-join as parquet deletes.
                 import pandas as pd
 
-                from featureform_spark.sources.dv_bitmap import (
-                    decode_rbm_array,
-                    read_dv_from_file,
-                )
-
                 frames = []
                 for e in dv_entries:
                     df_ = e["data_file"]
-                    if not df_.get("referenced_data_file"):
-                        raise UnsupportedIcebergFeatureError(
-                            "puffin delete file without "
-                            "referenced_data_file"
-                        )
-                    blob = read_dv_from_file(
-                        self._resolve_path(df_["file_path"]),
-                        int(df_["content_offset"]),
-                        int(df_["content_size_in_bytes"]),
-                    )
-                    pos = decode_rbm_array(blob)
-                    card = df_.get("record_count")
-                    if card is not None and int(card) != len(pos):
-                        raise IcebergProtocolError(
-                            f"deletion vector cardinality {card} != "
-                            f"decoded {len(pos)} positions"
-                        )
+                    pos = self._dv_positions(df_)
                     frames.append(
                         pd.DataFrame(
                             {
@@ -2534,20 +2539,10 @@ class IcebergProtocolTable:
             df_ = e["data_file"]
             if not _is_dv_file(df_):
                 continue
-            from featureform_spark.sources.dv_bitmap import (
-                decode_rbm_array,
-                read_dv_from_file,
-            )
-
-            blob = read_dv_from_file(
-                self._resolve_path(df_["file_path"]),
-                int(df_["content_offset"]),
-                int(df_["content_size_in_bytes"]),
-            )
             ref = self._resolve_path(df_["referenced_data_file"])
             own = self._resolve_path(df_["file_path"])
             dv_rows.extend(
-                (ref, int(p), own) for p in decode_rbm_array(blob)
+                (ref, int(p), own) for p in self._dv_positions(df_)
             )
         if dv_rows:
             parts.append(local_df(self.spark, dv_rows, schema))
@@ -3748,11 +3743,6 @@ class IcebergProtocolTable:
         import numpy as np
         import pandas as pd
 
-        from featureform_spark.sources.dv_bitmap import (
-            decode_rbm_array,
-            read_dv_from_file,
-        )
-
         md = self.metadata()
         # main ancestry only: the raw snapshots list carries WAP-staged
         # and branch snapshots — emitting them would report changes
@@ -3906,13 +3896,7 @@ class IcebergProtocolTable:
                             self._resolve_path(
                                 df_["referenced_data_file"]
                             )
-                        ] = decode_rbm_array(
-                            read_dv_from_file(
-                                self._resolve_path(df_["file_path"]),
-                                int(df_["content_offset"]),
-                                int(df_["content_size_in_bytes"]),
-                            )
-                        )
+                        ] = self._dv_positions(df_)
             for e in added_del:
                 df_ = e["data_file"]
                 content = int(df_.get("content", 0))
@@ -3920,13 +3904,7 @@ class IcebergProtocolTable:
                     eq_entries.append(e)
                 elif _is_dv_file(df_):
                     ref = self._resolve_path(df_["referenced_data_file"])
-                    cur_pos = decode_rbm_array(
-                        read_dv_from_file(
-                            self._resolve_path(df_["file_path"]),
-                            int(df_["content_offset"]),
-                            int(df_["content_size_in_bytes"]),
-                        )
-                    )
+                    cur_pos = self._dv_positions(df_)
                     fresh = np.setdiff1d(
                         cur_pos,
                         parent_dv.get(ref, np.empty(0, dtype=np.uint64)),
@@ -5455,30 +5433,15 @@ class IcebergProtocolTable:
             # decode existing v3 DVs driver-side (cardinality-scale)
             import pandas as pd
 
-            from featureform_spark.sources.dv_bitmap import (
-                decode_rbm_array,
-                read_dv_from_file,
-            )
-
             frames = [
                 pd.DataFrame(
                     {
                         "file_path": self._resolve_path(
                             e["data_file"]["referenced_data_file"]
                         ),
-                        "pos": decode_rbm_array(
-                            read_dv_from_file(
-                                self._resolve_path(
-                                    e["data_file"]["file_path"]
-                                ),
-                                int(e["data_file"]["content_offset"]),
-                                int(
-                                    e["data_file"][
-                                        "content_size_in_bytes"
-                                    ]
-                                ),
-                            )
-                        ).astype("int64"),
+                        "pos": self._dv_positions(e["data_file"]).astype(
+                            "int64"
+                        ),
                     }
                 )
                 for e in old_dvs

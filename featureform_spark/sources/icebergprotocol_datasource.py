@@ -23,15 +23,16 @@ Python Data Source API:
   identical semantics to incremental_append_scan
   (sources/iceberg_protocol.py) and the deltaprotocol source's
   skipChangeCommits.
-- **Executor-side Arrow reads**: one input partition per data file;
-  pyarrow record batches flow straight into Spark's Arrow channel.
-  Iceberg keeps source columns IN the data files (directories are
-  convention), so no partition-literal reattachment is needed.
-
-Honest gate: tables with live position/equality deletes route to the
-native merge-on-read reader (``IcebergProtocolTable.snapshot()``);
-this source exists to run the real Structured Streaming machinery
-over snapshot lineage.
+- **Executor-side Arrow reads**: one input partition per data file,
+  read by the shared slice scan (``sources/slice_scan.py``); pyarrow
+  record batches flow straight into Spark's Arrow channel. The batch
+  reader applies every live delete (position deletes, v3 deletion
+  vectors, equality deletes), sequence-scoped exactly as
+  ``IcebergProtocolTable._read_with_deletes``; a column a file lacks
+  reads NULL or its ``initial-default``. Iceberg keeps source columns
+  IN the data files, so no partition-literal reattachment is needed;
+  name-mapped and metadata-partitioned tables (UniForm mirrors) gate
+  to ``IcebergProtocolTable.snapshot()``.
 
 Options: ``path`` (table root), ``startingSnapshotOrdinal`` (int or
 ``earliest`` [default] / ``latest``), ``skipChangeSnapshots``.
@@ -41,6 +42,10 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
+import numpy as np
+import pyarrow.parquet as pq
+
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -48,158 +53,148 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from featureform_spark.sources.dv_bitmap import encode_rbm_array
 from featureform_spark.sources.iceberg_protocol import (
     IcebergProtocolError,
     IcebergProtocolTable,
     UnsupportedIcebergFeatureError,
+    _is_dv_file,
+)
+from featureform_spark.sources.slice_scan import (
+    Slice,
+    read_slice,
+    simple_types,
+    table_from_options,
+    with_columns,
 )
 
 
-class _IceSlice(InputPartition):
-    def __init__(
-        self,
-        abs_path: str,
-        field_order: list,
-        positions_blob: bytes | None = None,
-        literals: dict | None = None,
-        exclude_blob: bytes | None = None,
-        eq_filter: tuple | None = None,
-        exclude_eq: list | None = None,
+def _gate(t: IcebergProtocolTable, md: dict, data_entries: list) -> None:
+    """Tables whose files store columns under other names, or keep
+    partition values only in the manifests (UniForm mirrors, migrated
+    Hive tables), need the native reader's rename and reattach."""
+    if t._nm_resolution(md, data_entries) or t._identity_patch(
+        md, data_entries
     ):
-        self.abs_path = abs_path
-        self.field_order = field_order
-        # roaring-encoded row indexes to SELECT (CDF delete replay);
-        # None = whole file
-        self.positions_blob = positions_blob
-        # constant CDF columns: {name: (python value, pyarrow type key)}
-        self.literals = literals or {}
-        # equality-delete replay against a PARENT file: drop rows at
-        # these positions (parent positional deletes + this commit's own
-        # fresh positional deletes — those rows already emit from the
-        # positional replay), drop rows matching any (cols, tuple-set)
-        # in exclude_eq (parent-live equality deletes newer than this
-        # file), then KEEP rows matching ANY of eq_filter's
-        # (cols, tuple-set) entries — one slice per parent file covers
-        # every eq-delete file in the commit, so a row deleted by two
-        # of them emits ONCE and the file scans once. All sets are
-        # cardinality-scale (distinct delete keys), pickled with the
-        # partition. Mutually exclusive with positions_blob.
-        self.exclude_blob = exclude_blob
-        self.eq_filter = eq_filter  # list[(cols, tupset)] — match ANY
-        self.exclude_eq = exclude_eq or []
-
-
-def _read_ice_slice(part: _IceSlice) -> Iterator:
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    wanted = None
-    excluded = None
-    if part.positions_blob is not None or part.exclude_blob is not None:
-        from featureform_spark.sources.dv_bitmap import decode_rbm_array
-
-        if part.positions_blob is not None:
-            wanted = decode_rbm_array(part.positions_blob)
-        if part.exclude_blob is not None:
-            excluded = decode_rbm_array(part.exclude_blob)
-
-    def _eq_mask(batch, cols, tupset, keep_matching):
-        names = batch.schema.names
-        vals = [batch.column(names.index(c)).to_pylist() for c in cols]
-        return pa.array(
-            [
-                (tuple(row) in tupset) == keep_matching
-                for row in zip(*vals)
-            ]
+        raise UnsupportedIcebergFeatureError(
+            "sessionless Iceberg scan: name-mapped / metadata-"
+            "partitioned tables (UniForm mirrors) are served by "
+            "IcebergProtocolTable.snapshot()"
         )
 
-    def _lit_array(val, key, n):
-        typ = {
-            "string": pa.string(),
-            "int": pa.int32(),
-            "long": pa.int64(),
-        }[key]
-        return pa.array([val] * n, type=typ)
 
-    pf = pq.ParquetFile(part.abs_path)
-    offset = 0
-    for batch in pf.iter_batches():
-        n = batch.num_rows
-        if wanted is not None:
-            lo = np.searchsorted(wanted, offset)
-            hi = np.searchsorted(wanted, offset + n)
-            offset += n
-            if hi == lo:
-                continue
-            batch = batch.take(
-                pa.array(
-                    (wanted[lo:hi] - (offset - n)).astype(np.int64)
-                )
-            )
-            n = batch.num_rows
-        elif excluded is not None or part.eq_filter or part.exclude_eq:
-            start = offset
-            offset += n
-            if excluded is not None:
-                lo = np.searchsorted(excluded, start)
-                hi = np.searchsorted(excluded, start + n)
-                if hi > lo:
-                    keep = np.ones(n, dtype=bool)
-                    keep[(excluded[lo:hi] - start).astype(np.int64)] = False
-                    batch = batch.filter(pa.array(keep))
-            for cols_, tupset in part.exclude_eq:
-                if batch.num_rows:
-                    batch = batch.filter(
-                        _eq_mask(batch, cols_, tupset, False)
-                    )
-            if part.eq_filter is not None and batch.num_rows:
-                names = batch.schema.names
-                keep = np.zeros(batch.num_rows, dtype=bool)
-                for cols_, tupset in part.eq_filter:
-                    vals = [
-                        batch.column(names.index(c)).to_pylist()
-                        for c in cols_
-                    ]
-                    keep |= np.fromiter(
-                        (tuple(row) in tupset for row in zip(*vals)),
-                        dtype=bool,
-                        count=batch.num_rows,
-                    )
-                batch = batch.filter(pa.array(keep))
-            n = batch.num_rows
-            if n == 0:
-                continue
-        else:
-            offset += n
-        cols = {
-            name: batch.column(i)
-            for i, name in enumerate(batch.schema.names)
+def _defaults(t: IcebergProtocolTable, schema, entries: list) -> dict:
+    """{data file: {column: initial-default}} for the files that lack
+    a defaulted column (v3 spec §Default values)."""
+    patch = t._defaults_patch(schema, entries)
+    if patch is None:
+        return {}
+    rows, dcols = patch
+    return {
+        path: {
+            name: jv
+            for (name, _dt, jv, _fid), has in zip(dcols, flags)
+            if not has
         }
-        arrays = []
-        for name in part.field_order:
-            if name in part.literals:
-                val, key = part.literals[name]
-                arrays.append(_lit_array(val, key, n))
-            else:
-                arrays.append(cols[name])
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=part.field_order
-        )
+        for path, *flags in rows
+    }
 
 
-def _table(options: dict) -> IcebergProtocolTable:
-    path = options.get("path")
-    if not path:
-        raise ValueError(
-            "icebergprotocol requires option path=<table root>"
+def _position_deletes(t: IcebergProtocolTable, df_: dict) -> dict:
+    """{data file: deleted positions} of one position-delete entry:
+    a v3 deletion vector or a (file_path, pos) parquet file."""
+    if _is_dv_file(df_):
+        pos = t._dv_positions(df_)
+        return {t._resolve_path(df_["referenced_data_file"]): pos}
+    dtbl = pq.read_table(
+        t._resolve_path(df_["file_path"]), columns=["file_path", "pos"]
+    )
+    fp = dtbl.column("file_path").to_numpy(zero_copy_only=False)
+    pos = dtbl.column("pos").to_numpy(zero_copy_only=False).astype(np.uint64)
+    return {t._resolve_path(str(p)): pos[fp == p] for p in np.unique(fp)}
+
+
+def _eq_keys(t: IcebergProtocolTable, md: dict, df_: dict) -> tuple:
+    """(columns, {key tuple}) of one equality-delete file."""
+    by_id = {f["id"]: f["name"] for f in t.schema(md)["fields"]}
+    eq_ids = df_.get("equality_ids") or []
+    if not eq_ids:
+        raise UnsupportedIcebergFeatureError(
+            "equality delete file without equality_ids"
         )
-    return IcebergProtocolTable(None, path)
+    try:
+        cols = [by_id[int(i)] for i in eq_ids]
+    except KeyError as exc:
+        raise UnsupportedIcebergFeatureError(
+            f"equality delete on unknown field id {exc}"
+        ) from None
+    det = pq.read_table(t._resolve_path(df_["file_path"]), columns=cols)
+    return cols, set(zip(*[det.column(c).to_pylist() for c in cols]))
+
+
+def _positions(arrays: list | None) -> tuple | None:
+    """A slice's (roaring blob, cardinality) for the union of
+    ``arrays``; None when they hold no position."""
+    if not arrays:
+        return None
+    merged = np.unique(np.concatenate(arrays))
+    if not len(merged):
+        return None
+    return encode_rbm_array(merged), len(merged)
+
+
+def snapshot_slices(
+    t: IcebergProtocolTable, snap: dict, md: dict | None = None
+) -> list[Slice]:
+    """One slice per live data file of ``snap``, in path order, with
+    the deletes that apply to it scoped by sequence number as
+    ``IcebergProtocolTable._read_with_deletes`` scopes them: position
+    deletes and deletion vectors at ``del_seq >= data_seq``, equality
+    deletes at ``data_seq < del_seq``. The batch source's input
+    partitions and the Flight scan's input."""
+    md = md or t.metadata()
+    schema = t.spark_schema(md)
+    order = [f.name for f in schema.fields]
+    types = simple_types(schema)
+    data_entries, delete_entries = t._live_entries(snap)
+    _gate(t, md, data_entries)
+    seq = {
+        t._resolve_path(e["data_file"]["file_path"]): int(
+            e.get("sequence_number") or 0
+        )
+        for e in data_entries
+    }
+    drops: dict[str, list] = {}
+    eq: list[tuple[int, list, set]] = []
+    for e in delete_entries:
+        del_seq = int(e.get("sequence_number") or 0)
+        df_ = e["data_file"]
+        if int(df_.get("content", 0)) == 2:
+            eq.append((del_seq, *_eq_keys(t, md, df_)))
+            continue
+        for path, pos in _position_deletes(t, df_).items():
+            if path in seq and del_seq >= seq[path]:
+                drops.setdefault(path, []).append(pos)
+    defaults = _defaults(t, schema, data_entries)
+    return [
+        Slice(
+            path,
+            order,
+            types,
+            defaults.get(path),
+            drop=_positions(drops.get(path)),
+            drop_keys=[
+                (cols, keys) for del_seq, cols, keys in eq
+                if seq[path] < del_seq
+            ],
+        )
+        for path in sorted(seq)
+    ]
 
 
 class IcebergProtocolBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.t = _table(options)
+        self.t = table_from_options(options, IcebergProtocolTable)
         self.options = options
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -229,53 +224,24 @@ class IcebergProtocolBatchReader(DataSourceReader):
         snap = self.t._snapshot_by(
             int(sid) if sid is not None else None, md=md
         )
-        order = [f.name for f in self.t.spark_schema(md).fields]
         if snap is None:
             return []
-        data_entries, deletes = self.t._live_entries(snap)
-        if deletes:
-            raise UnsupportedIcebergFeatureError(
-                "icebergprotocol source: tables with live deletes are "
-                "served by IcebergProtocolTable.snapshot() (merge-on-read)"
-            )
-        if self.t._nm_resolution(md, data_entries) or self.t._identity_patch(
-            md, data_entries
-        ):
-            raise UnsupportedIcebergFeatureError(
-                "icebergprotocol source: name-mapped / metadata-"
-                "partitioned tables (UniForm mirrors) are served by "
-                "IcebergProtocolTable.snapshot()"
-            )
-        return [
-            _IceSlice(
-                self.t._resolve_path(e["data_file"]["file_path"]), order
-            )
-            for e in data_entries
-        ]
+        return snapshot_slices(self.t, snap, md)
 
-    def read(self, partition: _IceSlice) -> Iterator:
-        return _read_ice_slice(partition)
+    def read(self, partition: Slice) -> Iterator:
+        return read_slice(partition)
 
 
-_CDF_COLS = ["_change_type", "_change_ordinal", "_commit_snapshot_id"]
-
-
-def _cdf_schema(schema):
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("_change_type", T.StringType()),
-            T.StructField("_change_ordinal", T.IntegerType()),
-            T.StructField("_commit_snapshot_id", T.LongType()),
-        ]
-    )
+_CDF = [
+    ("_change_type", T.StringType()),
+    ("_change_ordinal", T.IntegerType()),
+    ("_commit_snapshot_id", T.LongType()),
+]
 
 
 class IcebergProtocolStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
-        self.t = _table(options)
+        self.t = table_from_options(options, IcebergProtocolTable)
         self.cdf = (
             options.get("readchangefeed", "false").lower() == "true"
         )
@@ -342,20 +308,11 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
         per parent file carrying all key sets (match ANY, rows already
         deleted never re-emit). Overwrites still gate to
         changelog_scan (exceptAll needs a join)."""
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        from featureform_spark.sources.dv_bitmap import (
-            decode_rbm_array,
-            encode_rbm_array,
-            read_dv_from_file,
-        )
-        from featureform_spark.sources.iceberg_protocol import (
-            _is_dv_file,
-        )
-
-        order = [f.name for f in self.t.spark_schema(md).fields] + _CDF_COLS
-        out: list[_IceSlice] = []
+        schema = self.t.spark_schema(md)
+        cdf = with_columns(schema, _CDF)
+        order = [f.name for f in cdf.fields]
+        types = simple_types(cdf)
+        out: list[Slice] = []
         # carry each snapshot's live set into the next iteration as its
         # parent — without it every snapshot's manifests were read up
         # to 3x (self + next's parent_files + next's parent_dv),
@@ -381,6 +338,11 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
                 prev_live = self.t._live_entries(snaps[idx - 1])
             parent_entries, parent_deletes = prev_live or ([], [])
             prev_live = (data_entries, delete_entries)
+            defaults = _defaults(
+                self.t, schema, parent_entries + data_entries
+            )
+            lits = {"_change_ordinal": ordinal, "_commit_snapshot_id": sid}
+
             # added files = live set minus the lineage parent's live
             # set (cherry-picked WAP publishes keep the STAGED
             # snapshot's id on their entries, so a sid-stamp filter
@@ -388,22 +350,20 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
             parent_files = {
                 pe["data_file"]["file_path"] for pe in parent_entries
             }
-            ins_lits = {
-                "_change_type": ("insert", "string"),
-                "_change_ordinal": (ordinal, "int"),
-                "_commit_snapshot_id": (sid, "long"),
-            }
             for e in data_entries:
                 if e["data_file"]["file_path"] in parent_files:
                     continue
+                path = self.t._resolve_path(e["data_file"]["file_path"])
                 out.append(
-                    _IceSlice(
-                        self.t._resolve_path(
-                            e["data_file"]["file_path"]
-                        ),
+                    Slice(
+                        path,
                         order,
-                        None,
-                        ins_lits,
+                        types,
+                        {
+                            **defaults.get(path, {}),
+                            **lits,
+                            "_change_type": "insert",
+                        },
                     )
                 )
             added_del = [
@@ -414,195 +374,111 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
             if not added_del:
                 continue
             parent_dv: dict[str, np.ndarray] = {}
-            if idx > 0:
-                for e in parent_deletes:
-                    df_ = e["data_file"]
-                    if int(df_.get("content", 0)) == 1 and _is_dv_file(
-                        df_
-                    ):
-                        parent_dv[
-                            self.t._resolve_path(
-                                df_["referenced_data_file"]
-                            )
-                        ] = decode_rbm_array(
-                            read_dv_from_file(
-                                self.t._resolve_path(df_["file_path"]),
-                                int(df_["content_offset"]),
-                                int(df_["content_size_in_bytes"]),
-                            )
-                        )
+            for e in parent_deletes:
+                df_ = e["data_file"]
+                if int(df_.get("content", 0)) == 1 and _is_dv_file(df_):
+                    parent_dv.update(_position_deletes(self.t, df_))
+            # delete replay: SELECT the freshly deleted positions (a v3
+            # vector's diff against the parent's vector)
             fresh: dict[str, list[np.ndarray]] = {}
             eq_entries: list[dict] = []
             for e in added_del:
                 df_ = e["data_file"]
-                content = int(df_.get("content", 0))
-                if content == 2:
+                if int(df_.get("content", 0)) == 2:
                     eq_entries.append(e)
                     continue
-                if _is_dv_file(df_):
-                    ref = self.t._resolve_path(
-                        df_["referenced_data_file"]
-                    )
-                    cur = decode_rbm_array(
-                        read_dv_from_file(
-                            self.t._resolve_path(df_["file_path"]),
-                            int(df_["content_offset"]),
-                            int(df_["content_size_in_bytes"]),
+                for ref, pos in _position_deletes(self.t, df_).items():
+                    if _is_dv_file(df_):
+                        pos = np.setdiff1d(
+                            pos,
+                            parent_dv.get(ref, np.empty(0, dtype=np.uint64)),
                         )
-                    )
-                    fresh.setdefault(ref, []).append(
-                        np.setdiff1d(
-                            cur,
-                            parent_dv.get(
-                                ref, np.empty(0, dtype=np.uint64)
-                            ),
-                        )
-                    )
-                else:
-                    dtbl = pq.read_table(
-                        self.t._resolve_path(df_["file_path"]),
-                        columns=["file_path", "pos"],
-                    )
-                    fp = dtbl.column("file_path").to_numpy(
-                        zero_copy_only=False
-                    )
-                    pos = dtbl.column("pos").to_numpy(
-                        zero_copy_only=False
-                    )
-                    for p in np.unique(fp):
-                        fresh.setdefault(str(p), []).append(
-                            pos[fp == p].astype(np.uint64)
-                        )
-            del_lits = {
-                "_change_type": ("delete", "string"),
-                "_change_ordinal": (ordinal, "int"),
-                "_commit_snapshot_id": (sid, "long"),
-            }
+                    fresh.setdefault(ref, []).append(pos)
             for ref in sorted(fresh):
-                merged = np.unique(np.concatenate(fresh[ref]))
-                if len(merged):
+                keep = _positions(fresh[ref])
+                if keep is not None:
                     out.append(
-                        _IceSlice(
+                        Slice(
                             ref,
                             order,
-                            encode_rbm_array(merged),
-                            del_lits,
+                            types,
+                            {
+                                **defaults.get(ref, {}),
+                                **lits,
+                                "_change_type": "delete",
+                            },
+                            keep=keep,
                         )
                     )
-            if eq_entries:
-                # equality-delete replay (the streaming-upsert shape):
-                # the deleted rows are PARENT-live rows matching the new
-                # delete tuples — per parent file, executors drop
-                # parent-applied positional deletes + parent-live
-                # equality deletes newer than the file, then keep rows
-                # matching the new tuples. Delete-key sets are
-                # cardinality-scale and ride the pickled partitions.
-                by_id = {
-                    f["id"]: f["name"]
-                    for f in self.t.schema(md)["fields"]
-                }
-
-                def _eq_tuples_pair(df_):
-                    eq_ids = df_.get("equality_ids") or []
-                    if not eq_ids:
-                        raise IcebergProtocolError(
-                            "equality delete file without equality_ids"
+            if not eq_entries:
+                continue
+            # equality-delete replay (the streaming-upsert shape): the
+            # deleted rows are PARENT-live rows matching the new delete
+            # keys. Per parent file, drop what the parent already
+            # deleted (its deletion vectors and position deletes, its
+            # equality deletes newer than the file) and this commit's
+            # own positional deletes (those rows emit above), then keep
+            # rows matching ANY new key set: a row deleted by two
+            # sibling files emits once, each parent file scans once.
+            # Key sets are cardinality-scale and ride the partitions.
+            excl: dict[str, list] = {
+                ref: [arr] for ref, arr in parent_dv.items()
+            }
+            for ref, arrs in fresh.items():
+                excl.setdefault(ref, []).extend(arrs)
+            parent_eq: list[tuple[int, list, set]] = []
+            for pe in parent_deletes:
+                pdf_ = pe["data_file"]
+                c = int(pdf_.get("content", 0))
+                if c == 1 and not _is_dv_file(pdf_):
+                    for ref, pos in _position_deletes(self.t, pdf_).items():
+                        excl.setdefault(ref, []).append(pos)
+                elif c == 2:
+                    parent_eq.append(
+                        (
+                            int(pe.get("sequence_number") or 0),
+                            *_eq_keys(self.t, md, pdf_),
                         )
-                    cols_ = [by_id[int(i)] for i in eq_ids]
-                    det = pq.read_table(
-                        self.t._resolve_path(df_["file_path"]),
-                        columns=cols_,
                     )
-                    tupset = (
-                        set(zip(*[det.column(c).to_pylist() for c in cols_]))
-                        if det.num_rows
-                        else set()
+            eq_any = [
+                (cols, keys)
+                for cols, keys in (
+                    _eq_keys(self.t, md, e["data_file"]) for e in eq_entries
+                )
+                if keys
+            ]
+            if not eq_any:
+                continue
+            for pe in parent_entries:
+                ref = self.t._resolve_path(pe["data_file"]["file_path"])
+                dseq = int(pe.get("sequence_number") or 0)
+                out.append(
+                    Slice(
+                        ref,
+                        order,
+                        types,
+                        {
+                            **defaults.get(ref, {}),
+                            **lits,
+                            "_change_type": "delete",
+                        },
+                        drop=_positions(excl.get(ref)),
+                        drop_keys=[
+                            (cols, keys)
+                            for sq, cols, keys in parent_eq
+                            if sq > dseq
+                        ],
+                        keep_keys=eq_any,
                     )
-                    return cols_, tupset
-
-                # parent-side state: positional excludes per file (DVs
-                # decoded above + position-delete parquets + THIS
-                # commit's own fresh positional deletes — those rows
-                # already emit from the positional replay above), and
-                # parent equality deletes with their sequence numbers
-                excl: dict[str, list] = {
-                    ref: [arr] for ref, arr in parent_dv.items()
-                }
-                for ref, arrs in fresh.items():
-                    excl.setdefault(ref, []).extend(arrs)
-                parent_eq: list[tuple[int, list, set]] = []
-                for pe in parent_deletes:
-                    pdf_ = pe["data_file"]
-                    c = int(pdf_.get("content", 0))
-                    if c == 1 and not _is_dv_file(pdf_):
-                        dtbl = pq.read_table(
-                            self.t._resolve_path(pdf_["file_path"]),
-                            columns=["file_path", "pos"],
-                        )
-                        fp_arr = dtbl.column("file_path").to_numpy(
-                            zero_copy_only=False
-                        )
-                        pos_arr = dtbl.column("pos").to_numpy(
-                            zero_copy_only=False
-                        )
-                        for p in np.unique(fp_arr):
-                            excl.setdefault(
-                                self.t._resolve_path(str(p)), []
-                            ).append(
-                                pos_arr[fp_arr == p].astype(np.uint64)
-                            )
-                    elif c == 2:
-                        cols_, tupset = _eq_tuples_pair(pdf_)
-                        parent_eq.append(
-                            (
-                                int(pe.get("sequence_number") or 0),
-                                cols_,
-                                tupset,
-                            )
-                        )
-                excl_blobs = {
-                    ref: encode_rbm_array(np.unique(np.concatenate(a)))
-                    for ref, a in excl.items()
-                }
-                # ONE slice per parent file carrying every eq-delete
-                # file's key set (match ANY): a row deleted by two
-                # sibling files emits once, each parent file scans once
-                eq_any = [
-                    (cols_, tupset)
-                    for cols_, tupset in (
-                        _eq_tuples_pair(e["data_file"])
-                        for e in eq_entries
-                    )
-                    if tupset
-                ]
-                if eq_any:
-                    for pe in parent_entries:
-                        ref = self.t._resolve_path(
-                            pe["data_file"]["file_path"]
-                        )
-                        dseq = int(pe.get("sequence_number") or 0)
-                        exeq = [
-                            (cc, ts)
-                            for (sq, cc, ts) in parent_eq
-                            if sq > dseq and ts
-                        ]
-                        out.append(
-                            _IceSlice(
-                                ref,
-                                order,
-                                None,
-                                del_lits,
-                                exclude_blob=excl_blobs.get(ref),
-                                eq_filter=eq_any,
-                                exclude_eq=exeq,
-                            )
-                        )
+                )
         return out
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         md = self.t.metadata()
         snaps = self.t.main_lineage(md)
-        order = [f.name for f in self.t.spark_schema(md).fields]
+        schema = self.t.spark_schema(md)
+        order = [f.name for f in schema.fields]
+        types = simple_types(schema)
         lo = self._index_of(start, snaps)
         hi = self._index_of(end, snaps)
         if hi < lo:
@@ -620,7 +496,7 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
         # committed by the appends and the original files persist until
         # expire_snapshots — reading per-snapshot keeps skipped change
         # snapshots from swallowing prior appends
-        out: list[_IceSlice] = []
+        out: list[Slice] = []
         seen: set[str] = set()
         # each snapshot's added files = its live set minus its lineage
         # parent's (cherry-picked WAP publishes keep the staged
@@ -655,18 +531,19 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
             cur_files = {
                 e["data_file"]["file_path"] for e in data_entries
             }
+            defaults = _defaults(self.t, schema, data_entries)
             for e in data_entries:
                 if e["data_file"]["file_path"] in parent_files:
                     continue
                 p = self.t._resolve_path(e["data_file"]["file_path"])
                 if p not in seen:
                     seen.add(p)
-                    out.append(_IceSlice(p, order))
+                    out.append(Slice(p, order, types, defaults.get(p)))
             parent_files = cur_files
         return out
 
-    def read(self, partition: _IceSlice) -> Iterator:
-        return _read_ice_slice(partition)
+    def read(self, partition: Slice) -> Iterator:
+        return read_slice(partition)
 
     def commit(self, end: dict) -> None:
         pass
@@ -678,10 +555,10 @@ class IcebergProtocolDataSource(DataSource):
         return "icebergprotocol"
 
     def schema(self):
-        t = _table(self.options)
+        t = table_from_options(self.options, IcebergProtocolTable)
         schema = t.spark_schema(t.metadata())
         if self.options.get("readchangefeed", "false").lower() == "true":
-            return _cdf_schema(schema)
+            return with_columns(schema, _CDF)
         return schema
 
     def reader(self, schema) -> DataSourceReader:

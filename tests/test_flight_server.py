@@ -78,13 +78,19 @@ def test_delta_with_dv_roundtrip(served):
     assert got.schema.names == native.columns
 
 
-def test_iceberg_with_position_deletes_roundtrip(served):
+def test_iceberg_with_position_deletes_roundtrip(served, monkeypatch):
     spark, server, _dt, it, _orders = served
     got = _client_read(server, {"namespace": "ns", "table": "orders_ice"})
     native = it.snapshot()
-    assert sorted(tuple(r.values()) for r in got.to_pylist()) == sorted(
-        map(tuple, native.collect())
-    )
+    want = sorted(map(tuple, native.collect()))
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
+    # a manifest set large enough for distributed planning: the
+    # sessionless server has no executors and plans on its own thread
+    from featureform_spark.sources import iceberg_protocol
+
+    monkeypatch.setattr(iceberg_protocol, "DISTRIBUTED_PLAN_MIN_ENTRIES", 1)
+    got = _client_read(server, {"namespace": "ns", "table": "orders_ice"})
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
 
 
 def test_parquet_dir_and_limit_cap(served):
@@ -697,6 +703,13 @@ def test_do_put_upsert_mode_iceberg(served, spark, tmp_path):
         assert len(got) == 51
         assert got[int(rows[0][0])] == 1.5
         assert got[9_999_999] == 3.5
+        # the server serves what it wrote: the equality delete applies
+        served_rows = _client_read(
+            server, {"namespace": "ns", "table": "orders_ups"}
+        )
+        assert sorted(
+            tuple(r.values()) for r in served_rows.to_pylist()
+        ) == sorted(map(tuple, t.snapshot().collect()))
         # replay: same txn no-ops
         writer, _meta = client.do_put(desc, tbl.schema)
         writer.write_table(tbl)
@@ -722,6 +735,78 @@ def _served_root(server):
     from pathlib import Path
 
     return Path(server.catalogs["default"])
+
+
+def test_iceberg_evolved_schema_flight_and_source(served, spark):
+    """After evolve_schema adds a plain column and a v3 column with an
+    initial-default, Flight do_get and the icebergprotocol batch source
+    both return snapshot()'s rows: files written before the change read
+    NULL for the plain column and the default for the other."""
+    from pyspark.sql import types as T
+
+    from featureform_spark.sources.icebergprotocol_datasource import (
+        register,
+    )
+
+    _spark, server, _dt, _it, orders = served
+    path = str(_served_root(server) / "ns" / "orders_evolved")
+    t = IcebergProtocolTable(spark, path)
+    t.create(orders.limit(20))
+    t.upgrade_format_version(3)
+    t.evolve_schema(
+        T.StructType(
+            list(orders.schema.fields)
+            + [
+                T.StructField("note", T.StringType()),
+                T.StructField("score", T.LongType()),
+            ]
+        ),
+        defaults={"score": 7},
+    )
+    t.append(
+        orders.limit(30)
+        .subtract(orders.limit(20))
+        .withColumn("note", F.lit("new"))
+        .withColumn("score", F.col("o_orderkey") % 3)
+    )
+    native = t.snapshot()
+    want = sorted(map(tuple, native.collect()))
+    assert sum(r[-1] == 7 for r in want) == 20
+    got = _client_read(server, {"namespace": "ns", "table": "orders_evolved"})
+    assert got.schema.names == native.columns
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
+    register(spark)
+    via_ds = spark.read.format("icebergprotocol").options(path=path).load()
+    assert sorted(map(tuple, via_ds.collect())) == want
+
+
+def test_iceberg_dv_cardinality_mismatch_refuses(served, spark, monkeypatch):
+    """A v3 deletion-vector entry whose record_count disagrees with its
+    decoded blob fails the scan instead of masking the wrong rows."""
+    _spark, server, _dt, _it, orders = served
+    path = str(_served_root(server) / "ns" / "orders_badcard")
+    t = IcebergProtocolTable(spark, path)
+    t.create(orders.limit(30))
+    t.upgrade_format_version(3)
+    t.delete_rows(F.col("o_orderkey") % 3 == 0)
+    live = IcebergProtocolTable._live_entries
+
+    def miscounted(self, snap):
+        data, deletes = live(self, snap)
+        return data, [
+            {
+                **e,
+                "data_file": {
+                    **e["data_file"],
+                    "record_count": int(e["data_file"]["record_count"]) + 1,
+                },
+            }
+            for e in deletes
+        ]
+
+    monkeypatch.setattr(IcebergProtocolTable, "_live_entries", miscounted)
+    with pytest.raises(fl.FlightError, match="cardinality"):
+        _client_read(server, {"namespace": "ns", "table": "orders_badcard"})
 
 
 def test_do_put_unknown_mode_and_iceberg_append_txn(served, spark, tmp_path):

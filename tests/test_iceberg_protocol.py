@@ -1472,6 +1472,25 @@ def test_type_promotion_evolution(spark, sf_dir, tmp_path):
     assert out.count() == 11
     assert out.agg(F.max("k")).first()[0] == 2**40
     assert abs(out.agg(F.sum("v")).first()[0] - (45.0 + 1.5)) < 1e-9
+    # the sessionless scans read the old files as the widened types
+    import pyarrow as pa
+
+    from featureform_spark.serving.flight_server import scan_table_arrow
+    from featureform_spark.sources.icebergprotocol_datasource import (
+        register,
+    )
+
+    want = sorted(map(tuple, out.collect()))
+    got = scan_table_arrow(str(tmp_path / "t")).read_all()
+    assert got.schema.types == [pa.int64(), pa.float64()]
+    assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
+    register(spark)
+    via_ds = (
+        spark.read.format("icebergprotocol")
+        .option("path", str(tmp_path / "t"))
+        .load()
+    )
+    assert sorted(map(tuple, via_ds.collect())) == want
     with pytest.raises(UnsupportedIcebergFeatureError, match="type change"):
         t.evolve_schema(
             T.StructType(

@@ -41,6 +41,36 @@ def test_batch_read_matches_snapshot(reg, spark, sf_dir, tmp_path):
     )
 
 
+def test_batch_read_applies_row_deletes(reg, spark, sf_dir, tmp_path):
+    """The batch source returns snapshot()'s rows after an upsert
+    (equality deletes), a v2 delete_rows (position deletes) and a v3
+    delete_rows (deletion vectors)."""
+    orders = _orders(spark, sf_dir)
+    path = str(tmp_path / "d")
+    t = IcebergProtocolTable(spark, path)
+    t.create(orders.limit(60).repartition(2))
+
+    def check():
+        via_ds = spark.read.format("icebergprotocol").options(
+            path=path
+        ).load()
+        native = t.snapshot().select(*via_ds.columns)
+        assert sorted(map(tuple, via_ds.collect())) == sorted(
+            map(tuple, native.collect())
+        )
+
+    t.upsert(
+        orders.limit(5).withColumn("o_totalprice", F.lit(1.5)),
+        ["o_orderkey"],
+    )
+    check()
+    t.delete_rows(F.col("o_orderkey") % 4 == 0)
+    check()
+    t.upgrade_format_version(3)
+    t.delete_rows(F.col("o_orderkey") % 3 == 0)
+    check()
+
+
 def test_stream_snapshot_ordinal_offsets_and_resume(
     reg, spark, sf_dir, tmp_path
 ):
