@@ -3,108 +3,49 @@ batched multi-feature serve, vector nearest-neighbor.
 
 The reference's online stores are external KV systems (Redis/Dynamo/...,
 provider/online.go:42-64) fed by a chunked materialization copy
-(runner/materialize.go:101-231). Here the "online store" is an in-process
-dict (per SURVEY §2.9 V1 this is all serving tests need), and the copy is
-``foreachPartition``-shaped: each Spark partition ships its rows to the
-store writer — the identical pattern to the reference's DynamoDB
-direct-copy sink (S15), so swapping in a real KV client is a one-method
-change.
+(runner/materialize.go:101-231). Here the table plane has ONE
+implementation, ``SqliteOnlineStore`` (serving/sqlite_store.py): on a
+file it is the durable store that Spark executors write to directly
+(the reference's DynamoDB direct-copy sink, S15), and on ``":memory:"``
+it is the table plane of ``InMemoryOnlineStore``, which adds the vector
+plane. ``materialize_to_online`` drains a materialization through the
+driver in bounded chunks, one store transaction each; swapping in a
+real KV client means reimplementing the store's table-plane methods.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Any
+from itertools import islice
+from typing import Any, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
 from featureform_spark.functions.similarity import cosine_topk
+from featureform_spark.serving.sqlite_store import SqliteOnlineStore
 
 DEFAULT_ROWS_PER_CHUNK = 100_000  # reference provider/offline.go:46
 
 
-class InMemoryOnlineStore:
-    """V1: entity → value tables, with V3 batched multi-feature serve."""
+def batched(rows: Iterable, size: int) -> Iterator[list]:
+    """``rows`` in lists of ``size`` (the last may be shorter): the
+    bounded batches a driver-side drain writes, one transaction each."""
+    it = iter(rows)
+    while batch := list(islice(it, size)):
+        yield batch
+
+
+class InMemoryOnlineStore(SqliteOnlineStore):
+    """V1 + V3 table plane (the SQLite store on ``":memory:"``) plus
+    the V4 vector plane: registered vector sets and their in-RAM ANN
+    indexes. ``clock`` is the TTL clock (wall time by default); tests
+    inject one so TTL checks don't sleep."""
 
     def __init__(self, clock=None):
-        self._tables: dict[str, dict[Any, Any]] = {}
-        self._timestamps: dict[str, dict[Any, Any]] = {}
-        self._expiry: dict[str, dict[Any, float]] = {}
+        super().__init__(":memory:", clock)
         self._vectors: dict[str, DataFrame] = {}
         self._ann: dict[str, Any] = {}  # name -> IvfPqIndex | HnswIndex | ShardedHnsw
         self._frozen: set[str] = set()  # immutable vector spaces
-        # injectable clock so TTL tests don't sleep; real KV stores
-        # (Redis EXPIRE, Dynamo TTL) own this server-side
-        import time as _time
-
-        self._clock = clock or _time.monotonic
-
-    # -- table plane ---------------------------------------------------------
-
-    def set(
-        self,
-        table: str,
-        entity: Any,
-        value: Any,
-        ttl_seconds: float | None = None,
-    ) -> None:
-        """``ttl_seconds`` mirrors Redis EXPIRE / DynamoDB TTL: the
-        value reads as a miss once the deadline passes (lazy expiry —
-        the entry reaps on its next read, the standard KV semantics; a
-        background sweeper is the store's concern, not the client's).
-        A re-set without a TTL clears any prior deadline."""
-        self._tables.setdefault(table, {})[entity] = value
-        exp = self._expiry.setdefault(table, {})
-        if ttl_seconds is not None:
-            exp[entity] = self._clock() + float(ttl_seconds)
-        else:
-            exp.pop(entity, None)
-
-    def ensure_table(self, table: str) -> None:
-        """Create the table if absent (an empty deploy still serves
-        misses, not unknown-table errors)."""
-        self._tables.setdefault(table, {})
-
-    def set_if_newer(
-        self,
-        table: str,
-        entity: Any,
-        value: Any,
-        ts: Any,
-        ttl_seconds: float | None = None,
-    ) -> None:
-        """Upsert that ignores stale writes (out-of-order stream
-        batches). A winning write refreshes the TTL deadline — or
-        clears it when no ``ttl_seconds`` is given — exactly like
-        ``set``; leaving a stale deadline in place would reap the
-        FRESH value and serve live data as a miss."""
-        t = self._tables.setdefault(table, {})
-        ts_table = self._timestamps.setdefault(table, {})
-        prev = ts_table.get(entity)
-        if prev is None or (ts is not None and ts >= prev):
-            t[entity] = value
-            ts_table[entity] = ts
-            exp = self._expiry.setdefault(table, {})
-            if ttl_seconds is not None:
-                exp[entity] = self._clock() + float(ttl_seconds)
-            else:
-                exp.pop(entity, None)
-
-    def get(self, table: str, entity: Any) -> Any:
-        deadline = self._expiry.get(table, {}).get(entity)
-        if deadline is not None and self._clock() >= deadline:
-            self._tables[table].pop(entity, None)
-            self._expiry[table].pop(entity, None)
-            self._timestamps.get(table, {}).pop(entity, None)
-            return None
-        return self._tables[table].get(entity)
-
-    def serve_features(self, tables: list[str], entity: Any) -> list[Any]:
-        """V3: order-preserving multi-feature point serve."""
-        return [self.get(t, entity) for t in tables]
-
-    def table_size(self, table: str) -> int:
-        return len(self._tables.get(table, {}))
 
     # -- vector plane ---------------------------------------------------------
 
@@ -236,108 +177,27 @@ class InMemoryOnlineStore:
         return [(r["vec_id"], r["score"]) for r in out.collect()]
 
 
-class FileBackedOnlineStore:
-    """KV store backed by a spool directory of append-only JSON batch
-    segments — the shared write surface a real Dynamo/Redis endpoint
-    provides, so **executor processes** can write to it directly
-    (``partition_writer`` below plugs into ``foreach_partition_write``,
-    matching the reference's executor-side Dynamo pattern,
-    offline_store_spark_runner.py:420-485). Reads fold segments in write
-    order with the same newer-or-equal-wins rule as
-    ``InMemoryOnlineStore.set_if_newer``.
-
-    Timestamps are JSON-serialized via ``str`` (ISO-like), which
-    compares lexicographically in time order — adequate for the
-    last-write-wins fold; a real store compares native timestamps.
-    """
-
-    def __init__(self, root: str):
-        import os
-
-        self._root = str(root)
-        os.makedirs(self._root, exist_ok=True)
-
-    def _table_dir(self, table: str) -> str:
-        import os
-
-        d = os.path.join(self._root, table)
-        os.makedirs(d, exist_ok=True)
-        return d
-
-    def partition_writer(self, table: str):
-        """Picklable executor-side writer factory for
-        ``foreach_partition_write``: each batch lands as one atomic
-        segment file (tmp + rename), filename-prefixed with a
-        nanosecond clock so the read fold replays write order."""
-        root = self._table_dir(table)
-
-        def factory():
-            import json
-            import os
-            import time
-            import uuid
-
-            def write_batch(rows):
-                name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.json"
-                tmp = os.path.join(root, name + ".tmp")
-                with open(tmp, "w") as f:
-                    json.dump(rows, f, default=str)
-                os.replace(tmp, os.path.join(root, name))
-
-            return write_batch
-
-        return factory
-
-    def _fold(self, table: str) -> dict[Any, Any]:
-        import json
-        import os
-
-        d = self._table_dir(table)
-        values: dict[Any, Any] = {}
-        stamps: dict[Any, Any] = {}
-        for name in sorted(os.listdir(d)):
-            if not name.endswith(".json"):
-                continue
-            with open(os.path.join(d, name)) as f:
-                for row in json.load(f):
-                    e, v, ts = row["entity"], row["value"], row.get("ts")
-                    prev = stamps.get(e)
-                    if prev is None or (ts is not None and str(ts) >= str(prev)):
-                        values[e] = v
-                        stamps[e] = ts
-        return values
-
-    def get(self, table: str, entity: Any) -> Any:
-        return self._fold(table).get(entity)
-
-    def serve_features(self, tables: list[str], entity: Any) -> list[Any]:
-        return [self.get(t, entity) for t in tables]
-
-    def table_size(self, table: str) -> int:
-        return len(self._fold(table))
-
-
 def materialize_to_online(
     mat: DataFrame,
-    store: InMemoryOnlineStore,
+    store: SqliteOnlineStore,
     table: str,
     entity_col: str = "entity",
     value_col: str = "value",
     rows_per_chunk: int = DEFAULT_ROWS_PER_CHUNK,
 ) -> int:
-    """V2: chunked offline→online copy.
+    """V2: chunked offline→online copy, in one pass over ``mat``.
 
-    Chunk count follows the reference (ceil(rows / 100k)); the copy
-    itself is partition-parallel. For the in-process store the rows
-    funnel through the driver via toLocalIterator (bounded memory); a
-    real KV target would use df.foreachPartition(writer) exactly like
-    the reference's Dynamo sink.
+    Rows stream to the driver through ``toLocalIterator`` (bounded
+    memory) and land ``rows_per_chunk`` at a time, one ``set_many``
+    transaction per chunk. Returns the chunk count, which follows the
+    reference: ceil(rows written / 100k), at least one.
     """
-    n = mat.count()
-    chunks = max(1, math.ceil(n / rows_per_chunk))
     # an empty materialization still deploys an (empty) table — serving
     # it returns misses, not "unknown table" (serving_cases.py "Empty")
     store.ensure_table(table)
-    for row in mat.select(entity_col, value_col).toLocalIterator():
-        store.set(table, row[entity_col], row[value_col])
-    return chunks
+    written = 0
+    rows = mat.select(entity_col, value_col).toLocalIterator()
+    for batch in batched(rows, rows_per_chunk):
+        store.set_many(table, batch)
+        written += len(batch)
+    return max(1, math.ceil(written / rows_per_chunk))

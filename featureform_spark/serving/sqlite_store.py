@@ -1,63 +1,82 @@
-"""Durable online store on sqlite3 (stdlib — no vendor dependency).
+"""The online table store on sqlite3 (stdlib — no vendor dependency).
 
 The reference serves features from external KV systems
 (provider/online.go:42-64 — Redis, DynamoDB, Cassandra); none of those
-clients can install in this environment, and the in-process
-InMemoryOnlineStore (serving/online.py) loses state with the process.
-This store closes that durability gap with the one real KV engine the
-standard library ships: the SAME table-plane contract — ``set`` /
-``set_if_newer`` / ``get`` / ``serve_features`` / ``ensure_table`` /
-``table_size`` with Redis-EXPIRE-style lazy TTL — persisted to a
-sqlite file in WAL mode, so a restarted serving process reopens the
-path and keeps serving.
+clients can install in this environment. This module is the one
+implementation of that table-plane contract here — ``set`` /
+``set_many`` / ``set_if_newer`` / ``set_if_newer_many`` / ``get`` /
+``serve_features`` / ``ensure_table`` / ``table_size`` with
+Redis-EXPIRE-style lazy TTL and newer-or-equal-wins upserts. On a file
+(WAL mode) it is durable: a restarted serving process reopens the path
+and keeps serving, and Spark executors open the same file to write
+(``partition_writer``). On ``":memory:"`` it is the table plane of
+``InMemoryOnlineStore`` (serving/online.py).
 
-Scale position: this is the SERVING side of the chunked
-offline→online copy (rows funnel through the driver exactly like the
-in-memory store; a production deployment swaps in a distributed KV by
-reimplementing this same interface — the one-method-change promise in
-serving/online.py's module note). Values and entities are pickled, so
-anything the in-memory store accepted round-trips.
+Scale position: this is the SERVING side of the chunked offline→online
+copy. A production deployment swaps in a distributed KV by
+reimplementing this interface. Values and entities are pickled, so any
+picklable value round-trips; numpy scalar keys are stored as the equal
+Python value.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import pickle
 import sqlite3
+import threading
 import time
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Iterable
+
+import numpy as np
+
+_REGISTER = "INSERT OR IGNORE INTO tables (tbl) VALUES (?)"
+# a plain set keeps the stored timestamp: a later set_if_newer still
+# compares against the last timestamped write
+_SET = (
+    "INSERT INTO kv (tbl, k, v, ts, deadline) VALUES (?, ?, ?, NULL, ?)"
+    " ON CONFLICT (tbl, k) DO UPDATE SET"
+    " v = excluded.v, deadline = excluded.deadline"
+)
+_SET_TS = (
+    "INSERT INTO kv (tbl, k, v, ts, deadline) VALUES (?, ?, ?, ?, ?)"
+    " ON CONFLICT (tbl, k) DO UPDATE SET"
+    " v = excluded.v, ts = excluded.ts, deadline = excluded.deadline"
+)
 
 
 def _k(entity: Any) -> bytes:
     """Deterministic key bytes for an entity (pickle of primitives is
-    stable for a fixed protocol)."""
+    stable for a fixed protocol). A numpy scalar keys as the equal
+    Python value, so ``np.int64(5)`` finds what ``5`` wrote."""
+    if isinstance(entity, np.generic):
+        entity = entity.item()
     return pickle.dumps(entity, protocol=4)
 
 
 class SqliteOnlineStore:
-    """Table-plane twin of InMemoryOnlineStore, durable on disk.
+    """The online table plane, on a sqlite file or on ``":memory:"``.
 
-    The vector plane (register_vectors / ANN indexes) intentionally
-    stays with the in-memory store — indexes are rebuilt in RAM at
-    serving start from the offline tables; persisting them is the
-    index's own concern (hnswlib files, IVF codebook parquet)."""
+    The vector plane (register_vectors / ANN indexes) lives in
+    ``InMemoryOnlineStore`` — indexes are rebuilt in RAM at serving
+    start from the offline tables; persisting them is the index's own
+    concern (hnswlib files, IVF codebook parquet)."""
 
     def __init__(self, path: str, clock=None):
         self.path = path
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        import threading
-
         # check_same_thread=False + a process-level lock: Structured
         # Streaming's foreachBatch upserts run on stream-execution
         # threads, not the thread that opened the store; all access
         # serializes through self._lock so the read-compare-write in
-        # set_if_newer stays atomic across threads too
+        # set_if_newer_many stays atomic across threads too
         self._db = sqlite3.connect(path, check_same_thread=False)
         self._lock = threading.RLock()
-        # true autocommit: single statements commit themselves; the
-        # one read-compare-write (set_if_newer) opens its own
-        # BEGIN IMMEDIATE — no interference from the sqlite3 module's
-        # implicit transaction management
+        # true autocommit: single statements commit themselves; every
+        # write opens its own BEGIN IMMEDIATE (_transaction) — no
+        # interference from the sqlite3 module's implicit transactions
         self._db.isolation_level = None
         self._db.execute("PRAGMA journal_mode=WAL")
         self._db.execute("PRAGMA synchronous=NORMAL")
@@ -70,24 +89,56 @@ class SqliteOnlineStore:
         self._db.execute(
             "CREATE TABLE IF NOT EXISTS tables (tbl TEXT PRIMARY KEY)"
         )
-        self._db.commit()
         # WALL clock, not monotonic: deadlines PERSIST across process
         # restarts here, and a monotonic epoch resets with the process
         # — a reopened store would compare stored deadlines against a
         # fresh zero and serve expired values (or reap fresh ones).
-        # The in-memory store can use monotonic because its state
-        # dies with the process.
         self._clock = clock or time.time
 
-    # -- table plane (the InMemoryOnlineStore contract) -----------------
+    # -- writes ---------------------------------------------------------
+
+    @contextmanager
+    def _transaction(self, table: str, ttl_seconds: float | None):
+        """One IMMEDIATE transaction that registers ``table``; yields
+        the TTL deadline its writes carry (None clears one)."""
+        with self._lock:
+            self._db.execute("BEGIN IMMEDIATE")
+            try:
+                self._db.execute(_REGISTER, (table,))
+                yield (
+                    self._clock() + float(ttl_seconds)
+                    if ttl_seconds is not None
+                    else None
+                )
+                self._db.execute("COMMIT")
+            except BaseException:
+                self._db.rollback()
+                raise
 
     def ensure_table(self, table: str) -> None:
-        with self._lock:
-            self._db.execute(
-                "INSERT OR IGNORE INTO tables (tbl) VALUES (?)",
-                (table,),
+        """Create the table if absent (an empty deploy still serves
+        misses, not unknown-table errors)."""
+        self.set_many(table, ())
+
+    def set_many(
+        self,
+        table: str,
+        rows: Iterable[tuple[Any, Any]],
+        ttl_seconds: float | None = None,
+    ) -> None:
+        """Write ``(entity, value)`` rows in one transaction.
+        ``ttl_seconds`` mirrors Redis EXPIRE / DynamoDB TTL: the value
+        reads as a miss once the deadline passes (lazy expiry — the
+        entry reaps on its next read). A write without a TTL clears
+        any prior deadline."""
+        with self._transaction(table, ttl_seconds) as deadline:
+            self._db.executemany(
+                _SET,
+                (
+                    (table, _k(entity), pickle.dumps(value), deadline)
+                    for entity, value in rows
+                ),
             )
-            self._db.commit()
 
     def set(
         self,
@@ -96,24 +147,44 @@ class SqliteOnlineStore:
         value: Any,
         ttl_seconds: float | None = None,
     ) -> None:
-        deadline = (
-            self._clock() + float(ttl_seconds)
-            if ttl_seconds is not None
-            else None
-        )
-        with self._lock:
-            self._db.execute(
-                "INSERT OR IGNORE INTO tables (tbl) VALUES (?)",
-                (table,),
-            )
-            self._db.execute(
-                "INSERT INTO kv (tbl, k, v, ts, deadline)"
-                " VALUES (?, ?, ?, NULL, ?)"
-                " ON CONFLICT (tbl, k) DO UPDATE SET"
-                " v = excluded.v, deadline = excluded.deadline",
-                (table, _k(entity), pickle.dumps(value), deadline),
-            )
-            self._db.commit()
+        self.set_many(table, [(entity, value)], ttl_seconds)
+
+    def set_if_newer_many(
+        self,
+        table: str,
+        rows: Iterable[tuple[Any, Any, Any]],
+        ttl_seconds: float | None = None,
+    ) -> None:
+        """Upsert ``(entity, value, ts)`` rows in one transaction,
+        ignoring stale writes (out-of-order stream batches): a row wins
+        when no prior timestamp exists or ``ts >= prev``, so within a
+        batch the newer row wins and ties go to the later one. A
+        winning write refreshes the TTL deadline — or clears it when no
+        ``ttl_seconds`` is given; leaving a stale deadline in place
+        would reap the FRESH value and serve live data as a miss."""
+        with self._transaction(table, ttl_seconds) as deadline:
+            for entity, value, ts in rows:
+                key = _k(entity)
+                row = self._db.execute(
+                    "SELECT ts FROM kv WHERE tbl = ? AND k = ?",
+                    (table, key),
+                ).fetchone()
+                prev = (
+                    pickle.loads(row[0])
+                    if row and row[0] is not None
+                    else None
+                )
+                if prev is None or (ts is not None and ts >= prev):
+                    self._db.execute(
+                        _SET_TS,
+                        (
+                            table,
+                            key,
+                            pickle.dumps(value),
+                            pickle.dumps(ts),
+                            deadline,
+                        ),
+                    )
 
     def set_if_newer(
         self,
@@ -123,49 +194,20 @@ class SqliteOnlineStore:
         ts: Any,
         ttl_seconds: float | None = None,
     ) -> None:
-        """Same stale-write semantics as the in-memory store: the
-        write wins when no prior timestamp exists or ``ts >= prev``;
-        a winning write refreshes (or clears) the TTL deadline. The
-        read-compare-write runs inside one IMMEDIATE transaction."""
-        key = _k(entity)
-        self._lock.acquire()
-        self._db.execute("BEGIN IMMEDIATE")
-        try:
-            row = self._db.execute(
-                "SELECT ts FROM kv WHERE tbl = ? AND k = ?",
-                (table, key),
-            ).fetchone()
-            prev = pickle.loads(row[0]) if row and row[0] is not None else None
-            if prev is None or (ts is not None and ts >= prev):
-                deadline = (
-                    self._clock() + float(ttl_seconds)
-                    if ttl_seconds is not None
-                    else None
-                )
-                self._db.execute(
-                    "INSERT OR IGNORE INTO tables (tbl) VALUES (?)",
-                    (table,),
-                )
-                self._db.execute(
-                    "INSERT INTO kv (tbl, k, v, ts, deadline)"
-                    " VALUES (?, ?, ?, ?, ?)"
-                    " ON CONFLICT (tbl, k) DO UPDATE SET"
-                    " v = excluded.v, ts = excluded.ts,"
-                    " deadline = excluded.deadline",
-                    (
-                        table,
-                        key,
-                        pickle.dumps(value),
-                        pickle.dumps(ts),
-                        deadline,
-                    ),
-                )
-            self._db.commit()
-        except Exception:
-            self._db.rollback()
-            raise
-        finally:
-            self._lock.release()
+        self.set_if_newer_many(table, [(entity, value, ts)], ttl_seconds)
+
+    @property
+    def partition_writer(self):
+        """``partition_writer(table)``: a picklable writer factory for
+        ``foreach_partition_write`` that opens this file on the
+        executor (:class:`_PartitionWriter`). A ``":memory:"`` store
+        lives in one process, so it has no ``partition_writer`` and
+        callers drain through the driver."""
+        if self.path == ":memory:":
+            raise AttributeError("a ':memory:' store has no partition_writer")
+        return functools.partial(_PartitionWriter, os.path.abspath(self.path))
+
+    # -- reads ----------------------------------------------------------
 
     def get(self, table: str, entity: Any) -> Any:
         return self.serve_features([table], entity)[0]
@@ -173,10 +215,9 @@ class SqliteOnlineStore:
     def serve_features(self, tables: list[str], entity: Any) -> list[Any]:
         """The entity's value in each of ``tables``, in request order
         (names may repeat), from ONE statement: the registered tables
-        LEFT JOIN their kv row, so an unknown table (``KeyError``, the
-        dict store's contract) and a missing value (None) are told
-        apart without a second query. Expired values are reaped on
-        read, Redis-style."""
+        LEFT JOIN their kv row, so an unknown table (``KeyError``) and
+        a missing value (None) are told apart without a second query.
+        Expired values are reaped on read, Redis-style."""
         key = _k(entity)
         with self._lock:
             rows = self._db.execute(
@@ -209,3 +250,26 @@ class SqliteOnlineStore:
 
     def close(self) -> None:
         self._db.close()
+
+
+class _PartitionWriter:
+    """Executor side of ``SqliteOnlineStore.partition_writer``: called
+    once per partition, it opens the file and returns a writer that
+    lands each batch of ``{entity, value, ts}`` row dicts with
+    ``set_if_newer_many``. A busy file raises
+    ``sqlite3.OperationalError`` once the connection timeout passes;
+    ``foreach_partition_write`` does not retry it, so the job fails."""
+
+    def __init__(self, path: str, table: str):
+        self.path = path
+        self.table = table
+
+    def __call__(self):
+        store = SqliteOnlineStore(self.path)
+
+        def write_batch(rows: list[dict[str, Any]]) -> None:
+            store.set_if_newer_many(
+                self.table, [(r["entity"], r["value"], r["ts"]) for r in rows]
+            )
+
+        return write_batch

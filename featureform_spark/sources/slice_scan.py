@@ -101,15 +101,38 @@ _EXACT = {
 }
 
 
+def _split_top(inner: str) -> list:
+    """``inner`` split at the commas outside any ``<...>`` or
+    ``(...)``: the element types of a map or the fields of a struct."""
+    parts, depth, start = [], 0, 0
+    for i, c in enumerate(inner):
+        depth += (c in "<(") - (c in ">)")
+        if c == "," and depth == 0:
+            parts.append(inner[start:i])
+            start = i + 1
+    return parts + [inner[start:]] if inner else parts
+
+
 def arrow_type(simple: str):
-    """The arrow type of a Spark simpleString. Decimals stay exact;
-    both timestamp kinds read as naive microseconds; anything
-    unrecognised reads as a string."""
-    m = re.match(r"decimal\((\d+),(\d+)\)", simple)
+    """The arrow type of a Spark simpleString, nested types included,
+    named like the parquet Spark writes so a file's column casts to it.
+    Decimals stay exact; both timestamp kinds read as naive
+    microseconds; anything unrecognised reads as a string."""
+    m = re.match(r"decimal\((\d+),(\d+)\)$", simple)
     if m:
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
     if simple in ("timestamp", "timestamp_ntz"):
         return pa.timestamp("us")
+    if simple.startswith("array<"):
+        return pa.list_(pa.field("element", arrow_type(simple[6:-1])))
+    if simple.startswith("map<"):
+        key, value = _split_top(simple[4:-1])
+        return pa.map_(arrow_type(key), arrow_type(value))
+    if simple.startswith("struct<"):
+        return pa.struct([
+            pa.field(name, arrow_type(t))
+            for name, t in (f.split(":", 1) for f in _split_top(simple[7:-1]))
+        ])
     return pa.type_for_alias(_ARROW_SCALARS.get(simple, "string"))
 
 

@@ -373,16 +373,22 @@ def stream_to_online(
     upsert. Cross-batch out-of-order arrivals resolve via ts-compare in
     the store (newer-or-equal wins), so replays converge.
 
-    Stores exposing ``partition_writer(table)`` (any real KV endpoint;
-    ``FileBackedOnlineStore`` in tests) get the executor-side path: each
-    batch's materialization ships through ``foreach_partition_write`` —
-    batched, retrying, never touching the driver (the reference's Dynamo
-    pattern, offline_store_spark_runner.py:420-485). In-process dict
-    stores have no cross-process write surface, so they fall back to a
-    bounded ``toLocalIterator`` drain (test/demo only — documented as
-    the non-scale path).
+    A store backed by a file that executors can open (a
+    ``SqliteOnlineStore`` on a path) has a ``partition_writer(table)``
+    and gets the executor-side path: each batch's materialization ships
+    through ``foreach_partition_write`` — batched, retrying, never
+    touching the driver (the reference's Dynamo pattern,
+    offline_store_spark_runner.py:420-485). A ``":memory:"`` store
+    (``InMemoryOnlineStore``) has no cross-process write surface, so it
+    drains through the driver via ``toLocalIterator``, in bounded
+    chunks of ``set_if_newer_many`` (test/demo only — the non-scale
+    path).
     """
     from featureform_spark.operators.materialize import materialize_latest
+    from featureform_spark.serving.online import (
+        DEFAULT_ROWS_PER_CHUNK,
+        batched,
+    )
     from featureform_spark.serving.writer import foreach_partition_write
 
     def upsert(batch: DataFrame, _bid: int) -> None:
@@ -390,8 +396,9 @@ def stream_to_online(
         if hasattr(store, "partition_writer"):
             foreach_partition_write(mat, store.partition_writer(table))
         else:
-            for row in mat.toLocalIterator():
-                store.set_if_newer(table, row["entity"], row["value"], row["ts"])
+            rows = mat.select("entity", "value", "ts").toLocalIterator()
+            for chunk in batched(rows, DEFAULT_ROWS_PER_CHUNK):
+                store.set_if_newer_many(table, chunk)
 
     return (
         stream_df.writeStream.foreachBatch(upsert)

@@ -879,6 +879,41 @@ def test_delta_partitioned_with_dvs_roundtrip(served, tmp_path):
     )
 
 
+def test_delta_added_nested_columns_roundtrip(served):
+    """Nested columns added after the first file: the older file (it
+    sorts first, so it fixes the scan schema) reads them as typed
+    NULLs, and the newer file's values cast to the same types."""
+    from pyspark.sql import types as T
+
+    spark, server, dt, _it, _orders = served
+    root = os.path.dirname(os.path.dirname(dt.path))
+    t = DeltaProtocolTable(spark, os.path.join(root, "ns", "nested"))
+    t.create(spark.createDataFrame([(0, 1), (0, 2)], "p int, k long"),
+             partition_by=["p"])
+    t.add_columns(T.StructType([
+        T.StructField("tags", T.ArrayType(T.IntegerType())),
+        T.StructField("attrs", T.MapType(T.StringType(), T.LongType())),
+        T.StructField("info", T.StructType([
+            T.StructField("a", T.IntegerType()),
+            T.StructField("b", T.ArrayType(T.StringType())),
+        ])),
+    ]))
+    t.append(spark.createDataFrame(
+        [(1, 3, [7, 8], {"x": 1}, (5, ["u", "v"]))], t.snapshot().schema
+    ))
+    got = _client_read(server, {"namespace": "ns", "table": "nested"})
+    native = t.snapshot()
+    assert got.schema.names == native.columns
+    rows = [
+        {**r, "attrs": None if r["attrs"] is None else dict(r["attrs"])}
+        for r in got.to_pylist()
+    ]
+    assert sorted(rows, key=lambda r: r["k"]) == sorted(
+        (r.asDict(recursive=True) for r in native.collect()),
+        key=lambda r: r["k"],
+    )
+
+
 def _hand_made_delta(path: str, files: list[list[int]]) -> DeltaProtocolTable:
     """A one-column Delta table without Spark: version 0 by hand, then
     one sessionless append per entry of ``files``."""

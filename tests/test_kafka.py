@@ -103,7 +103,7 @@ def test_stream_topic_to_online_end_to_end(spark, tmp_path):
     """ST1+ST2: produce JSON records to a topic, stream them through the
     wire-schema parse into stream_to_online; the store holds the latest
     value per entity (executor-side partition writer path)."""
-    from featureform_spark.serving.online import FileBackedOnlineStore
+    from featureform_spark.serving.sqlite_store import SqliteOnlineStore
     from featureform_spark.streaming.incremental import stream_to_online
 
     t = FileTopic(str(tmp_path / "spool"), "feat", num_partitions=2)
@@ -119,7 +119,7 @@ def test_stream_topic_to_online_end_to_end(spark, tmp_path):
     parsed = parse_topic(t.stream(spark), VALUE_SCHEMA).select(
         "entity", "value", F.col("ts").cast("timestamp").alias("ts")
     )
-    store = FileBackedOnlineStore(str(tmp_path / "store"))
+    store = SqliteOnlineStore(str(tmp_path / "store.db"))
     q = stream_to_online(
         parsed, store, "feat", "entity", "value", "ts",
         checkpoint=str(tmp_path / "ckpt"),

@@ -1,11 +1,13 @@
-"""SqliteOnlineStore: the durable table-plane twin of
-InMemoryOnlineStore. One parametrized contract suite runs the SAME
-assertions against both implementations (set/get, lazy TTL with an
-injected clock, set_if_newer stale-write rejection + TTL refresh,
-ordered multi-feature serve, unknown-table KeyError), plus the
-sqlite-only guarantees: state survives close+reopen, and the
-offline→online copy lands durably."""
+"""SqliteOnlineStore: the one online table store. One parametrized
+contract suite runs the SAME assertions against it on a file and as
+InMemoryOnlineStore's table plane on ":memory:" (set/get, numpy keys,
+lazy TTL with an injected clock, set_if_newer stale-write rejection +
+TTL refresh, batched writes, ordered multi-feature serve, unknown-table
+KeyError), plus the file-only guarantees: state survives close+reopen,
+the offline→online copy lands durably, and executor-side partition
+writers share one file."""
 
+import numpy as np
 import pytest
 
 from featureform_spark.serving.online import (
@@ -102,6 +104,56 @@ def test_contract_serve_features_reaps_expired(store_factory):
     ]
     assert s.table_size("f1") == 0  # reaped on read, not just hidden
     assert s.table_size("f2") == 1
+
+
+def test_contract_numpy_keys(store_factory):
+    """A numpy scalar key finds what the equal Python value wrote, and
+    the other way round."""
+    s = store_factory()
+    s.set("t", 5, "v")
+    assert s.get("t", np.int64(5)) == "v"
+    s.set("t", np.str_("u"), "w")
+    assert s.get("t", "u") == "w"
+    s.set_if_newer("t", np.int32(7), "x", ts=1)
+    s.set_if_newer("t", 7, "stale", ts=0)
+    assert s.get("t", 7) == "x"
+    assert s.table_size("t") == 3
+
+
+def test_contract_set_many(store_factory):
+    clock = [0.0]
+    s = store_factory(clock=lambda: clock[0])
+    s.set_many("t", [(1, "a"), (2, "b"), (1, "a2")], ttl_seconds=10)
+    assert s.serve_features(["t"], 1) == ["a2"]  # last write of a key wins
+    assert s.table_size("t") == 2
+    s.set_many("t", [(2, "b2")])  # no TTL: clears the deadline
+    clock[0] = 10.0
+    assert s.get("t", 1) is None
+    assert s.get("t", 2) == "b2"
+    s.set_many("empty", [])
+    assert s.get("empty", 1) is None  # an empty batch still deploys
+
+
+def test_contract_set_if_newer_many(store_factory):
+    clock = [0.0]
+    s = store_factory(clock=lambda: clock[0])
+    s.set_if_newer_many("t", [
+        (1, "a@5", 5), (1, "a@3", 3), (1, "a@5'", 5),  # newer wins, ties last
+        (2, "b@1", 1), (2, "b@2", 2),
+    ], ttl_seconds=10)
+    assert s.serve_features(["t", "t"], 1) == ["a@5'", "a@5'"]
+    assert s.get("t", 2) == "b@2"
+    clock[0] = 5.0
+    # a stale row leaves value and deadline alone; a winning row
+    # refreshes its deadline (ttl given) or clears it (none given)
+    s.set_if_newer_many("t", [(1, "a@4", 4), (2, "b@9", 9)], ttl_seconds=10)
+    s.set_if_newer_many("t", [(3, "c@1", 1), (3, "c@1'", 1)])
+    clock[0] = 10.0
+    assert s.get("t", 1) is None   # original deadline 10 kept
+    assert s.get("t", 2) == "b@9"  # refreshed to 15
+    clock[0] = 15.0
+    assert s.get("t", 2) is None
+    assert s.get("t", 3) == "c@1'"  # no TTL: never expires
 
 
 # ------------------------------------------------- sqlite-only
@@ -214,3 +266,43 @@ def test_sqlite_streaming_upsert_durable(spark, tmp_path):
     reopened = SqliteOnlineStore(path)
     assert reopened.get("feat", "a") == 1.0
     assert reopened.table_size("feat") == 3
+
+
+def test_sqlite_partition_writers_share_one_file(spark, tmp_path):
+    """Four Spark partitions write overlapping entities into one file
+    through foreach_partition_write: every entity lands with its
+    newest value, whichever partition wrote it. A locked file fails
+    the job with sqlite's error instead of losing the batch."""
+    import sqlite3
+
+    from featureform_spark.serving.writer import foreach_partition_write
+
+    path = str(tmp_path / "shared.db")
+    store = SqliteOnlineStore(path)
+    assert not hasattr(InMemoryOnlineStore(), "partition_writer")
+    # row i: entity i % 50 at ts i, spread over 4 partitions so every
+    # entity has rows in several of them
+    df = spark.createDataFrame(
+        [(i % 50, float(i), i) for i in range(400)],
+        "entity long, value double, ts long",
+    ).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+    foreach_partition_write(df, store.partition_writer("t"), batch_size=16)
+    assert store.table_size("t") == 50
+    for e in range(50):
+        assert store.get("t", e) == float(350 + e)
+
+    blocker = sqlite3.connect(path, isolation_level=None)
+    blocker.execute("BEGIN IMMEDIATE")
+    try:
+        with pytest.raises(Exception, match="database is locked"):
+            foreach_partition_write(
+                spark.createDataFrame(
+                    [(0, -1.0, 10**6)], "entity long, value double, ts long"
+                ),
+                store.partition_writer("t"),
+            )
+    finally:
+        blocker.rollback()
+        blocker.close()
+    assert store.get("t", 0) == 350.0
