@@ -357,24 +357,22 @@ class DatasetStreamerServer:
     def _table_put(self, req: dict, reader) -> None:
         """Ingest: uploaded record batches append to the target table —
         a Delta table commits through the sessionless transaction-log
-        writer (exactly-once via an optional {"app_id", "txn_version"}
-        in the descriptor), a plain parquet dir gains one part file.
-        No Spark on the pod."""
+        writer, an Iceberg table appends or upserts (``mode``), and a
+        plain parquet dir gains one part file. Each streams through
+        ``staged_write.write_arrow``: an upload is never materialized
+        in pod memory, and an aborted one leaves no file. An optional
+        {"app_id", "txn_version"} in the descriptor makes a table
+        commit exactly-once. No Spark on the pod."""
         path = self._resolve(req)
         fmt = _detect_format(path)
+        txn = None
+        if req.get("app_id") is not None:
+            txn = (str(req["app_id"]), int(req.get("txn_version", 0)))
         if fmt == "delta":
             from featureform_spark.sources.delta_protocol import (
                 DeltaProtocolTable,
             )
 
-            txn = None
-            if req.get("app_id") is not None:
-                txn = (
-                    str(req["app_id"]),
-                    int(req.get("txn_version", 0)),
-                )
-            # to_reader(): the upload STREAMS into the part
-            # file — never materialized in pod memory
             DeltaProtocolTable(None, path).append_arrow(
                 reader.to_reader(), txn=txn
             )
@@ -396,57 +394,27 @@ class DatasetStreamerServer:
             if mode == "upsert":
                 # CDC ingest: data files + a key equality
                 # delete at one sequence number (the Flink
-                # upsert-sink shape) — still zero Spark on the
-                # pod; optional {"app_id", "txn_version"} gives
-                # exactly-once replays via snapshot-summary
-                # watermarks
+                # upsert-sink shape)
                 keys = req.get("keys")
                 if not isinstance(keys, list) or not keys:
                     raise ValueError(
                         "upsert mode needs a non-empty 'keys' "
                         "list in the descriptor"
                     )
-                txn = None
-                if req.get("app_id") is not None:
-                    txn = (
-                        str(req["app_id"]),
-                        int(req.get("txn_version", 0)),
-                    )
                 t.upsert_arrow(
-                    reader.to_reader(),
-                    [str(k) for k in keys],
-                    txn=txn,
+                    reader.to_reader(), [str(k) for k in keys], txn=txn
                 )
             else:
-                txn = None
-                if req.get("app_id") is not None:
-                    txn = (
-                        str(req["app_id"]),
-                        int(req.get("txn_version", 0)),
-                    )
                 t.append_arrow(reader.to_reader(), txn=txn)
         else:
             import uuid as _uuid
 
-            import pyarrow.parquet as pq
+            from featureform_spark.sources.staged_write import write_arrow
 
-            target = os.path.join(
-                path, f"part-{_uuid.uuid4().hex}.parquet"
+            write_arrow(
+                reader.to_reader(),
+                os.path.join(path, f"part-{_uuid.uuid4().hex}.parquet"),
             )
-            pqw = None
-            try:
-                for chunk in reader:
-                    batch = chunk.data
-                    if batch is None:
-                        continue
-                    if pqw is None:
-                        pqw = pq.ParquetWriter(
-                            target, batch.schema
-                        )
-                    pqw.write_batch(batch)
-            finally:
-                if pqw is not None:
-                    pqw.close()
 
     # -- vector plane (embeddinghub parity) -----------------------------------
 

@@ -57,6 +57,7 @@ import time
 import urllib.parse
 import uuid
 from collections import OrderedDict
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -67,7 +68,9 @@ from pyspark.sql import types as T
 from featureform_spark.sources.staged_write import (
     STAGING_DIR,
     FileRecord,
+    discard,
     fold_footer,
+    write_arrow,
     write_staged,
 )
 
@@ -435,6 +438,32 @@ def _delta_stats(rec: FileRecord, allow: set[str] | None = None) -> str:
         out["minValues"][n] = lo
         out["maxValues"][n] = hi
     return json.dumps(out)
+
+
+def _stats_columns(
+    conf: dict[str, str] | None,
+    columns: list[str],
+    mapping: list[tuple[str, str]] | None = None,
+) -> set[str] | None:
+    """The columns a written file's stats cover, by the
+    ``delta.dataSkippingStatsColumns`` / ``dataSkippingNumIndexedCols``
+    properties (delta-spark's stats-bloat lever — at wide-table scale,
+    minValues/maxValues for hundreds of columns dominate the log): an
+    explicit column list wins; else the FIRST N written ``columns``
+    (-1 = all); None = all. Names are in the written (physical under
+    ``mapping``) namespace."""
+    raw_cols = (conf or {}).get("delta.dataSkippingStatsColumns")
+    if raw_cols is not None:
+        phys = {lo: ph for ph, lo in mapping or ()}
+        return {
+            phys.get(c.strip(), c.strip())
+            for c in raw_cols.split(",")
+            if c.strip()
+        }
+    raw_n = (conf or {}).get("delta.dataSkippingNumIndexedCols")
+    if raw_n is not None and int(raw_n) >= 0:
+        return set(columns[: int(raw_n)])
+    return None
 
 
 def _commit_name(version: int) -> str:
@@ -1959,28 +1988,7 @@ class DeltaProtocolTable:
             )
             partition_by = [phys_by_logical[c] for c in partition_by]
 
-        # delta.dataSkippingStatsColumns / dataSkippingNumIndexedCols
-        # (delta-spark's stats-bloat lever — at wide-table scale,
-        # minValues/maxValues for hundreds of columns dominate the
-        # log): an explicit column list wins; else stats cover the
-        # FIRST N schema columns (default 32, -1 = all). Names are in
-        # the written (physical under mapping) namespace.
-        allow: set[str] | None = None
-        raw_cols = (table_conf or {}).get("delta.dataSkippingStatsColumns")
-        if raw_cols is not None:
-            names = [c.strip() for c in raw_cols.split(",") if c.strip()]
-            if mapping:
-                names = [phys_by_logical.get(c, c) for c in names]
-            allow = set(names)
-        else:
-            raw_n = (table_conf or {}).get(
-                "delta.dataSkippingNumIndexedCols"
-            )
-            if raw_n is not None:
-                n = int(raw_n)
-                if n >= 0:
-                    allow = set(df.columns[:n])
-
+        allow = _stats_columns(table_conf, df.columns, mapping)
         return [
             {
                 "path": urllib.parse.quote(
@@ -2046,6 +2054,11 @@ class DeltaProtocolTable:
             "operation": op,
             "engineInfo": "featureform-spark-deltaprotocol",
         }
+        # a caller's extra commitInfo fields ride in as a commitInfo
+        # action; the log gets one merged commitInfo line
+        for a in [a for a in actions if "commitInfo" in a]:
+            ci.update(a["commitInfo"])
+            actions = [b for b in actions if b is not a]
         if op == "WRITE":
             removes = any("remove" in a for a in actions)
             ci["operationParameters"] = {
@@ -2092,11 +2105,12 @@ class DeltaProtocolTable:
                 "operation's snapshot is stale — re-run against the new "
                 "state (blind appends retry automatically)"
             ) from None
-        os.unlink(tmp)
-        # version-checksum sidecar: best-effort (the commit is already
-        # durable; a missing .crc just means validate_checksum()
-        # returns False for this version)
+        # the commit is durable: nothing below may raise, or a writer
+        # would take it for a failed commit and remove its files. The
+        # version-checksum sidecar is best-effort (a missing .crc just
+        # means validate_checksum() returns False for this version)
         try:
+            os.unlink(tmp)
             self._write_crc(version)
         except OSError:
             pass
@@ -2726,135 +2740,161 @@ class DeltaProtocolTable:
     ) -> int:
         """Blind append. ``txn=(app_id, version)`` records a
         SetTransaction for exactly-once ingestion; a replay with
-        version <= the recorded one is a no-op returning -1.
-
-        Optimistic concurrency: blind appends commute with every other
-        commit, so losing the O_EXCL race is resolved by re-reading the
-        log and retrying at the next version — Delta's
-        winningCommit-then-retry protocol for AddFile-only
-        transactions. The SetTransaction watermark is re-checked per
-        attempt so a concurrent replay of the same stream batch still
-        no-ops. Data files are written once; only the commit retries."""
+        version <= the recorded one is a no-op returning -1. Data files
+        are written once; only the commit retries, through
+        :meth:`_blind_append`."""
         st = self.state()
         raw_df = self._apply_generated_columns(
             st, self._apply_column_defaults(st, df)
         )
-        df, ident_meta, ident_gen = self._apply_identity_columns(
-            st, raw_df
-        )
+        df, ident_meta, _gen = self._apply_identity_columns(st, raw_df)
+        self._write_guard(st, df, "WRITE")
+        if txn is not None and int(txn[1]) <= int(st.txns.get(txn[0], -1)):
+            return -1
+
+        def _write(st: _State, df: DataFrame) -> list[dict]:
+            return self._write_files(
+                df,
+                st.partition_columns,
+                st.column_mapping,
+                st.metadata.get("configuration"),
+            )
+
+        def _reallocate(st: _State, adds: list[dict]):
+            # the winner only advanced identity high-water marks (a
+            # concurrent identity append): re-allocate our values above
+            # its HWM. Generated values are embedded in the staged
+            # files, so those rewrite; explicit values keep their files
+            # and just recompute the HWM advance.
+            nonlocal df
+            df, meta, gen = self._apply_identity_columns(st, raw_df)
+            if not gen:
+                return adds, meta
+            discard(self._abs_data_path(a["path"]) for a in adds)
+            return _write(st, df), meta
+
         has_identity = any(
             k.startswith("delta.identity.")
             for f in st.schema.fields
             for k in (f.metadata or {})
         )
-        self._write_guard(st, df, "WRITE")
-        orig_proto = dict(st.protocol or {})
-        orig_schema = st.metadata.get("schemaString")
-        orig_parts = list(st.metadata.get("partitionColumns") or [])
-        orig_conf = dict(st.metadata.get("configuration") or {})
-        if txn is not None:
-            app_id, tv = txn
-            if int(tv) <= int(st.txns.get(app_id, -1)):
-                return -1
-        adds = self._write_files(
-            df,
-            st.partition_columns,
-            st.column_mapping,
-            st.metadata.get("configuration"),
+        return self._blind_append(
+            st,
+            _write(st, df),
+            txn,
+            lambda st: self._write_guard(st, df, "WRITE"),
+            _reallocate if has_identity else None,
+            ident_meta,
         )
 
-        def _build_actions(at_version: int) -> list[dict]:
-            acts: list[dict] = [{"add": a} for a in adds]
-            dm = self._assign_row_ids(st, adds, at_version)
-            if dm is not None:
-                acts.append(dm)
-            if txn is not None:
-                acts.append(
-                    {
-                        "txn": {
-                            "appId": txn[0],
-                            "version": int(txn[1]),
-                            "lastUpdated": int(time.time() * 1000),
-                        }
-                    }
-                )
-            if ident_meta is not None:
-                acts.append({"metaData": ident_meta})
-            return acts
+    def _blind_append(
+        self,
+        st: _State,
+        adds: list[dict],
+        txn: tuple[str, int] | None,
+        revalidate: Callable[[_State], None],
+        reallocate: Callable | None = None,
+        meta: dict | None = None,
+    ) -> int:
+        """The one commit loop of both blind appends (``append`` and
+        ``append_arrow``): Delta's winningCommit-then-retry protocol for
+        AddFile-only transactions. ``adds`` were written against
+        ``st``; a lost O_EXCL race folds the winner and retries at the
+        next version, up to 20 attempts, under these conflict rules:
 
-        actions = _build_actions(st.version + 1)
-        for _attempt in range(20):
-            v = st.version + 1
-            try:
-                self._commit(v, actions, "WRITE")
-                self._maybe_auto_checkpoint(v, st)
-                return v
-            except ConcurrentCommitError:
-                st = self.state()  # conflict: fold the winner, retry
-                # Conflict resolution for blind appends: a winner that
-                # changed the protocol, schema, or partitioning makes
-                # our already-staged files invalid — fail like real
-                # Delta's Protocol/MetadataChangedException. A winner
-                # that only changed table configuration (new CHECK
-                # constraint, appendOnly flip) is survivable IF the
-                # staged rows still validate — re-run the full guard
-                # against the data, not a df=None protocol-only check.
-                if dict(st.protocol or {}) != orig_proto:
-                    raise ConcurrentCommitError(
-                        "concurrent protocol change; staged append "
-                        "cannot be validated against the new protocol"
-                    ) from None
-                meta = st.metadata
-                schema_changed = meta.get("schemaString") != orig_schema
-                if (
-                    schema_changed
-                    and has_identity
-                    and self._hwm_only_schema_change(
-                        orig_schema, meta["schemaString"]
-                    )
-                ):
-                    # the winner only advanced identity high-water
-                    # marks (a concurrent identity append): re-allocate
-                    # our values above the winner's HWM. Generated
-                    # values are embedded in the staged files, so those
-                    # rewrite; explicit values keep their files and
-                    # just recompute the HWM advance.
-                    df, ident_meta, ident_gen = (
-                        self._apply_identity_columns(st, raw_df)
-                    )
-                    if ident_gen:
-                        adds = self._write_files(
-                            df,
-                            st.partition_columns,
-                            st.column_mapping,
-                            st.metadata.get("configuration"),
+        - a winner that changed the protocol, the schema or the
+          partitioning makes the written files invalid: raise, like
+          real Delta's Protocol/MetadataChangedException. The one
+          exception is a schema change that only advanced identity
+          high-water marks, which ``reallocate(st, adds)`` survives by
+          re-allocating (it returns the adds, rewritten or not, and the
+          ``metaData`` action to commit);
+        - a winner that changed only the configuration (a new CHECK
+          constraint, an appendOnly flip) is survivable if the rows
+          still validate: ``revalidate(st)`` re-runs the full guard
+          against the data;
+        - every attempt re-checks the ``txn`` watermark (a hit
+          returns -1: the winner was our own replay) and re-stamps
+          row ids against the winner's high-water mark.
+
+        The attempt count lands in commitInfo as
+        ``ffspark.commit-attempts``. The written files are removed
+        whenever this returns or raises without its commit landing, and
+        never after it landed."""
+        proto = dict(st.protocol or {})
+        schema = st.metadata.get("schemaString")
+        parts = list(st.metadata.get("partitionColumns") or [])
+        conf = dict(st.metadata.get("configuration") or {})
+        landed = False
+        try:
+            for attempt in range(20):
+                if attempt:
+                    st = self.state()  # fold the winner
+                    now = st.metadata
+                    if dict(st.protocol or {}) != proto:
+                        raise ConcurrentCommitError(
+                            "concurrent protocol change; staged append "
+                            "cannot be validated against the new protocol"
                         )
-                    orig_schema = meta.get("schemaString")
-                    schema_changed = False
-                if (
-                    schema_changed
-                    or list(meta.get("partitionColumns") or [])
-                    != orig_parts
-                ):
-                    raise ConcurrentCommitError(
-                        "concurrent schema/partitioning change; staged "
-                        "files were written under the old metadata"
-                    ) from None
-                if dict(meta.get("configuration") or {}) != orig_conf:
-                    self._write_guard(st, df, "WRITE")  # re-validate rows
-                else:
-                    self._write_guard(st, None, "WRITE")
+                    if (
+                        reallocate is not None
+                        and now.get("schemaString") != schema
+                        and self._hwm_only_schema_change(
+                            schema, now["schemaString"]
+                        )
+                    ):
+                        adds, meta = reallocate(st, adds)
+                        schema = now["schemaString"]
+                    if (
+                        now.get("schemaString") != schema
+                        or list(now.get("partitionColumns") or []) != parts
+                    ):
+                        raise ConcurrentCommitError(
+                            "concurrent schema/partitioning change; "
+                            "staged files were written under the old "
+                            "metadata"
+                        )
+                    if dict(now.get("configuration") or {}) != conf:
+                        revalidate(st)
+                    else:
+                        self._write_guard(st, None, "WRITE")
                 if txn is not None and int(txn[1]) <= int(
                     st.txns.get(txn[0], -1)
                 ):
-                    return -1  # the winner was our own replay
-                # rebuild: restamps row ids against the winner's
-                # high-water mark and the new commit version, and
-                # carries any re-allocated identity metadata
-                actions = _build_actions(st.version + 1)
-        raise DeltaProtocolError(
-            "append lost the commit race 20 times; giving up"
-        )
+                    return -1
+                v = st.version + 1
+                actions: list[dict] = [{"add": a} for a in adds]
+                dm = self._assign_row_ids(st, adds, v)
+                if dm is not None:
+                    actions.append(dm)
+                if txn is not None:
+                    actions.append(
+                        {
+                            "txn": {
+                                "appId": txn[0],
+                                "version": int(txn[1]),
+                                "lastUpdated": int(time.time() * 1000),
+                            }
+                        }
+                    )
+                if meta is not None:
+                    actions.append({"metaData": meta})
+                actions.append(
+                    {"commitInfo": {"ffspark.commit-attempts": attempt + 1}}
+                )
+                try:
+                    self._commit(v, actions, "WRITE")
+                except ConcurrentCommitError:
+                    continue
+                landed = True
+                self._maybe_auto_checkpoint(v, st)
+                return v
+            raise DeltaProtocolError(
+                "append lost the commit race 20 times; giving up"
+            )
+        finally:
+            if not landed:
+                discard(self._abs_data_path(a["path"]) for a in adds)
 
     def merge(
         self,
@@ -3560,20 +3600,54 @@ class DeltaProtocolTable:
     def append_arrow(
         self, table, txn: tuple[str, int] | None = None
     ) -> int:
-        """Blind append of a pyarrow Table WITHOUT a Spark session —
-        the ingest primitive behind the Flight ``do_put`` surface: a
-        fleet of ingest pods can commit into the transaction log with
-        no JVM. Sessionless means no expression engine, so tables whose
-        writes require evaluation gate honestly: CHECK constraints /
-        invariants, column mapping, and Hive partitioning (routing rows
-        to partition dirs needs the engine) all raise — use
-        ``append`` through Spark for those. Same O_EXCL
-        commit + SetTransaction exactly-once semantics as append()."""
-        import pyarrow.parquet as pq
-
+        """Blind append of a pyarrow Table or RecordBatchReader WITHOUT
+        a Spark session — the ingest primitive behind the Flight
+        ``do_put`` surface: a fleet of ingest pods can commit into the
+        transaction log with no JVM. Batches stream into one part file
+        through ``staged_write.write_arrow`` (an upload never
+        materializes in pod memory), whose footer gives the add its
+        stats like a Spark-written add. Sessionless means no expression
+        engine, so tables whose writes require evaluation gate
+        honestly (:meth:`_arrow_gates`) — use ``append`` through Spark
+        for those. The commit is :meth:`_blind_append`, the same loop
+        and SetTransaction exactly-once semantics as append()."""
         st = self.state()
         self._write_guard(st, None, "WRITE")
-        conf = st.metadata.get("configuration") or {}
+        self._arrow_gates(st)
+        want = [f.name for f in st.schema.fields]
+        got = list(table.schema.names)  # Table and RecordBatchReader both
+        if set(got) != set(want):
+            raise DeltaProtocolError(
+                f"append_arrow schema mismatch: table has {got}, "
+                f"expected {want}"
+            )
+        if txn is not None and int(txn[1]) <= int(st.txns.get(txn[0], -1)):
+            return -1
+        rel = f"part-{uuid.uuid4().hex}-arrow.parquet"
+        rec = write_arrow(table, os.path.join(self.path, rel), want)
+        if rec is None:  # empty upload: nothing to commit
+            return -1
+        conf = st.metadata.get("configuration")
+        add = {
+            "path": rel,
+            "partitionValues": {},
+            "size": rec.size,
+            "modificationTime": int(time.time() * 1000),
+            "dataChange": True,
+            "stats": _delta_stats(rec, _stats_columns(conf, want)),
+        }
+        return self._blind_append(
+            st,
+            [add],
+            txn,
+            lambda st: (
+                self._write_guard(st, None, "WRITE"), self._arrow_gates(st)
+            ),
+        )
+
+    def _arrow_gates(self, st: _State) -> None:
+        """Refuse a sessionless write into a table whose writes need
+        the expression engine or row routing."""
         if st.column_mapping:
             raise UnsupportedTableFeatureError(
                 "append_arrow: column-mapped tables need the Spark "
@@ -3605,6 +3679,7 @@ class DeltaProtocolTable:
                 "append_arrow: partitioned tables need the Spark "
                 "write path (partition routing)"
             )
+        conf = st.metadata.get("configuration") or {}
         if any(k.startswith("delta.constraints.") for k in conf) or any(
             (f.metadata or {}).get("delta.invariants")
             for f in st.schema.fields
@@ -3613,98 +3688,6 @@ class DeltaProtocolTable:
                 "append_arrow: CHECK constraints/invariants need the "
                 "Spark write path (expression evaluation)"
             )
-        import pyarrow as pa
-
-        want = [f.name for f in st.schema.fields]
-        in_schema = table.schema  # Table and RecordBatchReader both
-        if list(in_schema.names) != want and set(in_schema.names) != set(
-            want
-        ):
-            raise DeltaProtocolError(
-                f"append_arrow schema mismatch: table has "
-                f"{list(in_schema.names)}, expected {want}"
-            )
-        if txn is not None and int(txn[1]) <= int(
-            st.txns.get(txn[0], -1)
-        ):
-            return -1
-        rel = f"part-{uuid.uuid4().hex}-arrow.parquet"
-        target = os.path.join(self.path, rel)
-        # STREAM batches to the part file — an ingest upload never
-        # materializes in pod memory (do_put hands a RecordBatchReader)
-        batches = (
-            table.to_batches()
-            if isinstance(table, pa.Table)
-            else table
-        )
-        writer = None
-        n_rows = 0
-        try:
-            for batch in batches:
-                if list(batch.schema.names) != want:
-                    batch = batch.select(want)
-                if writer is None:
-                    writer = pq.ParquetWriter(target, batch.schema)
-                writer.write_batch(batch)
-                n_rows += batch.num_rows
-            if writer is None:  # empty upload: nothing to commit
-                return -1
-        finally:
-            if writer is not None:
-                writer.close()
-        add = {
-            "path": rel,
-            "partitionValues": {},
-            "size": os.path.getsize(target),
-            "modificationTime": int(os.path.getmtime(target) * 1000),
-            "dataChange": True,
-            "stats": json.dumps({"numRecords": n_rows}),
-        }
-        actions: list[dict] = [{"add": add}]
-        dm = self._assign_row_ids(st, [add], st.version + 1)
-        if dm is not None:
-            actions.append(dm)
-        if txn is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": int(txn[1]),
-                        "lastUpdated": int(time.time() * 1000),
-                    }
-                }
-            )
-        orig_proto = dict(st.protocol or {})
-        orig_meta = dict(st.metadata)
-        for _attempt in range(20):
-            v = st.version + 1
-            try:
-                self._commit(v, actions, "WRITE")
-                self._maybe_auto_checkpoint(v, st)
-                return v
-            except ConcurrentCommitError:
-                st = self.state()
-                if (
-                    dict(st.protocol or {}) != orig_proto
-                    or dict(st.metadata) != orig_meta
-                ):
-                    raise ConcurrentCommitError(
-                        "concurrent protocol/metadata change during "
-                        "sessionless append; staged file cannot be "
-                        "re-validated without Spark"
-                    ) from None
-                if txn is not None and int(txn[1]) <= int(
-                    st.txns.get(txn[0], -1)
-                ):
-                    return -1
-                if dm is not None:
-                    actions.remove(dm)
-                dm = self._assign_row_ids(st, [add], st.version + 1)
-                if dm is not None:
-                    actions.append(dm)
-        raise DeltaProtocolError(
-            "append_arrow lost the commit race 20 times; giving up"
-        )
 
     def compact(
         self,

@@ -62,6 +62,7 @@ import os
 import struct
 import time
 import uuid
+from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,7 +74,9 @@ from pyspark.sql import types as T
 from featureform_spark.sources.avro_codec import read_container, write_container
 from featureform_spark.sources.staged_write import (
     FileRecord,
+    discard,
     fold_footer,
+    write_arrow,
     write_staged,
 )
 
@@ -615,30 +618,38 @@ def data_file_record(
     }
 
 
-def _delete_entries(
-    recs: list[FileRecord], content: int, snapshot_id: int, seq: int,
-    **extra: Any,
+def _delete_records(
+    recs: list[FileRecord], content: int, **extra: Any
 ) -> list[dict]:
-    """ADDED manifest entries for staged delete files (content 1 =
+    """Manifest data_file records for staged delete files (content 1 =
     position, 2 = equality), unpartitioned and without column stats."""
     return [
         {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": content,
-                "file_path": r.path,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": r.rows,
-                "file_size_in_bytes": r.size,
-                **extra,
-            },
+            "content": content,
+            "file_path": r.path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": r.rows,
+            "file_size_in_bytes": r.size,
+            **extra,
         }
         for r in recs
     ]
+
+
+def _added_summary(deletes: Sequence[dict]) -> dict[str, str]:
+    """Spec snapshot-summary counts of a commit's delete files."""
+    if not deletes:
+        return {}
+    out = {"added-delete-files": str(len(deletes))}
+    for content, kind in ((1, "position"), (2, "equality")):
+        recs = [d for d in deletes if int(d["content"]) == content]
+        if recs:
+            out[f"added-{kind}-delete-files"] = str(len(recs))
+            out[f"added-{kind}-deletes"] = str(
+                sum(int(d["record_count"]) for d in recs)
+            )
+    return out
 
 
 def _partition_tuple(
@@ -1969,146 +1980,70 @@ class IcebergProtocolTable:
     ) -> int:
         """Blind append of a pyarrow Table or RecordBatchReader WITHOUT
         a Spark session — the Flight ``do_put`` ingest primitive
-        (mirrors delta_protocol.append_arrow): batches stream through a
-        ParquetWriter into one data file, footer stats derive from the
-        written file, and the commit retries through the metadata
-        O_EXCL race. Partitioned tables gate (row routing needs the
-        engine).
+        (mirrors delta_protocol.append_arrow): batches stream into one
+        data file through ``staged_write.write_arrow`` and commit as a
+        blind write of :meth:`_commit`, which refolds and retries
+        through the metadata O_EXCL race. Partitioned tables gate (row
+        routing needs the engine).
 
         ``txn=(app_id, version)`` gives exactly-once replay semantics
         through the same snapshot-summary watermark
         (``ffspark.txn.<app>``) the upsert paths use — re-checked on
-        every commit-race refold, so a replayed Flight upload cannot
+        every commit attempt, so a replayed Flight upload cannot
         double-commit even against a concurrent replica."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         md = self.metadata()
         if txn is not None and int(txn[1]) <= self.txn_watermark(
             txn[0], md
         ):
             return -1
+        record = self._arrow_data_file(md, data, "append_arrow")
+        if record is None:
+            return -1  # empty upload
+        return self._commit(
+            "append_arrow", "append", md, [record],
+            staged=[record["file_path"]], txn=txn,
+        )
+
+    def _arrow_data_file(self, md: dict, data, op: str, check=None):
+        """Write an Arrow upload as one unpartitioned data file of the
+        table at ``md`` and return its data_file record (None for an
+        empty upload). Columns with a write-default may be omitted by
+        the uploader: the writer duty is to materialize them (spec
+        §Default values)."""
+        import pyarrow as pa
+
         if self.partition_spec(md):
             raise UnsupportedIcebergFeatureError(
-                "append_arrow: partitioned tables need the Spark "
-                "write path (partition routing)"
+                f"{op}: partitioned tables need the Spark write path "
+                "(partition routing)"
             )
-        ice_schema = self.schema(md)
-        want = [f["name"] for f in ice_schema["fields"]]
+        fields = self.schema(md)["fields"]
+        want = [f["name"] for f in fields]
         in_names = list(data.schema.names)
-        # columns with a write-default may be omitted by the uploader —
-        # the writer duty is to materialize them (spec §Default values)
         fill = {
-            f["name"]: f
-            for f in ice_schema["fields"]
+            f["name"]: pa.scalar(
+                default_value_from_json(f["type"], f["write-default"]),
+                _ice_primitive_to_arrow(f["type"]),
+            )
+            for f in fields
             if f["name"] not in in_names and "write-default" in f
         }
         if set(in_names) | set(fill) != set(want):
             raise IcebergProtocolError(
-                f"append_arrow schema mismatch: got {in_names}, "
-                f"expected {want}"
+                f"{op} schema mismatch: got {in_names}, expected {want}"
             )
-        os.makedirs(os.path.join(self.path, DATA_DIR), exist_ok=True)
-        target = os.path.join(
-            self.path, DATA_DIR, f"{uuid.uuid4().hex}-arrow.parquet"
+        rec = write_arrow(
+            data,
+            os.path.join(
+                self.path, DATA_DIR, f"{uuid.uuid4().hex}-arrow.parquet"
+            ),
+            want,
+            fill,
+            check,
         )
-        batches = (
-            data.to_batches() if isinstance(data, pa.Table) else data
-        )
-        writer = None
-        try:
-            for batch in batches:
-                for fname, f in fill.items():
-                    at = _ice_primitive_to_arrow(f["type"])
-                    pv = default_value_from_json(
-                        f["type"], f["write-default"]
-                    )
-                    batch = batch.append_column(
-                        fname,
-                        pa.array([pv] * batch.num_rows, type=at),
-                    )
-                if list(batch.schema.names) != want:
-                    batch = batch.select(want)
-                if writer is None:
-                    writer = pq.ParquetWriter(target, batch.schema)
-                writer.write_batch(batch)
-            if writer is None:
-                return -1  # empty upload
-        finally:
-            if writer is not None:
-                writer.close()
-        name_to_field = {f["name"]: f for f in ice_schema["fields"]}
-        record = data_file_record(fold_footer(target), name_to_field, {})
-        for _attempt in range(20):
-            # fold from the NEWEST metadata file explicitly — the
-            # version-hint is only a reader optimization and can lag
-            # behind a concurrent commit, which would silently base
-            # this append on a stale manifest list
-            files = self._metadata_files()
-            base_version, fname = files[-1]
-            md = self.metadata(
-                os.path.join(self.metadata_path, fname)
-            )
-            # the race winner may have been a replay of THIS txn
-            if txn is not None and int(txn[1]) <= self.txn_watermark(
-                txn[0], md
-            ):
-                try:
-                    os.unlink(target)
-                except OSError:
-                    pass
-                return -1
-            snap = self.current_snapshot(md)
-            seq = int(md.get("last-sequence-number", 0)) + 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-            entry = {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": record,
-            }
-            # lineage restamps per attempt: the refolded metadata
-            # carries the winner's advanced next-row-id
-            lineage = self._assign_first_row_ids(md, [entry])
-            manifest = self._write_manifest(
-                [entry],
-                self.schema(md),
-                self.partition_spec(md),
-                md.get("default-spec-id", 0),
-                snapshot_id,
-                seq,
-            )
-            if lineage is not None:
-                manifest["first_row_id"] = lineage[0]
-            prev = (
-                read_container(
-                    self._resolve_path(snap["manifest-list"])
-                )[1]
-                if snap
-                else []
-            )
-            try:
-                return self._advance(
-                    md,
-                    prev + [manifest],
-                    "append",
-                    1,
-                    record["record_count"],
-                    snapshot_id=snapshot_id,
-                    expect_version=base_version,
-                    lineage=lineage,
-                    extra_summary=(
-                        {f"ffspark.txn.{txn[0]}": str(int(txn[1]))}
-                        if txn is not None
-                        else None
-                    ),
-                )
-            except FileExistsError:
-                continue  # lost the metadata O_EXCL race: refold, retry
-        raise IcebergProtocolError(
-            "append_arrow lost the commit race 20 times; giving up"
-        )
+        if rec is None:
+            return None
+        return data_file_record(rec, {f["name"]: f for f in fields}, {})
 
     def add_files(self, source_dir: str) -> int:
         """Iceberg's ``add_files`` procedure: metadata-only import of
@@ -2170,45 +2105,8 @@ class IcebergProtocolTable:
             data_file_record(fold_footer(fpath), name_to_field, {})
             for fpath in files
         ]
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        entries = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": r,
-            }
-            for r in records
-        ]
-        lineage = self._assign_first_row_ids(md, entries)
-        manifest = self._write_manifest(
-            entries,
-            ice_schema,
-            [],
-            md.get("default-spec-id", 0),
-            snapshot_id,
-            seq,
-        )
-        if lineage is not None:
-            manifest["first_row_id"] = lineage[0]
-        prev = (
-            read_container(self._resolve_path(snap["manifest-list"]))[1]
-            if snap
-            else []
-        )
-        return self._advance_pinned(
-            "add_files",
-            md,
-            prev + [manifest],
-            "append",
-            len(records),
-            sum(r["record_count"] for r in records),
-            snapshot_id=snapshot_id,
-            lineage=lineage,
-            expect_version=pinned,
-        )
+        # the files stay the caller's: nothing is staged to remove
+        return self._commit("add_files", "append", md, records, pinned=pinned)
 
     def metadata_table(self, kind: str) -> DataFrame:
         """Inspection tables (Iceberg's ``SELECT * FROM tbl.<kind>``
@@ -4601,23 +4499,30 @@ class IcebergProtocolTable:
         except FileExistsError:
             os.unlink(tmp)
             raise
-        os.unlink(tmp)
-        # monotonic hint: a lagging concurrent committer must not point
-        # readers back to an older version (the hint is an optimization
-        # only — correctness comes from the O_EXCL metadata files)
-        hint_path = os.path.join(self.metadata_path, VERSION_HINT)
+        # the commit has landed: nothing below may raise, or a writer
+        # would take it for a failed commit and remove its files
         try:
-            with open(hint_path) as f:
-                cur = int(f.read().strip())
-        except (OSError, ValueError):
-            cur = -1
-        if version > cur:
-            tmp = os.path.join(
-                self.metadata_path, f".{VERSION_HINT}.{uuid.uuid4().hex}.tmp"
-            )
-            with open(tmp, "w") as f:
-                f.write(str(version))
-            os.replace(tmp, hint_path)
+            os.unlink(tmp)
+            # monotonic hint: a lagging concurrent committer must not
+            # point readers back to an older version (the hint is an
+            # optimization only — correctness comes from the O_EXCL
+            # metadata files)
+            hint_path = os.path.join(self.metadata_path, VERSION_HINT)
+            try:
+                with open(hint_path) as f:
+                    cur = int(f.read().strip())
+            except (OSError, ValueError):
+                cur = -1
+            if version > cur:
+                tmp = os.path.join(
+                    self.metadata_path,
+                    f".{VERSION_HINT}.{uuid.uuid4().hex}.tmp",
+                )
+                with open(tmp, "w") as f:
+                    f.write(str(version))
+                os.replace(tmp, hint_path)
+        except OSError:
+            pass
 
     def _name_mapping(self, ice_schema: dict) -> str:
         return json.dumps(
@@ -4849,8 +4754,173 @@ class IcebergProtocolTable:
         md["metadata-log"] = (md.get("metadata-log") or []) + [
             {"timestamp-ms": now, "metadata-file": old_file}
         ]
-        self._commit_metadata(md, version)
+        try:
+            self._commit_metadata(md, version)
+        except BaseException:
+            discard([ml_path])  # no snapshot references it
+            raise
         return snapshot_id
+
+    def _commit(
+        self,
+        op: str,
+        operation: str,
+        base: dict,
+        data: Sequence[dict] = (),
+        deletes: Sequence[dict] = (),
+        *,
+        pinned: int | None = None,
+        keep: list[dict] | None = None,
+        staged: Sequence[str] = (),
+        txn: tuple[str, int] | None = None,
+        summary: dict[str, str] | None = None,
+        branch: str = "main",
+        stage_only: bool = False,
+    ) -> int:
+        """The one snapshot commit. ``data`` and ``deletes`` are the
+        data_file records of files already written. Each attempt stamps
+        them at the next sequence number, assigns v3 row lineage, writes
+        one data manifest under the default spec and one delete manifest
+        under an unpartitioned spec (external readers scope a delete
+        file by its manifest's spec, and a global delete must reach
+        every partition), and advances ``branch``. ``keep`` lists the
+        manifests carried beside the new ones; None carries every
+        manifest of the branch head (main's head for a new branch).
+
+        The policy follows what the operation read. A fold-dependent
+        write passes ``pinned``, the version of ``base`` it read the
+        table's files at: it commits once, and a lost race raises
+        :class:`CommitConflictError`. A blind write (``pinned`` None)
+        read none of the table's files, so it refolds the newest
+        metadata and retries up to 20 times; every attempt first
+        re-checks the ``txn`` watermark (a hit returns -1), the mirror
+        guard, and that the schema and default spec are still the
+        ones of ``base`` that its files were written under (a change
+        raises). The attempt count lands in the summary as
+        ``ffspark.commit-attempts``.
+
+        ``staged`` files are removed whenever this returns or raises
+        without its snapshot landing, and never after it landed."""
+        new: list[dict] = []  # this attempt's manifests
+        landed = False
+        md, version = base, pinned
+        try:
+            for attempt in range(20):
+                if pinned is None:
+                    # the NEWEST metadata file, not the version hint:
+                    # the hint can lag a concurrent commit
+                    version, name = self._metadata_files()[-1]
+                    md = self.metadata(
+                        os.path.join(self.metadata_path, name)
+                    )
+                    if txn is not None and int(txn[1]) <= (
+                        self.txn_watermark(txn[0], md)
+                    ):
+                        return -1  # the race winner was this txn
+                    for key in ("current-schema-id", "default-spec-id"):
+                        if md.get(key, 0) != base.get(key, 0):
+                            raise IcebergProtocolError(
+                                f"{op} lost a commit race to a "
+                                f"concurrent {key[:-3]} change — its "
+                                "files were written under the old one; "
+                                f"retry the {op}"
+                            )
+                    head = self.current_snapshot(md)
+                    if head is not None:
+                        self._mirror_guard(md, head, op)
+                else:
+                    md = dict(base)  # the delete spec may register
+                seq = int(md.get("last-sequence-number", 0)) + 1
+                snapshot_id = int(uuid.uuid4().int % (1 << 62))
+                parent = self._branch_head(md, branch)
+                if parent is None and branch != "main":
+                    parent = self.current_snapshot(md)  # fork from main
+                manifests = keep
+                if manifests is None:
+                    manifests = (
+                        read_container(
+                            self._resolve_path(parent["manifest-list"])
+                        )[1]
+                        if parent is not None
+                        else []
+                    )
+                entries = [
+                    {
+                        "status": 1,
+                        "snapshot_id": snapshot_id,
+                        "sequence_number": seq,
+                        "file_sequence_number": seq,
+                        "data_file": r,
+                    }
+                    for r in (*data, *deletes)
+                ]
+                ice_schema = self.schema(md)
+                lineage = self._assign_first_row_ids(md, entries)
+                new = []
+                if data:
+                    new.append(
+                        self._write_manifest(
+                            entries[: len(data)],
+                            ice_schema,
+                            self.partition_spec(md),
+                            md.get("default-spec-id", 0),
+                            snapshot_id,
+                            seq,
+                        )
+                    )
+                    if lineage is not None:
+                        new[-1]["first_row_id"] = lineage[0]
+                if deletes:
+                    new.append(
+                        self._write_manifest(
+                            entries[len(data) :],
+                            ice_schema,
+                            [],
+                            self._ensure_unpartitioned_spec(md),
+                            snapshot_id,
+                            seq,
+                            content=1,
+                        )
+                    )
+                extra = _added_summary(deletes)
+                extra.update(summary or {})
+                if txn is not None:
+                    extra[f"ffspark.txn.{txn[0]}"] = str(int(txn[1]))
+                extra["ffspark.commit-attempts"] = str(attempt + 1)
+                args = (
+                    md,
+                    manifests + new,
+                    operation,
+                    len(data),
+                    sum(int(r["record_count"]) for r in data),
+                )
+                kw = dict(
+                    snapshot_id=snapshot_id,
+                    expect_version=version,
+                    branch=branch,
+                    stage_only=stage_only,
+                    parent_snapshot_id=(
+                        parent["snapshot-id"] if parent is not None else None
+                    ),
+                    extra_summary=extra,
+                    lineage=lineage,
+                )
+                try:
+                    if pinned is None:
+                        sid = self._advance(*args, **kw)
+                    else:
+                        sid = self._advance_pinned(op, *args, **kw)
+                except FileExistsError:
+                    discard([m["manifest_path"] for m in new])
+                    continue  # lost the race: refold on the winner
+                landed = True
+                return sid
+            raise IcebergProtocolError(
+                f"{op} lost the commit race 20 times; giving up"
+            )
+        finally:
+            if not landed:
+                discard([*(m["manifest_path"] for m in new), *staged])
 
     def evolve_schema(
         self,
@@ -5059,86 +5129,22 @@ class IcebergProtocolTable:
                         f"staged/published by snapshot {s['snapshot-id']}"
                     )
         ice_schema = self.schema(md)
-        spec_fields = self.partition_spec(md)
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        # data files are metadata-independent: write them ONCE, then
-        # commit through a CAS retry loop that refolds FRESH metadata.
-        # Without the pin, an append that read metadata at version N
-        # and committed at N+2 would silently clobber whatever landed
-        # at N+1 (a concurrent append's data, an analyze_table's
-        # statistics entry, a ref move) — the stale-fold hazard every
-        # other multi-writer path here already guards.
+        # data files are metadata-independent: written ONCE, then
+        # committed as a blind write that refolds fresh metadata per
+        # attempt (an append that read metadata at version N and
+        # committed at N+2 would otherwise clobber whatever landed at
+        # N+1: a concurrent append, a statistics entry, a ref move)
         df = self._fill_write_defaults(df, ice_schema)
-        files = self._write_data_files(df, ice_schema, spec_fields)
-        sid = None
-        for attempt in range(20):
-            # read the metadata AND pin its version in one step: an
-            # expect recomputed later than the fold would let a commit
-            # landing in between slip through the CAS (TOCTOU)
-            mfiles = self._metadata_files()
-            expect, mname = mfiles[-1]
-            md = self.metadata(
-                os.path.join(self.metadata_path, mname)
-            )
-            if attempt and self.schema(md) != ice_schema:
-                raise IcebergProtocolError(
-                    "append lost a commit race to a concurrent "
-                    "schema change — staged files were written "
-                    "under the old schema; retry the append"
-                )
-            seq = int(md.get("last-sequence-number", 0)) + 1
-            snap_prev = self._branch_head(md, branch)
-            if snap_prev is None and branch != "main":
-                # new branch forks from main's head
-                snap_prev = self.current_snapshot(md)
-            prev_manifests = []
-            if snap_prev is not None:
-                _, prev_manifests = read_container(
-                    self._resolve_path(snap_prev["manifest-list"])
-                )
-            entries = [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                    "data_file": r,
-                }
-                for r in files
-            ]
-            lineage = self._assign_first_row_ids(md, entries)
-            manifest = self._write_manifest(
-                entries, ice_schema, spec_fields,
-                md.get("default-spec-id", 0),
-                snapshot_id, seq,
-            )
-            if lineage is not None:
-                manifest["first_row_id"] = lineage[0]
-            try:
-                sid = self._advance(
-                    md, prev_manifests + [manifest], "append", len(files),
-                    sum(f["record_count"] for f in files),
-                    snapshot_id=snapshot_id,
-                    expect_version=expect,
-                    branch=branch,
-                    lineage=lineage,
-                    stage_only=wap_id is not None,
-                    parent_snapshot_id=(
-                        snap_prev["snapshot-id"]
-                        if snap_prev is not None
-                        else None
-                    ),
-                    extra_summary=(
-                        {"wap.id": wap_id} if wap_id is not None else None
-                    ),
-                )
-                break
-            except FileExistsError:
-                continue  # lost the CAS: refold on the winner's metadata
-        if sid is None:
-            raise IcebergProtocolError(
-                "append lost the metadata commit race 20 times"
-            )
+        files = self._write_data_files(
+            df, ice_schema, self.partition_spec(md)
+        )
+        sid = self._commit(
+            "append", "append", md, files,
+            staged=[r["file_path"] for r in files],
+            summary={"wap.id": wap_id} if wap_id is not None else None,
+            branch=branch,
+            stage_only=wap_id is not None,
+        )
         # commit.manifest-merge.enabled + min-count-to-merge: when a
         # long append chain has accumulated enough manifests, fold them
         # as a follow-on 'replace' commit (real Iceberg merges during
@@ -5155,7 +5161,11 @@ class IcebergProtocolTable:
                     )
                 except ValueError:
                     min_count = 100
-                if len(prev_manifests) + 1 >= min_count:
+                head = self.current_snapshot()
+                if (
+                    head is not None
+                    and len(self._manifest_files(head)) >= min_count
+                ):
                     # The merge is an optimization, not part of the
                     # append's atomicity: the append's snapshot has
                     # already committed above. A lost commit race here
@@ -5459,33 +5469,21 @@ class IcebergProtocolTable:
             )
         if int(md.get("format-version", 2)) >= 3:
             return self._delete_rows_v3(md, snap, matched, prev, pinned)
-        recs = write_staged(
-            matched.orderBy("file_path", "pos"),
-            self.path,
-            lambda _d, _n: os.path.join(
-                DATA_DIR, f"{uuid.uuid4().hex}-deletes.parquet"
+        recs = _delete_records(
+            write_staged(
+                matched.orderBy("file_path", "pos"),
+                self.path,
+                lambda _d, _n: os.path.join(
+                    DATA_DIR, f"{uuid.uuid4().hex}-deletes.parquet"
+                ),
             ),
+            1,
         )
-        ice_schema = self.schema(md)
-        spec_fields = self.partition_spec(md)
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        entries = _delete_entries(recs, 1, snapshot_id, seq)
-        if not entries:
+        if not recs:
             return -1
-        manifest = self._write_manifest(
-            entries, ice_schema, spec_fields, md.get("default-spec-id", 0),
-            snapshot_id, seq, content=1,
-        )
-        _, prev_manifests = read_container(
-            self._resolve_path(snap["manifest-list"])
-        )
-        n_del = sum(e["data_file"]["record_count"] for e in entries)
-        return self._advance_pinned(
-            "delete_rows",
-            md, prev_manifests + [manifest], "delete", len(entries), -n_del,
-            snapshot_id=snapshot_id,
-            expect_version=pinned,
+        return self._commit(
+            "delete_rows", "delete", md, deletes=recs, pinned=pinned,
+            staged=[r["file_path"] for r in recs],
         )
 
     def _validate_eq_fields(
@@ -5587,24 +5585,16 @@ class IcebergProtocolTable:
                 "through the owning Delta side instead"
             )
 
-    def _eq_delete_entries(
-        self,
-        keys: DataFrame,
-        equality_fields: list[str],
-        md: dict,
-        snapshot_id: int,
-        seq: int,
-        eq_ids: list[int] | None = None,
+    def _eq_delete_records(
+        self, keys: DataFrame, equality_fields: list[str], eq_ids: list[int]
     ) -> list[dict]:
         """Write DISTINCT key tuples as equality-delete parquet
-        (content=2) and return the manifest entries. The delete file
+        (content=2) and return their data_file records. The delete file
         carries ONLY the equality columns plus ``equality_ids`` (their
         field ids) in the manifest — the spec's content-2 shape any v2
         reader (including this repo's ``_read_with_deletes``) applies
         with null-safe matching to data files with strictly older
         sequence numbers."""
-        if eq_ids is None:
-            eq_ids = self._validate_eq_fields(md, equality_fields)
         # one delete file per commit (Flink's per-checkpoint shape):
         # the reader broadcasts delete sets, so fewer/larger beats many
         # tiny ones; distinct() both dedupes and bounds the file to the
@@ -5616,9 +5606,7 @@ class IcebergProtocolTable:
                 DATA_DIR, f"{uuid.uuid4().hex}-eq-deletes.parquet"
             ),
         )
-        return _delete_entries(
-            recs, 2, snapshot_id, seq, equality_ids=eq_ids
-        )
+        return _delete_records(recs, 2, equality_ids=eq_ids)
 
     def txn_watermark(self, app_id: str, md: dict | None = None) -> int:
         """Highest committed transaction version for ``app_id``, read
@@ -5664,9 +5652,8 @@ class IcebergProtocolTable:
         rides snapshot summaries (``ffspark.txn.<app>``) — Flink's
         max-committed-checkpoint-id mechanism, since Iceberg has no
         Delta-style SetTransaction action."""
-        md, pinned = self._pinned_metadata()
-        snap = self.current_snapshot(md)
-        if snap is None:
+        md = self.metadata()
+        if self.current_snapshot(md) is None:
             raise IcebergProtocolError(
                 "upsert needs an existing table; use create/append"
             )
@@ -5675,7 +5662,6 @@ class IcebergProtocolTable:
         ):
             return -1
         eq_ids = self._validate_eq_fields(md, key_fields)
-        self._mirror_guard(md, snap, "upsert")
         # three actions read this batch (dup check, data-file write,
         # key delete-file write); foreachBatch batches are uncached, so
         # pin the lineage once — an expensive upstream transform must
@@ -5700,79 +5686,37 @@ class IcebergProtocolTable:
                 "would share one sequence number)"
             )
         ice_schema = self.schema(md)
-        spec_fields = self.partition_spec(md)
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
         df = self._fill_write_defaults(df, ice_schema)
         # the data-file write and the equality-delete-file write both
         # read the checkpointed batch and are independent of each
         # other's output — overlap them (guide §2.6) instead of
         # serializing two sub-second jobs; both must succeed before
-        # anything commits, exactly as before
-        from concurrent.futures import ThreadPoolExecutor
+        # anything commits, and a failed one takes the other's files
+        from concurrent.futures import ThreadPoolExecutor, wait
 
         with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_data = _pool.submit(
-                self._write_data_files, df, ice_schema, spec_fields
-            )
-            _f_del = _pool.submit(
-                self._eq_delete_entries,
-                df, key_fields, md, snapshot_id, seq, eq_ids,
-            )
-            files = _f_data.result()
-            del_entries = _f_del.result()
-        data_manifest_entries = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": r,
-            }
-            for r in files
-        ]
-        lineage = self._assign_first_row_ids(md, data_manifest_entries)
-        data_manifest = self._write_manifest(
-            data_manifest_entries, ice_schema, spec_fields,
-            md.get("default-spec-id", 0), snapshot_id, seq,
-        )
-        if lineage is not None:
-            data_manifest["first_row_id"] = lineage[0]
-        manifests = [data_manifest]
-        if del_entries:
-            # global equality deletes ride an UNPARTITIONED spec so
-            # spec-conforming external readers apply them to every
-            # partition (registered in this commit's own metadata)
-            del_spec_id = self._ensure_unpartitioned_spec(md)
-            manifests.append(
-                self._write_manifest(
-                    del_entries, ice_schema, [],
-                    del_spec_id, snapshot_id, seq,
-                    content=1,
-                )
-            )
-        _, prev_manifests = read_container(
-            self._resolve_path(snap["manifest-list"])
-        )
-        summary = {
-            "added-delete-files": str(len(del_entries)),
-            "added-equality-delete-files": str(len(del_entries)),
-            "added-equality-deletes": str(
-                sum(
-                    e["data_file"]["record_count"]
-                    for e in del_entries
-                )
-            ),
-        }
-        if txn is not None:
-            summary[f"ffspark.txn.{txn[0]}"] = str(int(txn[1]))
-        return self._advance_pinned(
-            "upsert",
-            md, prev_manifests + manifests, "overwrite", len(files),
-            sum(f["record_count"] for f in files),
-            snapshot_id=snapshot_id, lineage=lineage,
-            extra_summary=summary,
-            expect_version=pinned,
+            futures = [
+                _pool.submit(
+                    self._write_data_files,
+                    df, ice_schema, self.partition_spec(md),
+                ),
+                _pool.submit(
+                    self._eq_delete_records, df, key_fields, eq_ids
+                ),
+            ]
+            wait(futures)
+        if any(f.exception() for f in futures):
+            discard([
+                r["file_path"]
+                for f in futures
+                if not f.exception()
+                for r in f.result()
+            ])
+            next(f for f in futures if f.exception()).result()
+        files, deletes = (f.result() for f in futures)
+        return self._commit(
+            "upsert", "overwrite", md, files, deletes,
+            staged=[r["file_path"] for r in files + deletes], txn=txn,
         )
 
     def upsert_arrow(
@@ -5783,229 +5727,73 @@ class IcebergProtocolTable:
     ) -> int:
         """Sessionless streaming UPSERT — :meth:`upsert`'s twin for
         JVM-free ingest pods (the Flight ``do_put`` shape, mirroring
-        ``append_arrow``): batches stream through one ParquetWriter
-        while the key tuples accumulate for the duplicate check and
-        the equality-delete file; data file and key delete commit at
-        ONE sequence number, so the delete applies only to strictly
-        older files and the batch survives its own delete. Pod memory
-        holds the key-tuple set — the same order of bytes as the
-        delete file that must be written anyway, NOT the data batch.
+        ``append_arrow``): batches stream into one data file through
+        ``staged_write.write_arrow`` while the key tuples accumulate
+        for the duplicate check and the equality-delete file; data file
+        and key delete commit at ONE sequence number, so the delete
+        applies only to strictly older files and the batch survives its
+        own delete. Pod memory holds the key-tuple set — the same order
+        of bytes as the delete file that must be written anyway, NOT
+        the data batch.
 
-        Same exactly-once ``txn`` watermark as :meth:`upsert`; the
-        watermark re-checks on every commit-race refold, so two pods
-        replaying one batch id cannot both land it."""
+        Same exactly-once ``txn`` watermark as :meth:`upsert`; it is a
+        blind write of :meth:`_commit`, which re-checks the watermark
+        on every attempt, so two pods replaying one batch id cannot
+        both land it."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         md = self.metadata()
-        if self.partition_spec(md):
-            raise UnsupportedIcebergFeatureError(
-                "upsert_arrow: partitioned tables need the Spark "
-                "write path (partition routing)"
-            )
-        snap = self.current_snapshot(md)
-        if snap is None:
+        if self.current_snapshot(md) is None:
             raise IcebergProtocolError(
                 "upsert needs an existing table; use create/append"
             )
-        self._mirror_guard(md, snap, "upsert_arrow")
         eq_ids = self._validate_eq_fields(md, key_fields)
         if txn is not None and int(txn[1]) <= self.txn_watermark(
             txn[0], md
         ):
             return -1
-        ice_schema = self.schema(md)
-        want = [f["name"] for f in ice_schema["fields"]]
-        name_to_field = {f["name"]: f for f in ice_schema["fields"]}
-        os.makedirs(os.path.join(self.path, DATA_DIR), exist_ok=True)
-        target = os.path.join(
-            self.path, DATA_DIR, f"{uuid.uuid4().hex}-arrow.parquet"
-        )
-        batches = (
-            data.to_batches() if isinstance(data, pa.Table) else data
-        )
-        writer = None
         seen: set[tuple] = set()
-        key_schema = None
-        fill: dict | None = None
-        try:
-            for batch in batches:
-                if fill is None:
-                    # same writer duty as append_arrow (spec §Default
-                    # values): columns with a write-default may be
-                    # omitted by the uploader
-                    in_names = set(batch.schema.names)
-                    fill = {
-                        f["name"]: f
-                        for f in ice_schema["fields"]
-                        if f["name"] not in in_names
-                        and "write-default" in f
-                    }
-                if set(batch.schema.names) | set(fill) != set(want):
+        key_types: list = []
+
+        def _keys(batch) -> None:
+            kb = batch.select(key_fields)
+            key_types[:] = kb.schema.types
+            for tup in zip(*(c.to_pylist() for c in kb.columns)):
+                if tup in seen:
                     raise IcebergProtocolError(
-                        f"upsert_arrow schema mismatch: got "
-                        f"{list(batch.schema.names)}, expected {want}"
+                        f"upsert batch has duplicate key tuple {tup!r} "
+                        f"on {key_fields}; dedupe the batch first (both "
+                        "versions would share one sequence number)"
                     )
-                for fname_, f in fill.items():
-                    at = _ice_primitive_to_arrow(f["type"])
-                    pv = default_value_from_json(
-                        f["type"], f["write-default"]
-                    )
-                    batch = batch.append_column(
-                        fname_,
-                        pa.array([pv] * batch.num_rows, type=at),
-                    )
-                if list(batch.schema.names) != want:
-                    batch = batch.select(want)
-                kb = batch.select(key_fields)
-                key_schema = kb.schema
-                for tup in zip(
-                    *[kb.column(i).to_pylist() for i in range(kb.num_columns)]
-                ):
-                    if tup in seen:
-                        raise IcebergProtocolError(
-                            f"upsert batch has duplicate key tuple "
-                            f"{tup!r} on {key_fields}; dedupe the "
-                            "batch first (both versions would share "
-                            "one sequence number)"
-                        )
-                    seen.add(tup)
-                if writer is None:
-                    writer = pq.ParquetWriter(target, batch.schema)
-                writer.write_batch(batch)
-        except Exception:
-            if writer is not None:
-                writer.close()
-                writer = None
-            try:
-                os.unlink(target)
-            except OSError:
-                pass
-            raise
-        finally:
-            if writer is not None:
-                writer.close()
-        if not seen:
-            try:
-                os.unlink(target)
-            except OSError:
-                pass
+                seen.add(tup)
+
+        record = self._arrow_data_file(md, data, "upsert_arrow", _keys)
+        if record is None or not seen:
+            discard([record["file_path"]] if record else [])
             return -1  # empty upload
-
-        def _cleanup_staged() -> None:
-            # nothing committed references these yet — a failure after
-            # this point must not leave orphan parquet in data/
-            for p in (target, del_target):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-
         # distinct key tuples -> the equality-delete parquet
-        del_target = os.path.join(
-            self.path, DATA_DIR, f"{uuid.uuid4().hex}-eq-deletes.parquet"
-        )
         ordered = sorted(
             seen, key=lambda t: tuple((v is None, v) for v in t)
         )
         try:
-            del_table = pa.table(
-                {
-                    key_fields[i]: pa.array(
-                        [t[i] for t in ordered], type=key_schema.types[i]
-                    )
-                    for i in range(len(key_fields))
-                }
+            rec = write_arrow(
+                pa.table({
+                    name: pa.array([t[i] for t in ordered], type=key_types[i])
+                    for i, name in enumerate(key_fields)
+                }),
+                os.path.join(
+                    self.path,
+                    DATA_DIR,
+                    f"{uuid.uuid4().hex}-eq-deletes.parquet",
+                ),
             )
-            pq.write_table(del_table, del_target)
-            data_record = data_file_record(
-                fold_footer(target), name_to_field, {}
-            )
-        except Exception:
-            _cleanup_staged()
+        except BaseException:
+            discard([record["file_path"]])
             raise
-        del_record = {
-            "content": 2,
-            "file_path": del_target,
-            "file_format": "PARQUET",
-            "partition": {},
-            "record_count": len(ordered),
-            "file_size_in_bytes": os.path.getsize(del_target),
-            "equality_ids": eq_ids,
-        }
-        for _attempt in range(20):
-            files = self._metadata_files()
-            base_version, fname = files[-1]
-            md = self.metadata(
-                os.path.join(self.metadata_path, fname)
-            )
-            # the race winner may have been a replay of THIS txn
-            if txn is not None and int(txn[1]) <= self.txn_watermark(
-                txn[0], md
-            ):
-                _cleanup_staged()
-                return -1
-            snap = self.current_snapshot(md)
-            seq = int(md.get("last-sequence-number", 0)) + 1
-            snapshot_id = int(uuid.uuid4().int % (1 << 62))
-            data_entry = {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": data_record,
-            }
-            del_entry = {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": del_record,
-            }
-            lineage = self._assign_first_row_ids(md, [data_entry])
-            data_manifest = self._write_manifest(
-                [data_entry], self.schema(md), self.partition_spec(md),
-                md.get("default-spec-id", 0), snapshot_id, seq,
-            )
-            if lineage is not None:
-                data_manifest["first_row_id"] = lineage[0]
-            del_spec_id = self._ensure_unpartitioned_spec(md)
-            del_manifest = self._write_manifest(
-                [del_entry], self.schema(md), [],
-                del_spec_id, snapshot_id, seq,
-                content=1,
-            )
-            prev = (
-                read_container(
-                    self._resolve_path(snap["manifest-list"])
-                )[1]
-                if snap
-                else []
-            )
-            summary = {
-                "added-delete-files": "1",
-                "added-equality-delete-files": "1",
-                "added-equality-deletes": str(len(ordered)),
-            }
-            if txn is not None:
-                summary[f"ffspark.txn.{txn[0]}"] = str(int(txn[1]))
-            try:
-                return self._advance(
-                    md,
-                    prev + [data_manifest, del_manifest],
-                    "overwrite",
-                    1,
-                    data_record["record_count"],
-                    snapshot_id=snapshot_id,
-                    expect_version=base_version,
-                    lineage=lineage,
-                    extra_summary=summary,
-                )
-            except FileExistsError:
-                continue  # lost the metadata O_EXCL race: refold, retry
-        _cleanup_staged()
-        raise IcebergProtocolError(
-            "upsert_arrow lost the commit race 20 times; giving up"
+        deletes = _delete_records([rec], 2, equality_ids=eq_ids)
+        return self._commit(
+            "upsert_arrow", "overwrite", md, [record], deletes,
+            staged=[record["file_path"], rec.path], txn=txn,
         )
 
     def _delete_rows_v3(
@@ -6028,12 +5816,6 @@ class IcebergProtocolTable:
         delta_protocol.delete_where); only (file, blob, cardinality)
         rows reach the driver."""
         from featureform_spark.sources.dv_bitmap import append_dv_to_file
-
-        ice_schema = self.schema(md)
-        spec_fields = self.partition_spec(md)
-        spec_id = md.get("default-spec-id", 0)
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
 
         touched = matched.select("file_path").distinct()
         fresh = matched.count()
@@ -6074,44 +5856,37 @@ class IcebergProtocolTable:
         puffin = os.path.join(
             self.path, DATA_DIR, f"{uuid.uuid4().hex}-deletes.puffin"
         )
-        entries = []
+        deletes = []
         with open(puffin, "wb") as fh:
             fh.write(b"PFA1\x00\x00\x00\x00")
             for r in encoded:
                 offset, size = append_dv_to_file(fh, bytes(r["blob"]))
-                entries.append(
+                deletes.append(
                     {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": puffin,
-                            "file_format": "PUFFIN",
-                            "partition": {},
-                            "record_count": int(r["card"]),
-                            "file_size_in_bytes": 0,  # patched below
-                            "referenced_data_file": r["file_path"],
-                            "content_offset": offset,
-                            "content_size_in_bytes": size,
-                        },
+                        "content": 1,
+                        "file_path": puffin,
+                        "file_format": "PUFFIN",
+                        "partition": {},
+                        "record_count": int(r["card"]),
+                        "file_size_in_bytes": 0,  # patched below
+                        "referenced_data_file": r["file_path"],
+                        "content_offset": offset,
+                        "content_size_in_bytes": size,
                     }
                 )
         fsize = os.path.getsize(puffin)
-        for e in entries:
-            e["data_file"]["file_size_in_bytes"] = fsize
+        for d in deletes:
+            d["file_size_in_bytes"] = fsize
         touched_set = {r["file_path"] for r in encoded}
-        _, prev_manifests = read_container(
-            self._resolve_path(snap["manifest-list"])
-        )
+        ice_schema = self.schema(md)
+        spec_by_id = self._spec_fields_by_id(md)
         carried = []
-        for m in prev_manifests:
+        staged = [puffin]
+        for m in self._manifest_files(snap):
             if int(m.get("content", 0)) != 1:
                 carried.append(m)
                 continue
-            man_path = self._resolve_path(m["manifest_path"])
-            _, recs = read_container(man_path)
+            _, recs = read_container(self._resolve_path(m["manifest_path"]))
             keep = [
                 e
                 for e in recs
@@ -6126,31 +5901,23 @@ class IcebergProtocolTable:
             if len(keep) == len(recs):
                 carried.append(m)
             elif keep:
+                spec_id = int(m.get("partition_spec_id") or 0)
                 carried.append(
                     self._write_manifest(
                         keep,
                         ice_schema,
-                        spec_fields,
+                        spec_by_id.get(spec_id, []),
                         spec_id,
                         m["added_snapshot_id"],
                         m["sequence_number"],
                         content=1,
                     )
                 )
+                staged.append(carried[-1]["manifest_path"])
             # else: every entry superseded — drop the manifest
-        delete_manifest = self._write_manifest(
-            entries, ice_schema, spec_fields, spec_id, snapshot_id, seq,
-            content=1,
-        )
-        return self._advance_pinned(
-            "delete_rows",
-            md,
-            carried + [delete_manifest],
-            "delete",
-            len(entries),
-            -fresh,
-            snapshot_id=snapshot_id,
-            expect_version=pinned,
+        return self._commit(
+            "delete_rows", "delete", md, deletes=deletes, pinned=pinned,
+            keep=carried, staged=staged,
         )
 
     def upgrade_format_version(self, version: int) -> None:
@@ -6193,41 +5960,18 @@ class IcebergProtocolTable:
         exactly as streaming Iceberg deployments do. Float/double key
         columns are refused (spec: identifier fields must not be
         float/double — NaN breaks equality)."""
-        md, pinned = self._pinned_metadata()
+        md = self.metadata()
         # validate BEFORE the empty-table early return: a typo'd key
         # column must raise even when there is nothing to delete yet
         eq_ids = self._validate_eq_fields(md, key_cols)
-        snap = self.current_snapshot(md)
-        if snap is None:
+        if self.current_snapshot(md) is None:
             return -1
-        self._mirror_guard(md, snap, "delete_by_keys")
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        entries = self._eq_delete_entries(
-            keys_df, key_cols, md, snapshot_id, seq, eq_ids=eq_ids
-        )
-        if not entries:
+        deletes = self._eq_delete_records(keys_df, key_cols, eq_ids)
+        if not deletes:
             return -1
-        del_spec_id = self._ensure_unpartitioned_spec(md)
-        manifest = self._write_manifest(
-            entries, self.schema(md), [],
-            del_spec_id, snapshot_id, seq, content=1,
-        )
-        _, prev_manifests = read_container(
-            self._resolve_path(snap["manifest-list"])
-        )
-        return self._advance_pinned(
-            "delete_by_keys",
-            md, prev_manifests + [manifest], "delete", 0, 0,
-            snapshot_id=snapshot_id,
-            expect_version=pinned,
-            extra_summary={
-                "added-delete-files": str(len(entries)),
-                "added-equality-delete-files": str(len(entries)),
-                "added-equality-deletes": str(
-                    sum(e["data_file"]["record_count"] for e in entries)
-                ),
-            },
+        return self._commit(
+            "delete_by_keys", "delete", md, deletes=deletes,
+            staged=[r["file_path"] for r in deletes],
         )
 
     def rewrite_data_files(
@@ -6332,35 +6076,13 @@ class IcebergProtocolTable:
             current = zorder_cluster(current, zorder_by, n_files).select(
                 *cols
             )
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
         files = self._write_data_files(current, ice_schema, spec_fields)
         if sort_order_id is not None:
             for r in files:
                 r["sort_order_id"] = sort_order_id
-        entries = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": r,
-            }
-            for r in files
-        ]
-        lineage = self._assign_first_row_ids(md, entries)
-        manifest = self._write_manifest(
-            entries, ice_schema, spec_fields, md.get("default-spec-id", 0),
-            snapshot_id, seq,
-        )
-        if lineage is not None:
-            manifest["first_row_id"] = lineage[0]
-        return self._advance_pinned(
-            "rewrite_data_files",
-            md, [manifest], "replace", len(files),
-            sum(f["record_count"] for f in files), snapshot_id=snapshot_id,
-            lineage=lineage,
-            expect_version=pinned,
+        return self._commit(
+            "rewrite_data_files", "replace", md, files, pinned=pinned,
+            keep=[], staged=[r["file_path"] for r in files],
         )
 
     def overwrite(self, df: DataFrame) -> int:
@@ -6368,34 +6090,14 @@ class IcebergProtocolTable:
         carries only the new manifest (old files age out of scope)."""
         md, pinned = self._pinned_metadata()
         ice_schema = self.schema(md)
-        spec_fields = self.partition_spec(md)
-        seq = int(md.get("last-sequence-number", 0)) + 1
-        snapshot_id = int(uuid.uuid4().int % (1 << 62))
-        df = self._fill_write_defaults(df, ice_schema)
-        files = self._write_data_files(df, ice_schema, spec_fields)
-        entries = [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": r,
-            }
-            for r in files
-        ]
-        lineage = self._assign_first_row_ids(md, entries)
-        manifest = self._write_manifest(
-            entries, ice_schema, spec_fields, md.get("default-spec-id", 0),
-            snapshot_id, seq,
+        files = self._write_data_files(
+            self._fill_write_defaults(df, ice_schema),
+            ice_schema,
+            self.partition_spec(md),
         )
-        if lineage is not None:
-            manifest["first_row_id"] = lineage[0]
-        return self._advance_pinned(
-            "overwrite",
-            md, [manifest], "overwrite", len(files),
-            sum(f["record_count"] for f in files), snapshot_id=snapshot_id,
-            lineage=lineage,
-            expect_version=pinned,
+        return self._commit(
+            "overwrite", "overwrite", md, files, pinned=pinned, keep=[],
+            staged=[r["file_path"] for r in files],
         )
 
 

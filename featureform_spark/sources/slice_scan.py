@@ -99,6 +99,9 @@ _EXACT = {
     "long", "bigint", "int", "integer", "short", "smallint", "byte",
     "tinyint", "double", "float", "date",
 }
+# a timestamp anywhere in a type, as a type (a struct field NAMED
+# timestamp is followed by ':'): files disagree on the zone flag
+_TIMESTAMP = re.compile(r"(?:^|[<:,])timestamp(?:_ntz)?(?:$|[>,])")
 
 
 def _split_top(inner: str) -> list:
@@ -116,13 +119,14 @@ def _split_top(inner: str) -> list:
 def arrow_type(simple: str):
     """The arrow type of a Spark simpleString, nested types included,
     named like the parquet Spark writes so a file's column casts to it.
-    Decimals stay exact; both timestamp kinds read as naive
-    microseconds; anything unrecognised reads as a string."""
+    Decimals stay exact; ``timestamp`` is microseconds in UTC and
+    ``timestamp_ntz`` naive microseconds; anything unrecognised reads
+    as a string."""
     m = re.match(r"decimal\((\d+),(\d+)\)$", simple)
     if m:
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
     if simple in ("timestamp", "timestamp_ntz"):
-        return pa.timestamp("us")
+        return pa.timestamp("us", tz="UTC" if simple == "timestamp" else None)
     if simple.startswith("array<"):
         return pa.list_(pa.field("element", arrow_type(simple[6:-1])))
     if simple.startswith("map<"):
@@ -167,9 +171,10 @@ def output_schema(
     order: list, types: dict, constants, file_schema, row_ids: bool
 ):
     """The scan's arrow schema in logical ``order``: constants, columns
-    absent from ``file_schema`` and exact numeric types take their
-    type in ``types``; the rest keep their type in ``file_schema``.
-    Plus the two row-id columns."""
+    absent from ``file_schema``, exact numeric types and every type
+    holding a timestamp take their type in ``types`` (so the schema
+    does not depend on which file sorts first); the rest keep their
+    type in ``file_schema``. Plus the two row-id columns."""
     def _field(n):
         simple = types.get(n)
         if (
@@ -178,6 +183,7 @@ def output_schema(
             or n not in file_schema.names
             or simple in _EXACT
             or (simple or "").startswith("decimal")
+            or _TIMESTAMP.search(simple or "")
         ):
             if simple is None:
                 raise ValueError(f"slice column {n!r} has no type")

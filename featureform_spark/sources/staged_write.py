@@ -1,10 +1,10 @@
-"""How a DataFrame becomes immutable parquet files in a table directory.
+"""How written rows become immutable parquet files in a table directory.
 
-Both table formats here (Delta, Iceberg) commit data the same way:
-Spark writes a staging directory, the driver reads each
-file's footer for row counts and column statistics, and the files move
-to their final names before the format's commit makes them visible.
-This module owns that lifecycle once:
+Both table formats here (Delta, Iceberg) commit data the same way: the
+rows go to a staging name, the driver folds each file's footer into row
+counts and column statistics, and the files move to their final names
+before the format's commit makes them visible. This module owns that
+lifecycle once, for both writers:
 
 - :func:`micros_timestamps` pins ``spark.sql.parquet.outputTimestampType``
   to ``TIMESTAMP_MICROS`` for the duration of a write. Spark's default
@@ -14,12 +14,23 @@ This module owns that lifecycle once:
   Spark, so concurrent writers share one reference-counted pin per
   session: the first in sets it, the last out restores the prior value
   (or unsets it).
-- :func:`write_staged` writes ``.staging/<uuid>``, folds every
-  non-empty file's footer, moves the files to caller-chosen names and
-  removes the staging directory whatever happens.
+- :func:`write_staged` is the Spark writer: it writes a DataFrame to
+  ``.staging/<uuid>``, folds every non-empty file's footer, moves the
+  files to caller-chosen names and removes the staging directory
+  whatever happens.
+- :func:`write_arrow` is the sessionless writer (Flight ``do_put``,
+  ``append_arrow``, ``upsert_arrow``): it streams Arrow batches to a
+  hidden name beside the final one, adding write-default columns and
+  putting columns in order, and renames the file into place only after
+  the writer closed cleanly, so an aborted upload leaves no file. Its
+  record comes from the writer's own footer, with no read-back.
 - :func:`fold_footer` turns one footer into a format-neutral
   :class:`FileRecord`; each format encodes that record into its own
   statistics (Delta stats JSON, Iceberg field-id bounds).
+
+A staged file is referenced by no snapshot until its commit lands, so
+each format's commit removes the files it staged with :func:`discard`
+when it gives up.
 """
 
 from __future__ import annotations
@@ -29,7 +40,7 @@ import shutil
 import threading
 import urllib.parse
 import uuid
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 from typing import Any
@@ -121,7 +132,12 @@ def fold_footer(path: str) -> FileRecord:
     it."""
     import pyarrow.parquet as pq
 
-    md = pq.read_metadata(path)
+    return _fold(pq.read_metadata(path), path)
+
+
+def _fold(md, path: str) -> FileRecord:
+    """The :class:`FileRecord` of the file at ``path`` whose footer is
+    ``md`` (a ``pyarrow.parquet.FileMetaData``)."""
     values: dict[str, int] = {}
     nulls: dict[str, int] = {}
     lows: dict[str, Any] = {}
@@ -256,3 +272,66 @@ def write_staged(
         return out
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def write_arrow(
+    data,
+    path: str,
+    columns: Sequence[str] | None = None,
+    defaults: dict[str, Any] | None = None,
+    check: Callable[[Any], None] | None = None,
+) -> FileRecord | None:
+    """Stream ``data`` (a pyarrow Table, or any iterable of record
+    batches such as a RecordBatchReader) into one parquet file at
+    ``path`` and return its record; None when no batch arrived, and
+    then no file is left.
+
+    Each batch gains the ``defaults`` columns (name -> pyarrow scalar)
+    it lacks, is put in ``columns`` order (None keeps it as it comes)
+    and is shown to ``check``, which may raise. Batches stream to a
+    hidden name beside ``path`` that is renamed to ``path`` only once
+    the writer has closed, so a raising reader or check leaves no file
+    at all, never a readable partial one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    folder, base = os.path.split(path)
+    os.makedirs(folder, exist_ok=True)
+    staging = os.path.join(folder, f".{base}.{uuid.uuid4().hex}")
+    batches = data.to_batches() if isinstance(data, pa.Table) else data
+    writer = None
+    try:
+        for batch in batches:
+            for name, value in (defaults or {}).items():
+                if name not in batch.schema.names:
+                    batch = batch.append_column(
+                        name, pa.repeat(value, batch.num_rows)
+                    )
+            if columns is not None and batch.schema.names != list(columns):
+                batch = batch.select(columns)
+            if check is not None:
+                check(batch)
+            if writer is None:
+                writer = pq.ParquetWriter(staging, batch.schema)
+            writer.write_batch(batch)
+        if writer is None:
+            return None
+        writer.close()
+        os.replace(staging, path)
+    except BaseException:
+        if writer is not None:
+            writer.close()
+        discard([staging])
+        raise
+    # the writer keeps the footer it wrote: fold that, no re-read
+    return _fold(writer.writer.metadata, path)
+
+
+def discard(paths) -> None:
+    """Remove written files that no commit references (a commit that
+    gave up, or a superseded write); already gone is fine."""
+    for p in paths:
+        try:
+            os.unlink(p)
+        except OSError:
+            pass

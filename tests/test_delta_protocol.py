@@ -1160,3 +1160,98 @@ def test_fsck_repair_drops_missing_files(spark, tmp_path):
     # dropping the whole entry is conservative: deleted rows must NOT
     # resurrect
     assert t2.snapshot().filter(F.col("id") < 5).count() == 0
+
+
+# ------------------------------------------------ one blind-append loop
+
+
+def _stray_parquet(t):
+    """Parquet files under the table root that the current snapshot
+    does not reference (hidden staging names included)."""
+    live = {t._abs_data_path(p) for p in t.state().adds}
+    return {
+        os.path.join(d, fn)
+        for d, _dirs, files in os.walk(t.path)
+        if "_delta_log" not in d
+        for fn in files
+        if ".parquet" in fn and os.path.join(d, fn) not in live
+    }
+
+
+def test_snapshot_pruned_skips_flight_appended_files(spark, tmp_path):
+    """Sessionless adds carry min/max stats like Spark-written ones, so
+    range pruning skips Flight-appended files whose keys are disjoint."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "prune")
+    t = DeltaProtocolTable(spark, path)
+    t.create(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(6)], "entity long, value double"
+        ).coalesce(1)
+    )
+    for n in range(1, 5):
+        DeltaProtocolTable(None, path).append_arrow(
+            pa.table({
+                "entity": pa.array(range(100 * n, 100 * n + 5), pa.int64()),
+                "value": pa.array([1.0] * 5),
+            })
+        )
+    assert t.snapshot_pruned("entity", 0, 5).count() == 6
+    assert t._last_prune == {"files_total": 5, "files_read": 1}
+
+
+def test_append_arrow_counts_a_lost_race(spark, tmp_path):
+    """One lost O_EXCL race: the retry lands, commitInfo records two
+    attempts, and nothing is left unreferenced."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "lost")
+    t = DeltaProtocolTable(spark, path)
+    t.create(spark.createDataFrame([(0, 0.0)], "entity long, value double"))
+    loser = DeltaProtocolTable(None, path)
+    real = loser._commit
+
+    def racing(v, actions, op):
+        if not getattr(loser, "_raced", False):
+            loser._raced = True
+            DeltaProtocolTable(None, path).append_arrow(
+                pa.table({"entity": [1], "value": [1.0]})
+            )
+        return real(v, actions, op)
+
+    loser._commit = racing
+    assert loser.append_arrow(pa.table({"entity": [2], "value": [2.0]})) == 2
+    assert t.history()[0]["ffspark.commit-attempts"] == 2
+    assert t.history()[1]["ffspark.commit-attempts"] == 1
+    assert sorted(r["entity"] for r in t.snapshot().collect()) == [0, 1, 2]
+    assert _stray_parquet(t) == set()
+
+
+def test_append_arrow_conflict_removes_its_file(spark, tmp_path):
+    """A winner that changed the schema makes the written file invalid:
+    the sessionless append raises and removes it."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from featureform_spark.sources.delta_protocol import ConcurrentCommitError
+
+    path = str(tmp_path / "conflict")
+    t = DeltaProtocolTable(spark, path)
+    t.create(spark.createDataFrame([(0, 0.0)], "entity long, value double"))
+    loser = DeltaProtocolTable(None, path)
+    real = loser._commit
+
+    def racing(v, actions, op):
+        if not getattr(loser, "_raced", False):
+            loser._raced = True
+            DeltaProtocolTable(spark, path).add_columns(
+                T.StructType([T.StructField("extra", T.LongType())])
+            )
+        return real(v, actions, op)
+
+    loser._commit = racing
+    with pytest.raises(ConcurrentCommitError, match="schema"):
+        loser.append_arrow(pa.table({"entity": [2], "value": [2.0]}))
+    assert _stray_parquet(t) == set()
+    assert t.snapshot().count() == 1

@@ -914,6 +914,75 @@ def test_delta_added_nested_columns_roundtrip(served):
     )
 
 
+def test_delta_timestamp_types_follow_logical_type(spark, tmp_path):
+    """A timestamp column reads as UTC microseconds and a timestamp_ntz
+    column as naive ones, nested too, whichever file sorts first: here
+    the older file, which lacks the columns, sorts first (p=0). The
+    instants are the ones Spark reads."""
+    import datetime
+
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    t = DeltaProtocolTable(spark, str(tmp_path / "ts"))
+    t.create(spark.createDataFrame([(0, 1)], "p int, k long"),
+             partition_by=["p"])
+    t.add_columns(T.StructType([
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ntz", T.TimestampNTZType()),
+        T.StructField("info", T.StructType([
+            T.StructField("b", T.ArrayType(T.TimestampType())),
+        ])),
+    ]))
+    when = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    t.append(spark.createDataFrame(
+        [(1, 2, when, when, ([when],))], t.snapshot().schema
+    ))
+    got = scan_table_arrow(t.path).read_all()
+    utc = pa.timestamp("us", tz="UTC")
+    assert got.schema.field("ts").type == utc
+    assert got.schema.field("ntz").type == pa.timestamp("us")
+    assert got.schema.field("info").type.field("b").type.value_type == utc
+    row = got.filter(pc.equal(got["k"], 2))
+    native = t.snapshot().filter(F.col("k") == 2).select(
+        F.unix_micros("ts").alias("ts"),
+        F.col("ntz"),
+        F.unix_micros(F.col("info.b")[0]).alias("b"),
+    ).first()
+    assert row["ts"].cast(pa.int64()).to_pylist() == [native["ts"]]
+    assert row["ntz"].to_pylist() == [native["ntz"]]
+    b = row["info"].combine_chunks().field("b").flatten()
+    assert b.cast(pa.int64()).to_pylist() == [native["b"]]
+
+
+def test_parquet_dir_put_aborted_upload_leaves_no_file(served):
+    """An upload that fails mid-stream adds no part file to a plain
+    parquet directory, not even a hidden staging one."""
+    import types
+
+    _spark, server, _dt, _it, _orders = served
+    target = _served_root(server) / "ns" / "orders_pq"
+    before = sorted(os.listdir(target))
+    batch = pa.record_batch({"o_orderkey": pa.array([1], pa.int64())})
+
+    def _batches():
+        yield batch
+        raise OSError("client went away")
+
+    class Aborting:
+        schema = batch.schema
+
+        def __iter__(self):
+            return (types.SimpleNamespace(data=b) for b in _batches())
+
+        def to_reader(self):
+            return _batches()
+
+    with pytest.raises(OSError, match="went away"):
+        server._table_put({"namespace": "ns", "table": "orders_pq"}, Aborting())
+    assert sorted(os.listdir(target)) == before
+
+
 def _hand_made_delta(path: str, files: list[list[int]]) -> DeltaProtocolTable:
     """A one-column Delta table without Spark: version 0 by hand, then
     one sessionless append per entry of ``files``."""

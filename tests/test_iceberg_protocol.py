@@ -1900,3 +1900,103 @@ def test_delete_append_race_is_loud_not_lossy(spark, tmp_path):
     t.delete_rows(F.col("id") < 10)
     assert t.snapshot().count() == 51
     assert t.snapshot().filter(F.col("id") == 100).count() == 1
+
+
+# ------------------------------------------------ one snapshot commit
+
+
+def _unreferenced(t):
+    """Files under the table that no snapshot reaches: data and delete
+    files, manifests and manifest lists (plus anything left under a
+    staging name)."""
+    seen = set()
+    for snap in t.snapshots():
+        seen.add(t._resolve_path(snap["manifest-list"]))
+        for m in t._manifest_files(snap):
+            seen.add(t._resolve_path(m["manifest_path"]))
+            for e in read_container(t._resolve_path(m["manifest_path"]))[1]:
+                seen.add(t._resolve_path(e["data_file"]["file_path"]))
+    on_disk = set()
+    for dirpath, _dirs, files in os.walk(t.path):
+        for fn in files:
+            if fn.endswith((".metadata.json", "version-hint.text")):
+                continue
+            on_disk.add(os.path.join(dirpath, fn))
+    return on_disk - seen
+
+
+def test_spark_upsert_survives_flight_append_race(spark, tmp_path, monkeypatch):
+    """A Spark upsert is a blind write: losing its commit to a Flight
+    append_arrow refolds and retries, so both writes land, the retry is
+    counted in the snapshot summary, and the lost attempt's manifests
+    are gone."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "race")
+    t = IcebergProtocolTable(spark, path)
+    t.create(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(10)], "id long, v double"
+        )
+    )
+    flight = IcebergProtocolTable(None, path)
+    real = IcebergProtocolTable._advance
+    raced = []
+
+    def racing(self, *a, **kw):
+        if self is t and not raced:
+            raced.append(1)  # the Flight append lands first
+            flight.append_arrow(
+                pa.table({"id": [100, 101], "v": [1.0, 2.0]})
+            )
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IcebergProtocolTable, "_advance", racing)
+    t.upsert(
+        spark.createDataFrame([(1, 50.0), (2, 60.0)], "id long, v double"),
+        ["id"],
+    )
+    monkeypatch.undo()
+    got = {r["id"]: r["v"] for r in t.snapshot().collect()}
+    assert len(got) == 12
+    assert got[1] == 50.0 and got[2] == 60.0
+    assert got[100] == 1.0 and got[101] == 2.0
+    summary = t.current_snapshot()["summary"]
+    assert summary["operation"] == "overwrite"
+    assert summary["ffspark.commit-attempts"] == "2"
+    assert summary["added-equality-delete-files"] == "1"
+    assert _unreferenced(t) == set()
+
+
+def test_update_spec_during_append_raises_and_cleans(
+    spark, tmp_path, monkeypatch
+):
+    """Files written under spec 0 must not commit under a spec that
+    landed while they were written: the append raises, removes them,
+    and a retry partitions under the new spec."""
+    path = str(tmp_path / "spec")
+    t = IcebergProtocolTable(spark, path)
+    rows = spark.createDataFrame(
+        [(i, f"g{i % 2}") for i in range(6)], "id long, g string"
+    )
+    t.create(rows)
+    real = IcebergProtocolTable._write_data_files
+
+    def writing(self, *a, **kw):
+        out = real(self, *a, **kw)
+        IcebergProtocolTable(spark, path).update_spec(["g"])
+        return out
+
+    monkeypatch.setattr(IcebergProtocolTable, "_write_data_files", writing)
+    with pytest.raises(IcebergProtocolError, match="spec change"):
+        t.append(rows)
+    monkeypatch.undo()
+    assert _unreferenced(t) == set()
+    assert t.snapshot().count() == 6
+    t.append(rows)
+    assert t.snapshot().count() == 12
+    spec = int(t.metadata()["default-spec-id"])
+    assert spec != 0
+    assert int(t._manifest_files(t.current_snapshot())[-1][
+        "partition_spec_id"
+    ]) == spec
