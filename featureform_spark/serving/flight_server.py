@@ -28,8 +28,9 @@ Format handling per table directory:
   (``sources/slice_scan.py``, the Python Data Sources' reader too).
   Delta deletion vectors and Iceberg position deletes, deletion
   vectors and equality deletes (sequence-scoped as in
-  ``_read_with_deletes``) mask rows per file; Hive partition values
-  and Iceberg ``initial-default`` values attach as constant columns.
+  ``IcebergProtocolTable._scan``) mask rows per file; Hive partition
+  values and Iceberg ``initial-default`` values attach as constant
+  columns.
   Column-mapped Delta tables and name-mapped or metadata-partitioned
   Iceberg tables gate to the native Spark reader.
 - Anything else: a plain parquet dataset directory.

@@ -36,10 +36,14 @@ from pyspark.sql import DataFrame
 
 
 class OnDemandCycleError(RuntimeError):
-    """Same contract as serving/server.OnDemandCycleError."""
+    """Raised when on-demand features form a dependency cycle — in
+    serving (``serving.server``, which re-exports this class) and in
+    batch scoring alike. Defined here, the lighter module executors
+    unpickle."""
 
 
 def _norm_ref(ref: Any) -> str:
+    """'name' / 'name.variant' / ('name', 'variant') -> 'name.variant'."""
     if isinstance(ref, tuple):
         ref = f"{ref[0]}.{ref[1]}"
     if "." not in ref:

@@ -19,20 +19,8 @@ from pyspark.sql import DataFrame
 
 from featureform_spark.plans.engine import Engine
 from featureform_spark.serving.dataset import Dataset
+from featureform_spark.serving.ondemand_batch import OnDemandCycleError, _norm_ref
 from featureform_spark.serving.online import InMemoryOnlineStore, materialize_to_online
-
-
-class OnDemandCycleError(RuntimeError):
-    """Raised when on-demand features form a dependency cycle."""
-
-
-def _norm_ref(ref: Any) -> str:
-    """'name' / 'name.variant' / ('name', 'variant') -> 'name.variant'."""
-    if isinstance(ref, tuple):
-        ref = f"{ref[0]}.{ref[1]}"
-    if "." not in ref:
-        ref = f"{ref}.default"
-    return ref
 
 
 def _ondemand_key(ref: str) -> str:

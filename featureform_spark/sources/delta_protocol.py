@@ -1492,11 +1492,34 @@ class DeltaProtocolTable:
             self._dv_blob(dv), dv.get("cardinality"), DeltaProtocolError
         )
 
+    def _position_frame(self, positions: dict[str, Any]) -> DataFrame:
+        """The one (file, position) frame: ``__dv_file``/``__dv_pos``
+        rows for each absolute data-file path's row indexes (a numpy
+        array, e.g. one decoded deletion vector). Built through pandas
+        and Arrow — cardinality-scale, JVM-side, never a python RDD."""
+        import pandas as pd
+
+        return self.spark.createDataFrame(
+            pd.concat(
+                [
+                    pd.DataFrame(
+                        {"__dv_file": p, "__dv_pos": pos.astype("int64")}
+                    )
+                    for p, pos in sorted(positions.items())
+                ],
+                ignore_index=True,
+            ),
+            "__dv_file string, __dv_pos long",
+        )
+
     def _read_files(
         self, st: _State, paths: list[str], keep_pos: bool = False
     ) -> DataFrame:
-        """Scan ``paths`` and apply any deletion vectors carried by
-        their add actions: files with a DV are read with Spark's
+        """The one Spark scan of a table's data files: every Spark-side
+        reader of rows — snapshots, MERGE discovery and rewrite,
+        DELETE matching, the change feed — goes through it, so
+        deletion vectors, partition values and column mapping mean the
+        same thing to each. Files with a DV are read with Spark's
         ``_metadata.row_index`` and the deleted (file, position) pairs
         are removed with one broadcast anti-join — the same
         merge-on-read shape as iceberg_protocol position deletes. DV
@@ -1505,42 +1528,26 @@ class DeltaProtocolTable:
 
         ``keep_pos`` keeps ``__dv_file``/``__dv_pos`` (absolute file
         path + ORIGINAL row index, i.e. pre-DV position) in the output
-        — what row-id computation needs."""
-        schema = st.schema
-        dv_files: dict[str, dict] = {}
+        — what row-id computation and DELETE need."""
         path_set = set(paths)
-        for p, a in st.adds.items():
-            dv = a.get("deletionVector")
-            if dv:
-                abs_p = self._abs_data_path(p)
-                if abs_p in path_set:
-                    dv_files[abs_p] = dv
-        if not dv_files:
-            return self._read_files_plain(st, paths, with_pos=keep_pos)
-        import pandas as pd
-
-        frames = [
-            pd.DataFrame(
-                {
-                    "__dv_file": abs_p,
-                    "__dv_pos": self._dv_positions(dv).astype("int64"),
-                }
-            )
-            for abs_p, dv in sorted(dv_files.items())
-        ]
-        deleted = self.spark.createDataFrame(
-            pd.concat(frames, ignore_index=True),
-            "__dv_file string, __dv_pos long",
+        deleted = {}
+        for rel, a in st.adds.items():
+            abs_p = self._abs_data_path(rel)
+            if a.get("deletionVector") and abs_p in path_set:
+                deleted[abs_p] = self._dv_positions(a["deletionVector"])
+        base = self._read_files_plain(
+            st, paths, with_pos=keep_pos or bool(deleted)
         )
-        base = self._read_files_plain(st, paths, with_pos=True)
+        if not deleted:
+            return base
         out = base.join(
-            F.broadcast(deleted),
+            F.broadcast(self._position_frame(deleted)),
             on=["__dv_file", "__dv_pos"],
             how="left_anti",
         )
         if keep_pos:
             return out
-        return out.select(*[f.name for f in schema.fields])
+        return out.select(*[f.name for f in st.schema.fields])
 
     def _assign_row_ids(
         self, st: _State, adds: list[dict], commit_version: int
@@ -1656,6 +1663,11 @@ class DeltaProtocolTable:
     def _read_files_plain(
         self, st: _State, paths: list[str], with_pos: bool = False
     ) -> DataFrame:
+        """:meth:`_read_files` before deletion vectors: one parquet
+        scan (Hive-layout partitions recovered by Spark, other layouts
+        grouped by ``partitionValues``), column-mapped names aliased
+        back to logical ones; ``with_pos`` adds the file path and
+        original row index."""
         schema = st.schema
         parts = st.partition_columns
         meta = (
@@ -1704,8 +1716,7 @@ class DeltaProtocolTable:
                     # non-Hive layout: group by partitionValues
                     # (physical keys per spec) and attach literals
                     return self._read_grouped(
-                        st, paths, st.physical_schema, phys_parts,
-                        with_pos=with_pos,
+                        st, paths, st.physical_schema, phys_parts, meta
                     ).select(
                         *[F.col(ph).alias(lo) for ph, lo in mapping],
                         *(
@@ -1736,7 +1747,7 @@ class DeltaProtocolTable:
                 .select(*[f.name for f in schema.fields], *meta)
             )
         # Fallback: group files by partitionValues, attach literals.
-        return self._read_grouped(st, paths, schema, parts, with_pos=with_pos)
+        return self._read_grouped(st, paths, schema, parts, meta)
 
     def _read_grouped(
         self,
@@ -1744,13 +1755,14 @@ class DeltaProtocolTable:
         paths: list[str],
         schema: T.StructType,
         parts: list[str],
-        with_pos: bool = False,
+        meta: list,
     ) -> DataFrame:
         """Non-Hive-layout partitioned read: group files by the log's
         ``partitionValues`` and attach partition literals. ``schema``
         and ``parts`` name columns in the same namespace as the add
         actions' partitionValues keys (physical under column mapping,
-        logical otherwise)."""
+        logical otherwise); ``meta`` is :meth:`_read_files_plain`'s
+        file-path/row-index column list."""
         by_pv: dict[tuple, list[str]] = {}
         for p in sorted(st.adds):
             pv = st.adds[p].get("partitionValues") or {}
@@ -1762,16 +1774,6 @@ class DeltaProtocolTable:
             [f for f in schema.fields if f.name not in parts]
         )
         types = {f.name: f.dataType for f in schema.fields}
-        meta = (
-            [
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__dv_file"),
-                F.col("_metadata.row_index").alias("__dv_pos"),
-            ]
-            if with_pos
-            else []
-        )
         out = None
         for key, group in sorted(by_pv.items(), key=lambda kv: str(kv[0])):
             df = self.spark.read.schema(data_schema).parquet(*group)
@@ -3046,13 +3048,6 @@ class DeltaProtocolTable:
         rel_by_abs = {
             self._abs_data_path(p): p for p in st.adds
         }
-        read_schema = st.physical_schema if mapping else schema
-        reader = self.spark.read.schema(read_schema)
-        if st.partition_columns:
-            reader = reader.option("basePath", self.path)
-        phys_key = (
-            {lo: ph for ph, lo in mapping}[key] if mapping else key
-        )
         # no distinct(): the broadcast left_semi build dedups keys in
         # its hash relation anyway, and the distinct costs an extra
         # exchange + two aggregate stages inside the broadcast build
@@ -3061,16 +3056,16 @@ class DeltaProtocolTable:
         src_keys = source.select(key)
         matched_abs: list[str] = []
         if rel_by_abs:
-            tagged = reader.parquet(*sorted(rel_by_abs)).select(
-                F.col(phys_key).alias(key),
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/+", "/"
-                ).alias("__file"),
-            )
+            # over the DV-applied scan: a key whose only target row a
+            # deletion vector removed matches nothing, so no file is
+            # rewritten for it
+            tagged = self._read_files(
+                st, sorted(rel_by_abs), keep_pos=True
+            ).select(key, "__dv_file")
             matched_abs = sorted(
-                r["__file"]
+                r["__dv_file"]
                 for r in tagged.join(F.broadcast(src_keys), key, "left_semi")
-                .select("__file")
+                .select("__dv_file")
                 .distinct()
                 .collect()
             )
@@ -3328,6 +3323,11 @@ class DeltaProtocolTable:
         readerVersion 3 / writerVersion 7 with the deletionVectors
         table feature, exactly as the spec requires.
 
+        Matching runs over :meth:`_read_files` with deletion vectors
+        applied and original row indexes kept, so rows an earlier
+        DELETE removed never match again: a repeated DELETE touches no
+        file, writes no vector and reports ``rows_deleted`` 0.
+
         Scale: ONE distributed scan finds matching positions; each
         file's positions are roaring-encoded EXECUTOR-side
         (groupBy(file) + applyInPandas), so only (file, compact-blob,
@@ -3346,7 +3346,9 @@ class DeltaProtocolTable:
 
         st = self.state()
         self._write_guard(st, None, "DELETE")
-        base = self._read_files_plain(st, self._data_paths(st), with_pos=True)
+        matched = self._read_files(
+            st, self._data_paths(st), keep_pos=True
+        ).filter(condition)
 
         def _encode_file_group(pdf):
             import numpy as _np
@@ -3368,8 +3370,7 @@ class DeltaProtocolTable:
             )
 
         encoded = sorted(
-            base.filter(condition)
-            .select("__dv_file", "__dv_pos")
+            matched.select("__dv_file", "__dv_pos")
             .groupBy("__dv_file")
             .applyInPandas(
                 _encode_file_group, "file string, blob binary, card long"
@@ -3477,39 +3478,13 @@ class DeltaProtocolTable:
         if cdf_on and encoded:
             # CDF: emit the deleted rows as a cdc action (delta-spark's
             # DV-DML shape) so table_changes serves them from the cdc
-            # file instead of deriving from DV diffs. Newly deleted =
-            # matching rows minus PRIOR-DV positions: one broadcast
-            # anti-join (prior-delete-cardinality scale, same shape as
-            # _read_files) — never a per-position driver collection.
-            import pandas as pd
-
-            prior_frames = [
-                pd.DataFrame(
-                    {
-                        "__dv_file": self._abs_data_path(rel),
-                        "__dv_pos": self._dv_positions(
-                            a["deletionVector"]
-                        ).astype("int64"),
-                    }
-                )
-                for rel, a in sorted(st.adds.items())
-                if a.get("deletionVector")
-            ]
-            deleted_rows = base.filter(condition)
-            if prior_frames:
-                prior = self.spark.createDataFrame(
-                    pd.concat(prior_frames, ignore_index=True),
-                    "__dv_file string, __dv_pos long",
-                )
-                deleted_rows = deleted_rows.join(
-                    F.broadcast(prior),
-                    on=["__dv_file", "__dv_pos"],
-                    how="left_anti",
-                )
-            deleted_rows = deleted_rows.select(
-                *[f.name for f in st.schema.fields]
-            ).withColumn("_change_type", F.lit("delete"))
-            actions += self._write_cdc_files(deleted_rows)
+            # file instead of deriving from DV diffs; the DV-applied
+            # match holds only newly deleted rows
+            actions += self._write_cdc_files(
+                matched.select(
+                    *[f.name for f in st.schema.fields]
+                ).withColumn("_change_type", F.lit("delete"))
+            )
 
         v = st.version + 1
         self._commit(v, actions, "DELETE")
@@ -4044,8 +4019,6 @@ class DeltaProtocolTable:
             rel: str, positions, change: str, v: int
         ) -> DataFrame:
             """Rows of one file at the given indexes, tagged."""
-            import pandas as pd
-
             full = _check_exists(rel, v)
             bare = {
                 k: val
@@ -4056,19 +4029,10 @@ class DeltaProtocolTable:
                 version=v, metadata=st.metadata, protocol=st.protocol,
                 adds={rel: bare},
             )
-            base = self._read_files_plain(sub, [full], with_pos=True)
-            want = self.spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "__dv_file": full,
-                        "__dv_pos": positions.astype("int64"),
-                    }
-                ),
-                "__dv_file string, __dv_pos long",
-            )
             return (
-                base.join(
-                    F.broadcast(want),
+                self._read_files(sub, [full], keep_pos=True)
+                .join(
+                    F.broadcast(self._position_frame({full: positions})),
                     on=["__dv_file", "__dv_pos"],
                     how="left_semi",
                 )

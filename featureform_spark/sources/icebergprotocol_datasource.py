@@ -28,7 +28,7 @@ Python Data Source API:
   record batches flow straight into Spark's Arrow channel. The batch
   reader applies every live delete (position deletes, v3 deletion
   vectors, equality deletes), sequence-scoped exactly as
-  ``IcebergProtocolTable._read_with_deletes``; a column a file lacks
+  ``IcebergProtocolTable._scan``, the Spark-side scan; a column a file lacks
   reads NULL or its ``initial-default``. Iceberg keeps source columns
   IN the data files, so no partition-literal reattachment is needed;
   name-mapped and metadata-partitioned tables (UniForm mirrors) gate
@@ -148,7 +148,7 @@ def snapshot_slices(
 ) -> list[Slice]:
     """One slice per live data file of ``snap``, in path order, with
     the deletes that apply to it scoped by sequence number as
-    ``IcebergProtocolTable._read_with_deletes`` scopes them: position
+    ``IcebergProtocolTable._scan`` scopes them: position
     deletes and deletion vectors at ``del_seq >= data_seq``, equality
     deletes at ``data_seq < del_seq``. The batch source's input
     partitions and the Flight scan's input."""

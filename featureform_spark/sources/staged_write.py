@@ -83,9 +83,11 @@ def micros_timestamps(spark) -> Iterator[None]:
 @dataclass(frozen=True)
 class ColumnStats:
     """One leaf column of one file, summed over its row groups.
-    ``nulls`` counts only row groups whose statistics bound the column
-    (None when none did); ``bounds`` is (min, max), or None when any
-    row group left the column not covered."""
+    ``nulls`` is None when any row group's statistics lack a null
+    count, never a partial sum; ``bounds`` is (min, max) over the row
+    groups that have them, or None when a row group holding values
+    left the column not covered (an all-NULL row group has no bounds
+    and needs none)."""
 
     values: int
     nulls: int | None
@@ -106,24 +108,29 @@ class FileRecord:
     partition: dict[str, str | None] = field(default_factory=dict)
 
 
-def _chunk_bounds(chunk) -> tuple[Any, Any, int] | None:
-    """(min, max, null count) of one column chunk, or None when its
-    statistics cannot bound it: absent, not castable by pyarrow
-    (``NotImplementedError``, e.g. INT32/INT64-backed decimals) or
-    bytes that are not UTF-8."""
+def _chunk_bounds(chunk) -> tuple[tuple[Any, Any] | None, int | None]:
+    """((min, max), null count) of one column chunk. The bounds are
+    None when its statistics cannot bound it: absent, without min/max
+    (an all-NULL chunk), not castable by pyarrow
+    (``NotImplementedError``, e.g. INT32/INT64-backed decimals) or bytes
+    that are not UTF-8; the null count is None when the statistics do
+    not carry one."""
+    st = chunk.statistics
+    if st is None:
+        return None, None
+    nulls = st.null_count if st.has_null_count else None
     try:
-        st = chunk.statistics
-        if st is None or not st.has_min_max:
-            return None
+        if not st.has_min_max:
+            return None, nulls
         lo, hi = st.min, st.max
     except NotImplementedError:
-        return None
+        return None, nulls
     if isinstance(lo, bytes):
         try:
             lo, hi = lo.decode(), hi.decode()
         except UnicodeDecodeError:
-            return None
-    return lo, hi, st.null_count or 0
+            return None, nulls
+    return (lo, hi), nulls
 
 
 def fold_footer(path: str) -> FileRecord:
@@ -139,23 +146,24 @@ def _fold(md, path: str) -> FileRecord:
     """The :class:`FileRecord` of the file at ``path`` whose footer is
     ``md`` (a ``pyarrow.parquet.FileMetaData``)."""
     values: dict[str, int] = {}
-    nulls: dict[str, int] = {}
+    nulls: dict[str, int | None] = {}
     lows: dict[str, Any] = {}
     highs: dict[str, Any] = {}
-    covered: dict[str, bool] = {}
+    uncovered: set[str] = set()
     for rg in range(md.num_row_groups):
         group = md.row_group(rg)
         for ci in range(group.num_columns):
             chunk = group.column(ci)
             name = chunk.path_in_schema
             values[name] = values.get(name, 0) + chunk.num_values
-            b = _chunk_bounds(chunk)
-            if b is None:
-                covered[name] = False
+            bounds, n = _chunk_bounds(chunk)
+            prior = nulls.get(name, 0)
+            nulls[name] = None if n is None or prior is None else prior + n
+            if bounds is None:
+                if n != chunk.num_values:  # not an all-NULL chunk
+                    uncovered.add(name)
                 continue
-            lo, hi, n = b
-            covered.setdefault(name, True)
-            nulls[name] = nulls.get(name, 0) + n
+            lo, hi = bounds
             lows[name] = lo if name not in lows else min(lows[name], lo)
             highs[name] = hi if name not in highs else max(highs[name], hi)
     return FileRecord(
@@ -168,7 +176,7 @@ def _fold(md, path: str) -> FileRecord:
                 nulls=nulls.get(name),
                 bounds=(
                     (lows[name], highs[name])
-                    if covered[name] and name in lows
+                    if name not in uncovered and name in lows
                     else None
                 ),
             )

@@ -1255,3 +1255,48 @@ def test_append_arrow_conflict_removes_its_file(spark, tmp_path):
         loser.append_arrow(pa.table({"entity": [2], "value": [2.0]}))
     assert _stray_parquet(t) == set()
     assert t.snapshot().count() == 1
+
+
+def _dv_table(spark, path):
+    """Ten rows in one file, row ``k = 3`` deleted by a deletion
+    vector."""
+    t = DeltaProtocolTable(spark, path)
+    t.create(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "k long, s string"
+        ).coalesce(1)
+    )
+    assert t.delete_where("k = 3")["rows_deleted"] == 1
+    return t
+
+
+def _dv_files(path):
+    return sorted(
+        f for f in os.listdir(path) if f.startswith("deletion_vector_")
+    )
+
+
+def test_repeated_delete_where_is_a_no_op(spark, tmp_path):
+    """DELETE matches over the DV-applied scan: deleting an
+    already-deleted row touches no file and writes no vector."""
+    path = str(tmp_path / "redel")
+    t = _dv_table(spark, path)
+    dvs = _dv_files(path)
+    res = t.delete_where("k = 3")
+    assert (res["files_touched"], res["rows_deleted"]) == (0, 0)
+    assert _dv_files(path) == dvs
+    assert t.snapshot().count() == 9
+
+
+def test_merge_skips_file_of_dv_deleted_match(spark, tmp_path):
+    """MERGE discovery reads the DV-applied scan: a source key whose
+    only target row a deletion vector removed rewrites no file and
+    inserts the row."""
+    t = _dv_table(spark, str(tmp_path / "mdv"))
+    res = t.merge(
+        spark.createDataFrame([(3, "new")], "k long, s string"), key="k"
+    )
+    assert res["files_rewritten"] == 0
+    assert sorted(tuple(r) for r in t.snapshot().collect()) == sorted(
+        [(i, f"v{i}") for i in range(10) if i != 3] + [(3, "new")]
+    )

@@ -5,7 +5,7 @@ O(batch) CDC ingestion. `upsert` commits new data files and the
 batch-key equality delete at the SAME sequence number, so the delete
 applies only to strictly older files (spec scan-planning rule) and the
 new rows survive their own delete. The read side existed since r6
-(`_read_with_deletes` applies content=2 null-safe with seq scoping);
+(`_scan` applies content=2 null-safe with seq scoping);
 this closes the loop so both directions are in-repo."""
 
 import os
@@ -337,6 +337,25 @@ def test_upsert_on_partitioned_table(spark, tmp_path):
         if int(m.get("content", 0)) == 1
     }
     assert del_specs == {int(unpart[0]["spec-id"])}
+
+
+def test_deletes_apply_to_table_with_path_column(spark, tmp_path):
+    """The scan's delete joins use reserved column names: a table
+    column called ``path`` survives an equality and a position
+    delete."""
+    t = IcebergProtocolTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c")], "k long, path string"
+        )
+    )
+    t.upsert(
+        spark.createDataFrame([(1, "z")], "k long, path string"), ["k"]
+    )
+    t.delete_rows(F.col("k") == 2)
+    assert sorted(tuple(r) for r in t.snapshot().collect()) == [
+        (1, "z"), (3, "c"),
+    ]
 
 
 def test_changelog_over_upsert(spark, tmp_path):

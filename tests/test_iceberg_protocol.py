@@ -2000,3 +2000,50 @@ def test_update_spec_during_append_raises_and_cleans(
     assert int(t._manifest_files(t.current_snapshot())[-1][
         "partition_spec_id"
     ]) == spec
+
+
+def _defaulted_v3(spark, path):
+    """A v3 table of three rows, then a new column ``d`` whose
+    ``initial-default`` 7 every existing file serves."""
+    from pyspark.sql import types as T
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, s string"
+    )
+    t = IcebergProtocolTable(spark, path)
+    t.create(df)
+    t.upgrade_format_version(3)
+    t.evolve_schema(
+        T.StructType(
+            df.schema.fields + [T.StructField("d", T.LongType())]
+        ),
+        defaults={"d": 7},
+    )
+    return t
+
+
+def test_delete_rows_matches_initial_default(spark, tmp_path):
+    """DELETE matches the rows snapshot() shows: a condition on a
+    column served by its initial-default deletes every row, with no
+    equality delete on the table."""
+    t = _defaulted_v3(spark, str(tmp_path / "dflt"))
+    assert [r["d"] for r in t.snapshot().collect()] == [7, 7, 7]
+    assert t.delete_rows(F.col("d") == 7) != -1
+    assert t.snapshot().count() == 0
+    assert t.delete_rows(F.col("d") == 7) == -1  # nothing left to match
+
+
+def test_changelog_delete_rows_carry_default(spark, tmp_path):
+    """changelog_scan reads through the same scan as snapshot(): the
+    delete row of a defaulted table carries the default, as do the
+    inserts of files written before the column existed."""
+    t = _defaulted_v3(spark, str(tmp_path / "cl"))
+    t.delete_rows("k = 1")
+    got = sorted(
+        (r["k"], r["d"], r["_change_type"])
+        for r in t.changelog_scan().collect()
+    )
+    assert got == [
+        (1, 7, "delete"), (1, 7, "insert"), (2, 7, "insert"),
+        (3, 7, "insert"),
+    ]

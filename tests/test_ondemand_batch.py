@@ -76,6 +76,20 @@ def test_context_cycle_detected():
         ctx.resolve("a")
 
 
+def test_batch_cycle_is_the_serving_cycle_error():
+    """One cycle error for serving and batch scoring: a caller that
+    catches ``serving.server.OnDemandCycleError`` also catches a cycle
+    found by ``BatchOnDemandContext``."""
+    from featureform_spark.serving import server
+
+    def a(client, params, entities):
+        return client.features(["ondemand/a"])[0]
+
+    ctx = _ctx(pd.DataFrame({"x": [1.0]}), {"a.default": (a, True)})
+    with pytest.raises(server.OnDemandCycleError):
+        ctx.resolve("a")
+
+
 def test_context_rowwise_fn_sees_scalars():
     def bucket(client, params, entities):
         (r,) = client.features(["ondemand/ratio"])

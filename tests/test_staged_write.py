@@ -190,6 +190,26 @@ def test_iceberg_binary_bounds(spark, tmp_path):
     assert bound["upper_bounds"][fid] == b"cd"
 
 
+def test_all_null_row_group_keeps_null_count_and_bounds(tmp_path):
+    """A row group whose column is all NULL has statistics with a null
+    count but no min/max: its NULLs still count, and the bounds come
+    from the row groups that have them."""
+    import json
+
+    import pyarrow as pa
+
+    from featureform_spark.sources.delta_protocol import _delta_stats
+
+    tbl = pa.table({"k": [1, 2, 3, 4], "s": ["a", "b", None, None]})
+    rec = staged_write.write_arrow(
+        tbl.to_batches(max_chunksize=2), str(tmp_path / "f.parquet")
+    )
+    assert pq.read_metadata(rec.path).num_row_groups == 2
+    stats = json.loads(_delta_stats(rec))
+    assert stats["nullCount"] == {"k": 0, "s": 2}
+    assert (stats["minValues"]["s"], stats["maxValues"]["s"]) == ("a", "b")
+
+
 @pytest.mark.parametrize(
     "write", ["data", "cdc", "position_delete", "equality_delete"]
 )
