@@ -70,6 +70,26 @@ def compact_line(
     return line
 
 
+def sf_of(sf_dir: str):
+    """The scale factor a ``.../sf<N>`` directory holds: a float when
+    numeric, else the raw tag."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def comparable_prior(prior_doc: dict, sf_dir: str, cpus: int) -> dict:
+    """Per-query times of a prior artifact that this run may compare
+    against: only one taken at the same scale factor (a local sf0.001
+    run must not make every sf0.1 query look 'regressed') and the same
+    core count (query times scale with cores). A prior that does not
+    record ``cpus`` is not comparable."""
+    if str(prior_doc.get("sf")) != str(sf_of(sf_dir)):
+        return {}
+    if prior_doc.get("cpus") != cpus:
+        return {}
+    return prior_doc.get("queries", {}) or {}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -136,16 +156,9 @@ def main() -> None:
     # measurement preserved in BENCH_local.json for transparency.
     retime_threshold = 2.5
     prior: dict[str, float] = {}
-    sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         with open(Path(__file__).resolve().parent / "BENCH_local.json") as f:
-            prior_doc = json.load(f)
-        # only comparable at the same scale factor (a local sf0.001 run
-        # must not make every sf0.1 query look 'regressed')
-        if str(prior_doc.get("sf")) == str(
-            float(sf_tag) if sf_tag.replace(".", "").isdigit() else sf_tag
-        ):
-            prior = prior_doc.get("queries", {}) or {}
+            prior = comparable_prior(json.load(f), sf_dir, int(cpus))
     except (OSError, ValueError):
         pass
     retimed_vs_prior: list[str] = []
@@ -200,13 +213,13 @@ def main() -> None:
                     pass
             _cleanup()
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "suite_total_seconds",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf_of(sf_dir),
+        "cpus": int(cpus),
     }
     if errors:
         out["errors"] = errors
@@ -230,7 +243,8 @@ def main() -> None:
             else "BENCH_local_latest.json"
         )
     else:
-        artifact = "BENCH_local_sf%s.json" % str(sf).replace(os.sep, "_")
+        sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+        artifact = "BENCH_local_sf%s.json" % sf.replace(os.sep, "_")
     try:
         with open(Path(__file__).resolve().parent / artifact, "w") as f:
             json.dump(out, f, indent=1)

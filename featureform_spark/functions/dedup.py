@@ -51,13 +51,6 @@ def _resolve_banding(
     )
 
 
-def shingles_expr(text_col: str = "text", n: int = 3) -> Column:
-    """Word n-gram shingles, space-joined (same as DuckDB
-    list_transform(range(0, len-n+1), i -> array_to_string(list_slice(w,
-    i+1, i+n), ' ')))."""
-    return _shingles_of(tokens_expr(text_col), n)
-
-
 def _shingles_of(toks: Column, n: int) -> Column:
     """Shingles from an already-computed token array. Pass an attribute
     (projected column), not an expression: slice(toks, …) sits inside

@@ -47,20 +47,3 @@ def batch_features(
     return unioned.groupBy(out_entity).agg(
         *[F.max(n).alias(n) for n in names]
     )
-
-
-def batch_features_join(
-    materializations: dict[str, DataFrame],
-    entity_col: str = "entity",
-    value_col: str = "value",
-    out_entity: str = "entity",
-) -> DataFrame:
-    """Literal chained-full-outer-join formulation (reference parity path).
-
-    Kept for semantics comparison/tests; `batch_features` is the scale path.
-    """
-    result: DataFrame | None = None
-    for name, df in materializations.items():
-        cur = df.select(F.col(entity_col).alias(out_entity), F.col(value_col).alias(name))
-        result = cur if result is None else result.join(cur, out_entity, "outer")
-    return result

@@ -139,16 +139,6 @@ _LOCATION_KINDS = {
 # ---------------------------------------------------------------------------
 
 
-@dataclass(frozen=True)
-class ResourceID:
-    name: str
-    variant: str = "default"
-    type: str = "source"  # source | feature | label | training_set | entity
-
-    def key(self) -> str:
-        return f"{self.type}/{self.name}/{self.variant}"
-
-
 @dataclass
 class SourceVariant:
     """Primary table pointer OR transformation over other sources."""

@@ -59,12 +59,13 @@ import uuid
 from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from featureform_spark.sources.local_df import position_df
 from featureform_spark.sources.staged_write import (
     STAGING_DIR,
     FileRecord,
@@ -352,10 +353,21 @@ def _parse_commit(raw: bytes) -> list[dict]:
     return [json.loads(line) for line in raw.splitlines() if line.strip()]
 
 
-def _fold_actions(st: "_State", actions: list[dict]) -> None:
-    """Apply commit/checkpoint actions to ``st`` in place — Delta's
-    snapshot-construction fold, shared by the full fold from disk and
-    the incremental one onto a cached snapshot."""
+def _fold_actions(
+    st: "_State", actions: list[dict], checkpoint: bool = False
+) -> None:
+    """Apply ONE commit's actions, or a checkpoint's, to ``st`` in
+    place — Delta's snapshot-construction fold, shared by the full fold
+    from disk, the incremental one onto a cached snapshot and the
+    change-feed planner. PROTOCOL.md §Action Reconciliation keys a
+    logical file by (path, deletion vector id), so within a commit a
+    remove and an add of one path are the old and the new file: removes
+    apply first, whatever the action order. A checkpoint's remove rows
+    are tombstones and never drop a live add."""
+    if not checkpoint:
+        for a in actions:
+            if "remove" in a:
+                st.adds.pop(a["remove"]["path"], None)
     for a in actions:
         if "protocol" in a:
             st.protocol = a["protocol"]
@@ -371,8 +383,6 @@ def _fold_actions(st: "_State", actions: list[dict]) -> None:
                     "than returning deleted rows"
                 )
             st.adds[add["path"]] = add
-        elif "remove" in a:
-            st.adds.pop(a["remove"]["path"], None)
         elif "txn" in a:
             t = a["txn"]
             st.txns[t["appId"]] = max(
@@ -385,6 +395,21 @@ def _fold_actions(st: "_State", actions: list[dict]) -> None:
             else:
                 st.domains[dm["domain"]] = dm.get("configuration", "")
         # commitInfo / cdc do not affect state
+
+
+class ChangePiece(NamedTuple):
+    """One piece of a Delta change feed, planned by
+    ``DeltaProtocolTable._changes``: the rows commit ``version``
+    inserted or deleted in the data files ``files`` (add actions, or
+    the removed file's add; each masks its ``deletionVector``), all
+    rows or only those at ``keep`` ({absolute path: positions}). A
+    ``cdc`` piece's ``files`` are the commit's cdc actions, read
+    verbatim."""
+
+    version: int
+    change: str  # 'insert' | 'delete' | 'cdc'
+    files: list
+    keep: dict | None = None
 
 
 def strip_file_scheme(p: str) -> str:
@@ -954,20 +979,20 @@ class DeltaProtocolTable:
         JSON tail up to ``version`` from disk; also returns the digest
         of the commit file at ``version`` (None when only a checkpoint
         holds it)."""
+        st = _State(version=version, metadata={}, protocol={})
         start = 0
-        actions: list[dict] = []
         if cp_v is not None:
-            actions.extend(self._read_checkpoint(cp_v, cps[cp_v]))
+            _fold_actions(
+                st, self._read_checkpoint(cp_v, cps[cp_v]), checkpoint=True
+            )
             start = cp_v + 1
         raw = None
         for v in range(start, version + 1):
             raw = self._commit_bytes(v)
-            actions.extend(_parse_commit(raw))
+            _fold_actions(st, _parse_commit(raw))
         if raw is None and version in commits:
             raw = self._commit_bytes(version)
 
-        st = _State(version=version, metadata={}, protocol={})
-        _fold_actions(st, actions)
         if not st.metadata:
             raise DeltaProtocolError("log has no metaData action")
         self._check_protocol(st.protocol, st.metadata)
@@ -1495,22 +1520,8 @@ class DeltaProtocolTable:
     def _position_frame(self, positions: dict[str, Any]) -> DataFrame:
         """The one (file, position) frame: ``__dv_file``/``__dv_pos``
         rows for each absolute data-file path's row indexes (a numpy
-        array, e.g. one decoded deletion vector). Built through pandas
-        and Arrow — cardinality-scale, JVM-side, never a python RDD."""
-        import pandas as pd
-
-        return self.spark.createDataFrame(
-            pd.concat(
-                [
-                    pd.DataFrame(
-                        {"__dv_file": p, "__dv_pos": pos.astype("int64")}
-                    )
-                    for p, pos in sorted(positions.items())
-                ],
-                ignore_index=True,
-            ),
-            "__dv_file string, __dv_pos long",
-        )
+        array, e.g. one decoded deletion vector), JVM-side."""
+        return position_df(self.spark, positions, "__dv_file", "__dv_pos")
 
     def _read_files(
         self, st: _State, paths: list[str], keep_pos: bool = False
@@ -3942,33 +3953,30 @@ class DeltaProtocolTable:
         os.replace(tmp, os.path.join(self.log_path, LAST_CHECKPOINT))
         return st.version
 
-    def table_changes(
-        self, from_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Change-data-feed read over versions (from_version,
-        to_version] — the real Delta CDF contract
-        (spark.read.format("delta").option("readChangeFeed")):
+    def _changes(self, from_version: int, to_version: int):
+        """The one Delta change-feed planner: walks commits
+        (from_version, to_version] once and yields their
+        :class:`ChangePiece` s. ``table_changes`` runs the pieces as
+        Spark scans, the ``deltaprotocol`` source as slices.
 
-        - commits carrying explicit ``cdc`` actions yield exactly those
-          files' rows (they already embed ``_change_type``);
-        - commits without cdc derive changes per PROTOCOL.md: adds with
-          dataChange=true are inserts (minus their deletion vector),
-          removes with dataChange=true are deletes of that file's LIVE
-          row set at removal time (file minus the DV it carried — the
-          file is read as it still exists until VACUUM);
-        - a remove+re-add of the same path with a changed deletion
-          vector (delete_where / delta-spark DV DML) yields delete rows
-          for exactly the newly-deleted positions (and insert rows for
-          any restored positions), not whole-file churn;
-        - dataChange=false actions (OPTIMIZE/compaction) contribute
-          nothing.
+        A commit's ``cdc`` actions are its whole change set (one piece,
+        files read verbatim). Otherwise, per PROTOCOL.md, adds and
+        removes with dataChange=true are the changes:
 
-        Output: table columns + (_change_type, _commit_version).
-        Raises when a removed file was already vacuumed (the feed would
-        silently lose deletes)."""
-        latest = self.version()
-        if to_version is None:
-            to_version = latest
+        - an add of a new path inserts the file minus its deletion
+          vector;
+        - a remove deletes the file's live rows at removal time: the
+          file minus the vector it carried going into the commit (the
+          fold's add, else the remove's own descriptor);
+        - a remove+re-add of one path with a changed vector deletes
+          the newly deleted positions and re-inserts restored ones,
+          not the whole file.
+
+        The rolling fold is :func:`_fold_actions`, as in snapshot
+        construction. Raises when a commit in range was cleaned or a
+        file a piece reads was vacuumed (the feed would lose rows)."""
+        import numpy as np
+
         have = set(self._commit_versions())
         missing = [
             v for v in range(from_version + 1, to_version + 1)
@@ -3979,158 +3987,137 @@ class DeltaProtocolTable:
                 f"commits {missing} were cleaned; change feed from "
                 f"{from_version} is no longer possible"
             )
-        st = self.state()  # schema for reads
-        schema = st.schema
-        pieces: list[DataFrame] = []
-        # rolling path -> add fold so each version knows the DV a file
-        # carried BEFORE the commit (one state fold, then O(1) updates)
         try:
-            cur_adds: dict[str, dict] = dict(self.state(from_version).adds)
+            st = self.state(from_version)
         except DeltaProtocolError:
-            # base version no longer reconstructable (cleaned log with a
-            # later checkpoint); the (from, to] range itself was already
-            # verified present above, so only pre-range DV context is
-            # lost — treat files as DV-less at the base
-            cur_adds = {}
+            # base version no longer reconstructable (cleaned log with
+            # a later checkpoint, or before the first commit): only
+            # pre-range DV context is lost — files read as DV-less
+            st = _State(version=from_version, metadata={}, protocol={})
 
-        def _check_exists(rel: str, v: int) -> str:
-            full = self._abs_data_path(rel)
-            if not os.path.exists(full):
-                raise DeltaProtocolError(
-                    f"file {rel!r} of version {v} was vacuumed; "
-                    "change feed would lose rows"
-                )
-            return full
-
-        def _files_df(adds: list[dict], change: str, v: int) -> DataFrame:
-            for a in adds:
-                _check_exists(a["path"], v)
-            sub = _State(
-                version=v, metadata=st.metadata, protocol=st.protocol,
-                adds={a["path"]: a for a in adds},
-            )
-            return (
-                self._read_files(sub, self._data_paths(sub))
-                .withColumn("_change_type", F.lit(change))
-                .withColumn("_commit_version", F.lit(v).cast("long"))
-            )
-
-        def _rows_at_positions(
-            rel: str, positions, change: str, v: int
-        ) -> DataFrame:
-            """Rows of one file at the given indexes, tagged."""
-            full = _check_exists(rel, v)
-            bare = {
-                k: val
-                for k, val in cur_adds.get(rel, {"path": rel}).items()
-                if k != "deletionVector"
-            }
-            sub = _State(
-                version=v, metadata=st.metadata, protocol=st.protocol,
-                adds={rel: bare},
-            )
-            return (
-                self._read_files(sub, [full], keep_pos=True)
-                .join(
-                    F.broadcast(self._position_frame({full: positions})),
-                    on=["__dv_file", "__dv_pos"],
-                    how="left_semi",
-                )
-                .select(*[f.name for f in schema.fields])
-                .withColumn("_change_type", F.lit(change))
-                .withColumn("_commit_version", F.lit(v).cast("long"))
-            )
-
-        import numpy as np
+        def _positions(a: dict):
+            dv = a.get("deletionVector")
+            if not dv:
+                return np.empty(0, dtype=np.uint64)
+            return self._dv_positions(dv)
 
         for v in range(from_version + 1, to_version + 1):
             actions = self._read_commit(v)
-            cdc = [a["cdc"] for a in actions if "cdc" in a]
-            adds_d = {
-                a["add"]["path"]: a["add"] for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            }
-            removes_d = {
-                a["remove"]["path"]: a["remove"] for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            }
-            if cdc:
-                paths = [
-                    self._abs_data_path(c["path"])
-                    for c in cdc
-                ]
-                cdf_schema = T.StructType(
-                    list(schema.fields)
-                    + [T.StructField("_change_type", T.StringType())]
-                )
-                pieces.append(
-                    self.spark.read.schema(cdf_schema)
-                    .parquet(*paths)
-                    .withColumn(
-                        "_commit_version", F.lit(v).cast("long")
-                    )
-                )
-            else:
-                dv_updates = [p for p in adds_d if p in removes_d]
-                plain_adds = [
-                    adds_d[p] for p in adds_d if p not in removes_d
-                ]
-                plain_removes = []
-                for p in removes_d:
-                    if p in adds_d:
-                        continue
-                    # a removed file's live rows = file minus the DV it
-                    # carried going INTO this commit
-                    prior = cur_adds.get(p)
-                    r = dict(removes_d[p])
-                    if prior and prior.get("deletionVector"):
-                        r["deletionVector"] = prior["deletionVector"]
-                    plain_removes.append(r)
-                for p in dv_updates:
-                    old_dv = (cur_adds.get(p) or {}).get("deletionVector")
-                    new_dv = adds_d[p].get("deletionVector")
-                    old_pos = (
-                        self._dv_positions(old_dv)
-                        if old_dv
-                        else np.empty(0, dtype=np.uint64)
-                    )
-                    new_pos = (
-                        self._dv_positions(new_dv)
-                        if new_dv
-                        else np.empty(0, dtype=np.uint64)
-                    )
-                    newly_deleted = np.setdiff1d(new_pos, old_pos)
-                    restored = np.setdiff1d(old_pos, new_pos)
-                    if len(newly_deleted):
-                        pieces.append(
-                            _rows_at_positions(p, newly_deleted, "delete", v)
-                        )
-                    if len(restored):
-                        pieces.append(
-                            _rows_at_positions(p, restored, "insert", v)
-                        )
-                if plain_adds:
-                    pieces.append(_files_df(plain_adds, "insert", v))
-                if plain_removes:
-                    pieces.append(_files_df(plain_removes, "delete", v))
-            # advance the rolling fold (cdc commits still carry actions)
-            for a in actions:
-                if "add" in a:
-                    cur_adds[a["add"]["path"]] = a["add"]
-                elif "remove" in a:
-                    # a same-commit re-add keeps the path live
-                    if a["remove"]["path"] not in {
-                        ad["add"]["path"] for ad in actions if "add" in ad
-                    }:
-                        cur_adds.pop(a["remove"]["path"], None)
-        if not pieces:
-            out_schema = T.StructType(
-                list(schema.fields)
-                + [
-                    T.StructField("_change_type", T.StringType()),
-                    T.StructField("_commit_version", T.LongType()),
-                ]
+            adds, removes = (
+                {
+                    a[kind]["path"]: a[kind] for a in actions
+                    if kind in a and a[kind].get("dataChange", True)
+                }
+                for kind in ("add", "remove")
             )
+            prior = {p: st.adds.get(p) or r for p, r in removes.items()}
+            _fold_actions(st, actions)
+            cdc = [a["cdc"] for a in actions if "cdc" in a]
+            if cdc:
+                yield ChangePiece(v, "cdc", cdc)
+                continue
+            # per path whose vector changed: (new, old) positions
+            dvs = {
+                p: (_positions(adds[p]), _positions(prior[p]))
+                for p in sorted(prior.keys() & adds.keys())
+            }
+            pieces = [
+                ChangePiece(
+                    v, "delete", [o for p, o in prior.items() if p not in adds]
+                ),
+                ChangePiece(
+                    v, "insert", [a for p, a in adds.items() if p not in removes]
+                ),
+            ]
+            # newly deleted (new - old) and restored (old - new) rows
+            for change, side in (("delete", 0), ("insert", 1)):
+                keep = {}
+                for p, pair in dvs.items():
+                    pos = np.setdiff1d(pair[side], pair[1 - side])
+                    if len(pos):
+                        keep[p] = pos
+                pieces.append(
+                    ChangePiece(
+                        v,
+                        change,
+                        [
+                            {k: x for k, x in prior[p].items()
+                             if k != "deletionVector"}
+                            for p in keep
+                        ],
+                        {self._abs_data_path(p): x for p, x in keep.items()},
+                    )
+                )
+            for piece in pieces:
+                if not piece.files:
+                    continue
+                for a in piece.files:
+                    if not os.path.exists(self._abs_data_path(a["path"])):
+                        raise DeltaProtocolError(
+                            f"file {a['path']!r} of version {v} was "
+                            "vacuumed; change feed would lose rows"
+                        )
+                yield piece
+
+    def table_changes(
+        self, from_version: int, to_version: int | None = None
+    ) -> DataFrame:
+        """Change-data-feed read over versions (from_version,
+        to_version] — the real Delta CDF contract
+        (spark.read.format("delta").option("readChangeFeed")).
+
+        The commits are planned by :meth:`_changes`: a commit's ``cdc``
+        files yield exactly their rows (they already embed
+        ``_change_type``); otherwise each piece — a commit's inserted
+        or deleted files, or the newly deleted / restored positions of
+        files whose deletion vector changed — is ONE
+        :meth:`_read_files` scan over all of its files, semi-joined to
+        the piece's positions when it has them. dataChange=false
+        actions (OPTIMIZE/compaction) contribute nothing.
+
+        Output: table columns + (_change_type, _commit_version).
+        Raises when a commit was cleaned or a removed file was already
+        vacuumed (the feed would silently lose deletes)."""
+        if to_version is None:
+            to_version = self.version()
+        st = self.state()  # schema for reads
+        schema = st.schema
+        cols = [f.name for f in schema.fields]
+        out_schema = T.StructType(
+            list(schema.fields)
+            + [
+                T.StructField("_change_type", T.StringType()),
+                T.StructField("_commit_version", T.LongType()),
+            ]
+        )
+        pieces: list[DataFrame] = []
+        for p in self._changes(from_version, to_version):
+            if p.change == "cdc":
+                df = self.spark.read.schema(
+                    T.StructType(out_schema.fields[:-1])
+                ).parquet(*[self._abs_data_path(c["path"]) for c in p.files])
+            else:
+                sub = _State(
+                    version=p.version, metadata=st.metadata,
+                    protocol=st.protocol,
+                    adds={a["path"]: a for a in p.files},
+                )
+                df = self._read_files(
+                    sub, self._data_paths(sub), keep_pos=p.keep is not None
+                )
+                if p.keep is not None:
+                    df = df.join(
+                        F.broadcast(self._position_frame(p.keep)),
+                        on=["__dv_file", "__dv_pos"],
+                        how="left_semi",
+                    )
+                df = df.select(*cols).withColumn(
+                    "_change_type", F.lit(p.change)
+                )
+            pieces.append(
+                df.withColumn("_commit_version", F.lit(p.version).cast("long"))
+            )
+        if not pieces:
             return self.spark.createDataFrame([], out_schema)
         out = pieces[0]
         for p in pieces[1:]:

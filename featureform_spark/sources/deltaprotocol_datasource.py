@@ -25,20 +25,23 @@ without the jar, on Spark 4's Python Data Source API:
   values attached as constant columns.
 
 Honest gates: column-mapped tables raise everywhere; deletion-vector
-adds raise on the STREAM path only (they arrive via change commits,
-which the append-only contract already refuses) — the batch reader
-applies DVs executor-side: the compact roaring blob ships with each
-input partition and masks rows by file-relative index during the
-Arrow read. The native ``DeltaProtocolTable`` reader (JVM scan +
-broadcast anti-join) remains the 100-TB path.
+adds raise on the append-only STREAM path only (they arrive via change
+commits, which the append-only contract already refuses) — the batch
+reader and the change feed apply DVs executor-side: the compact roaring
+blob ships with each input partition and masks rows by file-relative
+index during the Arrow read. The native ``DeltaProtocolTable`` reader
+(JVM scan + broadcast anti-join) remains the 100-TB path.
 
 Options: ``path`` (table root), ``startingVersion`` (int or
 ``earliest`` [default] / ``latest``), ``skipChangeCommits``,
-``readChangeFeed=true`` (round 6) — the CDF streaming source: each
-micro-batch carries the change rows of commits (start, end] with
-``_change_type`` / ``_commit_version`` / ``_commit_timestamp``
-columns, served executor-side from cdc files (verbatim), blind
-appends (inserts), and whole-file removes (deletes, prior DV masked).
+``readChangeFeed=true`` — the CDF source (streaming, or batch with
+``startingVersion``/``endingVersion``): each micro-batch carries the
+change rows of commits (start, end] with ``_change_type`` /
+``_commit_version`` / ``_commit_timestamp`` columns. The commits are
+planned by ``DeltaProtocolTable._changes``, the planner
+``table_changes`` runs too: cdc files verbatim, inserted and removed
+files with their prior DV masked, and for a remove+re-add that changes
+a file's DV only the newly deleted (or restored) positions.
 """
 
 from __future__ import annotations
@@ -60,6 +63,7 @@ from featureform_spark.sources.delta_protocol import (
     DeltaProtocolTable,
     UnsupportedTableFeatureError,
 )
+from featureform_spark.sources.dv_bitmap import encode_rbm_array
 from featureform_spark.sources.slice_scan import (
     Slice,
     read_slice,
@@ -239,15 +243,13 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
     def _cdf_partitions(
         self, st, lo: int, hi: int
     ) -> Sequence[InputPartition]:
-        """readChangeFeed=true: per-commit change rows, served straight
-        from files executor-side — cdc actions verbatim (the file
-        carries _change_type), blind-append adds as inserts, whole-file
-        removes as deletes with the file's PRIOR deletion vector masked
-        out (already-deleted rows are not re-emitted). DV remove+re-add
-        commits without cdc actions gate: under the CDF property,
-        delete_where/MERGE write cdc actions, so that shape only arises
-        on tables that enabled CDF after such DML — table_changes()
-        covers those."""
+        """readChangeFeed=true: the change pieces of commits (lo, hi]
+        as planned by ``DeltaProtocolTable._changes``, one executor-
+        readable slice per file of each piece — cdc files verbatim (the
+        file carries _change_type), inserted and deleted files with
+        their deletion vector masked, and for a changed vector the
+        newly deleted or restored positions only (shipped roaring-
+        encoded)."""
         _refuse_column_mapping(st)
         conf = st.metadata.get("configuration") or {}
         if conf.get("delta.enableChangeDataFeed") != "true":
@@ -258,105 +260,44 @@ class DeltaProtocolStreamReader(DataSourceStreamReader):
         schema = with_columns(st.schema, _CDF)
         types = simple_types(schema)
         order = [f.name for f in schema.fields]
-        try:
-            cur_adds = dict(self.t.state(lo).adds) if lo >= 0 else {}
-        except DeltaProtocolError:
-            cur_adds = {}
+        stamps: dict[int, str] = {}
         out: list[Slice] = []
-        for v in range(lo + 1, hi + 1):
-            actions = self.t._read_commit(v)
-            ts = self._commit_ts_iso(v)
-            lits = {"_commit_version": str(v), "_commit_timestamp": ts}
-            cdc_paths = [a["cdc"]["path"] for a in actions if "cdc" in a]
-            adds = [
-                a["add"]
-                for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            if cdc_paths:
-                for p in cdc_paths:
-                    out.append(
-                        Slice(
-                            os.path.join(
-                                self.t.path, urllib.parse.unquote(p)
-                            ),
-                            order,
-                            types,
-                            dict(lits),  # _change_type is IN the file
-                        )
+        for p in self.t._changes(lo, hi):
+            if p.version not in stamps:
+                stamps[p.version] = self._commit_ts_iso(p.version)
+            lits = {
+                "_commit_version": str(p.version),
+                "_commit_timestamp": stamps[p.version],
+            }
+            for a in p.files:
+                path = self.t._abs_data_path(a["path"])
+                if p.change == "cdc":
+                    out.append(Slice(path, order, types, lits))
+                    continue
+                dv = a.get("deletionVector")
+                keep = None if p.keep is None else p.keep[path]
+                out.append(
+                    Slice(
+                        path,
+                        order,
+                        types,
+                        {
+                            **_partition_values(a, parts),
+                            **lits,
+                            "_change_type": p.change,
+                        },
+                        drop=(
+                            (self.t._dv_blob(dv), dv.get("cardinality"))
+                            if dv
+                            else None
+                        ),
+                        keep=(
+                            None
+                            if keep is None
+                            else (encode_rbm_array(keep), len(keep))
+                        ),
                     )
-            else:
-                re_added = {a["path"] for a in adds}
-                for r in removes:
-                    if r["path"] in re_added:
-                        raise UnsupportedTableFeatureError(
-                            f"version {v} rewrites {r['path']} without "
-                            "cdc actions (CDF enabled mid-history?) — "
-                            "use DeltaProtocolTable.table_changes()"
-                        )
-                    prior = cur_adds.get(r["path"])
-                    if prior is None:
-                        raise DeltaProtocolError(
-                            f"version {v} removes unknown file "
-                            f"{r['path']!r}"
-                        )
-                    abs_p = os.path.join(
-                        self.t.path, urllib.parse.unquote(r["path"])
-                    )
-                    if not os.path.exists(abs_p):
-                        raise DeltaProtocolError(
-                            f"file {r['path']!r} of version {v} was "
-                            "vacuumed; change feed would lose rows"
-                        )
-                    dv = prior.get("deletionVector")
-                    out.append(
-                        Slice(
-                            abs_p,
-                            order,
-                            types,
-                            {
-                                **_partition_values(prior, parts),
-                                **lits,
-                                "_change_type": "delete",
-                            },
-                            drop=(
-                                (self.t._dv_blob(dv), dv.get("cardinality"))
-                                if dv
-                                else None
-                            ),
-                        )
-                    )
-                for a in adds:
-                    if a.get("deletionVector"):
-                        raise UnsupportedTableFeatureError(
-                            f"version {v} adds a deletion-vector file "
-                            "without cdc actions — use table_changes()"
-                        )
-                    out.append(
-                        Slice(
-                            os.path.join(
-                                self.t.path,
-                                urllib.parse.unquote(a["path"]),
-                            ),
-                            order,
-                            types,
-                            {
-                                **_partition_values(a, parts),
-                                **lits,
-                                "_change_type": "insert",
-                            },
-                        )
-                    )
-            for a in actions:  # roll the adds fold forward
-                if "add" in a:
-                    cur_adds[a["add"]["path"]] = a["add"]
-                elif "remove" in a:
-                    cur_adds.pop(a["remove"]["path"], None)
+                )
         return out
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:

@@ -64,12 +64,12 @@ import struct
 import time
 import uuid
 from collections.abc import Sequence
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from featureform_spark.sources.local_df import local_df
+from featureform_spark.sources.local_df import local_df, position_df
 from pyspark.sql import types as T
 
 from featureform_spark.sources.avro_codec import read_container, write_container
@@ -1129,6 +1129,34 @@ def _is_dv_file(df_: dict) -> bool:
     )
 
 
+class ChangePiece(NamedTuple):
+    """One piece of an Iceberg change feed, planned by
+    ``IcebergProtocolTable._changes``: the rows of the data files
+    ``entries`` that commit ``sid`` (``ordinal`` within the range)
+    inserted or deleted. ``deletes`` are delete entries applied as a
+    snapshot read applies them (sequence-scoped); ``keep`` and ``drop``
+    are {data file: sorted positions} to keep only and to leave out;
+    ``keep_keys`` are equality-delete entries a row must match (any of
+    them). An ``overwrite`` piece names only its commit and parent:
+    the Spark feed diffs the two snapshots."""
+
+    ordinal: int
+    sid: int
+    change: str  # 'insert' | 'delete' | 'overwrite'
+    entries: list = []
+    deletes: list = []
+    keep: dict | None = None
+    drop: dict | None = None
+    keep_keys: list | None = None
+    parent: int | None = None
+
+
+def _entry_key(df_: dict) -> tuple:
+    """A manifest entry's file identity: deletion vectors share one
+    puffin file at distinct offsets."""
+    return df_["file_path"], df_.get("content_offset")
+
+
 def _as_int_map(v: Any) -> dict[int, Any]:
     """Normalize an Iceberg int-keyed map decoded from Avro: either a
     list of {key, value} records (spec layout) or a str-keyed map."""
@@ -1497,6 +1525,56 @@ class IcebergProtocolTable:
             df_.get("record_count"),
             IcebergProtocolError,
         )
+
+    def _delete_positions(self, df_: dict) -> dict:
+        """{data file: deleted positions (uint64)} of one position-
+        delete entry, read on the driver: a v3 deletion vector or a
+        (file_path, pos) parquet file."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        if _is_dv_file(df_):
+            return {
+                self._resolve_path(df_["referenced_data_file"]):
+                self._dv_positions(df_)
+            }
+        dtbl = pq.read_table(
+            self._resolve_path(df_["file_path"]), columns=["file_path", "pos"]
+        )
+        fp = dtbl.column("file_path").to_numpy(zero_copy_only=False)
+        pos = dtbl.column("pos").to_numpy(zero_copy_only=False)
+        return {
+            self._resolve_path(str(p)): np.sort(pos[fp == p]).astype(np.uint64)
+            for p in np.unique(fp)
+        }
+
+    def _eq_columns(self, md: dict, df_: dict) -> list[str]:
+        """The columns an equality-delete file matches on (its
+        ``equality_ids``, by the current schema)."""
+        by_id = {f["id"]: f["name"] for f in self.schema(md)["fields"]}
+        eq_ids = df_.get("equality_ids") or []
+        if not eq_ids:
+            raise UnsupportedIcebergFeatureError(
+                "equality delete file without equality_ids"
+            )
+        try:
+            return [by_id[int(i)] for i in eq_ids]
+        except KeyError as exc:
+            raise UnsupportedIcebergFeatureError(
+                f"equality delete on unknown field id {exc}"
+            ) from None
+
+    def _eq_match(self, md: dict, df: DataFrame, e: dict) -> tuple:
+        """(key rows, join condition) of one equality-delete entry
+        against ``df``: null values match, as the spec requires."""
+        cols = self._eq_columns(md, e["data_file"])
+        drows = self.spark.read.parquet(
+            self._resolve_path(e["data_file"]["file_path"])
+        ).select(*[F.col(c).alias(f"__d_{c}") for c in cols])
+        cond = F.lit(True)
+        for c in cols:
+            cond = cond & df[c].eqNullSafe(drows[f"__d_{c}"])
+        return drows, cond
 
     def _identity_patch(
         self, md: dict, data_entries: list[dict]
@@ -1913,30 +1991,12 @@ class IcebergProtocolTable:
                 F.broadcast(applicable), ["__fp", "__pos"], "left_anti"
             )
         if eq_entries:
-            by_id = {f["id"]: f["name"] for f in self.schema(md)["fields"]}
             df = df.join(F.broadcast(seq_df), "__fp")
             for e in eq_entries:
-                df_ = e["data_file"]
-                eq_ids = df_.get("equality_ids") or []
-                if not eq_ids:
-                    raise UnsupportedIcebergFeatureError(
-                        "equality delete file without equality_ids"
-                    )
-                try:
-                    eq_cols = [by_id[int(i)] for i in eq_ids]
-                except KeyError as exc:
-                    raise UnsupportedIcebergFeatureError(
-                        f"equality delete on unknown field id {exc}"
-                    ) from None
-                del_seq = int(e.get("sequence_number") or 0)
-                drows = self.spark.read.parquet(
-                    self._resolve_path(df_["file_path"])
-                ).select(*[F.col(c).alias(f"__d_{c}") for c in eq_cols])
-                cond = F.lit(True)
-                for c in eq_cols:
-                    # spec: null values match in equality deletes
-                    cond = cond & df[c].eqNullSafe(drows[f"__d_{c}"])
-                cond = cond & (df["__dseq"] < F.lit(del_seq))
+                drows, cond = self._eq_match(md, df, e)
+                cond = cond & (
+                    df["__dseq"] < F.lit(int(e.get("sequence_number") or 0))
+                )
                 df = df.join(F.broadcast(drows), cond, "left_anti")
         if keep_pos:
             return df.select(*cols, "__fp", "__pos")
@@ -3556,6 +3616,110 @@ class IcebergProtocolTable:
         # the cursor predate (so never apply to) the appended files
         return self._scan(md, schema, in_entries, [])
 
+    def _changes(self, md: dict, snaps: list, start: int, end: int):
+        """The one Iceberg change-feed planner: walks the main-lineage
+        snapshots ``snaps[start..end]`` once and yields their
+        :class:`ChangePiece` s. ``changelog_scan`` runs the pieces as
+        Spark scans, the ``icebergprotocol`` source as slices.
+
+        Per commit: a replace (compaction) is no logical change; an
+        overwrite is one piece, its parent diffed against it. Otherwise
+        the added data files — the live set minus the parent's, since a
+        cherry-picked WAP publish keeps the staged snapshot's id on its
+        entries — are an insert piece. The commit's new position
+        deletes and deletion vectors are one delete piece keeping the
+        FRESH positions: the new ones minus every position the parent
+        had already deleted in that file (its vectors and parquet
+        position deletes, sequence-scoped), because a v3 vector folds
+        in what earlier deletes removed. New equality deletes are one
+        delete piece over the parent's live rows, less this commit's
+        fresh positions, that match any of the new key sets. Each
+        delete file is read once per walk."""
+        import numpy as np
+
+        read: dict[tuple, dict] = {}
+
+        def _positions(entries: list) -> list:
+            out = []
+            for e in entries:
+                df_ = e["data_file"]
+                if int(df_.get("content", 0)) != 1:
+                    continue
+                k = _entry_key(df_)
+                if k not in read:
+                    read[k] = self._delete_positions(df_)
+                out.append((int(e.get("sequence_number") or 0), read[k]))
+            return out
+
+        parent = None
+        for ordinal, idx in enumerate(range(start, end + 1)):
+            s = snaps[idx]
+            sid = int(s["snapshot-id"])
+            op = (s.get("summary") or {}).get("operation", "append")
+            if op in ("replace", "overwrite"):
+                if op == "overwrite":
+                    yield ChangePiece(
+                        ordinal, sid, op,
+                        parent=int(snaps[idx - 1]["snapshot-id"])
+                        if idx > 0 else None,
+                    )
+                parent = None
+                continue
+            if parent is None:
+                parent = (
+                    self._live_entries(snaps[idx - 1]) if idx > 0 else ([], [])
+                )
+            p_data, p_dels = parent
+            data, dels = parent = self._live_entries(s)
+            known = {_entry_key(e["data_file"]) for e in p_data + p_dels}
+            added = [e for e in data if _entry_key(e["data_file"]) not in known]
+            if added:
+                yield ChangePiece(ordinal, sid, "insert", added)
+            new_dels = [
+                e for e in dels if _entry_key(e["data_file"]) not in known
+            ]
+            live = {
+                self._resolve_path(e["data_file"]["file_path"]): e
+                for e in data
+            }
+            fresh: dict = {}
+            for _seq, by_file in _positions(new_dels):
+                for path, pos in by_file.items():
+                    if path in live:
+                        fresh.setdefault(path, []).append(pos)
+            if fresh:
+                gone: dict = {path: [] for path in fresh}
+                for del_seq, by_file in _positions(p_dels):
+                    for path, pos in by_file.items():
+                        if path in gone and del_seq >= int(
+                            live[path].get("sequence_number") or 0
+                        ):
+                            gone[path].append(pos)
+                fresh = {
+                    path: diff
+                    for path, arrs in sorted(fresh.items())
+                    if len(
+                        diff := np.setdiff1d(
+                            np.concatenate(arrs),
+                            np.concatenate(gone[path] or [arrs[0][:0]]),
+                        )
+                    )
+                }
+            if fresh:
+                yield ChangePiece(
+                    ordinal, sid, "delete", [live[p] for p in fresh],
+                    keep=fresh,
+                )
+            eq = [
+                e for e in new_dels
+                if int(e["data_file"].get("content", 0)) == 2
+            ]
+            if eq and p_data:
+                yield ChangePiece(
+                    ordinal, sid, "delete", p_data, p_dels,
+                    drop=fresh or None, keep_keys=eq,
+                )
+
     def changelog_scan(
         self,
         from_snapshot_id: int | None = None,
@@ -3567,24 +3731,19 @@ class IcebergProtocolTable:
         ``_change_ordinal`` (0-based position of the commit within the
         scanned range), ``_commit_snapshot_id``.
 
-        Every row is read through :meth:`_scan`, so it carries what
-        ``snapshot()`` shows for it (``initial-default`` values
-        included). Cost model per snapshot kind: append → added files
-        scanned directly (no shuffle); delete → newly-deleted rows
-        derived from the delete files themselves — the referenced
-        files' scan semi-joins the fresh positions of the commit's
-        position deletes and v3 DVs (a DV diffed against its parent
-        vector), equality deletes semi-join the PARENT snapshot so
-        already-deleted rows never re-emit; replace (compaction)
-        contributes nothing (no logical change); overwrite emits
-        multiset-exact delete+insert via ``exceptAll`` of the two
-        adjacent snapshots (the one genuinely two-scan-priced
-        shape)."""
+        The commits are planned by :meth:`_changes`; each piece runs as
+        one :meth:`_scan` of its data files (so every row carries what
+        ``snapshot()`` shows for it, ``initial-default`` values
+        included), semi-joined to its fresh positions or anti-joined to
+        the positions it leaves out, and for an equality delete
+        semi-joined to the new key rows. An overwrite emits multiset-
+        exact delete+insert via ``exceptAll`` of the two adjacent
+        snapshots (the one genuinely two-scan-priced shape)."""
         md = self.metadata()
         # main ancestry only: the raw snapshots list carries WAP-staged
         # and branch snapshots — emitting them would report changes
-        # that never reached main, and ids[idx-1] would pick a staged
-        # snapshot as a DV-diff parent (ADVICE r6)
+        # that never reached main, and a staged snapshot would become
+        # a parent
         snaps = self.main_lineage(md)
         schema = self.spark_schema(md)
         cols = [f.name for f in schema.fields]
@@ -3624,152 +3783,52 @@ class IcebergProtocolTable:
                     f"unknown to snapshot {to_snapshot_id}"
                 )
             end = ids.index(to_snapshot_id)
-        if end < start or not snaps:
-            return self.spark.createDataFrame([], out_schema)
 
-        def _tag(df: DataFrame, ct: str, ordinal: int, sid: int):
+        def _tag(df: DataFrame, ct: str, p: ChangePiece):
             return (
                 df.select(*cols)
                 .withColumn("_change_type", F.lit(ct))
-                .withColumn("_change_ordinal", F.lit(ordinal))
-                .withColumn("_commit_snapshot_id", F.lit(sid))
+                .withColumn("_change_ordinal", F.lit(p.ordinal))
+                .withColumn("_commit_snapshot_id", F.lit(p.sid))
             )
 
         pieces: list[DataFrame] = []
-        live_memo: dict[int, tuple] = {}
-
-        def _live(snap: dict) -> tuple:
-            k = int(snap["snapshot-id"])
-            if k not in live_memo:
-                live_memo[k] = self._live_entries(snap)
-            return live_memo[k]
-
-        for ordinal, idx in enumerate(range(start, end + 1)):
-            s = snaps[idx]
-            sid = int(s["snapshot-id"])
-            op = (s.get("summary") or {}).get("operation", "append")
-            if op == "replace":
-                continue  # compaction: no logical change
-            parent_id = ids[idx - 1] if idx > 0 else None
-            if op == "overwrite":
-                cur = self.snapshot(snapshot_id=sid)
-                if parent_id is not None:
-                    par = self.snapshot(snapshot_id=parent_id)
-                    pieces.append(
-                        _tag(par.exceptAll(cur), "delete", ordinal, sid)
-                    )
-                    pieces.append(
-                        _tag(cur.exceptAll(par), "insert", ordinal, sid)
-                    )
-                else:
-                    pieces.append(_tag(cur, "insert", ordinal, sid))
+        for p in self._changes(md, snaps, start, end):
+            if p.change == "overwrite":
+                cur = self.snapshot(snapshot_id=p.sid)
+                if p.parent is None:
+                    pieces.append(_tag(cur, "insert", p))
+                    continue
+                par = self.snapshot(snapshot_id=p.parent)
+                pieces.append(_tag(par.exceptAll(cur), "delete", p))
+                pieces.append(_tag(cur.exceptAll(par), "insert", p))
                 continue
-            data_entries, delete_entries = _live(s)
-            # added files = live set minus the lineage parent's live
-            # set, NOT entries stamped snapshot_id == sid: cherry-pick
-            # publish re-applies staged manifests verbatim, so a
-            # published commit's entries still carry the STAGED
-            # snapshot's id
-            parent_files: set[str] = set()
-            parent_dels: list[dict] = []
-            if parent_id is not None:
-                p_entries, parent_dels = _live(snaps[idx - 1])
-                parent_files = {
-                    e["data_file"]["file_path"] for e in p_entries
-                }
-            added_data = [
-                e
-                for e in data_entries
-                if e["data_file"]["file_path"] not in parent_files
-            ]
-            if added_data:
-                pieces.append(
-                    _tag(
-                        self._scan(md, schema, added_data, []),
-                        "insert",
-                        ordinal,
-                        sid,
-                    )
-                )
-            added_del = [
-                e
-                for e in delete_entries
-                if int(e.get("snapshot_id") or -1) == sid
-            ]
-            fresh = self._position_frame(added_del)
-            if fresh is not None:
-                # a v3 DV replaces the vector its parent carried for
-                # the same file: only the difference is fresh
-                parent_dv = self._position_frame(
-                    [e for e in parent_dels if _is_dv_file(e["data_file"])]
-                )
-                if parent_dv is not None:
-                    fresh = fresh.join(
-                        F.broadcast(parent_dv.select("path", "pos")),
-                        on=["path", "pos"],
-                        how="left_anti",
-                    )
-                fresh = fresh.select(
-                    F.col("path").alias("__fp"), F.col("pos").alias("__pos")
-                )
-                refs = {
-                    r["__fp"]
-                    for r in fresh.select("__fp").distinct().collect()
-                }
-                ref_entries = [
-                    e
-                    for e in data_entries
-                    if self._resolve_path(e["data_file"]["file_path"])
-                    in refs
-                ]
-                pieces.append(
-                    _tag(
-                        self._scan(
-                            md, schema, ref_entries, [], keep_pos=True
-                        ).join(
-                            F.broadcast(fresh),
-                            on=["__fp", "__pos"],
-                            how="left_semi",
+            df = self._scan(
+                md, schema, p.entries, p.deletes,
+                keep_pos=bool(p.keep or p.drop),
+            )
+            for positions, how in ((p.keep, "left_semi"), (p.drop, "left_anti")):
+                if positions:
+                    df = df.join(
+                        F.broadcast(
+                            position_df(self.spark, positions, "__fp", "__pos")
                         ),
-                        "delete",
-                        ordinal,
-                        sid,
+                        ["__fp", "__pos"],
+                        how,
                     )
-                )
-            eq_entries = [
-                e
-                for e in added_del
-                if int(e["data_file"].get("content", 0)) == 2
-            ]
-            if eq_entries and parent_id is not None:
-                by_id = {
-                    f["id"]: f["name"]
-                    for f in self.schema(md)["fields"]
-                }
-                par = self.snapshot(snapshot_id=parent_id)
-                for e in eq_entries:
-                    eq_ids = e["data_file"].get("equality_ids") or []
-                    eq_cols = [by_id[int(i)] for i in eq_ids]
-                    drows = self.spark.read.parquet(
-                        self._resolve_path(e["data_file"]["file_path"])
-                    ).select(
-                        *[F.col(c).alias(f"__d_{c}") for c in eq_cols]
-                    )
-                    cond = F.lit(True)
-                    for c in eq_cols:
-                        cond = cond & par[c].eqNullSafe(
-                            drows[f"__d_{c}"]
-                        )
-                    pieces.append(
-                        _tag(
-                            par.join(
-                                F.broadcast(drows), cond, "left_semi"
-                            ),
-                            "delete",
-                            ordinal,
-                            sid,
-                        )
-                    )
+            if p.keep_keys:
+                # rows matching ANY key set: each set takes its matches
+                # from the rows no earlier set matched
+                hits, rest = [], df
+                for e in p.keep_keys:
+                    drows, cond = self._eq_match(md, rest, e)
+                    hits.append(rest.join(F.broadcast(drows), cond, "left_semi"))
+                    if len(hits) < len(p.keep_keys):
+                        rest = rest.join(F.broadcast(drows), cond, "left_anti")
+                df = hits[0]
+                for h in hits[1:]:
+                    df = df.unionByName(h)
+            pieces.append(_tag(df, p.change, p))
         if not pieces:
             return self.spark.createDataFrame([], out_schema)
         out = pieces[0]

@@ -34,8 +34,15 @@ Python Data Source API:
   name-mapped and metadata-partitioned tables (UniForm mirrors) gate
   to ``IcebergProtocolTable.snapshot()``.
 
+- **Change feed** (``readChangeFeed=true``, streaming, or batch over
+  ``startingSnapshotId``/``endingSnapshotId``): the snapshots are
+  planned by ``IcebergProtocolTable._changes``, the planner
+  ``changelog_scan`` runs too, and each piece becomes one slice per
+  data file. Overwrite snapshots gate to ``changelog_scan``.
+
 Options: ``path`` (table root), ``startingSnapshotOrdinal`` (int or
-``earliest`` [default] / ``latest``), ``skipChangeSnapshots``.
+``earliest`` [default] / ``latest``), ``skipChangeSnapshots``,
+``readChangeFeed``.
 """
 
 from __future__ import annotations
@@ -58,7 +65,6 @@ from featureform_spark.sources.iceberg_protocol import (
     IcebergProtocolError,
     IcebergProtocolTable,
     UnsupportedIcebergFeatureError,
-    _is_dv_file,
 )
 from featureform_spark.sources.slice_scan import (
     Slice,
@@ -100,34 +106,9 @@ def _defaults(t: IcebergProtocolTable, schema, entries: list) -> dict:
     }
 
 
-def _position_deletes(t: IcebergProtocolTable, df_: dict) -> dict:
-    """{data file: deleted positions} of one position-delete entry:
-    a v3 deletion vector or a (file_path, pos) parquet file."""
-    if _is_dv_file(df_):
-        pos = t._dv_positions(df_)
-        return {t._resolve_path(df_["referenced_data_file"]): pos}
-    dtbl = pq.read_table(
-        t._resolve_path(df_["file_path"]), columns=["file_path", "pos"]
-    )
-    fp = dtbl.column("file_path").to_numpy(zero_copy_only=False)
-    pos = dtbl.column("pos").to_numpy(zero_copy_only=False).astype(np.uint64)
-    return {t._resolve_path(str(p)): pos[fp == p] for p in np.unique(fp)}
-
-
 def _eq_keys(t: IcebergProtocolTable, md: dict, df_: dict) -> tuple:
     """(columns, {key tuple}) of one equality-delete file."""
-    by_id = {f["id"]: f["name"] for f in t.schema(md)["fields"]}
-    eq_ids = df_.get("equality_ids") or []
-    if not eq_ids:
-        raise UnsupportedIcebergFeatureError(
-            "equality delete file without equality_ids"
-        )
-    try:
-        cols = [by_id[int(i)] for i in eq_ids]
-    except KeyError as exc:
-        raise UnsupportedIcebergFeatureError(
-            f"equality delete on unknown field id {exc}"
-        ) from None
+    cols = t._eq_columns(md, df_)
     det = pq.read_table(t._resolve_path(df_["file_path"]), columns=cols)
     return cols, set(zip(*[det.column(c).to_pylist() for c in cols]))
 
@@ -143,53 +124,81 @@ def _positions(arrays: list | None) -> tuple | None:
     return encode_rbm_array(merged), len(merged)
 
 
-def snapshot_slices(
-    t: IcebergProtocolTable, snap: dict, md: dict | None = None
+def _slices(
+    t: IcebergProtocolTable,
+    md: dict,
+    entries: list,
+    deletes: list = (),
+    *,
+    extra: Sequence = (),
+    constants: dict | None = None,
+    keep: dict | None = None,
+    drop: dict | None = None,
+    keep_keys: list | None = None,
 ) -> list[Slice]:
-    """One slice per live data file of ``snap``, in path order, with
-    the deletes that apply to it scoped by sequence number as
-    ``IcebergProtocolTable._scan`` scopes them: position
-    deletes and deletion vectors at ``del_seq >= data_seq``, equality
-    deletes at ``data_seq < del_seq``. The batch source's input
-    partitions and the Flight scan's input."""
-    md = md or t.metadata()
+    """One slice per data file of ``entries``, in path order, with
+    ``deletes`` scoped by sequence number as
+    ``IcebergProtocolTable._scan`` scopes them: position deletes and
+    deletion vectors at ``del_seq >= data_seq``, equality deletes at
+    ``data_seq < del_seq``. The rest is a change piece's: ``keep`` and
+    ``drop`` ({file: positions}) keep only and leave out rows,
+    ``keep_keys`` (equality-delete entries) keep rows matching any of
+    them, and ``extra`` columns take their values from ``constants``."""
     schema = t.spark_schema(md)
-    order = [f.name for f in schema.fields]
-    types = simple_types(schema)
-    data_entries, delete_entries = t._live_entries(snap)
-    _gate(t, md, data_entries)
+    out_schema = with_columns(schema, extra)
+    order = [f.name for f in out_schema.fields]
+    types = simple_types(out_schema)
     seq = {
         t._resolve_path(e["data_file"]["file_path"]): int(
             e.get("sequence_number") or 0
         )
-        for e in data_entries
+        for e in entries
     }
-    drops: dict[str, list] = {}
+    drops = {path: [pos] for path, pos in (drop or {}).items()}
     eq: list[tuple[int, list, set]] = []
-    for e in delete_entries:
+    for e in deletes:
         del_seq = int(e.get("sequence_number") or 0)
         df_ = e["data_file"]
         if int(df_.get("content", 0)) == 2:
             eq.append((del_seq, *_eq_keys(t, md, df_)))
             continue
-        for path, pos in _position_deletes(t, df_).items():
+        for path, pos in t._delete_positions(df_).items():
             if path in seq and del_seq >= seq[path]:
                 drops.setdefault(path, []).append(pos)
-    defaults = _defaults(t, schema, data_entries)
+    defaults = _defaults(t, schema, entries)
+    any_keys = (
+        None
+        if keep_keys is None
+        else [_eq_keys(t, md, e["data_file"]) for e in keep_keys]
+    )
     return [
         Slice(
             path,
             order,
             types,
-            defaults.get(path),
+            {**defaults.get(path, {}), **(constants or {})},
             drop=_positions(drops.get(path)),
+            keep=None if keep is None else _positions([keep[path]]),
             drop_keys=[
                 (cols, keys) for del_seq, cols, keys in eq
                 if seq[path] < del_seq
             ],
+            keep_keys=any_keys,
         )
         for path in sorted(seq)
     ]
+
+
+def snapshot_slices(
+    t: IcebergProtocolTable, snap: dict, md: dict | None = None
+) -> list[Slice]:
+    """One slice per live data file of ``snap``, in path order, with
+    the deletes that apply to it: the batch source's input partitions
+    and the Flight scan's input."""
+    md = md or t.metadata()
+    data_entries, delete_entries = t._live_entries(snap)
+    _gate(t, md, data_entries)
+    return _slices(t, md, data_entries, delete_entries)
 
 
 class IcebergProtocolBatchReader(DataSourceReader):
@@ -298,179 +307,33 @@ class IcebergProtocolStreamReader(DataSourceStreamReader):
     def _cdf_partitions(
         self, md: dict, snaps: list, lo: int, hi: int
     ) -> Sequence[InputPartition]:
-        """readChangeFeed=true: per-snapshot change slices, executor-
-        readable — appends as insert slices, delete snapshots replayed
-        by SELECTING the freshly-deleted row positions from the
-        referenced data files (parquet position-delete rows read
-        sessionless; v3 DV diffs vs the parent vector; positions ship
-        roaring-encoded). Equality deletes replay sessionless too:
-        parent-live rows matching the commit's key tuples, one slice
-        per parent file carrying all key sets (match ANY, rows already
-        deleted never re-emit). Overwrites still gate to
-        changelog_scan (exceptAll needs a join)."""
-        schema = self.t.spark_schema(md)
-        cdf = with_columns(schema, _CDF)
-        order = [f.name for f in cdf.fields]
-        types = simple_types(cdf)
+        """readChangeFeed=true: the change pieces of snapshots (lo, hi]
+        as planned by ``IcebergProtocolTable._changes``, one executor-
+        readable slice per data file of each piece — inserts read whole,
+        position and vector deletes keep their fresh positions (shipped
+        roaring-encoded), equality deletes keep the parent-live rows
+        matching any new key set. Overwrites gate to changelog_scan
+        (its exceptAll needs a join)."""
         out: list[Slice] = []
-        # carry each snapshot's live set into the next iteration as its
-        # parent — without it every snapshot's manifests were read up
-        # to 3x (self + next's parent_files + next's parent_dv),
-        # O(3N) manifest IO per micro-batch
-        prev_live: tuple[list, list] | None = None
-        for ordinal, idx in enumerate(range(lo + 1, hi + 1)):
-            s = snaps[idx]
-            sid = int(s["snapshot-id"])
-            op = (s.get("summary") or {}).get("operation", "append")
-            if op == "replace":
-                # compaction: no logical change to emit, but the NEXT
-                # snapshot's parent is this one — recompute lazily
-                prev_live = None
-                continue
-            if op == "overwrite":
+        for p in self.t._changes(md, snaps, lo + 1, hi):
+            if p.change == "overwrite":
                 raise UnsupportedIcebergFeatureError(
-                    f"snapshot {sid} is an overwrite — consume "
+                    f"snapshot {p.sid} is an overwrite — consume "
                     "IcebergProtocolTable.changelog_scan() for "
                     "overwrite change rows"
                 )
-            data_entries, delete_entries = self.t._live_entries(s)
-            if idx > 0 and prev_live is None:
-                prev_live = self.t._live_entries(snaps[idx - 1])
-            parent_entries, parent_deletes = prev_live or ([], [])
-            prev_live = (data_entries, delete_entries)
-            defaults = _defaults(
-                self.t, schema, parent_entries + data_entries
+            out += _slices(
+                self.t, md, p.entries, p.deletes,
+                extra=_CDF,
+                constants={
+                    "_change_type": p.change,
+                    "_change_ordinal": p.ordinal,
+                    "_commit_snapshot_id": p.sid,
+                },
+                keep=p.keep,
+                drop=p.drop,
+                keep_keys=p.keep_keys,
             )
-            lits = {"_change_ordinal": ordinal, "_commit_snapshot_id": sid}
-
-            # added files = live set minus the lineage parent's live
-            # set (cherry-picked WAP publishes keep the STAGED
-            # snapshot's id on their entries, so a sid-stamp filter
-            # would drop them)
-            parent_files = {
-                pe["data_file"]["file_path"] for pe in parent_entries
-            }
-            for e in data_entries:
-                if e["data_file"]["file_path"] in parent_files:
-                    continue
-                path = self.t._resolve_path(e["data_file"]["file_path"])
-                out.append(
-                    Slice(
-                        path,
-                        order,
-                        types,
-                        {
-                            **defaults.get(path, {}),
-                            **lits,
-                            "_change_type": "insert",
-                        },
-                    )
-                )
-            added_del = [
-                e
-                for e in delete_entries
-                if int(e.get("snapshot_id") or -1) == sid
-            ]
-            if not added_del:
-                continue
-            parent_dv: dict[str, np.ndarray] = {}
-            for e in parent_deletes:
-                df_ = e["data_file"]
-                if int(df_.get("content", 0)) == 1 and _is_dv_file(df_):
-                    parent_dv.update(_position_deletes(self.t, df_))
-            # delete replay: SELECT the freshly deleted positions (a v3
-            # vector's diff against the parent's vector)
-            fresh: dict[str, list[np.ndarray]] = {}
-            eq_entries: list[dict] = []
-            for e in added_del:
-                df_ = e["data_file"]
-                if int(df_.get("content", 0)) == 2:
-                    eq_entries.append(e)
-                    continue
-                for ref, pos in _position_deletes(self.t, df_).items():
-                    if _is_dv_file(df_):
-                        pos = np.setdiff1d(
-                            pos,
-                            parent_dv.get(ref, np.empty(0, dtype=np.uint64)),
-                        )
-                    fresh.setdefault(ref, []).append(pos)
-            for ref in sorted(fresh):
-                keep = _positions(fresh[ref])
-                if keep is not None:
-                    out.append(
-                        Slice(
-                            ref,
-                            order,
-                            types,
-                            {
-                                **defaults.get(ref, {}),
-                                **lits,
-                                "_change_type": "delete",
-                            },
-                            keep=keep,
-                        )
-                    )
-            if not eq_entries:
-                continue
-            # equality-delete replay (the streaming-upsert shape): the
-            # deleted rows are PARENT-live rows matching the new delete
-            # keys. Per parent file, drop what the parent already
-            # deleted (its deletion vectors and position deletes, its
-            # equality deletes newer than the file) and this commit's
-            # own positional deletes (those rows emit above), then keep
-            # rows matching ANY new key set: a row deleted by two
-            # sibling files emits once, each parent file scans once.
-            # Key sets are cardinality-scale and ride the partitions.
-            excl: dict[str, list] = {
-                ref: [arr] for ref, arr in parent_dv.items()
-            }
-            for ref, arrs in fresh.items():
-                excl.setdefault(ref, []).extend(arrs)
-            parent_eq: list[tuple[int, list, set]] = []
-            for pe in parent_deletes:
-                pdf_ = pe["data_file"]
-                c = int(pdf_.get("content", 0))
-                if c == 1 and not _is_dv_file(pdf_):
-                    for ref, pos in _position_deletes(self.t, pdf_).items():
-                        excl.setdefault(ref, []).append(pos)
-                elif c == 2:
-                    parent_eq.append(
-                        (
-                            int(pe.get("sequence_number") or 0),
-                            *_eq_keys(self.t, md, pdf_),
-                        )
-                    )
-            eq_any = [
-                (cols, keys)
-                for cols, keys in (
-                    _eq_keys(self.t, md, e["data_file"]) for e in eq_entries
-                )
-                if keys
-            ]
-            if not eq_any:
-                continue
-            for pe in parent_entries:
-                ref = self.t._resolve_path(pe["data_file"]["file_path"])
-                dseq = int(pe.get("sequence_number") or 0)
-                out.append(
-                    Slice(
-                        ref,
-                        order,
-                        types,
-                        {
-                            **defaults.get(ref, {}),
-                            **lits,
-                            "_change_type": "delete",
-                        },
-                        drop=_positions(excl.get(ref)),
-                        drop_keys=[
-                            (cols, keys)
-                            for sq, cols, keys in parent_eq
-                            if sq > dseq
-                        ],
-                        keep_keys=eq_any,
-                    )
-                )
         return out
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:

@@ -65,3 +65,23 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return spark.createDataFrame(pdf, schema)
     except Exception:
         return spark.createDataFrame(rows, schema)
+
+
+def position_df(
+    spark: SparkSession, positions: dict, file_col: str, pos_col: str
+) -> DataFrame:
+    """(data file, row position) rows of ``positions`` — {absolute
+    path: integer array}, e.g. decoded deletion vectors — as one
+    JVM-side frame through Arrow, cardinality-scale."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.concat(
+            [
+                pd.DataFrame({file_col: p, pos_col: pos.astype("int64")})
+                for p, pos in sorted(positions.items())
+            ],
+            ignore_index=True,
+        ),
+        f"{file_col} string, {pos_col} long",
+    )

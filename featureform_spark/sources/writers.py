@@ -117,48 +117,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_catalog_table(df: DataFrame, table: str, table_format: str = "delta") -> None:
-    """S11/S12: createOrReplace a Delta/Iceberg catalog table.
-
-    Requires the delta-spark / iceberg-spark-runtime connector on the
-    classpath; raises a clear error when absent (this test container
-    ships neither — the versioned-parquet path above is the tested
-    equivalent, same createOrReplace semantics).
-    """
-    try:
-        df.writeTo(table).using(table_format).createOrReplace()
-    except Exception as e:  # connector missing → actionable message
-        raise RuntimeError(
-            f"writing {table_format} table {table!r} requires the "
-            f"{table_format} Spark connector on the classpath"
-        ) from e
-
-
-def write_iceberg(
-    df: DataFrame,
-    path: str,
-    mode: str = "append",
-    partition_by: list | None = None,
-):
-    """S11 without the vendor jar: sink into a REAL Apache Iceberg v2
-    table via the in-repo table-format implementation
-    (sources/iceberg_protocol.py) — format-v2 metadata JSON + Avro
-    manifest lists/manifests any Iceberg engine can read. ``mode``:
-    append | overwrite | errorifexists. Returns the snapshot id."""
-    from featureform_spark.sources.iceberg_protocol import (
-        IcebergProtocolTable,
-    )
-
-    t = IcebergProtocolTable(df.sparkSession, path)
-    if not t.exists():
-        return t.create(df, partition_by=partition_by)
-    if mode == "append":
-        return t.append(df)
-    if mode == "overwrite":
-        return t.overwrite(df)
-    raise ValueError(f"iceberg table already exists at {path}")
-
-
 def write_delta(
     df: DataFrame, path: str, mode: str = "append", properties: dict | None = None
 ):
@@ -177,30 +135,3 @@ def write_delta(
     if mode == "overwrite":
         return t.overwrite(df)
     raise ValueError(f"delta table already exists at {path}")
-
-
-def write_kafka_topic(
-    df: DataFrame, topic: str, bootstrap_servers: str, checkpoint: str | None = None
-):
-    """S8/ST2: write a (streaming or batch) DataFrame to a Kafka topic.
-
-    Expects ``key``/``value`` binary columns per Spark's Kafka contract;
-    needs the spark-sql-kafka connector + a broker (neither is in this
-    container — the file-source streaming path in streaming/ is the
-    tested equivalent).
-    """
-    if df.isStreaming:
-        w = (
-            df.writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("topic", topic)
-        )
-        if checkpoint:
-            w = w.option("checkpointLocation", checkpoint)
-        return w.start()
-    return (
-        df.write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .save()
-    )

@@ -3,7 +3,7 @@
 
 import json
 
-from bench import compact_line
+from bench import comparable_prior, compact_line
 
 
 def _mk(n):
@@ -64,3 +64,15 @@ def test_mass_errors_still_fit_budget():
     assert len(line) <= 1900, len(line)
     doc = json.loads(line)
     assert doc.get("errors_omitted", 0) + len(doc.get("errors", {})) == 40
+
+
+def test_retime_prior_needs_same_scale_and_core_count():
+    """Per-query times of a prior run drive the retime rule only when
+    it was taken at the same scale factor and core count; a prior that
+    does not record its core count is not comparable."""
+    prior = {"sf": 0.1, "cpus": 4, "queries": {"q": 1.0}}
+    assert comparable_prior(prior, "/data/sf0.1", 4) == {"q": 1.0}
+    assert comparable_prior(prior, "/data/sf0.1", 32) == {}
+    assert comparable_prior(prior, "/data/sf0.01", 4) == {}
+    legacy = {"sf": 0.1, "queries": {"q": 1.0}}
+    assert comparable_prior(legacy, "/data/sf0.1", 4) == {}

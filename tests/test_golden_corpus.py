@@ -496,6 +496,118 @@ def test_golden_delta_deletion_vectors_foreign_layout(spark, tmp_path):
     assert rows == [(10, "a"), (12, "c"), (21, "f")]
 
 
+def _inline_dv(positions):
+    """An inline ('i') deletion-vector descriptor: the z85 text of the
+    roaring array, padded to the 4-byte z85 block."""
+    from featureform_spark.sources.dv_bitmap import (
+        encode_rbm_array,
+        z85_encode,
+    )
+
+    blob = encode_rbm_array(positions)
+    blob += b"\x00" * ((-len(blob)) % 4)
+    return {
+        "storageType": "i",
+        "pathOrInlineDv": z85_encode(blob),
+        "sizeInBytes": len(blob),
+        "cardinality": len(positions),
+    }
+
+
+def _dv_table(root):
+    """Version 0 of a DV table: one 4-row file whose vector deletes
+    position 0. Returns (protocol, metaData, add) of that commit."""
+    size = _pq_write(
+        os.path.join(root, "d0.parquet"),
+        {"id": [10, 11, 12, 13], "s": ["a", "b", "c", "d"]},
+    )
+    head = [
+        {"protocol": {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": ["deletionVectors", "v2Checkpoint"],
+            "writerFeatures": ["deletionVectors", "v2Checkpoint"],
+        }},
+        {"metaData": {
+            "id": str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": SCHEMA_STR,
+            "partitionColumns": [],
+            "configuration": {"delta.enableDeletionVectors": "true"},
+        }},
+    ]
+    add = {
+        "path": "d0.parquet",
+        "partitionValues": {},
+        "size": size,
+        "modificationTime": 1,
+        "dataChange": True,
+    }
+    _commit(
+        os.path.join(root, "_delta_log"),
+        0,
+        head + [{"add": {**add, "deletionVector": _inline_dv([0])}}],
+    )
+    return head, add
+
+
+def test_golden_delta_dv_readd_listed_before_its_remove(spark, tmp_path):
+    """A commit may list the re-add of a file with its new deletion
+    vector BEFORE the remove of the old one: reconciliation keys a
+    logical file by (path, DV id), so the file stays live under the
+    new vector whatever the action order."""
+    root = str(tmp_path / "golden_dv_order")
+    _head, add = _dv_table(root)
+    _commit(
+        os.path.join(root, "_delta_log"),
+        1,
+        [
+            {"add": {**add, "deletionVector": _inline_dv([0, 1])}},
+            {"remove": {
+                "path": "d0.parquet",
+                "deletionTimestamp": 2,
+                "dataChange": True,
+                "deletionVector": _inline_dv([0]),
+            }},
+        ],
+    )
+    t = DeltaProtocolTable(spark, root)
+    assert t.snapshot().count() == 2
+    assert sorted(r["id"] for r in t.snapshot().collect()) == [12, 13]
+
+
+def test_golden_delta_checkpoint_tombstone_after_live_add(spark, tmp_path):
+    """A v2 JSON checkpoint whose tombstone row for (path, old DV)
+    follows the live add of (path, new DV): checkpoint removes are
+    tombstones and never drop a live file."""
+    root = str(tmp_path / "golden_dv_tombstone")
+    log = os.path.join(root, "_delta_log")
+    head, add = _dv_table(root)
+    new = {**add, "deletionVector": _inline_dv([0, 1])}
+    old = {
+        "path": "d0.parquet",
+        "deletionTimestamp": 2,
+        "dataChange": True,
+        "deletionVector": _inline_dv([0]),
+    }
+    _commit(log, 1, [{"remove": old}, {"add": new}])
+    with open(
+        os.path.join(log, f"{1:020d}.checkpoint.{uuid.uuid4()}.json"), "w"
+    ) as f:
+        for a in [
+            {"checkpointMetadata": {"version": 1}},
+            *head,
+            {"add": {**new, "dataChange": False}},
+            {"remove": {**old, "dataChange": False}},
+        ]:
+            f.write(json.dumps(a) + "\n")
+    with open(os.path.join(log, "_last_checkpoint"), "w") as f:
+        json.dump({"version": 1, "size": 5}, f)
+    t = DeltaProtocolTable(spark, root)
+    assert t.snapshot().count() == 2
+    assert sorted(r["id"] for r in t.snapshot().collect()) == [12, 13]
+
+
 # --------------------------------------------------------- iceberg
 
 
