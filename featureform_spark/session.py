@@ -32,6 +32,12 @@ _DEFAULTS = {
     # and every time function (unix_micros, window ranges) accepts it
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.ui.enabled": "false",
+    # Python workers (applyInPandas closures, UDFs) import this package:
+    # point them at the directory holding it, whatever the caller's
+    # working directory or PYTHONPATH
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
     # pyspark 4.1 records a call site for every Column-API call: ~5
     # extra py4j round trips, a Python stack walk and a retried
     # `import IPython` each. A Delta MERGE plan makes ~600 such calls.

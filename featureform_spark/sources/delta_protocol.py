@@ -199,6 +199,33 @@ def _legacy_reader_features(version: int) -> set[str]:
     return {"columnMapping"} if version >= 2 else set()
 
 
+def _feature_upgrade(proto: dict, need: set[str]) -> dict | None:
+    """The protocol action that moves a table to (3, 7) with the
+    reader-writer features ``need``; None when it lists them all. Every
+    feature the old minReader/minWriterVersion IMPLIED is listed
+    explicitly, or external engines silently stop enforcing them (e.g.
+    a v5 table's checkConstraints / CDF)."""
+    feats = set(proto.get("readerFeatures") or [])
+    if not need - feats:
+        return None
+    old_reader = int(proto.get("minReaderVersion", 1))
+    old_writer = int(proto.get("minWriterVersion", 1))
+    return {
+        "protocol": {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": sorted(
+                feats | _legacy_reader_features(old_reader) | need
+            ),
+            "writerFeatures": sorted(
+                set(proto.get("writerFeatures") or [])
+                | _legacy_writer_features(old_writer)
+                | need
+            ),
+        }
+    }
+
+
 class DeltaProtocolError(Exception):
     pass
 
@@ -1355,34 +1382,13 @@ class DeltaProtocolTable:
         field["type"] = new_type
         meta = dict(st.metadata)
         meta["schemaString"] = json.dumps(sj)
-        actions: list[dict] = []
-        proto = st.protocol or {}
-        feats = set(proto.get("readerFeatures") or [])
         # a widen to timestamp_ntz also introduces the NTZ type itself
-        need = {"typeWidening"} | (
-            {"timestampNtz"} if new_type == "timestamp_ntz" else set()
+        upgrade = _feature_upgrade(
+            st.protocol or {},
+            {"typeWidening"}
+            | ({"timestampNtz"} if new_type == "timestamp_ntz" else set()),
         )
-        if need - feats:
-            old_reader = int(proto.get("minReaderVersion", 1))
-            old_writer = int(proto.get("minWriterVersion", 1))
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(
-                            feats
-                            | _legacy_reader_features(old_reader)
-                            | need
-                        ),
-                        "writerFeatures": sorted(
-                            set(proto.get("writerFeatures") or [])
-                            | _legacy_writer_features(old_writer)
-                            | need
-                        ),
-                    }
-                }
-            )
+        actions = [upgrade] if upgrade else []
         actions.append({"metaData": meta})
         v = st.version + 1
         self._commit(v, actions, "CHANGE COLUMN")
@@ -1523,8 +1529,25 @@ class DeltaProtocolTable:
         array, e.g. one decoded deletion vector), JVM-side."""
         return position_df(self.spark, positions, "__dv_file", "__dv_pos")
 
+    def _deleted_frame(
+        self, st: _State, paths: list[str]
+    ) -> DataFrame | None:
+        """The :meth:`_position_frame` of the deletion vectors of
+        ``paths``' files; None when none has one."""
+        path_set = set(paths)
+        deleted = {}
+        for rel, a in st.adds.items():
+            abs_p = self._abs_data_path(rel)
+            if a.get("deletionVector") and abs_p in path_set:
+                deleted[abs_p] = self._dv_positions(a["deletionVector"])
+        return self._position_frame(deleted) if deleted else None
+
     def _read_files(
-        self, st: _State, paths: list[str], keep_pos: bool = False
+        self,
+        st: _State,
+        paths: list[str],
+        keep_pos: bool = False,
+        deleted: DataFrame | None = None,
     ) -> DataFrame:
         """The one Spark scan of a table's data files: every Spark-side
         reader of rows — snapshots, MERGE discovery and rewrite,
@@ -1539,22 +1562,17 @@ class DeltaProtocolTable:
 
         ``keep_pos`` keeps ``__dv_file``/``__dv_pos`` (absolute file
         path + ORIGINAL row index, i.e. pre-DV position) in the output
-        — what row-id computation and DELETE need."""
-        path_set = set(paths)
-        deleted = {}
-        for rel, a in st.adds.items():
-            abs_p = self._abs_data_path(rel)
-            if a.get("deletionVector") and abs_p in path_set:
-                deleted[abs_p] = self._dv_positions(a["deletionVector"])
+        — what row-id computation and DELETE need. ``deleted`` is the
+        :meth:`_deleted_frame` of ``paths`` when the caller holds it."""
+        if deleted is None:
+            deleted = self._deleted_frame(st, paths)
         base = self._read_files_plain(
-            st, paths, with_pos=keep_pos or bool(deleted)
+            st, paths, with_pos=keep_pos or deleted is not None
         )
-        if not deleted:
+        if deleted is None:
             return base
         out = base.join(
-            F.broadcast(self._position_frame(deleted)),
-            on=["__dv_file", "__dv_pos"],
-            how="left_anti",
+            F.broadcast(deleted), on=["__dv_file", "__dv_pos"], how="left_anti"
         )
         if keep_pos:
             return out
@@ -3324,106 +3342,47 @@ class DeltaProtocolTable:
     def delete_where(self, condition) -> dict:
         """Row-level ``DELETE WHERE`` via deletion vectors — the
         merge-on-read path modern delta-spark uses by default for DML:
-        no data file is rewritten; matching rows' positions are encoded
-        as roaring bitmaps (dv_bitmap.encode_rbm_array), framed into a
-        ``deletion_vector_<uuid>.bin`` file, and each touched file's
-        add action is re-committed carrying the DV descriptor
-        (storageType 'u'). Files whose every row is deleted are plainly
-        removed. Re-deleting from an already-DV'd file unions the
-        position sets. The first DV upgrades the table protocol to
-        readerVersion 3 / writerVersion 7 with the deletionVectors
-        table feature, exactly as the spec requires.
+        no data file is rewritten. Each touched file's vector (its new
+        matches unioned with its prior vector) comes from
+        :func:`dv_bitmap.encode_vectors`, which encodes EXECUTOR-side
+        after ONE distributed scan, so only (file, blob, cardinality)
+        rows reach the driver; it frames them verbatim into a
+        ``deletion_vector_<uuid>.bin`` file and re-commits each touched
+        file's add with the descriptor (storageType 'u'). Files whose
+        every row is deleted are plainly removed. The first DV upgrades
+        the protocol to (3, 7) with the deletionVectors feature.
 
         Matching runs over :meth:`_read_files` with deletion vectors
-        applied and original row indexes kept, so rows an earlier
-        DELETE removed never match again: a repeated DELETE touches no
-        file, writes no vector and reports ``rows_deleted`` 0.
-
-        Scale: ONE distributed scan finds matching positions; each
-        file's positions are roaring-encoded EXECUTOR-side
-        (groupBy(file) + applyInPandas), so only (file, compact-blob,
-        cardinality) rows — file-count scale — ever reach the driver.
-        Per-file driver work (blob decode + union with any prior DV) is
-        bounded by that file's row count, never the total deleted
-        cardinality: a delete of billions of rows across thousands of
-        files streams file-by-file."""
+        applied, so rows an earlier DELETE removed never match again:
+        ``rows_deleted`` is the new cardinalities less the prior
+        descriptors', and a repeated DELETE touches no file and
+        reports 0."""
         from featureform_spark.sources.dv_bitmap import (
             append_dv_to_file,
-            decode_rbm_array,
-            encode_rbm_array,
+            encode_vectors,
             z85_encode,
         )
-        import numpy as np
 
         st = self.state()
         self._write_guard(st, None, "DELETE")
+        paths = self._data_paths(st)
+        prior = self._deleted_frame(st, paths)
         matched = self._read_files(
-            st, self._data_paths(st), keep_pos=True
+            st, paths, keep_pos=True, deleted=prior
         ).filter(condition)
-
-        def _encode_file_group(pdf):
-            import numpy as _np
-            import pandas as _pd
-
-            from featureform_spark.sources.dv_bitmap import (
-                encode_rbm_array as _enc,
-            )
-
-            pos = _np.unique(
-                pdf["__dv_pos"].to_numpy().astype(_np.uint64)
-            )
-            return _pd.DataFrame(
-                {
-                    "file": [pdf["__dv_file"].iloc[0]],
-                    "blob": [_enc(pos)],
-                    "card": [len(pos)],
-                }
-            )
-
-        encoded = sorted(
-            matched.select("__dv_file", "__dv_pos")
-            .groupBy("__dv_file")
-            .applyInPandas(
-                _encode_file_group, "file string, blob binary, card long"
-            )
-            .collect(),
-            key=lambda r: r["file"],
+        encoded = encode_vectors(
+            matched.select("__dv_file", "__dv_pos"), prior
         )
         rel_by_abs = {
             self._abs_data_path(p): p for p in st.adds
         }
         now = int(time.time() * 1000)
-        actions: list[dict] = []
-
-        feats = set(st.protocol.get("readerFeatures") or [])
-        if "deletionVectors" not in feats:
-            # Upgrading a legacy protocol to (3, 7): every feature the
-            # old minReader/minWriterVersion IMPLIED must be listed
-            # explicitly, or external engines silently stop enforcing
-            # them (e.g. a v5 table's checkConstraints / CDF).
-            old_reader = int(st.protocol.get("minReaderVersion", 1))
-            old_writer = int(st.protocol.get("minWriterVersion", 1))
-            extra_feats = {"deletionVectors"} | (
-                {"columnMapping"} if st.column_mapping else set()
-            )
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(
-                            feats
-                            | _legacy_reader_features(old_reader)
-                            | extra_feats
-                        ),
-                        "writerFeatures": sorted(
-                            set(st.protocol.get("writerFeatures") or [])
-                            | _legacy_writer_features(old_writer)
-                            | extra_feats
-                        ),
-                    }
-                }
-            )
+        upgrade = _feature_upgrade(
+            st.protocol,
+            {"deletionVectors"}
+            | ({"columnMapping"} if st.column_mapping else set()),
+        )
+        actions = [upgrade] if upgrade else []
 
         rows_deleted = 0
         files_touched = 0
@@ -3441,25 +3400,12 @@ class DeltaProtocolTable:
             with open(os.path.join(self.path, dv_rel), "wb") as fh:
                 fh.write(b"\x01")  # DV file format version
                 for r in encoded:
-                    abs_p = r["file"]
-                    rel = rel_by_abs[abs_p]
+                    rel = rel_by_abs[r["file"]]
                     add = dict(st.adds[rel])
-                    old = add.get("deletionVector")
-                    if old:
-                        # re-delete: union with the prior DV — bounded
-                        # by THIS file's row count
-                        old_pos = self._dv_positions(old)
-                        new_pos = np.union1d(
-                            old_pos, decode_rbm_array(bytes(r["blob"]))
-                        )
-                        blob = encode_rbm_array(new_pos)
-                        card = len(new_pos)
-                        rows_deleted += card - len(old_pos)
-                    else:
-                        # executor-encoded blob passes through verbatim
-                        blob = bytes(r["blob"])
-                        card = int(r["card"])
-                        rows_deleted += card
+                    card = int(r["card"])
+                    rows_deleted += card - int(
+                        (add.get("deletionVector") or {}).get("cardinality", 0)
+                    )
                     files_touched += 1
                     actions.append(
                         {
@@ -3470,12 +3416,10 @@ class DeltaProtocolTable:
                             }
                         }
                     )
-                    n_rec = None
-                    if add.get("stats"):
-                        n_rec = json.loads(add["stats"]).get("numRecords")
-                    if n_rec is not None and int(n_rec) == card:
+                    stats = json.loads(add.get("stats") or "{}")
+                    if int(stats.get("numRecords") or -1) == card:
                         continue  # whole file deleted: plain remove
-                    offset, size = append_dv_to_file(fh, blob)
+                    offset, size = append_dv_to_file(fh, bytes(r["blob"]))
                     add["deletionVector"] = {
                         "storageType": "u",
                         "pathOrInlineDv": dv_enc,

@@ -1,25 +1,34 @@
-"""Delta Lake deletion-vector bitmap + encoding primitives.
+"""Deletion vectors for both table formats: bitmap codec, framing and
+the one writer.
 
 Deletion vectors mark rows of a parquet data file as logically deleted
 without rewriting the file (delta-io/delta PROTOCOL.md §Deletion
-Vectors). The reference reads DV tables transparently through the
+Vectors; Iceberg v3 spec §Deletion Vectors, which adopted Delta's
+layout). The reference reads DV tables transparently through the
 vendor connector (provider/scripts/spark/offline_store_spark_runner.py
-:981-987); this module implements the two public formats that
-connector relies on, from the specs alone:
+:981-987); this module implements the public formats that connector
+relies on, from the specs alone:
 
 - **RoaringBitmapArray, "portable" serialization** — the 64-bit
   extension of the RoaringFormatSpec
   (github.com/RoaringBitmap/RoaringFormatSpec): ``u64 LE bucket
   count``, then per bucket ``u32 LE high-32-bits key`` + a standard
   32-bit roaring bitmap (cookie header, descriptive headers, offset
-  headers, array/bitmap/run containers). Delta prefixes the blob with
-  the magic number 1681511377 (u32 LE).
+  headers, array/bitmap/run containers). Both formats prefix the blob
+  with the magic number 1681511377 (u32 LE).
+- **Framing** — on disk each blob is ``u32 BE length | blob | u32 BE
+  CRC-32``, in Delta's ``deletion_vector_<uuid>.bin`` (after a version
+  byte) and as Iceberg's Puffin ``deletion-vector-v1`` blobs. Delta's
+  ``sizeInBytes`` counts the blob; Iceberg's ``content_size_in_bytes``
+  counts the frame too, :data:`FRAME_BYTES` more.
 - **Z85 text encoding** (ZeroMQ RFC 32) — Delta encodes DV file UUIDs
   and inline DVs with it in the ``pathOrInlineDv`` descriptor field.
 
-Pure driver-side byte work: DV blobs are cardinality-scale (a few MB
-for millions of deleted rows), never data-scale. Decoding yields a
-sorted numpy ``uint64`` array of deleted row indexes.
+:func:`encode_vectors`, the one DV writer of both formats' DELETE,
+encodes on Spark executors. Everything else is driver-side byte work
+on blobs, cardinality-scale (a few MB for millions of deleted rows),
+never data-scale. Decoding yields a sorted numpy ``uint64`` array of
+deleted row indexes.
 """
 
 from __future__ import annotations
@@ -30,6 +39,7 @@ import zlib
 import numpy as np
 
 DV_MAGIC = 1681511377  # RoaringBitmapArray portable-format magic (u32 LE)
+FRAME_BYTES = 8  # u32 BE length prefix + u32 BE CRC-32 around each blob
 
 _SERIAL_COOKIE_NO_RUN = 12346
 _SERIAL_COOKIE = 12347
@@ -248,8 +258,8 @@ def read_dv_from_file(path: str, offset: int, size_in_bytes: int) -> bytes:
     blob, then u32 BE CRC-32 of the blob."""
     with open(path, "rb") as f:
         f.seek(offset)
-        framed = f.read(4 + size_in_bytes + 4)
-    if len(framed) < 4 + size_in_bytes + 4:
+        framed = f.read(size_in_bytes + FRAME_BYTES)
+    if len(framed) < size_in_bytes + FRAME_BYTES:
         raise DvFormatError(f"DV file {path} truncated at offset {offset}")
     (stored_size,) = struct.unpack_from(">I", framed, 0)
     if stored_size != size_in_bytes:
@@ -264,11 +274,97 @@ def read_dv_from_file(path: str, offset: int, size_in_bytes: int) -> bytes:
     return data
 
 
+def frame_dv(blob: bytes) -> bytes:
+    """One blob as both formats store it: u32 BE length, the blob, u32
+    BE CRC-32 of the blob."""
+    crc = zlib.crc32(blob) & 0xFFFFFFFF
+    return struct.pack(">I", len(blob)) + blob + struct.pack(">I", crc)
+
+
 def append_dv_to_file(fh, blob: bytes) -> tuple[int, int]:
     """Append one framed DV blob at the current position of an open
-    binary file -> (offset, sizeInBytes) for the descriptor."""
+    binary file -> (offset, sizeInBytes) for a Delta descriptor."""
     offset = fh.tell()
-    fh.write(struct.pack(">I", len(blob)))
-    fh.write(blob)
-    fh.write(struct.pack(">I", zlib.crc32(blob) & 0xFFFFFFFF))
+    fh.write(frame_dv(blob))
     return offset, len(blob)
+
+
+def write_puffin_dvs(path: str, encoded) -> list[dict]:
+    """Write ``encoded`` (:func:`encode_vectors` rows) as one Puffin
+    file of framed ``deletion-vector-v1`` blobs -> their BlobMetadata,
+    in order; a blob's ``offset``/``length`` are its Iceberg delete
+    entry's ``content_offset``/``content_size_in_bytes``."""
+    from featureform_spark.sources.puffin_stats import write_puffin
+
+    blobs = [
+        {
+            "type": "deletion-vector-v1",
+            "fields": [2147483545],  # the reserved _pos field
+            "snapshot-id": -1,  # inherited from the manifest entry
+            "sequence-number": -1,
+            "properties": {
+                "referenced-data-file": r["file"],
+                "cardinality": str(r["card"]),
+            },
+            "data": frame_dv(bytes(r["blob"])),
+        }
+        for r in encoded
+    ]
+    return write_puffin(path, blobs)[0]
+
+
+def read_puffin_dv(path: str, offset: int, content_size: int) -> bytes:
+    """One Iceberg v3 deletion vector's blob; its
+    ``content_size_in_bytes`` counts the frame."""
+    return read_dv_from_file(path, offset, content_size - FRAME_BYTES)
+
+
+# ------------------------------------------------- DV writer (Spark)
+
+
+def encode_vectors(matched, prior) -> list:
+    """The deletion vectors a DELETE writes, sorted by file: one
+    ``(file, blob, card)`` row per data file with a new match.
+
+    Both frames hold two columns, data file and row position:
+    ``matched`` the DELETE's new matches (read with every earlier
+    delete applied), ``prior`` (or None) the positions earlier deletes
+    already hold. A touched file's vector is their union, encoded once
+    on executors (groupBy + applyInPandas), so only file-count-scale
+    rows reach the driver. No match at all is an empty list, and the
+    DELETE scans once: ``prior`` keeps only the touched files' rows
+    through a window over the same file grouping, not a join against a
+    second scan of ``matched``."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rows = matched.toDF("file", "pos")
+    if prior is not None:
+        rows = (
+            rows.withColumn("new", F.lit(True))
+            .unionByName(
+                prior.toDF("file", "pos").withColumn("new", F.lit(False))
+            )
+            .withColumn("new", F.bool_or("new").over(Window.partitionBy("file")))
+            .filter("new")
+            .drop("new")
+        )
+    return sorted(
+        rows.groupBy("file")
+        .applyInPandas(_encode_file, "file string, blob binary, card long")
+        .collect(),
+        key=lambda r: r["file"],
+    )
+
+
+def _encode_file(pdf):
+    """:func:`encode_vectors`' executor side: one file's rows -> its
+    vector."""
+    import pandas as pd
+
+    pos = np.unique(pdf["pos"].to_numpy().astype(np.uint64))
+    return pd.DataFrame({
+        "file": [pdf["file"].iloc[0]],
+        "blob": [encode_rbm_array(pos)],
+        "card": [len(pos)],
+    })

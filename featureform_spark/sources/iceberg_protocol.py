@@ -657,6 +657,25 @@ def _delete_records(
     ]
 
 
+def dv_record(
+    puffin: str, data_file: str, offset: int, size: int, card: int
+) -> dict:
+    """Manifest data_file record of one v3 deletion vector: the blob at
+    ``offset`` of the Puffin file ``puffin``, ``size`` bytes counting
+    its frame, deleting ``card`` rows of ``data_file``."""
+    return {
+        "content": 1,
+        "file_path": puffin,
+        "file_format": "PUFFIN",
+        "partition": {},
+        "record_count": card,
+        "file_size_in_bytes": os.path.getsize(puffin),
+        "referenced_data_file": data_file,
+        "content_offset": offset,
+        "content_size_in_bytes": size,
+    }
+
+
 def _added_summary(deletes: Sequence[dict]) -> dict[str, str]:
     """Spec snapshot-summary counts of a commit's delete files."""
     if not deletes:
@@ -1506,10 +1525,11 @@ class IcebergProtocolTable:
     def _dv_positions(self, df_: dict):
         """Deleted row positions (sorted uint64) of one v3
         deletion-vector entry: its puffin blob read at the entry's
-        offset, decoded, and checked against ``record_count``."""
+        offset (``content_size_in_bytes`` counts the frame), decoded,
+        and checked against ``record_count``."""
         from featureform_spark.sources.dv_bitmap import (
             dv_positions,
-            read_dv_from_file,
+            read_puffin_dv,
         )
 
         if not df_.get("referenced_data_file"):
@@ -1517,7 +1537,7 @@ class IcebergProtocolTable:
                 "puffin delete file without referenced_data_file"
             )
         return dv_positions(
-            read_dv_from_file(
+            read_puffin_dv(
                 self._resolve_path(df_["file_path"]),
                 int(df_["content_offset"]),
                 int(df_["content_size_in_bytes"]),
@@ -5605,86 +5625,41 @@ class IcebergProtocolTable:
         old_deletes: list[dict], pinned: int,
     ) -> int:
         """format-version 3 DELETE: per-file deletion vectors in ONE
-        puffin file instead of position-delete parquet (v3 forbids
+        Puffin file instead of position-delete parquet (v3 forbids
         writing new position deletes). Maintains the spec's one-DV-per-
-        file invariant: prior DV state for every touched file is folded
-        into the new vector and the superseded DV entries are dropped
-        from the carried delete manifests (rewritten in place at their
-        original sequence numbers); prior PARQUET position deletes are
-        folded in too, and their manifests stay carried — their rows
-        are a subset of the new DV, so union-applying readers remain
-        exact.
+        file invariant: :func:`dv_bitmap.encode_vectors` folds every
+        prior position of a touched file — its vector and any v2
+        PARQUET position deletes — into the new vector, and the
+        superseded DV entries are dropped from the carried delete
+        manifests (rewritten in place at their original sequence
+        numbers); the parquet deletes' manifests stay carried — their
+        rows are a subset of the new DV, so union-applying readers
+        remain exact.
 
-        Scale: matched positions are roaring-encoded EXECUTOR-side
-        (groupBy(file) + applyInPandas, the same shape as
-        delta_protocol.delete_where); only (file, blob, cardinality)
-        rows reach the driver."""
-        from featureform_spark.sources.dv_bitmap import append_dv_to_file
-
-        touched = matched.select("file_path").distinct()
-        fresh = matched.count()
-        if fresh == 0:
-            return -1
-        all_del = matched
-        prev = self._position_frame(old_deletes)
-        if prev is not None:
-            all_del = all_del.unionByName(
-                prev.select(F.col("path").alias("file_path"), "pos").join(
-                    F.broadcast(touched), "file_path", "left_semi"
-                )
-            )
-
-        def _encode_group(pdf):
-            import numpy as _np
-            import pandas as _pd
-
-            from featureform_spark.sources.dv_bitmap import (
-                encode_rbm_array as _enc,
-            )
-
-            pos = _np.unique(pdf["pos"].to_numpy().astype(_np.uint64))
-            return _pd.DataFrame(
-                {
-                    "file_path": [pdf["file_path"].iloc[0]],
-                    "blob": [_enc(pos)],
-                    "card": [len(pos)],
-                }
-            )
-
-        encoded = sorted(
-            all_del.groupBy("file_path")
-            .applyInPandas(
-                _encode_group, "file_path string, blob binary, card long"
-            )
-            .collect(),
-            key=lambda r: r["file_path"],
+        Scale: one scan finds the matches and the vectors are
+        roaring-encoded EXECUTOR-side; only (file, blob, cardinality)
+        rows reach the driver. -1 when no new row matched."""
+        from featureform_spark.sources.dv_bitmap import (
+            encode_vectors,
+            write_puffin_dvs,
         )
+
+        prev = self._position_frame(old_deletes)
+        encoded = encode_vectors(
+            matched, None if prev is None else prev.select("path", "pos")
+        )
+        if not encoded:
+            return -1
         os.makedirs(os.path.join(self.path, DATA_DIR), exist_ok=True)
         puffin = os.path.join(
             self.path, DATA_DIR, f"{uuid.uuid4().hex}-deletes.puffin"
         )
-        deletes = []
-        with open(puffin, "wb") as fh:
-            fh.write(b"PFA1\x00\x00\x00\x00")
-            for r in encoded:
-                offset, size = append_dv_to_file(fh, bytes(r["blob"]))
-                deletes.append(
-                    {
-                        "content": 1,
-                        "file_path": puffin,
-                        "file_format": "PUFFIN",
-                        "partition": {},
-                        "record_count": int(r["card"]),
-                        "file_size_in_bytes": 0,  # patched below
-                        "referenced_data_file": r["file_path"],
-                        "content_offset": offset,
-                        "content_size_in_bytes": size,
-                    }
-                )
-        fsize = os.path.getsize(puffin)
-        for d in deletes:
-            d["file_size_in_bytes"] = fsize
-        touched_set = {r["file_path"] for r in encoded}
+        metas = write_puffin_dvs(puffin, encoded)
+        deletes = [
+            dv_record(puffin, r["file"], m["offset"], m["length"], r["card"])
+            for r, m in zip(encoded, metas)
+        ]
+        touched_set = {r["file"] for r in encoded}
         ice_schema = self.schema(md)
         spec_by_id = self._spec_fields_by_id(md)
         carried = []

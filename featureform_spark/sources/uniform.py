@@ -55,11 +55,18 @@ from featureform_spark.sources.delta_protocol import (
 from featureform_spark.sources.iceberg_protocol import (
     IcebergProtocolTable,
     MANIFEST_LIST_SCHEMA,
+    _delete_records,
     data_file_record,
+    dv_record,
     spark_schema_to_iceberg,
 )
 from featureform_spark.sources.avro_codec import write_container
-from featureform_spark.sources.staged_write import FileRecord, fold_footer
+from featureform_spark.sources.dv_bitmap import FRAME_BYTES
+from featureform_spark.sources.staged_write import (
+    FileRecord,
+    fold_footer,
+    write_arrow,
+)
 
 DELTA_VERSION_PROP = "delta.uniform.delta-version"
 
@@ -182,8 +189,9 @@ def _dv_v3_records(delta: DeltaProtocolTable, st) -> list[dict] | None:
     frame the roaring-portable bitmap identically (4-byte BE length +
     blob + CRC), so the Iceberg entry simply points
     (file_path=<delta dv file>, content_offset, content_size_in_bytes)
-    at Delta's blob. None when any DV is inline ('i' storage — no file
-    to reference; caller falls back to the v2 position-delete parquet)."""
+    at Delta's framed blob; Iceberg's size counts the frame, Delta's
+    does not. None when any DV is inline ('i' storage — no file to
+    reference; caller falls back to the v2 position-delete parquet)."""
     out: list[dict] = []
     for rel in sorted(st.adds):
         dv = st.adds[rel].get("deletionVector")
@@ -194,21 +202,13 @@ def _dv_v3_records(delta: DeltaProtocolTable, st) -> list[dict] | None:
             return None
         dv_path, off, size = loc
         out.append(
-            {
-                "content": 1,
-                "file_path": dv_path,
-                "file_format": "PUFFIN",
-                "partition": {},
-                "record_count": int(dv["cardinality"]),
-                "file_size_in_bytes": os.path.getsize(dv_path),
-                "value_counts": [],
-                "null_value_counts": [],
-                "lower_bounds": [],
-                "upper_bounds": [],
-                "referenced_data_file": abs_data_path(delta.path, rel),
-                "content_offset": off,
-                "content_size_in_bytes": size,
-            }
+            dv_record(
+                dv_path,
+                abs_data_path(delta.path, rel),
+                off,
+                size + FRAME_BYTES,
+                int(dv["cardinality"]),
+            )
         )
     return out
 
@@ -231,61 +231,32 @@ def _dv_delete_record(delta: DeltaProtocolTable, st) -> dict | None:
     """All deletion-vector positions as ONE sorted position-delete
     parquet (spec column names file_path/pos); None when no DVs.
 
-    Streams one record batch per DV'd file through a ParquetWriter:
-    peak memory is a single file's decoded positions (bounded by that
-    file's row count), never the table's total deleted cardinality —
-    the metadata-only sync stays driver-side like real UniForm, but a
-    billions-deleted table converts file-by-file."""
-    import numpy as np
+    Streams one record batch per DV'd file through
+    ``staged_write.write_arrow``: peak memory is a single file's
+    decoded positions (bounded by that file's row count), never the
+    table's total deleted cardinality — the metadata-only sync stays
+    driver-side like real UniForm, but a billions-deleted table
+    converts file-by-file."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    schema = pa.schema(
-        [
-            pa.field("file_path", pa.string()),
-            pa.field("pos", pa.int64()),
-        ]
-    )
-    out_dir = os.path.join(delta.path, "metadata")
-    os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, f"uniform-delete-{uuid.uuid4().hex}.parquet")
-    writer = None
-    total = 0
-    try:
+    def _batches():
         for rel in sorted(st.adds):
-            dv = st.adds[rel].get("deletionVector")
-            if not dv:
-                continue
-            abs_p = abs_data_path(delta.path, rel)
-            pos = delta._dv_positions(dv).astype("int64")
-            batch = pa.record_batch(
-                [
-                    pa.array(np.repeat(abs_p, len(pos))).cast(pa.string()),
-                    pa.array(pos, type=pa.int64()),
-                ],
-                schema=schema,
-            )
-            if writer is None:
-                writer = pq.ParquetWriter(out, schema)
-            writer.write_batch(batch)
-            total += len(pos)
-    finally:
-        if writer is not None:
-            writer.close()
-    if writer is None:
-        return None
-    return {
-        "content": 1,
-        "file_path": out,
-        "file_format": "PARQUET",
-        "partition": {},
-        "record_count": total,
-        "file_size_in_bytes": os.path.getsize(out),
-        "value_counts": [],
-        "null_value_counts": [],
-        "lower_bounds": [],
-        "upper_bounds": [],
-    }
+            if dv := st.adds[rel].get("deletionVector"):
+                pos = delta._dv_positions(dv).astype("int64")
+                yield pa.record_batch({
+                    "file_path": pa.repeat(
+                        pa.scalar(abs_data_path(delta.path, rel)), len(pos)
+                    ),
+                    "pos": pa.array(pos),
+                })
+
+    rec = write_arrow(
+        _batches(),
+        os.path.join(
+            delta.path, "metadata", f"uniform-delete-{uuid.uuid4().hex}.parquet"
+        ),
+    )
+    return None if rec is None else _delete_records([rec], 1)[0]
 
 
 def sync_uniform(

@@ -779,13 +779,14 @@ def test_v3_deletion_vector_read(spark, sf_dir, tmp_path):
     SAME codec as Delta DVs (dv_bitmap) and apply through the broadcast
     anti-join. The format-version gate narrows to the genuinely
     unsupported rest of v3 (row lineage)."""
+    import json
+    import struct
+    import zlib
+
     import numpy as np
     import pyarrow.parquet as pq
 
-    from featureform_spark.sources.dv_bitmap import (
-        append_dv_to_file,
-        encode_rbm_array,
-    )
+    from featureform_spark.sources.dv_bitmap import encode_rbm_array
 
     orders = _orders(spark, sf_dir)
     path = str(tmp_path / "v3")
@@ -802,11 +803,29 @@ def test_v3_deletion_vector_read(spark, sf_dir, tmp_path):
     n = pq.read_metadata(target).num_rows
     pos = np.arange(0, n, 2, dtype=np.uint64)  # delete even positions
 
-    # a (minimal) puffin file: header magic + the framed DV blob
+    # a spec puffin file: magic, the framed deletion-vector-v1 blob
+    # (BE length, blob, BE CRC-32), then the footer; the blob length
+    # counts the frame
+    blob = encode_rbm_array(pos)
+    framed = (
+        struct.pack(">I", len(blob)) + blob
+        + struct.pack(">I", zlib.crc32(blob))
+    )
+    offset, size = 4, len(framed)
+    footer = json.dumps({"blobs": [{
+        "type": "deletion-vector-v1", "fields": [2147483545],
+        "snapshot-id": -1, "sequence-number": -1,
+        "offset": offset, "length": size,
+        "properties": {
+            "referenced-data-file": target, "cardinality": str(len(pos)),
+        },
+    }]}).encode()
     puffin = os.path.join(path, "metadata", "dv.puffin")
     with open(puffin, "wb") as fh:
-        fh.write(b"PFA1\x00\x00\x00\x00")
-        offset, size = append_dv_to_file(fh, encode_rbm_array(pos))
+        fh.write(
+            b"PFA1" + framed + b"PFA1" + footer
+            + struct.pack("<i", len(footer)) + b"\x00" * 4 + b"PFA1"
+        )
 
     seq = int(md.get("last-sequence-number", 0)) + 1
     snapshot_id = 424242
@@ -934,6 +953,45 @@ def test_v3_deletion_vector_write(spark, sf_dir, tmp_path):
     assert _sorted_rows(
         t.snapshot(snapshot_id=snaps[-2]["snapshot-id"])
     ) == expect1
+
+
+def test_v3_delete_writes_spec_puffin(spark, tmp_path):
+    """A v3 DELETE's vectors live in a spec Puffin file: its footer
+    lists one ``deletion-vector-v1`` blob per touched data file, whose
+    offset and length are the delete entry's ``content_offset`` and
+    ``content_size_in_bytes``, and the length counts the blob's frame
+    (BE length prefix and CRC-32), as Iceberg readers require."""
+    import struct
+
+    from featureform_spark.sources.dv_bitmap import decode_rbm_array
+    from featureform_spark.sources.puffin_stats import read_puffin
+
+    t = IcebergProtocolTable(spark, str(tmp_path / "pf"))
+    t.create(spark.range(60).withColumnRenamed("id", "k").repartition(3))
+    t.upgrade_format_version(3)
+    assert t.delete_rows(F.col("k") % 4 == 0) > 0
+    data, deletes = t._live_entries(t._snapshot_by(None, md=t.metadata()))
+    entries = [e["data_file"] for e in deletes]
+    assert len(entries) == len(data) == 3
+    assert len({d["file_path"] for d in entries}) == 1
+    _, blobs = read_puffin(t._resolve_path(entries[0]["file_path"]))
+    by_ref = {m["properties"]["referenced-data-file"]: (m, b) for m, b in blobs}
+    assert len(by_ref) == len(blobs) == 3
+    total = 0
+    for d in entries:
+        m, blob = by_ref[d["referenced_data_file"]]
+        assert m["type"] == "deletion-vector-v1"
+        assert m["fields"] == [2147483545]
+        assert m["snapshot-id"] == m["sequence-number"] == -1
+        assert int(m["properties"]["cardinality"]) == d["record_count"]
+        assert (m["offset"], m["length"]) == (
+            d["content_offset"], d["content_size_in_bytes"]
+        )
+        assert struct.unpack(">I", blob[:4])[0] == m["length"] - 8
+        assert len(decode_rbm_array(blob[4:-4])) == d["record_count"]
+        total += d["record_count"]
+    assert total == 15
+    assert t.snapshot().count() == 45
 
 
 def test_v3_upgrade_folds_v2_position_deletes(spark, sf_dir, tmp_path):
